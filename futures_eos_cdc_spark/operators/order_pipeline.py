@@ -21,8 +21,10 @@ are oracle-checkable. Production mode (deterministic=False) switches to
 uuid() + current_timestamp() like the reference.
 
 Scale: every step is a narrow projection/filter plus ONE broadcast join
-(4-row dim) — zero shuffles end-to-end; at 100 TB the pipeline inherits the
-decision stream's partitioning untouched.
+against the 4-row price dim — zero shuffles end-to-end; at 100 TB the
+pipeline inherits the decision stream's partitioning untouched. The dim is a
+local relation (``LocalTableScan``), so broadcasting it needs no RDD scan,
+a cost a streaming sink would otherwise pay every micro-batch.
 """
 
 from __future__ import annotations
@@ -64,9 +66,12 @@ DEBEZIUM_ENVELOPE_SCHEMA = T.StructType(
 
 
 def market_prices_df(spark) -> DataFrame:
-    return spark.createDataFrame(
-        [(k, float(v)) for k, v in MARKET_PRICES.items()], "symbol string, price double"
-    )
+    """P11's (symbol, price) dim as a local relation: it plans as
+    ``LocalTableScan``, where a Python-list ``createDataFrame`` plans as an
+    RDD scan that costs a parallelize job plus an RDD-backed broadcast on
+    every use."""
+    rows = ", ".join(f"('{k}', {float(v)!r}D)" for k, v in MARKET_PRICES.items())
+    return spark.sql(f"SELECT * FROM VALUES {rows} AS t(symbol, price)")
 
 
 def filter_actionable(decisions: DataFrame, threshold: float = DEFAULT_CONFIDENCE_THRESHOLD) -> DataFrame:

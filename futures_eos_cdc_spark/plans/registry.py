@@ -246,10 +246,11 @@ GROUP BY 1, 2
 def q_market_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Constant-map dim lookup as a broadcast left join + coalesce default.
 
-    The dim side is a literal 4-row DataFrame — broadcast, zero shuffle for
-    the join regardless of fact-side size.
+    The dim side is ``market_prices_df``, the 4-row local relation the order
+    pipeline joins — broadcast, zero shuffle for the join regardless of
+    fact-side size.
     """
-    from ..schemas import DEFAULT_MARKET_PRICE, MARKET_PRICES
+    from ..schemas import DEFAULT_MARKET_PRICE
 
     ev = _t(spark, sf_dir, "events")
     sym = F.col("user_id") % 5
@@ -261,9 +262,7 @@ def q_market_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("NAS100")
         .alias("symbol")
     )
-    mp = spark.createDataFrame(
-        [(k, float(v)) for k, v in MARKET_PRICES.items()], "symbol string, price double"
-    )
+    mp = market_prices_df(spark)
     return (
         s.join(F.broadcast(mp), "symbol", "left")
         .select("symbol", F.coalesce("price", F.lit(DEFAULT_MARKET_PRICE)).alias("market_price"))

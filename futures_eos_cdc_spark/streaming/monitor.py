@@ -105,13 +105,28 @@ def operator_counters() -> dict[str, int]:
         return out
 
 
+# Per-trigger time breakdown kept by ProgressRecorder: its column name and
+# the ``durationMs`` phases summed into it (source offset + batch resolution
+# count as one "get batch" phase).
+DURATION_PHASES = (
+    ("add_batch_ms", ("addBatch",)),
+    ("get_batch_ms", ("latestOffset", "getBatch")),
+    ("query_planning_ms", ("queryPlanning",)),
+    ("wal_commit_ms", ("walCommit",)),
+    ("trigger_ms", ("triggerExecution",)),
+)
+TIMING_COLUMNS = tuple(c for c, _ in DURATION_PHASES) + ("state_commit_ms",)
+
+
 class ProgressRecorder(StreamingQueryListener):
     """Records per-trigger progress for all queries on the session.
 
     Captured per micro-batch: query name, batch id, input row count,
     processed rows/sec, event-time watermark, and total state rows across
     stateful operators — the fields the reference's monitor derives from
-    consumer groups and topic inspection.
+    consumer groups and topic inspection — plus where the trigger's time
+    went: the ``DURATION_PHASES`` breakdown and the state operators' summed
+    ``commitTimeMs``.
     """
 
     def __init__(self) -> None:
@@ -124,17 +139,19 @@ class ProgressRecorder(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = event.progress
-        state_rows = sum(
-            (op.numRowsTotal or 0) for op in (p.stateOperators or [])
-        )
+        ops = p.stateOperators or []
+        duration = p.durationMs or {}
         row = {
             "name": p.name,
             "batch_id": p.batchId,
             "num_input_rows": p.numInputRows,
             "rows_per_sec": p.processedRowsPerSecond,
             "watermark": (p.eventTime or {}).get("watermark"),
-            "state_rows": state_rows,
+            "state_rows": sum((op.numRowsTotal or 0) for op in ops),
+            "state_commit_ms": sum((op.commitTimeMs or 0) for op in ops),
         }
+        for col, phases in DURATION_PHASES:
+            row[col] = sum(duration.get(k, 0) for k in phases)
         with self._lock:
             self.progress.append(row)
 
@@ -152,12 +169,14 @@ class ProgressRecorder(StreamingQueryListener):
         return spark.createDataFrame(
             rows or [],
             "name string, batch_id long, num_input_rows long, "
-            "rows_per_sec double, watermark string, state_rows long",
+            "rows_per_sec double, watermark string, state_rows long, "
+            + ", ".join(f"{c} long" for c in TIMING_COLUMNS),
         )
 
     def totals(self) -> dict:
         """The monitor's headline numbers: total input rows, peak state rows,
-        max processed-rows/sec over all recorded triggers."""
+        max processed-rows/sec over all recorded triggers, and the time each
+        ``TIMING_COLUMNS`` phase took summed over them."""
         with self._lock:
             rows = list(self.progress)
         return {
@@ -167,6 +186,7 @@ class ProgressRecorder(StreamingQueryListener):
             "peak_rows_per_sec": max(
                 (r["rows_per_sec"] or 0.0 for r in rows), default=0.0
             ),
+            "total_ms": {c: sum(r[c] for r in rows) for c in TIMING_COLUMNS},
             # batch-operator signals (recall-loss counters etc.) ride along
             "operator_counters": operator_counters(),
         }

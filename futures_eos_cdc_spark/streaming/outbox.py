@@ -13,8 +13,12 @@ atomic, and the sink must be idempotent per batch:
   but requires a JDBC driver jar on the classpath; not exercised in this
   container.
 - ``parquet_orders_outbox_writer`` — the locally-verifiable stand-in with
-  the same contract: per-batch atomicity via a staging-dir rename, replay
-  idempotency via anti-join on the unique key. Used by the EOS tests.
+  the same contract on a local filesystem: per-batch atomicity via a
+  staging-dir rename, replay idempotency via a driver-side dedup on the
+  unique key. Each epoch costs the micro-batch's own Spark job (the staged
+  write) plus a pyarrow read of the key column of every file in the table —
+  the O(table files) part that remains. Used by the EOS tests and the
+  benchmark's streaming workloads.
 """
 
 from __future__ import annotations
@@ -263,31 +267,107 @@ def partition_txn_writer(jdbc_url: str, properties: dict[str, str]):
 def parquet_orders_outbox_writer(base_dir: str, key_col: str = "client_order_id"):
     """foreachBatch writer with the same exactly-once contract, file-backed.
 
-    Idempotency: rows whose key already exists in the table are dropped
-    (ON CONFLICT DO NOTHING). Atomicity: the batch is staged to a temp dir
-    and renamed into place — a replayed epoch re-runs the same dedup and
-    writes nothing new.
+    Idempotency is ON CONFLICT DO NOTHING by ``key_col``: a row is published
+    only if no earlier row of the batch and no file of the table holds its
+    key — files another writer dropped into ``orders/`` count too — so a
+    replayed epoch writes nothing new. Null keys keep the semantics of
+    ``dropDuplicates`` + left-anti join: one null-key row per batch, never
+    matched against the table. Atomicity: the batch is staged to a temp dir
+    and renamed into place as ``epoch<N>_<i>_<part>.parquet``.
+
+    The Spark plan is written straight to the staging dir, so the epoch
+    runs the micro-batch's own job and nothing else: no shuffle for the
+    in-batch dedup and no broadcast of the table's keys. The driver then
+    dedups with pyarrow — it reads the staged files' and the table's key
+    columns, rewrites a staged file only when some of its rows conflict and
+    drops one with no new row. That read of every table file's keys is the
+    cost that still grows with the table. The renames assume a local
+    filesystem, like the rest of this stand-in. An empty first epoch still
+    publishes one schema-only file, so the table is readable from the start.
     """
     table_dir = os.path.join(base_dir, "orders")
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        new = batch_df.dropDuplicates([key_col])
-        if os.path.exists(table_dir):
-            existing = spark.read.parquet(table_dir).select(key_col)
-            new = new.join(existing, key_col, "left_anti")
         staged = os.path.join(base_dir, f"_stage_{epoch_id}_{uuid.uuid4().hex[:8]}")
-        new.write.mode("overwrite").parquet(staged)
-        part_files = [f for f in os.listdir(staged) if f.endswith(".parquet")]
-        os.makedirs(table_dir, exist_ok=True)
-        for i, f in enumerate(part_files):
-            os.rename(
-                os.path.join(staged, f),
-                os.path.join(table_dir, f"epoch{epoch_id}_{i}_{f}"),
-            )
-        shutil.rmtree(staged, ignore_errors=True)
+        batch_df.write.mode("overwrite").parquet(staged)  # the epoch's one job
+        try:
+            part_files = sorted(f for f in os.listdir(staged) if f.endswith(".parquet"))
+            paths = [os.path.join(staged, f) for f in part_files]
+            table_files = _visible_files(table_dir)
+            masks = _new_key_masks(paths, table_files, key_col)
+            os.makedirs(table_dir, exist_ok=True)
+            published = bool(table_files)
+            for i, (f, path, mask) in enumerate(zip(part_files, paths, masks)):
+                if published and not mask.any():
+                    continue  # no new row, and the table already has a schema
+                if not mask.all():
+                    _rewrite_filtered(path, mask)
+                os.rename(path, os.path.join(table_dir, f"epoch{epoch_id}_{i}_{f}"))
+                published = True
+        finally:
+            shutil.rmtree(staged, ignore_errors=True)
 
     return write
+
+
+def _visible_files(table_dir: str) -> list[str]:
+    """The files a Spark read of ``table_dir`` lists (``_``/``.`` names are
+    hidden)."""
+    if not os.path.isdir(table_dir):
+        return []
+    return [
+        os.path.join(table_dir, f)
+        for f in sorted(os.listdir(table_dir))
+        if not f.startswith(("_", "."))
+    ]
+
+
+def _new_key_masks(staged: list[str], table_files: list[str], key_col: str) -> list:
+    """Per staged file, a boolean mask of its rows to publish: the first row
+    of each key over the staged files in order (nulls form one key, as in
+    ``dropDuplicates``) whose key no table file holds (a null never
+    matches, as in a left-anti join)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    def keys(path: str):
+        with pq.ParquetFile(path) as f:
+            return f.read(columns=[key_col]).column(0)
+
+    batch = [keys(p) for p in staged]
+    sizes = [len(k) for k in batch]
+    keep = np.zeros(sum(sizes), dtype=bool)
+    if keep.size:
+        all_keys = pa.chunked_array([c for k in batch for c in k.chunks], type=batch[0].type)
+        firsts = (
+            pa.table({"k": all_keys, "i": np.arange(keep.size)})
+            .group_by("k", use_threads=False)
+            .aggregate([("i", "min")])
+        )
+        keep[firsts.column("i_min").to_numpy()] = True
+        if table_files:
+            held = pa.chunked_array(
+                [c for p in table_files for c in keys(p).cast(all_keys.type).chunks],
+                type=all_keys.type,
+            ).combine_chunks()
+            conflict = pc.is_in(all_keys, value_set=held, skip_nulls=True)
+            keep &= ~conflict.to_numpy(zero_copy_only=False)
+    return np.split(keep, np.cumsum(sizes)[:-1])
+
+
+def _rewrite_filtered(path: str, mask) -> None:
+    """Rewrite one staged parquet file in place with only the ``mask`` rows,
+    keeping its schema metadata (Spark reads its types from it) and its
+    INT96 timestamps, which pyarrow would otherwise write as nanoseconds."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    with pq.ParquetFile(path) as f:
+        int96 = any(c.physical_type == "INT96" for c in f.schema)
+        table = f.read().filter(pa.array(mask))
+    pq.write_table(table, path, use_deprecated_int96_timestamps=int96)
 
 
 def content_duplicate_report(df: DataFrame, key_cols: list[str]) -> DataFrame:

@@ -62,6 +62,52 @@ def test_progress_recorder_captures_throughput_and_state(spark, sf_dir, tmp_path
     assert rows.filter(F.col("num_input_rows") > 0).count() >= 1
 
 
+def test_progress_recorder_keeps_duration_breakdown(spark, sf_dir, tmp_path):
+    """Each trigger's durationMs phases and state commit time are kept per
+    row of report() and summed in totals()."""
+    from futures_eos_cdc_spark.streaming.monitor import TIMING_COLUMNS
+
+    sig = signals_from_events(load_table(spark, sf_dir, "events")).limit(50)
+    path = str(tmp_path / "dur_in")
+    sig.coalesce(1).write.mode("overwrite").parquet(path)
+
+    rec = attach_progress_recorder(spark)
+    try:
+        q = (
+            streaming_decide(read_signal_stream_files(spark, path))
+            .writeStream.outputMode("append")
+            .format("noop")
+            .queryName("timed")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            last = q.lastProgress["batchId"]
+        finally:
+            q.stop()
+        # listener events arrive asynchronously; wait for the last trigger's
+        deadline = time.time() + 30
+        while time.time() < deadline and not any(
+            r["name"] == "timed" and r["batch_id"] == last for r in rec.progress
+        ):
+            time.sleep(0.5)
+    finally:
+        spark.streams.removeListener(rec)
+
+    t = rec.totals()
+    rows = [r.asDict() for r in rec.report(spark).collect()]
+    data = [r for r in rows if r["name"] == "timed" and r["num_input_rows"] > 0]
+    assert data
+    for r in data:
+        assert all(r[c] is not None and r[c] >= 0 for c in TIMING_COLUMNS)
+        assert r["add_batch_ms"] > 0  # the sink ran
+        # the trigger's wall time covers its phases
+        assert r["trigger_ms"] >= r["add_batch_ms"] + r["query_planning_ms"]
+    assert set(t["total_ms"]) == set(TIMING_COLUMNS)
+    for c in TIMING_COLUMNS:
+        assert t["total_ms"][c] == sum(r[c] for r in rows)
+
+
 def test_peek_batch_observation_counts_rows(spark, sf_dir):
     """S9 batch form: peek is a pass-through — result unchanged, observed
     row count delivered through the plan's own action (no extra job)."""

@@ -9,6 +9,7 @@ zero-grace late-row drops, duplicate-injection EOS semantics
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -191,6 +192,159 @@ def test_foreach_batch_sink_idempotent(spark, sf_dir, tmp_path):
     writer(orders, epoch_id=1)  # same data, new epoch
     n2 = spark.read.parquet(base + "/orders").count()
     assert n2 == n1
+
+
+def _keyed(spark, rows):
+    """(k, v) rows as a local relation (plans as LocalTableScan)."""
+    vals = ", ".join(f"({'NULL' if k is None else repr(k)}, {v})" for k, v in rows)
+    return spark.sql(
+        f"SELECT CAST(k AS STRING) AS k, CAST(v AS BIGINT) AS v FROM VALUES {vals} AS t(k, v)"
+    )
+
+
+def _table_rows(spark, base):
+    return sorted(map(tuple, spark.read.parquet(base + "/orders").collect()), key=repr)
+
+
+def test_outbox_writer_dedups_keys_within_batch(spark, tmp_path):
+    """Duplicate keys inside one batch publish one row per key, even when
+    the duplicates sit in different staged files."""
+    base = str(tmp_path / "sink")
+    writer = parquet_orders_outbox_writer(base, key_col="k")
+    rows = [("a", 1), ("b", 2), ("a", 3), ("c", 4), ("b", 5), ("a", 6)]
+    writer(_keyed(spark, rows).repartition(3), epoch_id=0)
+    got = _table_rows(spark, base)
+    assert sorted(k for k, _ in got) == ["a", "b", "c"]
+    assert set(got) <= set(rows)
+
+
+def test_outbox_writer_replay_and_overlap(spark, tmp_path):
+    """A replayed epoch adds no rows; a new epoch whose keys overlap the
+    table's adds only its new keys, and its files keep the
+    epoch<N>_<i>_<part>.parquet names."""
+    base = str(tmp_path / "sink")
+    writer = parquet_orders_outbox_writer(base, key_col="k")
+    first = _keyed(spark, [("a", 1), ("b", 2)])
+    writer(first, epoch_id=0)
+    writer(first, epoch_id=0)
+    assert _table_rows(spark, base) == [("a", 1), ("b", 2)]
+    writer(_keyed(spark, [("b", 20), ("c", 30), ("a", 10)]), epoch_id=1)
+    assert _table_rows(spark, base) == [("a", 1), ("b", 2), ("c", 30)]
+    names = os.listdir(base + "/orders")
+    assert {n.split("_", 1)[0] for n in names} == {"epoch0", "epoch1"}
+    assert all(re.fullmatch(r"epoch\d+_\d+_part-.*\.parquet", n) for n in names)
+    assert not [n for n in os.listdir(base) if n.startswith("_stage_")]
+
+
+def test_outbox_writer_honours_foreign_files(spark, tmp_path):
+    """Keys in a file another writer dropped into orders/ are conflicts too."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = str(tmp_path / "sink")
+    writer = parquet_orders_outbox_writer(base, key_col="k")
+    writer(_keyed(spark, [("a", 1)]), epoch_id=0)
+    pq.write_table(
+        pa.table({"k": ["x", "y"], "v": pa.array([7, 8], pa.int64())}),
+        base + "/orders/part-foreign.parquet",
+    )
+    writer(_keyed(spark, [("x", 70), ("z", 90), ("a", 10)]), epoch_id=1)
+    assert _table_rows(spark, base) == [("a", 1), ("x", 7), ("y", 8), ("z", 90)]
+
+
+def test_outbox_writer_rewrite_keeps_column_types(spark, tmp_path):
+    """A staged file rewritten to drop conflicting rows reads back with the
+    types and values Spark wrote (timestamps included)."""
+    base = str(tmp_path / "sink")
+    writer = parquet_orders_outbox_writer(base, key_col="k")
+    batch = spark.sql(
+        "SELECT * FROM VALUES ('a', TIMESTAMP '2024-01-02 03:04:05.123456', 1.5D),"
+        " ('b', TIMESTAMP '2024-06-07 08:09:10', 2.5D) AS t(k, ts, x)"
+    ).coalesce(1)
+    writer(batch.filter(F.col("k") == "a"), epoch_id=0)
+    writer(batch, epoch_id=1)  # 'a' conflicts: the staged file is rewritten
+    got = spark.read.parquet(base + "/orders")
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in batch.schema
+    ]
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, batch.collect()))
+
+
+def test_outbox_writer_empty_first_epoch_is_readable(spark, tmp_path):
+    """An all-empty first epoch still leaves a table Spark can read, with
+    the batch's schema; later epochs append to it."""
+    base = str(tmp_path / "sink")
+    writer = parquet_orders_outbox_writer(base, key_col="k")
+    empty = _keyed(spark, [("a", 1)]).filter(F.lit(False))
+    writer(empty, epoch_id=0)
+    table = spark.read.parquet(base + "/orders")
+    assert table.count() == 0
+    assert [(f.name, f.dataType.simpleString()) for f in table.schema] == [
+        ("k", "string"),
+        ("v", "bigint"),
+    ]
+    writer(empty, epoch_id=1)  # nothing new: no file published
+    assert len(os.listdir(base + "/orders")) == 1
+    writer(_keyed(spark, [("a", 1)]), epoch_id=2)
+    assert _table_rows(spark, base) == [("a", 1)]
+
+
+def test_outbox_writer_null_keys(spark, tmp_path):
+    """Null keys keep dropDuplicates + left-anti semantics: one null-key row
+    per batch, never matched against the table (a replay adds another)."""
+    base = str(tmp_path / "sink")
+    writer = parquet_orders_outbox_writer(base, key_col="k")
+    batch = _keyed(spark, [(None, 1), ("a", 2), (None, 3)])
+    writer(batch, epoch_id=0)
+    got = _table_rows(spark, base)
+    assert [k for k, _ in got].count(None) == 1
+    assert ("a", 2) in got
+    writer(batch, epoch_id=0)
+    got = _table_rows(spark, base)
+    assert [k for k, _ in got].count(None) == 2
+    assert [k for k, _ in got].count("a") == 1
+
+
+def _job_ids(spark, fn) -> list[int]:
+    """Spark job ids ``fn`` runs, read from its status-tracker job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_outbox_writer_runs_one_job_per_epoch(spark, tmp_path):
+    """The sink epoch's only Spark job is the batch's own write: no in-batch
+    dedup exchange and no broadcast of the table's keys, however many
+    epochs the table holds."""
+    base = str(tmp_path / "sink")
+    writer = parquet_orders_outbox_writer(base, key_col="k")
+    for epoch in range(3):
+        batch = _keyed(spark, [(f"k{epoch}", epoch), ("k0", 9), (f"k{epoch}", 8)])
+        assert len(_job_ids(spark, lambda: writer(batch, epoch))) == 1
+    assert len(_table_rows(spark, base)) == 3
+
+
+def test_price_dim_is_a_local_relation(spark, sf_dir):
+    """The order pipeline's price dim plans as LocalTableScan, so its
+    broadcast never scans an RDD (a Python-list createDataFrame plans as
+    Scan ExistingRDD and adds a parallelize job per use)."""
+    from futures_eos_cdc_spark.operators.order_pipeline import (
+        decisions_to_orders,
+        market_prices_df,
+    )
+
+    orders = decisions_to_orders(decide(_signals(spark, sf_dir)), market_prices_df(spark))
+    plan = orders._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "Scan ExistingRDD" not in plan
 
 
 @pytest.mark.parametrize("key_cols", [["symbol", "side", "price", "qty", "timeframe", "ts_us"]])
