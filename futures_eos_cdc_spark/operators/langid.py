@@ -253,7 +253,7 @@ def langid_score(
 # memoize the finished Column. Column expression trees are immutable and
 # freely reusable across plans. r14 hardening (ADVICE r13): the key is
 # an explicit STRUCTURAL description supplied by the caller (how bcol
-# was built: input column repr, n, buckets, max_chars) — never a
+# was built: unbound input column name, n, buckets, max_chars) — never a
 # normalized str(bcol), whose regex collapsed real column names like
 # text_1/text_2 into one key; and the cached value pins the model dict
 # (strong reference), so id(model) cannot be recycled by GC and serve a
@@ -332,8 +332,27 @@ def _best_from_buckets(
     return F.array_min(_candidates_array(bcol, model, cache_key=cache_key))
 
 
+def _grams_cache_key(text: Column, n: int, buckets: int, max_chars: int) -> tuple | None:
+    """The structural cache key of the gram-bucket candidates over ``text``,
+    or None (build fresh) unless ``text`` is an unbound column name — a
+    bare ``F.col(name)``. A DataFrame-bound ``df["text"]`` prints exactly
+    like ``F.col("text")`` but names one DataFrame's attribute, so a key
+    built from ``str(text)`` would serve df1's binding to df2; any
+    expression other than a bare name is not cached either."""
+    node = getattr(text, "_jc", None)  # a Spark Connect Column has no JVM twin
+    node = node.node() if node is not None else None
+    if (
+        node is None
+        or node.getClass().getName() != "org.apache.spark.sql.internal.UnresolvedAttribute"
+        or node.planId().isDefined()
+        or node.isMetadataColumn()
+    ):
+        return None
+    return ("grams", node.sql(), n, buckets, max_chars)
+
+
 def langid_ranked_expr(
-    text: Column,
+    text: Column | str,
     model: dict[str, list[int]],
     *,
     n: int = LANGID_N,
@@ -344,22 +363,22 @@ def langid_ranked_expr(
     struct array — for confidence/margin consumers (CCNet thresholds on
     classifier confidence, not just the argmax). NULL text gives NULL;
     element 1 is the argmax, element 2 the runner-up (NULL past the
-    language count — single-language models rank one entry)."""
+    language count — single-language models rank one entry). ``text`` is
+    a column name or a Column; only a name is cached (_grams_cache_key)."""
+    if isinstance(text, str):
+        text = F.col(text)
     ranked = F.array_sort(
         _candidates_array(
             gram_buckets_expr(text, n, buckets, max_chars),
             model,
-            # str(text) is the raw Column repr (no normalization): a text
-            # expression whose repr varies per construction (lambda
-            # counters) just misses the cache, which is the safe direction
-            cache_key=("grams", str(text), n, buckets, max_chars),
+            cache_key=_grams_cache_key(text, n, buckets, max_chars),
         )
     )
     return F.when(text.isNotNull(), ranked)
 
 
 def langid_best_expr(
-    text: Column,
+    text: Column | str,
     model: dict[str, list[int]],
     *,
     n: int = LANGID_N,
@@ -373,17 +392,20 @@ def langid_best_expr(
     (code-review r11: the guard lives HERE, so direct composers cannot
     classify NULL rows as the smallest language at score 0). Whole-stage
     codegen's subexpression elimination shares the per-gram hashing
-    across the per-language folds."""
+    across the per-language folds. ``text`` is a column name or a Column;
+    only a name is cached (_grams_cache_key)."""
+    if isinstance(text, str):
+        text = F.col(text)
     best = _best_from_buckets(
         gram_buckets_expr(text, n, buckets, max_chars),
         model,
-        cache_key=("grams", str(text), n, buckets, max_chars),
+        cache_key=_grams_cache_key(text, n, buckets, max_chars),
     )
     return F.when(text.isNotNull(), best)
 
 
 def langid_pred_expr(
-    text: Column, model: dict[str, list[int]], **kw
+    text: Column | str, model: dict[str, list[int]], **kw
 ) -> Column:
     """The predicted language alone (NULL text -> NULL) — the filter form
     the selection gate composes on (keep iff pred isin allowed set)."""

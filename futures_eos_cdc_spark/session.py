@@ -6,6 +6,20 @@ coalescing + skew-join handling), shuffle partitions sized to cores locally
 (on a real cluster this should be ~2-3x total cores or left to AQE), Arrow
 enabled for the few Pandas-UDF paths, UTC session timezone so results are
 reproducible against external oracles.
+
+Streaming checkpoints go through ``FileSystemBasedCheckpointFileManager``
+instead of Spark's default ``FileContext`` manager. Without libhadoop, the
+local ``FileContext`` rename forks ``readlink`` four times per file
+(``getFileLinkStatus``) — about twenty forked processes per state partition
+per trigger, which was most of a micro-batch's state-commit time. The
+FileSystem manager renames with ``File.renameTo`` and forks nothing there.
+The overwrite guarantee is the same on a local disk: ``FileContext``'s local
+rename is itself check-then-rename (Hadoop's ``renameInternal`` handles
+overwrite "in a non-atomic way"), and the FileSystem manager checks
+``exists`` before it renames, so a second ``createAtomic(path,
+overwrite=false)`` of one offset or commit file still fails. Spark's
+``ChecksumCheckpointFileManager`` still wraps the chosen manager for state
+files, so their checksum files are still written and verified.
 """
 
 from __future__ import annotations
@@ -37,6 +51,11 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
     if extra_conf:

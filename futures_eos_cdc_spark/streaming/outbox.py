@@ -13,11 +13,12 @@ atomic, and the sink must be idempotent per batch:
   but requires a JDBC driver jar on the classpath; not exercised in this
   container.
 - ``parquet_orders_outbox_writer`` — the locally-verifiable stand-in with
-  the same contract on a local filesystem: per-batch atomicity via a
-  staging-dir rename, replay idempotency via a driver-side dedup on the
-  unique key. Each epoch costs the micro-batch's own Spark job (the staged
-  write) plus a pyarrow read of the key column of every file in the table —
-  the O(table files) part that remains. Used by the EOS tests and the
+  the same contract on a local filesystem: per-batch atomicity via one
+  file's rename, replay idempotency via a driver-side dedup on the unique
+  key. Each epoch costs one Spark job (one Arrow collect of the batch,
+  whose rows are bounded by the order key cardinality, not the input rate)
+  plus a pyarrow read of the key column of every file in the table — the
+  O(table files) part that remains. Used by the EOS tests and the
   benchmark's streaming workloads.
 """
 
@@ -272,40 +273,41 @@ def parquet_orders_outbox_writer(base_dir: str, key_col: str = "client_order_id"
     key — files another writer dropped into ``orders/`` count too — so a
     replayed epoch writes nothing new. Null keys keep the semantics of
     ``dropDuplicates`` + left-anti join: one null-key row per batch, never
-    matched against the table. Atomicity: the batch is staged to a temp dir
-    and renamed into place as ``epoch<N>_<i>_<part>.parquet``.
+    matched against the table.
 
-    The Spark plan is written straight to the staging dir, so the epoch
-    runs the micro-batch's own job and nothing else: no shuffle for the
-    in-batch dedup and no broadcast of the table's keys. The driver then
-    dedups with pyarrow — it reads the staged files' and the table's key
-    columns, rewrites a staged file only when some of its rows conflict and
-    drops one with no new row. That read of every table file's keys is the
-    cost that still grows with the table. The renames assume a local
-    filesystem, like the rest of this stand-in. An empty first epoch still
-    publishes one schema-only file, so the table is readable from the start.
+    The epoch runs one Spark job, the batch's own ``toArrow()`` collect; the
+    key dedup and the write happen on the driver with pyarrow. Collecting is
+    bounded: the orders stream carries at most one row per actionable
+    (symbol, window), so an epoch's rows grow with key cardinality, not with
+    the input rate. The new rows land in one file, written under a hidden
+    name in ``orders/`` and renamed to ``epoch<N>_0_part-<uuid>.parquet``,
+    so a reader sees all of the epoch or none of it; the uuid keeps a
+    replay's file (a null key publishes again) apart from the first one.
+    An epoch with no new row publishes nothing, except that an empty first
+    epoch leaves a schema-only file, so the table is readable from the
+    start. The read of every table file's key column is the cost that still
+    grows with the table. The rename assumes a local filesystem, like the
+    rest of this stand-in.
     """
+    import pyarrow.parquet as pq
+
     table_dir = os.path.join(base_dir, "orders")
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
-        staged = os.path.join(base_dir, f"_stage_{epoch_id}_{uuid.uuid4().hex[:8]}")
-        batch_df.write.mode("overwrite").parquet(staged)  # the epoch's one job
+        batch = batch_df.toArrow()  # the epoch's one job
+        table_files = _visible_files(table_dir)
+        batch = batch.filter(_new_key_mask(batch.column(key_col), table_files, key_col))
+        if table_files and not batch.num_rows:
+            return  # no new row, and the table already has a schema
+        os.makedirs(table_dir, exist_ok=True)
+        name = f"epoch{epoch_id}_0_part-{uuid.uuid4()}.parquet"
+        hidden = os.path.join(table_dir, f".{name}.tmp")
         try:
-            part_files = sorted(f for f in os.listdir(staged) if f.endswith(".parquet"))
-            paths = [os.path.join(staged, f) for f in part_files]
-            table_files = _visible_files(table_dir)
-            masks = _new_key_masks(paths, table_files, key_col)
-            os.makedirs(table_dir, exist_ok=True)
-            published = bool(table_files)
-            for i, (f, path, mask) in enumerate(zip(part_files, paths, masks)):
-                if published and not mask.any():
-                    continue  # no new row, and the table already has a schema
-                if not mask.all():
-                    _rewrite_filtered(path, mask)
-                os.rename(path, os.path.join(table_dir, f"epoch{epoch_id}_{i}_{f}"))
-                published = True
+            pq.write_table(batch, hidden)
+            os.rename(hidden, os.path.join(table_dir, name))
         finally:
-            shutil.rmtree(staged, ignore_errors=True)
+            if os.path.exists(hidden):
+                os.remove(hidden)
 
     return write
 
@@ -322,52 +324,35 @@ def _visible_files(table_dir: str) -> list[str]:
     ]
 
 
-def _new_key_masks(staged: list[str], table_files: list[str], key_col: str) -> list:
-    """Per staged file, a boolean mask of its rows to publish: the first row
-    of each key over the staged files in order (nulls form one key, as in
-    ``dropDuplicates``) whose key no table file holds (a null never
-    matches, as in a left-anti join)."""
+def _new_key_mask(keys, table_files: list[str], key_col: str):
+    """Boolean mask of the batch rows to publish: the first row of each key
+    (nulls form one key, as in ``dropDuplicates``) whose key no table file
+    holds (a null never matches, as in a left-anti join)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    def keys(path: str):
+    keep = np.zeros(len(keys), dtype=bool)
+    if not keep.size:
+        return pa.array(keep)
+    firsts = (
+        pa.table({"k": keys, "i": np.arange(keep.size)})
+        .group_by("k", use_threads=False)
+        .aggregate([("i", "min")])
+    )
+    keep[firsts.column("i_min").to_numpy()] = True
+
+    def held_keys(path: str):
         with pq.ParquetFile(path) as f:
-            return f.read(columns=[key_col]).column(0)
+            return f.read(columns=[key_col]).column(0).cast(keys.type)
 
-    batch = [keys(p) for p in staged]
-    sizes = [len(k) for k in batch]
-    keep = np.zeros(sum(sizes), dtype=bool)
-    if keep.size:
-        all_keys = pa.chunked_array([c for k in batch for c in k.chunks], type=batch[0].type)
-        firsts = (
-            pa.table({"k": all_keys, "i": np.arange(keep.size)})
-            .group_by("k", use_threads=False)
-            .aggregate([("i", "min")])
-        )
-        keep[firsts.column("i_min").to_numpy()] = True
-        if table_files:
-            held = pa.chunked_array(
-                [c for p in table_files for c in keys(p).cast(all_keys.type).chunks],
-                type=all_keys.type,
-            ).combine_chunks()
-            conflict = pc.is_in(all_keys, value_set=held, skip_nulls=True)
-            keep &= ~conflict.to_numpy(zero_copy_only=False)
-    return np.split(keep, np.cumsum(sizes)[:-1])
-
-
-def _rewrite_filtered(path: str, mask) -> None:
-    """Rewrite one staged parquet file in place with only the ``mask`` rows,
-    keeping its schema metadata (Spark reads its types from it) and its
-    INT96 timestamps, which pyarrow would otherwise write as nanoseconds."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    with pq.ParquetFile(path) as f:
-        int96 = any(c.physical_type == "INT96" for c in f.schema)
-        table = f.read().filter(pa.array(mask))
-    pq.write_table(table, path, use_deprecated_int96_timestamps=int96)
+    if table_files:
+        held = pa.chunked_array(
+            [c for p in table_files for c in held_keys(p).chunks], type=keys.type
+        ).combine_chunks()
+        keep &= ~pc.is_in(keys, value_set=held, skip_nulls=True).to_numpy()
+    return pa.array(keep)
 
 
 def content_duplicate_report(df: DataFrame, key_cols: list[str]) -> DataFrame:

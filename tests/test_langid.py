@@ -332,6 +332,38 @@ def test_candidates_cache_distinguishes_input_columns(spark):
     assert sorted(map(tuple, got)) == sorted(map(tuple, fresh))
 
 
+def test_candidates_cache_skips_dataframe_bound_columns(spark):
+    """df1["text"] and df2["text"] print alike but bind different
+    DataFrames' attributes: neither may be cached, and each scores its own
+    rows. A column name is cached and builds F.col(name) itself."""
+    from futures_eos_cdc_spark.operators.langid import (
+        _CANDIDATES_CACHE,
+        langid_best_expr,
+        langid_ranked_expr,
+    )
+
+    docs = _corpus(spark)
+    model = langid_model(docs)
+    df1 = docs.filter(F.col("lang") == "en")
+    df2 = docs.filter(F.col("lang") != "en").select(
+        "doc_id", "lang", F.reverse("text").alias("text")
+    )
+    _CANDIDATES_CACHE.clear()
+    got = [
+        df.select("doc_id", langid_best_expr(df["text"], model)["lang"].alias("p")).collect()
+        for df in (df1, df2)
+    ]
+    ranked = langid_ranked_expr(df2["text"], model)
+    got.append(df2.select("doc_id", ranked[0]["lang"].alias("p")).collect())
+    assert not _CANDIDATES_CACHE
+    want = [
+        df.select("doc_id", langid_best_expr("text", model)["lang"].alias("p")).collect()
+        for df in (df1, df2, df2)
+    ]
+    assert len(_CANDIDATES_CACHE) == 1
+    assert [sorted(map(tuple, g)) for g in got] == [sorted(map(tuple, w)) for w in want]
+
+
 def test_candidates_cache_pins_model_and_misses_on_new_model(spark):
     """The cached value must hold a STRONG reference to the model dict
     (id() recycling hazard) and a retrained model (new dict) must never

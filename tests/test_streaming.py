@@ -208,7 +208,7 @@ def _table_rows(spark, base):
 
 def test_outbox_writer_dedups_keys_within_batch(spark, tmp_path):
     """Duplicate keys inside one batch publish one row per key, even when
-    the duplicates sit in different staged files."""
+    the duplicates sit in different partitions of the batch."""
     base = str(tmp_path / "sink")
     writer = parquet_orders_outbox_writer(base, key_col="k")
     rows = [("a", 1), ("b", 2), ("a", 3), ("c", 4), ("b", 5), ("a", 6)]
@@ -253,8 +253,8 @@ def test_outbox_writer_honours_foreign_files(spark, tmp_path):
 
 
 def test_outbox_writer_rewrite_keeps_column_types(spark, tmp_path):
-    """A staged file rewritten to drop conflicting rows reads back with the
-    types and values Spark wrote (timestamps included)."""
+    """An epoch whose conflicting rows were dropped reads back with the
+    batch's types and values (timestamps included)."""
     base = str(tmp_path / "sink")
     writer = parquet_orders_outbox_writer(base, key_col="k")
     batch = spark.sql(
@@ -262,7 +262,7 @@ def test_outbox_writer_rewrite_keeps_column_types(spark, tmp_path):
         " ('b', TIMESTAMP '2024-06-07 08:09:10', 2.5D) AS t(k, ts, x)"
     ).coalesce(1)
     writer(batch.filter(F.col("k") == "a"), epoch_id=0)
-    writer(batch, epoch_id=1)  # 'a' conflicts: the staged file is rewritten
+    writer(batch, epoch_id=1)  # 'a' conflicts: only 'b' is published
     got = spark.read.parquet(base + "/orders")
     assert [(f.name, f.dataType) for f in got.schema] == [
         (f.name, f.dataType) for f in batch.schema
@@ -303,6 +303,145 @@ def test_outbox_writer_null_keys(spark, tmp_path):
     got = _table_rows(spark, base)
     assert [k for k, _ in got].count(None) == 2
     assert [k for k, _ in got].count("a") == 1
+
+
+def test_outbox_writer_publishes_one_file_per_epoch(spark, tmp_path):
+    """A non-empty epoch publishes exactly one file, however the batch is
+    partitioned, and leaves no staging dir or hidden temp file behind."""
+    base = str(tmp_path / "sink")
+    writer = parquet_orders_outbox_writer(base, key_col="k")
+    rows = [(f"k{i}", i) for i in range(20)]
+    writer(_keyed(spark, rows).repartition(4), epoch_id=0)
+    writer(_keyed(spark, rows + [("new", 99)]).repartition(4), epoch_id=1)
+    names = sorted(os.listdir(base + "/orders"))
+    assert [n.split("_", 1)[0] for n in names] == ["epoch0", "epoch1"]
+    assert all(re.fullmatch(r"epoch\d+_\d+_part-.*\.parquet", n) for n in names)
+    assert os.listdir(base) == ["orders"]
+    assert len(_table_rows(spark, base)) == 21
+
+
+def test_outbox_writer_null_key_replay_gets_a_new_file(spark, tmp_path):
+    """A replayed epoch that publishes again (its null key never matches)
+    lands in a second, distinctly named file: it never replaces the
+    first one."""
+    base = str(tmp_path / "sink")
+    writer = parquet_orders_outbox_writer(base, key_col="k")
+    batch = _keyed(spark, [(None, 1), ("a", 2)])
+    writer(batch, epoch_id=0)
+    first = set(os.listdir(base + "/orders"))
+    writer(batch, epoch_id=0)
+    names = set(os.listdir(base + "/orders"))
+    assert len(first) == 1 and first < names and len(names) == 2
+    assert all(re.fullmatch(r"epoch0_0_part-.*\.parquet", n) for n in names)
+    assert sorted(_table_rows(spark, base), key=repr) == sorted(
+        [(None, 1), (None, 1), ("a", 2)], key=repr
+    )
+
+
+def test_outbox_writer_round_trips_column_types_in_any_session_zone(spark, tmp_path):
+    """date, decimal(38,10), timestamp and array<string> columns read back
+    through Spark with the batch's types and values, also when the session
+    time zone is not UTC."""
+    key = "spark.sql.session.timeZone"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        base = str(tmp_path / "sink")
+        writer = parquet_orders_outbox_writer(base, key_col="k")
+        batch = spark.sql(
+            "SELECT * FROM VALUES"
+            " ('a', DATE '2024-03-10', CAST('12345678.0123456789' AS DECIMAL(38,10)),"
+            "  TIMESTAMP '2024-03-10 02:30:00.123456', array('x', NULL)),"
+            " ('b', DATE '1969-12-31', CAST('-0.0000000001' AS DECIMAL(38,10)),"
+            "  TIMESTAMP '2024-11-03 01:30:00', array())"
+            " AS t(k, d, amount, ts, tags)"
+        )
+        writer(batch.filter(F.col("k") == "a"), epoch_id=0)
+        writer(batch, epoch_id=1)
+        got = spark.read.parquet(base + "/orders")
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in batch.schema
+        ]
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, batch.collect()))
+    finally:
+        spark.conf.set(key, saved)
+
+
+_FS_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _checkpoint_manager(spark, path: str):
+    """The manager Spark builds for ``path`` from the session's conf."""
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return checkpointing.CheckpointFileManager.create(jvm.org.apache.hadoop.fs.Path(path), conf)
+
+
+def test_session_uses_filesystem_checkpoint_manager(spark, tmp_path):
+    """get_spark's checkpoint files go through FileSystem.rename, which forks
+    no readlink per file on a local disk without libhadoop."""
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == _FS_MANAGER
+    assert _checkpoint_manager(spark, str(tmp_path)).getClass().getName() == _FS_MANAGER
+
+
+def test_checkpoint_create_atomic_never_overwrites(spark, tmp_path):
+    """The no-overwrite guarantee the offset and commit logs rely on: a
+    second createAtomic(path, overwriteIfPossible=false) fails on close."""
+    from py4j.protocol import Py4JJavaError
+
+    mgr = _checkpoint_manager(spark, str(tmp_path))
+    path = spark._jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+    first = mgr.createAtomic(path, False)
+    first.write(1)
+    first.close()
+    second = mgr.createAtomic(path, False)
+    second.write(2)
+    with pytest.raises(Py4JJavaError, match="already exists"):
+        second.close()
+    with open(tmp_path / "0", "rb") as fh:
+        assert fh.read() == bytes([1])
+
+
+def test_state_store_keeps_checksum_files(spark, sf_dir, tmp_path):
+    """After a two-batch streaming_decide run, every state version's .delta
+    file sits next to Spark's checksum file for it."""
+    path = str(tmp_path / "in")
+    _signals(spark, sf_dir).coalesce(1).write.parquet(path + "/batch0")
+    checkpoint = str(tmp_path / "checkpoint")
+    q = (
+        streaming_decide(read_signal_stream_files(spark, path + "/batch*"))
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("ckpt_checksums")
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        spark.createDataFrame(
+            [(999_999_999, "SENTINEL", "BUY", 0.1, 1.0, "1m", SENTINEL_TS_US)],
+            "signal_id long, symbol string, side string, qty double, price double,"
+            " timeframe string, ts_us long",
+        ).write.parquet(path + "/batch1")
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    checkpointing = spark._jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    suffix = checkpointing.ChecksumCheckpointFileManager.CHECKSUM_FILE_SUFFIX()
+    partitions = [
+        (root, sorted(f for f in files if f.endswith(".delta")))
+        for root, _, files in os.walk(checkpoint + "/state")
+    ]
+    partitions = [(root, deltas) for root, deltas in partitions if deltas]
+    assert partitions
+    for root, deltas in partitions:
+        assert len(deltas) >= 2, (root, deltas)
+        for d in deltas:
+            assert os.path.exists(os.path.join(root, d + suffix)), (root, d)
 
 
 def _job_ids(spark, fn) -> list[int]:
