@@ -19,17 +19,28 @@ production can swap xxhash64 (cheaper, JVM-intrinsic) via parameters.
 
 from __future__ import annotations
 
+import threading
 import weakref
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .common import spread
-from .text import shingles_expr, tokens_expr
+from .text import bind_expr, shingles_expr, tokens_expr
 
 MINHASH_HASHES = 8
 LSH_BANDS = 4  # 4 bands x 2 rows: catches jaccard ≳ 0.4 pairs w.h.p.
 SHINGLE_K = 3
+
+
+# Live _unpersist_on_gc registrations per cached plan, keyed by
+# (applicationId, semanticHash). Spark's CacheManager keeps ONE cache entry
+# for plan-equal DataFrames: two results of the same operator over the same
+# input persist identical subplans and share that entry, and unpersisting
+# either one drops it for both. The entry is released when the last result
+# holding it goes.
+_CACHE_REFS: dict[tuple[str, int], int] = {}
+_CACHE_REFS_LOCK = threading.RLock()
 
 
 def _unpersist_on_gc(result: DataFrame, *cached: DataFrame) -> DataFrame:
@@ -39,7 +50,9 @@ def _unpersist_on_gc(result: DataFrame, *cached: DataFrame) -> DataFrame:
     plan, so they cannot be unpersisted eagerly (the result is lazy). In a
     long-lived shared session the caches would otherwise accumulate across
     queries; this ties their lifetime to the result DataFrame — once the
-    caller drops it, the executor memory is handed back.
+    caller drops it, the executor memory is handed back. A cache that a
+    plan-equal intermediate of another live result also holds stays until
+    that result goes too (_CACHE_REFS).
 
     CAVEAT (cache lifetime vs derived plans): the finalizer fires on GC of
     THIS exact object. A derived DataFrame (``result.filter(...)``) holds no
@@ -50,10 +63,20 @@ def _unpersist_on_gc(result: DataFrame, *cached: DataFrame) -> DataFrame:
     executed, or release deterministically via the attached
     ``result.release_cache()`` (idempotent; also detaches the finalizer).
     """
-    jdfs = [c._jdf for c in cached]
+    app = result.sparkSession.sparkContext.applicationId
+    held = [((app, c.semanticHash()), c._jdf) for c in cached]
+    with _CACHE_REFS_LOCK:
+        for key, _ in held:
+            _CACHE_REFS[key] = _CACHE_REFS.get(key, 0) + 1
 
     def _release() -> None:
-        for jdf in jdfs:
+        for key, jdf in held:
+            with _CACHE_REFS_LOCK:
+                left = _CACHE_REFS.get(key, 1) - 1
+                if left > 0:
+                    _CACHE_REFS[key] = left
+                    continue
+                _CACHE_REFS.pop(key, None)
             try:
                 jdf.unpersist(False)
             except Exception:  # session already stopped — nothing to free
@@ -62,8 +85,8 @@ def _unpersist_on_gc(result: DataFrame, *cached: DataFrame) -> DataFrame:
     fin = weakref.finalize(result, _release)
 
     def _release_now() -> None:
-        fin.detach()
-        _release()
+        if fin.detach() is not None:
+            _release()
 
     result.release_cache = _release_now
     return result
@@ -1381,24 +1404,27 @@ def simhash16_expr(tokens: Column) -> Column:
 
     Bit c is set iff more than half the token hashes have the top bit of
     md5 hex digit c set (the classic ±1 vote, restated as 2·count > n).
-    The md5 array is materialized once; 16 bit-votes read substrings of it.
-    A 64-bit xxhash64 variant is the production path; this one is
-    reproducible in any SQL engine.
+    The md5 array is computed once per row (bind_expr: an expression
+    argument of 17 higher-order functions would otherwise be re-evaluated
+    by each); 16 bit-votes read substrings of it. A 64-bit xxhash64
+    variant is the production path; this one is reproducible in any SQL
+    engine.
     """
-    toks_d = F.array_distinct(tokens)
-    hs = F.transform(toks_d, F.md5)
-    n = F.size(hs)
     def _top_bit_at(pos: int):
         def f(h: Column) -> Column:
             return F.substring(h, pos, 1).isin("8", "9", "a", "b", "c", "d", "e", "f")
 
         return f
 
-    total = F.lit(0)
-    for c in range(16):
-        set_cnt = F.size(F.filter(hs, _top_bit_at(c + 1)))
-        total = total + F.when(set_cnt * 2 > n, F.lit(1 << c)).otherwise(F.lit(0))
-    return total.cast("long")
+    def votes(hs: Column) -> Column:
+        n = F.size(hs)
+        total = F.lit(0)
+        for c in range(16):
+            set_cnt = F.size(F.filter(hs, _top_bit_at(c + 1)))
+            total = total + F.when(set_cnt * 2 > n, F.lit(1 << c)).otherwise(F.lit(0))
+        return total.cast("long")
+
+    return bind_expr(F.transform(F.array_distinct(tokens), F.md5), votes)
 
 
 def simhash_hamming_pairs(

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .text import bind_expr, ngrams_expr, tokens_expr
+
 DSIR_BUCKETS = 256
 DSIR_SALT = "dsir"
 DSIR_TOPK = 50
@@ -39,13 +41,9 @@ DSIR_TOPK = 50
 
 def grams_expr(toks: Column) -> Column:
     """Unigrams + word bigrams (the paper's feature set) from a token
-    array — one array expression, no Python in the loop."""
-    bigrams = F.zip_with(
-        F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
-        F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
-    return F.concat(toks, bigrams)
+    array — one array expression, no Python in the loop; ``toks`` is
+    evaluated once per row."""
+    return bind_expr(toks, lambda t: F.concat(t, ngrams_expr(t, 2)))
 
 
 def bucket_expr(gram: Column, n_buckets: int = DSIR_BUCKETS) -> Column:
@@ -157,8 +155,6 @@ def dsir_score_expr(
     IEEE association — a GATE tolerance, not an oracle contract). The
     ratio array rides as one literal; per-doc cost is O(grams), no join,
     no shuffle."""
-    from .text import tokens_expr
-
     arr = F.lit(ratios).cast("array<double>")
     return F.aggregate(
         grams_expr(tokens_expr(text)),
@@ -191,8 +187,6 @@ def dsir_sample(
     weights are one broadcast join + doc-keyed decimal sum; global top-k
     is a TakeOrderedAndProject (never a full sort). ``is_target`` must
     be an expression over ``docs``'s columns."""
-    from .text import tokens_expr
-
     base = docs.select(
         "doc_id", "lang", F.explode(grams_expr(tokens_expr(F.col("text")))).alias("gram"),
         is_target.alias("is_t"),

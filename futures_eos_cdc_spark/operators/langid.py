@@ -52,8 +52,12 @@ assignment grades as first-class alongside SURVEY.md §2.
 
 from __future__ import annotations
 
+from collections import OrderedDict
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .text import bind_expr
 
 LANGID_N = 3  # character trigrams
 LANGID_BUCKETS = 1024  # hashed feature space (config constant, not data)
@@ -73,16 +77,18 @@ def char_grams_expr(
     """Array of the padded text's character n-grams (positions 1..len-n+1).
 
     Empty/short texts yield an empty array (Spark's ``sequence(1, 0)``
-    would COUNT DOWN, so the guard is load-bearing)."""
-    s = _padded_expr(text, max_chars)
-    ln = F.length(s)
-    grams = F.transform(
-        F.sequence(F.lit(1), ln - (n - 1)),
-        lambda i: s.substr(i, F.lit(n)),
-    )
-    return F.when(ln >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
+    would COUNT DOWN, so the guard is load-bearing). The padded text is
+    built once per row (bind_expr), not once per gram."""
+
+    def grams(s: Column) -> Column:
+        ln = F.length(s)
+        g = F.transform(
+            F.sequence(F.lit(1), ln - (n - 1)),
+            lambda i: s.substr(i, F.lit(n)),
+        )
+        return F.when(ln >= n, g).otherwise(F.array().cast("array<string>"))
+
+    return bind_expr(_padded_expr(text, max_chars), grams)
 
 
 def gram_bucket_expr(
@@ -259,8 +265,11 @@ def langid_score(
 # (strong reference), so id(model) cannot be recycled by GC and serve a
 # stale weight table to a new model at the same address. Entries from
 # other SparkContexts are purged so a session restart cannot serve dead
-# py4j references.
-_CANDIDATES_CACHE: dict = {}
+# py4j references. Within one app the memo is a small LRU: a long session
+# that retrains models keeps at most _CANDIDATES_CACHE_MAX weight tables
+# alive, not one per model ever trained.
+_CANDIDATES_CACHE: OrderedDict = OrderedDict()
+_CANDIDATES_CACHE_MAX = 8
 
 
 def _candidates_array(
@@ -273,10 +282,11 @@ def _candidates_array(
     bucket-array column — the one construction every scorer shares so
     the tie rule / cast discipline cannot fork (code-review r11):
     ordering the structs ranks by max score first, smallest language on
-    ties. Memoized per (session, caller-declared structural key, model
-    identity) when ``cache_key`` is given — the caller asserts that the
-    key fully determines bcol's expression tree; passing None builds
-    fresh (no caching). See _CANDIDATES_CACHE."""
+    ties. ``bcol`` is evaluated once per row, not once per language
+    (bind_expr). Memoized per (session, caller-declared structural key,
+    model identity) when ``cache_key`` is given — the caller asserts
+    that the key fully determines bcol's expression tree; passing None
+    builds fresh (no caching). See _CANDIDATES_CACHE."""
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context
@@ -288,37 +298,43 @@ def _candidates_array(
         # `is model` re-check is belt-and-braces: the strong ref in the
         # value already prevents id reuse while the entry lives
         if got is not None and got[1] is model:
+            _CANDIDATES_CACHE.move_to_end(key)
             return got[0]
         for k in [k for k in _CANDIDATES_CACHE if k[0] != app_id]:
             del _CANDIDATES_CACHE[k]
 
-    def _fold(weights: Column) -> Column:
-        # closure helper: PySpark derives higher-order-function arity from
-        # the Python signature, so the merge lambda must take exactly two
-        return F.aggregate(
-            bcol,
-            F.lit(0).cast("long"),
-            lambda acc, b: acc + F.element_at(weights, b.cast("int") + 1),
-        )
+    def candidates(b: Column) -> Column:
+        def _fold(weights: Column) -> Column:
+            # closure helper: PySpark derives higher-order-function arity
+            # from the Python signature, so the merge lambda must take
+            # exactly two
+            return F.aggregate(
+                b,
+                F.lit(0).cast("long"),
+                lambda acc, x: acc + F.element_at(weights, x.cast("int") + 1),
+            )
 
-    candidates = []
-    for lang in sorted(model):
-        # ONE parsed expression per weight vector, not F.lit(list): building
-        # a 1024-element array literal through py4j cost ~1 s PER LANGUAGE
-        # of plan-construction time per invocation (profiled r12:
-        # langid_confidence construct=2.9 s vs execute=1.5 s at sf0.1) —
-        # the same literal-array lesson the r5 bench notes record for the
-        # ANN centroid planes.
-        arr = F.expr(
-            "array(" + ",".join(f"{w}L" for w in model[lang]) + ")"
-        )
-        score = _fold(arr)
-        candidates.append(
-            F.struct((-score).alias("neg"), F.lit(lang).alias("lang"))
-        )
-    out = F.array(*candidates)
+        structs = []
+        for lang in sorted(model):
+            # ONE parsed expression per weight vector, not F.lit(list):
+            # building a 1024-element array literal through py4j cost ~1 s
+            # PER LANGUAGE of plan-construction time per invocation
+            # (profiled r12: langid_confidence construct=2.9 s vs
+            # execute=1.5 s at sf0.1) — the same literal-array lesson the
+            # r5 bench notes record for the ANN centroid planes.
+            arr = F.expr(
+                "array(" + ",".join(f"{w}L" for w in model[lang]) + ")"
+            )
+            structs.append(
+                F.struct((-_fold(arr)).alias("neg"), F.lit(lang).alias("lang"))
+            )
+        return F.array(*structs)
+
+    out = bind_expr(bcol, candidates)
     if key is not None:
         _CANDIDATES_CACHE[key] = (out, model)
+        while len(_CANDIDATES_CACHE) > _CANDIDATES_CACHE_MAX:
+            _CANDIDATES_CACHE.popitem(last=False)
     return out
 
 
@@ -390,9 +406,9 @@ def langid_best_expr(
     a temp bucket column isn't possible. Returns struct(neg, lang):
     pred = .lang, score = -(.neg); NULL text gives a NULL struct
     (code-review r11: the guard lives HERE, so direct composers cannot
-    classify NULL rows as the smallest language at score 0). Whole-stage
-    codegen's subexpression elimination shares the per-gram hashing
-    across the per-language folds. ``text`` is a column name or a Column;
+    classify NULL rows as the smallest language at score 0). The gram
+    buckets are computed once per row and shared by the per-language
+    folds (_candidates_array). ``text`` is a column name or a Column;
     only a name is cached (_grams_cache_key)."""
     if isinstance(text, str):
         text = F.col(text)

@@ -35,6 +35,45 @@ def tokens_expr(text: Column) -> Column:
     return F.split(F.trim(F.lower(text)), r"\s+")
 
 
+def bind_expr(e: Column, f) -> Column:
+    """``f(e)`` with ``e`` evaluated ONCE per row.
+
+    Spark evaluates higher-order-function (HOF) lambdas interpreted, and
+    neither whole-stage codegen nor the interpreter shares a row
+    expression that a lambda body reads: ``transform(seq, i ->
+    slice(split(text), i, k))`` re-splits the text once per element,
+    quadratic in document length. Passing ``e`` through a one-element
+    array binds it to a lambda variable instead: ``f`` must take one
+    argument and should read ``e`` only through it. ``f(NULL)`` is what
+    a NULL ``e`` gives, exactly as ``f(e)`` would."""
+    return F.element_at(F.transform(F.array(e), f), 1)
+
+
+def ngrams_expr(arr: Column, k: int, sep: str = " ") -> Column:
+    """Every run of ``k`` consecutive elements of ``arr``, joined by
+    ``sep``, in position order (duplicates kept); an empty array when
+    ``arr`` holds fewer than ``k`` elements, NULL when it is NULL.
+
+    Linear, built from the k shifted slices ``slice(arr, j, size - k +
+    1)`` and ONE lambda pass that never reads ``arr``: a ``zip_with`` of
+    the two slices for bigrams, else ``arrays_zip`` of all k (a built-in
+    call, no lambda) and a ``transform`` joining each tuple. Interleaved
+    on 50,000 docs, 2 cores: a chain of k-1 ``zip_with``s took 1.27x the
+    ``arrays_zip`` time at k=3 and 2.2x at k=8; at k=2 ``zip_with`` took
+    0.91x. Each slice re-reads ``arr``, so pass a column reference or a
+    :func:`bind_expr` lambda variable, not an expression to recompute."""
+    if k == 1:
+        return arr
+    m = F.greatest(F.size(arr) - (k - 1), F.lit(0))
+    slices = [F.slice(arr, j, m) for j in range(1, k + 1)]
+    if k == 2:
+        return F.zip_with(*slices, lambda a, b: F.concat_ws(sep, a, b))
+    # arrays_zip names the fields of unnamed inputs "0".."k-1"
+    return F.transform(
+        F.arrays_zip(*slices), lambda x: F.concat_ws(sep, *[x[str(j)] for j in range(k)])
+    )
+
+
 def token_count_expr(text: Column) -> Column:
     return F.size(tokens_expr(text))
 
@@ -93,7 +132,10 @@ def gopher_metrics(text: Column) -> dict[str, Column]:
     )
     swr = F.length(F.regexp_replace(text, PUNCT_CLASS, "")).cast("double") / n
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS_EN])
-    n_stop = F.size(F.filter(stop_arr, lambda s: F.array_contains(toks, s)))
+    n_stop = bind_expr(
+        toks,
+        lambda t: F.size(F.filter(stop_arr, lambda s: F.array_contains(t, s))),
+    )
     awr = F.size(F.filter(toks, lambda x: x.rlike(r"\p{L}"))).cast("double") / n
     keep = (
         n.between(GOPHER_MIN_WORDS, GOPHER_MAX_WORDS)
@@ -165,14 +207,16 @@ def lang_id_expr(text: Column) -> Column:
 
 
 def shingles_expr(tokens: Column, k: int) -> Column:
-    """Distinct k-token shingles; documents shorter than k tokens collapse to
-    a single whole-document shingle (so every doc has ≥1 shingle)."""
-    n = F.size(tokens)
-    seq = F.sequence(F.lit(1), n - (k - 1))
-    sh = F.transform(seq, lambda i: F.concat_ws(" ", F.slice(tokens, i, k)))
-    return F.when(n >= k, F.array_distinct(sh)).otherwise(
-        F.array(F.concat_ws(" ", tokens))
-    )
+    """Distinct k-token shingles in first-occurrence order; documents
+    shorter than k tokens collapse to a single whole-document shingle (so
+    every doc has ≥1 shingle). ``tokens`` is evaluated once per row."""
+
+    def f(t: Column) -> Column:
+        return F.when(F.size(t) >= k, F.array_distinct(ngrams_expr(t, k))).otherwise(
+            F.array(F.concat_ws(" ", t))
+        )
+
+    return bind_expr(tokens, f)
 
 
 def fingerprint_expr(text: Column, k: int = 8) -> Column:
@@ -216,21 +260,18 @@ def hashed_classifier_logit_expr(text: Column, salt: str = "qw|") -> Column:
     scan partition: score-then-filter pipelines (quality gates) stay
     scan-shaped at 100 TB.
     """
-    toks = tokens_expr(text)
-    n_t = F.size(toks)
-    bigrams = F.zip_with(
-        F.slice(toks, 1, F.greatest(n_t - 1, F.lit(0))),
-        F.slice(toks, 2, F.greatest(n_t - 1, F.lit(0))),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
-    feats = F.concat(toks, bigrams)
-    wsum = F.aggregate(
-        feats,
-        F.lit(0).cast("long"),
-        lambda acc, t: acc
-        + F.conv(F.substring(F.md5(F.concat(F.lit(salt), t)), 1, 4), 16, 10).cast(
-            "long"
+    feats = bind_expr(tokens_expr(text), lambda t: F.concat(t, ngrams_expr(t, 2)))
+
+    def logit(fs: Column) -> Column:
+        wsum = F.aggregate(
+            fs,
+            F.lit(0).cast("long"),
+            lambda acc, t: acc
+            + F.conv(F.substring(F.md5(F.concat(F.lit(salt), t)), 1, 4), 16, 10).cast(
+                "long"
+            )
+            - 32768,
         )
-        - 32768,
-    )
-    return wsum / (F.lit(32768.0) * F.size(feats))
+        return wsum / (F.lit(32768.0) * F.size(fs))
+
+    return bind_expr(feats, logit)

@@ -28,7 +28,7 @@ from ..operators.similarity import (
     brute_force_topk,
     embedding_near_dup,
 )
-from ..operators.text import with_text_stats
+from ..operators.text import ngrams_expr, with_text_stats
 
 # ---------------------------------------------------------------------------
 # Exact dedup: keep-first per content hash
@@ -764,12 +764,7 @@ def q_benchmark_contamination(spark: SparkSession, sf_dir: str, _t) -> DataFrame
     ).filter(F.size("t") >= CONTAM_K)
     grams = docs.select(
         "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("t") - (CONTAM_K - 1)),
-                lambda i: F.concat_ws(" ", F.slice(F.col("t"), i, CONTAM_K)),
-            )
-        ).alias("g"),
+        F.explode(ngrams_expr(F.col("t"), CONTAM_K)).alias("g"),
     )
     eval_g = grams.filter(F.col("doc_id") % 17 == 0).select("g").distinct()
     return (
@@ -1358,12 +1353,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     ).filter(F.size("t") >= CONTAM_K)
     grams = toks.select(
         "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("t") - (CONTAM_K - 1)),
-                lambda i: F.concat_ws(" ", F.slice(F.col("t"), i, CONTAM_K)),
-            )
-        ).alias("g"),
+        F.explode(ngrams_expr(F.col("t"), CONTAM_K)).alias("g"),
     )
     eval_g = grams.filter(F.col("doc_id") % 17 == 0).select("g").distinct()
     contaminated = (
@@ -2284,13 +2274,7 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     )
     bigrams = docs.select(
         "doc_id",
-        F.explode(
-            F.zip_with(
-                F.slice(F.col("arr"), 1, F.greatest(F.size("arr") - 1, F.lit(0))),
-                F.slice(F.col("arr"), 2, F.greatest(F.size("arr") - 1, F.lit(0))),
-                lambda a, b: F.concat(a, F.lit(" "), b),
-            )
-        ).alias("bg"),
+        F.explode(ngrams_expr(F.col("arr"), 2)).alias("bg"),
     )
     bstats = (
         bigrams.groupBy("doc_id", "bg")

@@ -384,3 +384,26 @@ def test_candidates_cache_pins_model_and_misses_on_new_model(spark):
     model_b = {k: list(v) for k, v in model_a.items()}
     langid_best_expr(F.col("text"), model_b)
     assert len(_CANDIDATES_CACHE) == 2
+
+
+def test_candidates_cache_is_bounded_within_one_app(spark):
+    """Retraining in one long session must not grow the memo without
+    bound: it keeps the most recently used _CANDIDATES_CACHE_MAX entries,
+    and a hit refreshes an entry's place."""
+    from futures_eos_cdc_spark.operators.langid import (
+        _CANDIDATES_CACHE,
+        _CANDIDATES_CACHE_MAX,
+        langid_best_expr,
+    )
+
+    _CANDIDATES_CACHE.clear()
+    models = [{"de": [i, 1], "en": [1, i]} for i in range(_CANDIDATES_CACHE_MAX + 4)]
+    langid_best_expr("text", models[0], buckets=2)
+    for m in models[1:]:
+        langid_best_expr("text", m, buckets=2)
+        langid_best_expr("text", models[0], buckets=2)  # keeps models[0] recent
+    assert len(_CANDIDATES_CACHE) == _CANDIDATES_CACHE_MAX
+    pinned = [m for _col, m in _CANDIDATES_CACHE.values()]
+    assert any(m is models[0] for m in pinned)
+    assert all(m is not models[1] for m in pinned)
+    _CANDIDATES_CACHE.clear()
