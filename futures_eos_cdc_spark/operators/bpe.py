@@ -207,8 +207,8 @@ def _make_ranked_word_apply(merges, eow: str = EOW):
     Shipping discipline: the returned closure is DYNAMICALLY created, so
     cloudpickle serializes it BY VALUE (its cells: the ranks dict, the
     pair list, ``eow``, and stdlib functions) — workers never need this
-    package importable, the multimodal.decode_features rule the str
-    closures follow by inlining."""
+    package importable, the rule the str closures follow by
+    inlining."""
     from bisect import bisect_right
     from heapq import heappop, heappush
 
@@ -467,8 +467,8 @@ def bpe_word_token_counts(
     shape = _resolve_apply_shape(apply_shape, len(merges))
     sep, eow = SEP, EOW
 
-    # fully self-contained nested closures (the multimodal.decode_features
-    # discipline): cloudpickle ships them by VALUE, so workers never need
+    # fully self-contained nested closures: cloudpickle ships them by
+    # VALUE (dynamically created functions always are), so workers never need
     # this package importable on their own sys.path. Each body is its
     # module-level twin inlined — parity pytests pin them together.
     if shape == "str":

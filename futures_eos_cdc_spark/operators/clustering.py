@@ -52,11 +52,6 @@ def _split_uri(path: str) -> tuple[str, str, str]:
     return scheme, "", rest
 
 
-def _scheme_free(path: str) -> str:
-    """Path component only (back-compat helper; see :func:`_split_uri`)."""
-    return _split_uri(path)[2]
-
-
 def _ensure_checkpoint_dir(sc, checkpoint_dir: str) -> None:
     """Set the context checkpoint dir iff the LIVE value doesn't already
     point there. Spark stores ``<qualified dir>/<random-UUID>`` — so the

@@ -52,11 +52,10 @@ assignment grades as first-class alongside SURVEY.md §2.
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..memo import memo
 from .text import bind_expr
 
 LANGID_N = 3  # character trigrams
@@ -263,13 +262,7 @@ def langid_score(
 # normalized str(bcol), whose regex collapsed real column names like
 # text_1/text_2 into one key; and the cached value pins the model dict
 # (strong reference), so id(model) cannot be recycled by GC and serve a
-# stale weight table to a new model at the same address. Entries from
-# other SparkContexts are purged so a session restart cannot serve dead
-# py4j references. Within one app the memo is a small LRU: a long session
-# that retrains models keeps at most _CANDIDATES_CACHE_MAX weight tables
-# alive, not one per model ever trained.
-_CANDIDATES_CACHE: OrderedDict = OrderedDict()
-_CANDIDATES_CACHE_MAX = 8
+# stale weight table to a new model at the same address.
 
 
 def _candidates_array(
@@ -286,22 +279,7 @@ def _candidates_array(
     (bind_expr). Memoized per (session, caller-declared structural key,
     model identity) when ``cache_key`` is given — the caller asserts
     that the key fully determines bcol's expression tree; passing None
-    builds fresh (no caching). See _CANDIDATES_CACHE."""
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    app_id = sc.applicationId if sc is not None else None
-    key = None
-    if cache_key is not None:
-        key = (app_id, cache_key, id(model))
-        got = _CANDIDATES_CACHE.get(key)
-        # `is model` re-check is belt-and-braces: the strong ref in the
-        # value already prevents id reuse while the entry lives
-        if got is not None and got[1] is model:
-            _CANDIDATES_CACHE.move_to_end(key)
-            return got[0]
-        for k in [k for k in _CANDIDATES_CACHE if k[0] != app_id]:
-            del _CANDIDATES_CACHE[k]
+    builds fresh (no caching)."""
 
     def candidates(b: Column) -> Column:
         def _fold(weights: Column) -> Column:
@@ -330,12 +308,15 @@ def _candidates_array(
             )
         return F.array(*structs)
 
-    out = bind_expr(bcol, candidates)
-    if key is not None:
-        _CANDIDATES_CACHE[key] = (out, model)
-        while len(_CANDIDATES_CACHE) > _CANDIDATES_CACHE_MAX:
-            _CANDIDATES_CACHE.popitem(last=False)
-    return out
+    if cache_key is None:
+        return bind_expr(bcol, candidates)
+    out, pinned = memo(
+        ("langid.candidates", cache_key, id(model)),
+        lambda: (bind_expr(bcol, candidates), model),
+    )
+    # `is model` re-check is belt-and-braces: the strong ref in the value
+    # already prevents id reuse while the entry lives
+    return out if pinned is model else bind_expr(bcol, candidates)
 
 
 def _best_from_buckets(

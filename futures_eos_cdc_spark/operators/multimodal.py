@@ -1,7 +1,7 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video ride through the engine as ``binary`` columns with a
-metadata struct; decode / feature-extraction / resize / frame-sampling run as
+format column; synthesis / decode / feature extraction / resize run as
 Arrow-batched Pandas functions over ``mapInPandas`` — the ONLY place the
 engine leaves the JVM, and it does so in columnar batches.
 
@@ -15,8 +15,7 @@ Decode is REAL for the formats that need no external libraries:
 Compressed formats (JPEG/PNG/MP3/video) DO need PIL/librosa/ffmpeg, which
 this container deliberately lacks — ``decode_media_features`` rejects them
 with an actionable error naming the missing library; a production build
-adds the handler in ``_DECODERS`` and nothing else changes. The original
-hash-based ``decode_features`` stand-in is kept for plumbing tests.
+adds the handler in ``decode_media_features`` and nothing else changes.
 
 Scale notes: binary payloads never shuffle here (mapInPandas is
 partition-local); at 100 TB keep payloads in their own column family /
@@ -29,9 +28,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-FEATURE_DIM = 4
 
 
 def _ship_module_by_value() -> None:
@@ -49,69 +45,6 @@ def _ship_module_by_value() -> None:
     from pyspark import cloudpickle
 
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
-
-FEATURES_SCHEMA = (
-    "doc_id long, format string, n_bytes long, sha256_8 string, "
-    "width int, height int, features array<double>"
-)
-
-
-def attach_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Simulate a multimodal table: utf-8 payload bytes + typed metadata."""
-    return docs.select(
-        "doc_id",
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
-        F.struct(
-            F.lit("fake/raw").alias("format"),
-            (F.length(text_col) % 64 + 1).cast("int").alias("width"),
-            (F.length(text_col) % 48 + 1).cast("int").alias("height"),
-        ).alias("meta"),
-    )
-
-
-def decode_features(multimodal: DataFrame) -> DataFrame:
-    """Arrow-batched decode + feature extraction over mapInPandas.
-
-    Input: (doc_id, payload binary, meta struct). Output one row per input
-    with FEATURES_SCHEMA. Batches stay columnar end-to-end (pandas in/out).
-
-    The batch function is fully self-contained (nested closure, no references
-    to this module): cloudpickle ships it by VALUE, so workers never need
-    futures_eos_cdc_spark importable on their own sys.path.
-    """
-    feature_dim = FEATURE_DIM
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-
-        import pandas as _pd
-
-        def fake_decode(payload: bytes) -> list[float]:
-            # Deterministic stand-in for a real decoder (PIL/librosa/ffmpeg)
-            # — a production build replaces exactly this function.
-            digest = _hashlib.sha256(payload).digest()
-            return [
-                int.from_bytes(digest[4 * i : 4 * i + 4], "big") / 2**32
-                for i in range(feature_dim)
-            ]
-
-        for pdf in it:
-            payloads = pdf["payload"]
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "format": [m["format"] for m in pdf["meta"]],
-                    "n_bytes": payloads.map(len),
-                    "sha256_8": payloads.map(
-                        lambda b: _hashlib.sha256(b).hexdigest()[:8]
-                    ),
-                    "width": [m["width"] for m in pdf["meta"]],
-                    "height": [m["height"] for m in pdf["meta"]],
-                    "features": payloads.map(fake_decode),
-                }
-            )
-
-    return multimodal.mapInPandas(batches, FEATURES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -395,23 +328,3 @@ def resize_media(media: DataFrame, width: int, height: int) -> DataFrame:
             yield out
 
     return media.mapInPandas(batches, media.schema)
-
-
-def _frame_sample_bytes(multimodal: DataFrame, every_n_bytes: int = 64) -> DataFrame:
-    """Byte-slice 'frame sampling' plumbing exerciser (PRIVATE: the fixture
-    media are single images / audio clips — no real frame structure exists
-    in this container; a video build replaces the slicer with an
-    ffmpeg-backed decoder in the same explode shape): one row per
-    every_n_bytes slice, exercising the explode-shaped output a video
-    pipeline produces."""
-    n_frames = F.greatest(
-        F.lit(1), (F.length(F.col("payload")) / every_n_bytes).cast("int")
-    )
-    return multimodal.withColumn(
-        "frame_idx", F.explode(F.sequence(F.lit(0), n_frames - 1))
-    ).withColumn(
-        "frame_payload",
-        F.substring(
-            F.col("payload"), F.col("frame_idx") * every_n_bytes + 1, every_n_bytes
-        ),
-    )

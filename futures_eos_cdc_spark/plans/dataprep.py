@@ -11,10 +11,13 @@ order so float dot products are bit-identical.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..memo import memo
 from ..operators.common import spread
 from ..operators.dedup import (
     exact_dedup,
@@ -640,15 +643,6 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     return ann_topk_lsh(e, e.filter(F.col("vec_id") < 5), k=3)
 
 
-# Trained-centroid cache, keyed by (session, fixture dir): ivf_train is
-# deterministic by design (floor-grid integer Lloyd steps), so the trained
-# model is a pure function of its inputs and the two consumers
-# (ann_cosine_ivf's probe index, embedding_kmeans_clusters' curation
-# clusters) share one training pass — the "train once offline, reuse
-# everywhere" deployment the operator docstring prescribes, in miniature.
-_IVF_CENTROIDS: dict[tuple[str, str], list[list[float]]] = {}
-
-
 def embeddings_auto_n_cells(sf_dir: str) -> int:
     """Corpus-derived k-means cell count for the shared trained model
     (r6 VERDICT item 5): cells = auto_n_cells(row count of
@@ -670,25 +664,26 @@ def embeddings_auto_n_cells(sf_dir: str) -> int:
 
 
 def _trained_centroids(spark: SparkSession, sf_dir: str, e: DataFrame) -> list[list[float]]:
+    """Trained IVF centroids, once per (session, fixture dir): ivf_train is
+    deterministic by design (floor-grid integer Lloyd steps), so the
+    trained model is a pure function of its inputs and the consumers
+    (ann_cosine_ivf's probe index, embedding_kmeans_clusters' curation
+    clusters) share one training pass — the "train once offline, reuse
+    everywhere" deployment the operator docstring prescribes, in
+    miniature. The content fingerprint in the key (code review r13) makes
+    a regenerated fixture dir retrain instead of serving stale cells."""
     from ..operators.similarity import ivf_train
 
-    app_id = spark.sparkContext.applicationId
-    # content fingerprint in the key (code review r13, with _PQ_MODEL):
-    # a regenerated fixture dir retrains instead of serving stale cells
-    key = (
-        app_id,
-        sf_dir,
-        _dir_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
-    )
-    got = _IVF_CENTROIDS.get(key)
-    if got is None:
-        # purge stale-session entries (same rationale as sources/tables.py)
-        for k in [k for k in _IVF_CENTROIDS if k[0] != app_id]:
-            del _IVF_CENTROIDS[k]
-        got = _IVF_CENTROIDS[key] = ivf_train(
+    return memo(
+        (
+            "ivf_centroids",
+            sf_dir,
+            _dir_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
+        ),
+        lambda: ivf_train(
             e, n_cells=embeddings_auto_n_cells(sf_dir), iters=2, seed=42
-        )
-    return got
+        ),
+    )
 
 
 def q_ann_ivf(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
@@ -1876,13 +1871,12 @@ def _bm25_scores(
 # ---------------------------------------------------------------------------
 # Shared train-once retrieval core (r12 VERDICT next #1): the corpus-derived
 # artifacts every retrieval query rebuilds are factored into ONE session
-# cache, the _trained_centroids / _BLOOM_PREPARED prepare-once convention —
+# memo entry, the _trained_centroids / q_bloom_gate prepare-once convention —
 # a deployment materializes its inverted-index statistics and fixed-query
 # candidate lists when the CORPUS changes, not per query-program run. The
 # DuckDB oracles replay construction per run (the cross-engine construction
 # check), as documented for every train-once family in BENCH_NOTES.
 # ---------------------------------------------------------------------------
-_RETRIEVAL_CORE: dict = {}
 
 
 def _retrieval_core(
@@ -1907,21 +1901,19 @@ def _retrieval_core(
     caller reads — "bm25" (the stats dict) or "cand" (the two candidate
     lists, which themselves need bm25) — so a session running only
     q_bm25_topk never pays the corpus-wide cosine scan or the mlt_lex
-    window pass. Eviction drops only OTHER apps' entries (the
-    _BPE_V1K_MERGES convention): a session alternating two fixture dirs
-    keeps both cores instead of thrashing full rebuilds; a regenerated
-    dir gets a fresh key via the content fingerprints and its stale
-    entry dies with the app at the latest.
+    window pass. The memo value is the mutable dict those components
+    fill; a regenerated dir gets a fresh key via the content
+    fingerprints.
     """
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _dir_fingerprint(os.path.join(sf_dir, "documents.parquet")),
-        _dir_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
+    core = memo(
+        (
+            "retrieval_core",
+            sf_dir,
+            _dir_fingerprint(os.path.join(sf_dir, "documents.parquet")),
+            _dir_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
+        ),
+        dict,
     )
-    for stale in [k for k in _RETRIEVAL_CORE if k[0] != key[0]]:
-        del _RETRIEVAL_CORE[stale]
-    core = _RETRIEVAL_CORE.setdefault(key, {})
 
     from ..operators.text import tokens_expr
 
@@ -2774,39 +2766,34 @@ FROM pranked WHERE rank <= {k}
 
 ANN_IVF_PQ_ORACLE = _ann_ivf_pq_oracle_sql()
 
-# PQ model cache, keyed (session, fixture dir) — the _IVF_CENTROIDS
-# convention: codebook training is deterministic (floor-grid Lloyd), so
-# the model is a pure function of the corpus; the encoded codes table is
-# the persisted PQ index (localCheckpoint = the local[32] stand-in for a
-# stored table). Codes are corpus-sized but 8 ints/row — the compressed
-# scan side IS the operator's point.
-_PQ_MODEL: dict = {}
-
 
 def _trained_pq(spark: SparkSession, sf_dir: str, e: DataFrame):
+    """(codebooks, codes) once per (session, fixture dir) — the
+    _trained_centroids convention: codebook training is deterministic
+    (floor-grid Lloyd), so the model is a pure function of the corpus;
+    the encoded codes table is the persisted PQ index (localCheckpoint =
+    the local[32] stand-in for a stored table). Codes are corpus-sized
+    but 8 ints/row — the compressed scan side IS the operator's point.
+    The content fingerprint in the key (code review r13): a fixture dir
+    regenerated in-session must retrain — the oracle replays training on
+    the NEW vectors every run, so a stale model would silently split the
+    engines."""
     from ..operators.similarity import pq_encode, pq_train
 
-    app_id = spark.sparkContext.applicationId
-    # content fingerprint in the key (code review r13): a fixture dir
-    # regenerated in-session must retrain, exactly like _RETRIEVAL_CORE
-    # and the fingerprinted _BLOOM_PREPARED — the oracle replays training
-    # on the NEW vectors every run, so a stale model would silently split
-    # the engines.
-    key = (
-        app_id,
-        sf_dir,
-        _dir_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
-    )
-    got = _PQ_MODEL.get(key)
-    if got is None:
-        for k in [k for k in _PQ_MODEL if k[0] != app_id]:
-            del _PQ_MODEL[k]
+    def build():
         codebooks = pq_train(
             e, m=PQ_FIXTURE_M, ksub=PQ_FIXTURE_KSUB, iters=2, seed=42
         )
-        codes = pq_encode(e, codebooks).localCheckpoint()
-        got = _PQ_MODEL[key] = (codebooks, codes)
-    return got
+        return codebooks, pq_encode(e, codebooks).localCheckpoint()
+
+    return memo(
+        (
+            "pq_model",
+            sf_dir,
+            _dir_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
+        ),
+        build,
+    )
 
 
 def q_ann_ivf_pq(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
@@ -4183,6 +4170,7 @@ from ..operators.bpe import (  # noqa: E402
     doc_bpe_token_counts_joined,
     train_bpe,
     train_bpe_bytes,
+    train_bpe_py_fast,
 )
 
 _BPE_WORD_FILTER = (
@@ -4447,7 +4435,7 @@ def _user_scoped_tmp_dir(prefix: str) -> str:
     /tmp path let two USERS' harnesses clobber each other's parquet
     parts; scoping by user removes the cross-user hazard while keeping
     the path stable across this user's sequential harness processes.
-    Shared by every persisted-model path (v1k BPE, unigram)."""
+    Shared by every persisted-model path (_PERSISTED_MODELS)."""
     import getpass
     import tempfile
 
@@ -4459,7 +4447,7 @@ def _user_scoped_tmp_dir(prefix: str) -> str:
 
 
 def _locked_import_ensure_write(path: str, table) -> None:
-    """The import-ensure writer both persisted-model paths share: flock
+    """The writer every persisted-model path shares: flock
     same-path writers (ADVICE r9 — concurrent importers could delete
     each other's parts mid-glob), write the pyarrow ``table`` as
     ``part-import-ensure.parquet``, and drop any stale Spark-written
@@ -4494,7 +4482,7 @@ def _default_v1k_dir() -> str:
 # import, so it is one FIXED path per process; the env override exists so
 # concurrent harnesses can isolate themselves — within one process, query
 # construction always rewrites the table for its own sf_dir before any
-# oracle comparison runs (_v1k_merges), and the import-time ensure below
+# oracle comparison runs (_persisted_model), and the lazy ensure
 # assumes SEQUENTIAL harness processes per path (true of the driver's
 # verify/bench steps and this repo's test/bench discipline); writers of
 # the SAME path additionally serialize on an flock so concurrent imports
@@ -4505,60 +4493,21 @@ BPE_V1K_MERGES_PATH = os.environ.get(
 _DRIVER_CORRECTNESS_SF_DIR = "/root/testdata/sf0.01"
 
 
-def _write_v1k_merges_locked(merges) -> None:
-    """The ONE writer for BPE_V1K_MERGES_PATH (ADVICE r10: the query-
-    construction persist used Spark overwrite while the ensure used the
-    flocked pyarrow path — two locking disciplines on the same
-    directory). Every writer now serializes on the same .writer.lock."""
+def _v1k_table(merges):
     import pyarrow as _pa
 
-    _locked_import_ensure_write(
-        BPE_V1K_MERGES_PATH,
-        _pa.table(
-            {
-                "merge_rank": _pa.array(
-                    range(1, len(merges) + 1), type=_pa.int32()
-                ),
-                "lhs": _pa.array([m[0] for m in merges]),
-                "rhs": _pa.array([m[1] for m in merges]),
-                "pair_freq": _pa.array(
-                    [int(m[2]) if len(m) > 2 else 0 for m in merges],
-                    type=_pa.int64(),
-                ),
-            }
-        ),
+    return _pa.table(
+        {
+            "merge_rank": _pa.array(range(1, len(merges) + 1), type=_pa.int32()),
+            "lhs": _pa.array([m[0] for m in merges]),
+            "rhs": _pa.array([m[1] for m in merges]),
+            "pair_freq": _pa.array(
+                [int(m[2]) if len(m) > 2 else 0 for m in merges],
+                type=_pa.int64(),
+            ),
+        }
     )
 
-
-def _ensure_v1k_merge_table() -> None:
-    """Harness-order robustness for the v1k oracle: it reads the
-    PERSISTED merge table, which the Spark query writes eagerly — but a
-    harness may run the oracle before ever constructing the query (or in
-    a different process). (Re)train on the driver's correctness fixture,
-    Spark-free (DuckDB word-freq + the pytest-pinned Python trainer,
-    <0.5 s), so the table always exists and matches sf0.01. Called
-    LAZILY via ensure_oracle_model_tables() — first oracle use, never at
-    import (VERDICT r10 wrong #1). Harnesses at other SFs construct the
-    Spark query first (parity tests / bench both do), and that query
-    rewrites the table for ITS corpus before any compare runs."""
-    import duckdb as _duckdb
-
-    from ..operators.bpe import BPE_VOCAB_CAP as _cap
-    from ..operators.bpe import train_bpe_py_fast as _train
-
-    docs = os.path.join(_DRIVER_CORRECTNESS_SF_DIR, "documents.parquet")
-    if not os.path.exists(docs):
-        return  # no fixture on this box; the Spark query still persists
-    wf = _duckdb.sql(
-        rf"""
-        SELECT w, count(*) AS f FROM (
-          SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w
-          FROM read_parquet('{docs}') WHERE text IS NOT NULL
-        ) WHERE {_BPE_WORD_FILTER}
-        GROUP BY w ORDER BY f DESC, w LIMIT {_cap}
-        """
-    ).fetchall()
-    _write_v1k_merges_locked(_train(wf, n_merges=BPE_N_MERGES_LARGE))
 
 # Oracle for the production-shaped apply: training is replayed via the
 # PERSISTED merge table (the query trains with the same pytest-pinned
@@ -4625,7 +4574,7 @@ def q_bpe_token_counts_v1k(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     vocabulary, and BENCH_SCALING measures the 10x/100x corpora whose
     suffixed replica vocabularies DO grow the merge table.
 
-    The trained table is PERSISTED (_write_v1k_merges_locked, eager) before the
+    The trained table is PERSISTED (_persisted_model, eager) before the
     lazy result returns; the oracle replays apply from that table (the
     module-level SQL above), so Spark query -> oracle ordering is
     guaranteed within every harness that builds the DataFrame first.
@@ -4636,49 +4585,8 @@ def q_bpe_token_counts_v1k(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     40-merge family keeps per-call training: there the oracle replays
     training too, so THAT comparison is symmetric the other way.)
     """
-    docs, merges = _v1k_merges(spark, sf_dir, _t)
+    docs, merges = _persisted_model(spark, sf_dir, _t, "v1k")
     return doc_bpe_token_counts_joined(docs, merges)
-
-
-_BPE_V1K_MERGES: dict = {}
-_BPE_V1K_FILE_SF: dict = {}
-
-
-def _v1k_merges(spark: SparkSession, sf_dir: str, _t):
-    """Train-once + persist-for-the-oracle, shared by EVERY v1k entry
-    point (code-review r9: the file-SF guard lived only in the counts
-    query, so a session alternating fixtures could leave the persisted
-    table describing the OTHER corpus when blocks/subwords ran). Returns
-    (docs, merges); after this call the persisted table always matches
-    ``sf_dir``."""
-    docs = spread(_t(spark, sf_dir, "documents"))
-    key = (spark.sparkContext.applicationId, sf_dir)
-    merges = _BPE_V1K_MERGES.get(key)
-    if merges is None:
-        for k in [k for k in _BPE_V1K_MERGES if k[0] != key[0]]:
-            del _BPE_V1K_MERGES[k]  # purge stopped-session entries
-        merges = _BPE_V1K_MERGES[key] = train_bpe(
-            docs, n_merges=BPE_N_MERGES_LARGE
-        )
-    if _BPE_V1K_FILE_SF.get("sf") != sf_dir:
-        # the persisted table must describe THIS sf_dir (a session that
-        # alternates fixtures would otherwise leave the oracle reading
-        # the other corpus's vocabulary). Written via the SAME flocked
-        # pyarrow path as the lazy ensure (ADVICE r10 — one locking
-        # discipline per directory), failing READABLY here rather than
-        # as an opaque oracle error three steps later.
-        try:
-            _write_v1k_merges_locked(merges)
-        except OSError as exc:
-            raise RuntimeError(
-                f"v1k BPE merge-table dir {BPE_V1K_MERGES_PATH!r} is not "
-                f"writable ({exc}) — the v1k oracles replay apply from the "
-                "persisted table there; set SPARK_GRAFT_BPE_V1K_DIR to a "
-                "writable directory (the value is baked into the oracle "
-                "SQL at import, so set it before importing the package)"
-            ) from exc
-        _BPE_V1K_FILE_SF["sf"] = sf_dir
-    return docs, merges
 
 
 q_bpe_token_counts_v1k.__doc__ = q_bpe_token_counts_v1k.__doc__.format(
@@ -4723,7 +4631,7 @@ def q_bpe_token_blocks_v1k(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     r8 VERDICT's "every token-denominated operator budgets through this"
     observation asks for. Oracle replays apply from the persisted merge
     table (recursive CTE) and the prefix sum over (lang, doc_id)."""
-    docs, merges = _v1k_merges(spark, sf_dir, _t)
+    docs, merges = _persisted_model(spark, sf_dir, _t, "v1k")
     counts = doc_bpe_token_counts_joined(docs, merges, keep_cols=("lang",))
     return _pack_token_blocks(counts)
 
@@ -4760,7 +4668,7 @@ def q_bpe_subword_vocab_v1k(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     table and unnests the same symbol strings."""
     from ..operators.bpe import _clean_words, bpe_word_tokens
 
-    docs, merges = _v1k_merges(spark, sf_dir, _t)
+    docs, merges = _persisted_model(spark, sf_dir, _t, "v1k")
     words = docs.filter(F.col("text").isNotNull()).select(
         F.explode(_clean_words(F.col("text"))).alias("word")
     )
@@ -5211,19 +5119,18 @@ def q_bloom_gate(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     from ..operators.bloom import bloom_gate, bloom_prepare
 
     docs = spread(_t(spark, sf_dir, "documents"))
-    app_id = spark.sparkContext.applicationId
-    # ADVICE r12: key the prepare-once cache on the fixture's CONTENT
+    # ADVICE r12: key the prepare-once memo on the fixture's CONTENT
     # fingerprint (mtime+size of every file under documents.parquet),
     # not just its path — a regenerated fixture dir within one session
     # must rebuild the reference artifacts, not serve stale ones.
-    key = (app_id, sf_dir, _dir_fingerprint(os.path.join(sf_dir, "documents.parquet")))
-    prepared = _BLOOM_PREPARED.get(key)
-    if prepared is None:
-        for stale in [s for s in _BLOOM_PREPARED if s != key]:
-            del _BLOOM_PREPARED[stale]
-        prepared = _BLOOM_PREPARED[key] = bloom_prepare(
-            docs.filter(F.col("doc_id") % 2 == 0)
-        )
+    prepared = memo(
+        (
+            "bloom_prepared",
+            sf_dir,
+            _dir_fingerprint(os.path.join(sf_dir, "documents.parquet")),
+        ),
+        lambda: bloom_prepare(docs.filter(F.col("doc_id") % 2 == 0)),
+    )
     return bloom_gate(
         docs.filter(F.col("doc_id") % 2 == 0),
         docs.filter(F.col("doc_id") % 3 == 0),
@@ -5246,9 +5153,6 @@ def _dir_fingerprint(path: str) -> tuple:
             st = os.stat(fp)
             out.append((os.path.relpath(fp, path), st.st_size, st.st_mtime_ns))
     return tuple(sorted(out))
-
-
-_BLOOM_PREPARED: dict = {}
 
 
 # ---------------------------------------------------------------------------
@@ -5422,6 +5326,7 @@ from ..operators.unigram import (  # noqa: E402
     UNIGRAM_MAX_PIECE_LEN,
     UNIGRAM_UNK_LOGP,
     UNIGRAM_VOCAB_SIZE,
+    train_unigram_py,
 )
 
 
@@ -5432,164 +5337,21 @@ def _default_unigram_dir() -> str:
 # Same contract as BPE_V1K_MERGES_PATH (see that block's comments): one
 # fixed path per process baked into the oracle SQL at import; env override
 # for concurrent-harness isolation; query construction rewrites the table
-# for its own sf_dir before any oracle comparison runs (_unigram_pieces).
+# for its own sf_dir before any oracle comparison runs (_persisted_model).
 UNIGRAM_PIECES_PATH = os.environ.get(
     "SPARK_GRAFT_UNIGRAM_DIR", _default_unigram_dir()
 )
 
 
-def _write_unigram_pieces_locked(pieces) -> None:
-    """The ONE writer for UNIGRAM_PIECES_PATH — same flock discipline as
-    _write_v1k_merges_locked (ADVICE r10)."""
+def _unigram_table(pieces):
     import pyarrow as _pa
 
-    _locked_import_ensure_write(
-        UNIGRAM_PIECES_PATH,
-        _pa.table(
-            {
-                "piece": _pa.array([p for p, _ in pieces]),
-                "logp": _pa.array([lp for _, lp in pieces], type=_pa.float64()),
-            }
-        ),
+    return _pa.table(
+        {
+            "piece": _pa.array([p for p, _ in pieces]),
+            "logp": _pa.array([lp for _, lp in pieces], type=_pa.float64()),
+        }
     )
-
-
-def _ensure_unigram_table() -> None:
-    """Harness-order robustness, the _ensure_v1k_merge_table twin: train
-    Spark-free on the driver's correctness fixture (DuckDB word freqs +
-    the pytest-pinned Python trainer) so the oracle's persisted piece
-    table always exists and matches sf0.01. Lazy — see
-    ensure_oracle_model_tables()."""
-    import duckdb as _duckdb
-
-    from ..operators.bpe import BPE_VOCAB_CAP as _cap
-    from ..operators.unigram import train_unigram_py as _train
-
-    docs = os.path.join(_DRIVER_CORRECTNESS_SF_DIR, "documents.parquet")
-    if not os.path.exists(docs):
-        return
-    wf = _duckdb.sql(
-        rf"""
-        SELECT w, count(*) AS f FROM (
-          SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w
-          FROM read_parquet('{docs}') WHERE text IS NOT NULL
-        ) GROUP BY w ORDER BY f DESC, w LIMIT {_cap}
-        """
-    ).fetchall()
-    _write_unigram_pieces_locked(_train(wf))
-
-
-_ORACLE_MODELS_ENSURED = False
-
-
-def ensure_oracle_model_tables() -> None:
-    """Lazy first-use ensure for the two persisted-model tables the v1k
-    and unigram oracle SQL read (VERDICT r10 wrong #1: the ensures ran
-    at module import, charging two DuckDB training runs to whatever
-    process imports plans.dataprep first — cold-start noise, and a
-    surprise to any embedder). Now importing this module runs ZERO
-    training; the driver contract's oracle_sql() (and any harness that
-    runs the oracle SQL without constructing the Spark query first)
-    calls this instead. Idempotent per process; a table whose sf-guard
-    shows query construction already persisted it is left alone (the
-    query's sf_dir describes the corpus actually being compared).
-    Failure handling unchanged from the import-time version: narrow and
-    LOUD (r9 VERDICT wrong #2) — a bare box may lack the fixture or
-    write access (fine, the Spark query persists at first construction),
-    but silence masked real defects as opaque oracle read errors."""
-    global _ORACLE_MODELS_ENSURED
-    if _ORACLE_MODELS_ENSURED:
-        return
-    _ORACLE_MODELS_ENSURED = True
-    import warnings
-
-    for ensure, guard, what, path, env in (
-        (
-            _ensure_v1k_merge_table,
-            _BPE_V1K_FILE_SF,
-            "v1k BPE merge",
-            BPE_V1K_MERGES_PATH,
-            "SPARK_GRAFT_BPE_V1K_DIR",
-        ),
-        (
-            _ensure_unigram_table,
-            _UNIGRAM_FILE_SF,
-            "unigram piece",
-            UNIGRAM_PIECES_PATH,
-            "SPARK_GRAFT_UNIGRAM_DIR",
-        ),
-        (
-            _ensure_wordpiece_table,
-            _WORDPIECE_FILE_SF,
-            "WordPiece vocab",
-            WORDPIECE_VOCAB_PATH,
-            "SPARK_GRAFT_WORDPIECE_DIR",
-        ),
-    ):
-        if guard.get("sf") is not None:
-            continue  # query construction already persisted for its sf_dir
-        try:
-            ensure()
-        except (ImportError, OSError) as exc:
-            warnings.warn(
-                f"{what}-table ensure skipped ({type(exc).__name__}: "
-                f"{exc}) — oracle SQL reads {path!r}; the table will be "
-                f"written at first query construction, or set {env} to a "
-                "writable directory",
-                stacklevel=2,
-            )
-        except Exception as exc:  # noqa: BLE001 — never fail the caller
-            warnings.warn(
-                f"{what}-table ensure FAILED unexpectedly "
-                f"({type(exc).__name__}: {exc}) at {path!r}",
-                stacklevel=2,
-            )
-
-
-_UNIGRAM_PIECES: dict = {}
-_UNIGRAM_FILE_SF: dict = {}
-
-
-def _unigram_pieces(spark: SparkSession, sf_dir: str, _t):
-    """Train-once + persist-for-the-oracle, the _v1k_merges twin shared
-    by every unigram entry point: after this call the persisted piece
-    table always matches ``sf_dir``. Returns (docs, pieces)."""
-    from ..operators.bpe import word_freq_table
-    from ..operators.unigram import train_unigram_py
-    from ..operators.text import tokens_expr
-
-    docs = spread(_t(spark, sf_dir, "documents"))
-    key = (spark.sparkContext.applicationId, sf_dir)
-    pieces = _UNIGRAM_PIECES.get(key)
-    if pieces is None:
-        for k in [k for k in _UNIGRAM_PIECES if k[0] != key[0]]:
-            del _UNIGRAM_PIECES[k]
-        # unigram has no symbol-marker encoding, so the word table is the
-        # plain tokens_expr aggregate (no marker filter)
-        wf_df = (
-            docs.filter(F.col("text").isNotNull())
-            .select(F.explode(tokens_expr(F.col("text"))).alias("word"))
-            .groupBy("word")
-            .agg(F.count(F.lit(1)).alias("freq"))
-            .orderBy(F.desc("freq"), "word")
-            .limit(65536)
-        )
-        wf = [(r["word"], r["freq"]) for r in wf_df.collect()]
-        pieces = _UNIGRAM_PIECES[key] = train_unigram_py(wf)
-    if _UNIGRAM_FILE_SF.get("sf") != sf_dir:
-        # same flocked pyarrow writer as the lazy ensure (ADVICE r10 —
-        # one locking discipline per directory), failing READABLY
-        try:
-            _write_unigram_pieces_locked(pieces)
-        except OSError as exc:
-            raise RuntimeError(
-                f"unigram piece-table dir {UNIGRAM_PIECES_PATH!r} is not "
-                f"writable ({exc}) — the unigram oracles replay Viterbi "
-                "from the persisted table there; set SPARK_GRAFT_UNIGRAM_DIR "
-                "before importing the package"
-            ) from exc
-        _UNIGRAM_FILE_SF["sf"] = sf_dir
-    return docs, pieces
 
 
 # Oracle: Viterbi REPLAYED from the persisted piece table as a recursive
@@ -5680,7 +5442,7 @@ def q_unigram_token_counts(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     eagerly; the oracle REPLAYS Viterbi from it as a recursive CTE with
     the identical ascending-length strict-improvement tie rule, so every
     segmentation is bit-checked, not just the counts' plumbing."""
-    docs, pieces = _unigram_pieces(spark, sf_dir, _t)
+    docs, pieces = _persisted_model(spark, sf_dir, _t, "unigram")
     from ..operators.unigram import doc_unigram_token_counts
 
     return doc_unigram_token_counts(docs, pieces)
@@ -5692,7 +5454,7 @@ def q_unigram_subword_vocab(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     using each piece — the OOV/fertility table a tokenizer rollout
     reviews. Same plan as the counts query with the (word, toks) table
     exploded once; the oracle replays the full Viterbi segmentation."""
-    docs, pieces = _unigram_pieces(spark, sf_dir, _t)
+    docs, pieces = _persisted_model(spark, sf_dir, _t, "unigram")
     from ..operators.text import tokens_expr
     from ..operators.unigram import unigram_word_tokens
 
@@ -5722,7 +5484,7 @@ def q_unigram_vocab(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     training algorithm is pinned by tests/test_unigram.py's hand-trace
     and invariants; EM cannot realistically be replayed in SQL the way
     the 40-merge BPE training is)."""
-    _unigram_pieces(spark, sf_dir, _t)  # train + persist for THIS sf_dir
+    _persisted_model(spark, sf_dir, _t, "unigram")  # train + persist for THIS sf_dir
     return spark.read.parquet(UNIGRAM_PIECES_PATH).select("piece", "logp")
 
 
@@ -5738,6 +5500,7 @@ q_unigram_token_counts.__doc__ = q_unigram_token_counts.__doc__.format(
 from ..operators.wordpiece import (  # noqa: E402
     WORDPIECE_MAX_PIECE_LEN,
     WORDPIECE_VOCAB_SIZE,
+    train_wordpiece_py,
 )
 
 
@@ -5749,91 +5512,187 @@ def _default_wordpiece_dir() -> str:
 # block's comments): one fixed path per process baked into the oracle SQL
 # at import; env override for concurrent-harness isolation; query
 # construction rewrites the table for its own sf_dir before any oracle
-# comparison runs (_wordpiece_model).
+# comparison runs (_persisted_model).
 WORDPIECE_VOCAB_PATH = os.environ.get(
     "SPARK_GRAFT_WORDPIECE_DIR", _default_wordpiece_dir()
 )
 
 
-def _write_wordpiece_vocab_locked(vocab) -> None:
-    """The ONE writer for WORDPIECE_VOCAB_PATH — same flock discipline as
-    _write_v1k_merges_locked / _write_unigram_pieces_locked."""
+def _wordpiece_table(vocab):
     import pyarrow as _pa
 
-    _locked_import_ensure_write(
-        WORDPIECE_VOCAB_PATH,
-        _pa.table(
-            {
-                "piece": _pa.array([p for p, _ in vocab]),
-                "rank": _pa.array([int(r) for _, r in vocab], type=_pa.int64()),
-            }
-        ),
+    return _pa.table(
+        {
+            "piece": _pa.array([p for p, _ in vocab]),
+            "rank": _pa.array([int(r) for _, r in vocab], type=_pa.int64()),
+        }
     )
 
 
-def _ensure_wordpiece_table() -> None:
-    """Harness-order robustness, the _ensure_unigram_table twin: train
-    Spark-free on the driver's correctness fixture so the oracle's
-    persisted vocabulary always exists and matches sf0.01. Lazy — see
-    ensure_oracle_model_tables()."""
-    import duckdb as _duckdb
+def _spark_word_freqs(docs: DataFrame) -> list[tuple[str, int]]:
+    """(word, freq) of the corpus's top BPE_VOCAB_CAP words, most frequent
+    first — the training input of the unigram and WordPiece trainers (no
+    symbol-marker encoding, so no BPE word filter)."""
+    from ..operators.text import tokens_expr
 
-    from ..operators.bpe import BPE_VOCAB_CAP as _cap
-    from ..operators.wordpiece import train_wordpiece_py as _train
+    wf_df = (
+        docs.filter(F.col("text").isNotNull())
+        .select(F.explode(tokens_expr(F.col("text"))).alias("word"))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("freq"))
+        .orderBy(F.desc("freq"), "word")
+        .limit(BPE_VOCAB_CAP)
+    )
+    return [(r["word"], r["freq"]) for r in wf_df.collect()]
+
+
+class _PersistedModel(NamedTuple):
+    """One train-once-and-persist tokenizer family whose oracle replays
+    apply from a persisted table: ``train`` fits the model on the Spark
+    documents frame, ``train_words`` on DuckDB (word, freq) rows (the
+    lazy ensure), ``word_filter`` restricts those words, and ``to_table``
+    is the pyarrow form written to ``path``."""
+
+    what: str
+    path: str
+    env: str
+    to_table: Callable
+    train: Callable
+    train_words: Callable
+    word_filter: str | None = None
+
+
+_PERSISTED_MODELS = {
+    "v1k": _PersistedModel(
+        "v1k BPE merge",
+        BPE_V1K_MERGES_PATH,
+        "SPARK_GRAFT_BPE_V1K_DIR",
+        _v1k_table,
+        lambda docs: train_bpe(docs, n_merges=BPE_N_MERGES_LARGE),
+        lambda wf: train_bpe_py_fast(wf, n_merges=BPE_N_MERGES_LARGE),
+        _BPE_WORD_FILTER,
+    ),
+    "unigram": _PersistedModel(
+        "unigram piece",
+        UNIGRAM_PIECES_PATH,
+        "SPARK_GRAFT_UNIGRAM_DIR",
+        _unigram_table,
+        lambda docs: train_unigram_py(_spark_word_freqs(docs)),
+        train_unigram_py,
+    ),
+    "wordpiece": _PersistedModel(
+        "WordPiece vocab",
+        WORDPIECE_VOCAB_PATH,
+        "SPARK_GRAFT_WORDPIECE_DIR",
+        _wordpiece_table,
+        lambda docs: train_wordpiece_py(_spark_word_freqs(docs)),
+        train_wordpiece_py,
+    ),
+}
+# {persisted path: the sf_dir its table was last written for} — query
+# construction rewrites a table only when it describes another corpus
+_PERSISTED_SF: dict[str, str] = {}
+
+
+def _persisted_model(spark: SparkSession, sf_dir: str, _t, kind: str):
+    """Train-once + persist-for-the-oracle, shared by EVERY entry point of
+    the ``kind`` family (code-review r9: a guard in one query only let a
+    session alternating fixtures leave the persisted table describing the
+    OTHER corpus). Training is memoized per (session, sf_dir) — the
+    oracle never re-trains either (it reads the persisted table), and
+    deployment trains once per corpus. Returns (docs, model); after this
+    call the persisted table always matches ``sf_dir``."""
+    rec = _PERSISTED_MODELS[kind]
+    docs = spread(_t(spark, sf_dir, "documents"))
+    model = memo((kind, sf_dir), lambda: rec.train(docs))
+    if _PERSISTED_SF.get(rec.path) != sf_dir:
+        # Written via the SAME flocked pyarrow path as the lazy ensure
+        # (ADVICE r10 — one locking discipline per directory), failing
+        # READABLY here rather than as an opaque oracle error later.
+        try:
+            _locked_import_ensure_write(rec.path, rec.to_table(model))
+        except OSError as exc:
+            raise RuntimeError(
+                f"{rec.what}-table dir {rec.path!r} is not writable ({exc}) "
+                f"— the {kind} oracles replay from the persisted table "
+                f"there; set {rec.env} to a writable directory (the value "
+                "is baked into the oracle SQL at import, so set it before "
+                "importing the package)"
+            ) from exc
+        _PERSISTED_SF[rec.path] = sf_dir
+    return docs, model
+
+
+def _ensure_persisted_table(rec: _PersistedModel) -> None:
+    """Harness-order robustness for an oracle reading a persisted table:
+    the Spark query writes it eagerly, but a harness may run the oracle
+    before ever constructing the query (or in a different process).
+    (Re)train on the driver's correctness fixture, Spark-free (DuckDB
+    word-freq + the pytest-pinned Python trainer, <0.5 s), so the table
+    always exists and matches sf0.01. Harnesses at other SFs construct
+    the Spark query first (parity tests / bench both do), and that query
+    rewrites the table for ITS corpus before any compare runs."""
+    import duckdb as _duckdb
 
     docs = os.path.join(_DRIVER_CORRECTNESS_SF_DIR, "documents.parquet")
     if not os.path.exists(docs):
-        return
+        return  # no fixture on this box; the Spark query still persists
+    where = f"WHERE {rec.word_filter}" if rec.word_filter else ""
     wf = _duckdb.sql(
         rf"""
         SELECT w, count(*) AS f FROM (
           SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w
           FROM read_parquet('{docs}') WHERE text IS NOT NULL
-        ) GROUP BY w ORDER BY f DESC, w LIMIT {_cap}
+        ) {where}
+        GROUP BY w ORDER BY f DESC, w LIMIT {BPE_VOCAB_CAP}
         """
     ).fetchall()
-    _write_wordpiece_vocab_locked(_train(wf))
+    _locked_import_ensure_write(rec.path, rec.to_table(rec.train_words(wf)))
 
 
-_WORDPIECE_VOCABS: dict = {}
-_WORDPIECE_FILE_SF: dict = {}
+_ORACLE_MODELS_ENSURED = False
 
 
-def _wordpiece_model(spark: SparkSession, sf_dir: str, _t):
-    """Train-once + persist-for-the-oracle, the _unigram_pieces twin
-    shared by every WordPiece entry point: after this call the persisted
-    vocabulary always matches ``sf_dir``. Returns (docs, vocab)."""
-    from ..operators.text import tokens_expr
-    from ..operators.wordpiece import train_wordpiece_py
+def ensure_oracle_model_tables() -> None:
+    """Lazy first-use ensure for the persisted-model tables the v1k,
+    unigram and WordPiece oracle SQL read (VERDICT r10 wrong #1: the
+    ensures ran at module import, charging DuckDB training runs to
+    whatever process imports plans.dataprep first — cold-start noise,
+    and a surprise to any embedder). Now importing this module runs ZERO
+    training; the driver contract's oracle_sql() (and any harness that
+    runs the oracle SQL without constructing the Spark query first)
+    calls this instead. Idempotent per process; a table that query
+    construction already persisted (_PERSISTED_SF) is left alone (the
+    query's sf_dir describes the corpus actually being compared).
+    Failure handling: narrow and LOUD (r9 VERDICT wrong #2) — a bare box
+    may lack the fixture or write access (fine, the Spark query persists
+    at first construction), but silence masked real defects as opaque
+    oracle read errors."""
+    global _ORACLE_MODELS_ENSURED
+    if _ORACLE_MODELS_ENSURED:
+        return
+    _ORACLE_MODELS_ENSURED = True
+    import warnings
 
-    docs = spread(_t(spark, sf_dir, "documents"))
-    key = (spark.sparkContext.applicationId, sf_dir)
-    vocab = _WORDPIECE_VOCABS.get(key)
-    if vocab is None:
-        for k in [k for k in _WORDPIECE_VOCABS if k[0] != key[0]]:
-            del _WORDPIECE_VOCABS[k]
-        wf_df = (
-            docs.filter(F.col("text").isNotNull())
-            .select(F.explode(tokens_expr(F.col("text"))).alias("word"))
-            .groupBy("word")
-            .agg(F.count(F.lit(1)).alias("freq"))
-            .orderBy(F.desc("freq"), "word")
-            .limit(65536)
-        )
-        wf = [(r["word"], r["freq"]) for r in wf_df.collect()]
-        vocab = _WORDPIECE_VOCABS[key] = train_wordpiece_py(wf)
-    if _WORDPIECE_FILE_SF.get("sf") != sf_dir:
+    for rec in _PERSISTED_MODELS.values():
+        if rec.path in _PERSISTED_SF:
+            continue  # query construction already persisted for its sf_dir
         try:
-            _write_wordpiece_vocab_locked(vocab)
-        except OSError as exc:
-            raise RuntimeError(
-                f"WordPiece vocab dir {WORDPIECE_VOCAB_PATH!r} is not "
-                f"writable ({exc}) — the WordPiece oracles replay greedy "
-                "matching from the persisted table there; set "
-                "SPARK_GRAFT_WORDPIECE_DIR before importing the package"
-            ) from exc
-        _WORDPIECE_FILE_SF["sf"] = sf_dir
-    return docs, vocab
+            _ensure_persisted_table(rec)
+        except (ImportError, OSError) as exc:
+            warnings.warn(
+                f"{rec.what}-table ensure skipped ({type(exc).__name__}: "
+                f"{exc}) — oracle SQL reads {rec.path!r}; the table will be "
+                f"written at first query construction, or set {rec.env} to "
+                "a writable directory",
+                stacklevel=2,
+            )
+        except Exception as exc:  # noqa: BLE001 — never fail the caller
+            warnings.warn(
+                f"{rec.what}-table ensure FAILED unexpectedly "
+                f"({type(exc).__name__}: {exc}) at {rec.path!r}",
+                stacklevel=2,
+            )
 
 
 # Oracle: greedy longest-match-first REPLAYED from the persisted
@@ -5933,7 +5792,7 @@ def q_wordpiece_token_counts(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     plumbing."""
     from ..operators.wordpiece import doc_wordpiece_token_counts
 
-    docs, vocab = _wordpiece_model(spark, sf_dir, _t)
+    docs, vocab = _persisted_model(spark, sf_dir, _t, "wordpiece")
     return doc_wordpiece_token_counts(docs, vocab).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "n_words",
@@ -5954,7 +5813,7 @@ def q_wordpiece_subword_vocab(
     from ..operators.text import tokens_expr
     from ..operators.wordpiece import wordpiece_word_tokens
 
-    docs, vocab = _wordpiece_model(spark, sf_dir, _t)
+    docs, vocab = _persisted_model(spark, sf_dir, _t, "wordpiece")
     docs2 = docs.filter(F.col("text").isNotNull()).filter(
         F.size(tokens_expr(F.col("text"))) > 0
     )
@@ -5981,7 +5840,7 @@ def q_wordpiece_vocab(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     shared-artifact check (training is pinned by tests/test_wordpiece.py;
     the exact-rational likelihood merge loop cannot realistically be
     replayed in SQL the way 40-merge BPE training is)."""
-    _wordpiece_model(spark, sf_dir, _t)  # train + persist for THIS sf_dir
+    _persisted_model(spark, sf_dir, _t, "wordpiece")  # train + persist for THIS sf_dir
     return spark.read.parquet(WORDPIECE_VOCAB_PATH).select(
         "piece", F.col("rank").cast("long").alias("rank")
     )
@@ -6169,7 +6028,6 @@ from ..operators.langid import (  # noqa: E402
 # Spark side computes. The sparse-join formulation here is value-identical
 # to the Spark side's dense literal arrays: an unseen (lang, bucket) pair
 # contributes the count=0 Laplace weight.
-_LANGID_MODELS: dict = {}
 
 
 def _langid_model_cached(spark: SparkSession, sf_dir: str, docs) -> dict:
@@ -6184,14 +6042,7 @@ def _langid_model_cached(spark: SparkSession, sf_dir: str, docs) -> dict:
     non-NULL/non-empty text filter."""
     from ..operators.langid import langid_model
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    got = _LANGID_MODELS.get(key)
-    if got is None:
-        for k in [k for k in _LANGID_MODELS if k[0] != app_id]:
-            del _LANGID_MODELS[k]
-        got = _LANGID_MODELS[key] = langid_model(docs)
-    return got
+    return memo(("langid_model", sf_dir), lambda: langid_model(docs))
 
 
 _LANGID_ORACLE_PREFIX = rf"""

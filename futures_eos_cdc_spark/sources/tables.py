@@ -14,6 +14,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, TimestampNTZType
 
+from ..memo import forget, memo
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -34,39 +36,24 @@ def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", default)
 
 
-# Per-session table-handle cache: `spark.read.parquet` pays a JVM file
-# listing + footer schema read on EVERY call (~0.1-0.3 s per table), and a
-# query that loads 3 tables re-pays it per invocation. A DataFrame is an
-# immutable plan, so the handle is reusable; entries from stopped/restarted
-# sessions are purged on the next cache miss. This mirrors what a
-# catalog table gives Spark for free (a cached InMemoryFileIndex) — and what
-# the DuckDB oracle side already enjoys (views created once, outside the
-# timed loop). Caveat, same as catalog tables: the file listing is
-# snapshotted — external writers appending files need `refresh_tables()`.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
+# Per-session table handles: `spark.read.parquet` pays a JVM file listing +
+# footer schema read on EVERY call (~0.1-0.3 s per table), and a query that
+# loads 3 tables re-pays it per invocation. A DataFrame is an immutable
+# plan, so the handle is reusable (memo.py scopes it to the session). This
+# mirrors what a catalog table gives Spark for free (a cached
+# InMemoryFileIndex) — and what the DuckDB oracle side already enjoys
+# (views created once, outside the timed loop). Caveat, same as catalog
+# tables: the file listing is snapshotted — external writers appending
+# files need `refresh_tables()`.
 def refresh_tables() -> None:
     """Drop every cached table handle (re-list files on next load)."""
-    _TABLE_CACHE.clear()
+    forget("table")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, name)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # Purge handles from other (stopped) sessions before inserting: one
-    # SparkSession is active per process in this engine, so any key with a
-    # different applicationId pins defunct JVM plans — without this, a
-    # long-lived process restarting sessions (pytest, notebooks) grows the
-    # cache without bound.
-    for k in [k for k in _TABLE_CACHE if k[0] != app_id]:
-        del _TABLE_CACHE[k]
-    df = _load_table_uncached(spark, sf_dir, name)
-    _TABLE_CACHE[key] = df
-    return df
+    return memo(
+        ("table", sf_dir, name), lambda: _load_table_uncached(spark, sf_dir, name)
+    )
 
 
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

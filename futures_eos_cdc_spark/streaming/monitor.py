@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
+from ..memo import counters as memo_counters
+
 
 # ---------------------------------------------------------------------------
 # Named operator counters: batch operators (e.g. embedding_near_dup's
@@ -86,10 +88,11 @@ def operator_counters() -> dict[str, int]:
     therefore takes 3 CONSECUTIVE failed reads (a dead context fails every
     read, so stale entries still clear within three monitoring polls; a
     transient error resets on the next successful read). Monitoring itself
-    never throws.
+    never throws. The session memo's per-namespace ``memo.<ns>.hits`` and
+    ``memo.<ns>.misses`` counts (memo.py) are merged in.
     """
     with _OP_LOCK:
-        out, dead = {}, []
+        out, dead = memo_counters(), []
         for k, v in _OPERATOR_COUNTERS.items():
             try:
                 out[k] = v.value

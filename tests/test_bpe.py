@@ -623,8 +623,8 @@ def test_v1k_poisoned_dir_fails_readably_at_construction(spark, sf_dir, monkeypa
     import tempfile
 
     with tempfile.NamedTemporaryFile() as poison:
-        monkeypatch.setattr(dp, "BPE_V1K_MERGES_PATH", poison.name)
-        monkeypatch.setattr(dp, "_BPE_V1K_FILE_SF", {})
+        v1k = dp._PERSISTED_MODELS["v1k"]
+        monkeypatch.setitem(dp._PERSISTED_MODELS, "v1k", v1k._replace(path=poison.name))
         with _pytest.raises(RuntimeError, match="SPARK_GRAFT_BPE_V1K_DIR"):
             dp.q_bpe_token_counts_v1k(spark, sf_dir, _t)
 

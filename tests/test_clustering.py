@@ -157,24 +157,6 @@ def test_pagerank_reliable_checkpoint_dir(spark, tmp_path):
     assert found, "reliable checkpoint wrote no files"
 
 
-def test_scheme_free_strips_authority():
-    """ADVICE r8: hdfs://-style URIs must lose the //host:port authority
-    too, or a caller's plain path never matches the qualified live
-    checkpoint dir and every call re-runs setCheckpointDir (UUID-subdir
-    churn)."""
-    from futures_eos_cdc_spark.operators.clustering import _scheme_free
-
-    assert _scheme_free("/ckpt") == "/ckpt"
-    assert _scheme_free("file:/ckpt") == "/ckpt"
-    assert _scheme_free("file:///ckpt") == "/ckpt"
-    assert _scheme_free("hdfs://nn:8020/ckpt") == "/ckpt"
-    assert _scheme_free("hdfs://nn:8020") == "/"
-    assert _scheme_free("s3a://bucket/a/b") == "/a/b"
-    # relative paths and colon-bearing TAILS are untouched
-    assert _scheme_free("rel/dir") == "rel/dir"
-    assert _scheme_free("/dir/with:colon") == "/dir/with:colon"
-
-
 def test_split_uri_authority_comparison():
     """Code-review r9: the authority is a comparison COMPONENT, not
     noise — the same path on a different cluster must not compare
@@ -194,6 +176,14 @@ def test_split_uri_authority_comparison():
     fs, fa, fp = _split_uri("file:/ckpt")
     hs, ha, hp = _split_uri("hdfs://nn:8020/ckpt")
     assert fp == hp and fs != hs  # paths equal; schemes must decide
+    # ADVICE r8: the path component drops the //host:port authority too,
+    # or a caller's plain path never matches the qualified live checkpoint
+    # dir and every call re-runs setCheckpointDir (UUID-subdir churn)
+    assert _split_uri("file:///ckpt")[2] == "/ckpt"
+    assert _split_uri("hdfs://nn:8020")[2] == "/"
+    # relative paths and colon-bearing TAILS are untouched
+    assert _split_uri("rel/dir")[2] == "rel/dir"
+    assert _split_uri("/dir/with:colon")[2] == "/dir/with:colon"
 
 
 def test_ensure_checkpoint_dir_resets_on_foreign_authority(spark):

@@ -267,17 +267,15 @@ def test_bloom_gate_query_builds_reference_artifacts_once(spark, sf_dir):
     set bits and re-checkpointing per call."""
     from unittest import mock
 
+    from futures_eos_cdc_spark import memo
     from futures_eos_cdc_spark.operators import bloom
-    from futures_eos_cdc_spark.plans import dataprep
     from futures_eos_cdc_spark.plans.registry import QUERIES
 
-    dataprep._BLOOM_PREPARED.clear()
+    memo.forget("bloom_prepared")
     with mock.patch.object(
-        dataprep, "_BLOOM_PREPARED", {}
-    ) as cache, mock.patch.object(
         bloom, "bloom_bitmap", wraps=bloom.bloom_bitmap
     ) as bb:
         QUERIES["bloom_dedup_gate"](spark, sf_dir).count()
         QUERIES["bloom_dedup_gate"](spark, sf_dir).count()
         assert bb.call_count == 1, "bitmap must build once per session"
-        assert len(cache) == 1
+        assert sum(k[0] == "bloom_prepared" for _app, k in memo._ENTRIES) == 1

@@ -98,7 +98,7 @@ uni = os.environ["SPARK_GRAFT_UNIGRAM_DIR"]
 from futures_eos_cdc_spark.plans import dataprep
 
 # Simulate query construction having persisted for another sf_dir.
-dataprep._UNIGRAM_FILE_SF["sf"] = "/some/other/sf"
+dataprep._PERSISTED_SF[dataprep.UNIGRAM_PIECES_PATH] = "/some/other/sf"
 os.makedirs(uni, exist_ok=True)
 with open(os.path.join(uni, "sentinel.parquet"), "w") as f:
     f.write("not-really-parquet")
