@@ -1067,78 +1067,26 @@ def minhash_lsh_pairs(
     return _unpersist_on_gc(out, shingle_sets, banded)
 
 
-def build_neardup_index(
-    docs: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = SHINGLE_K,
-    mode: str = "overwrite",
-) -> None:
-    """Materialize the corpus near-dup signature index the incremental gate
-    probes — the production alternative to recomputing corpus signatures
-    per batch. Two parquet tables under ``path``:
-
-    - ``bands/``   (id, band, key): the LSH candidate probes, written
-      clustered on (band, key) — each key's rows land in one file, so a
-      probing join's shuffle reads each key from one input split (on a
-      real deployment make this a bucketed table to skip the shuffle
-      entirely, sources/bucketing.py:write_bucketed);
-    - ``shingles/`` (id, shingles): the verification sets.
-
-    Maintenance is append-only: call :func:`append_to_neardup_index` with
-    each admitted batch (the same expressions produce the rows), so the
-    index grows with the corpus and no full recompute ever happens.
-
-    Write ordering = crash consistency (ADVICE r6): ``shingles/`` commits
-    FIRST, ``bands/`` second — bands is the commit point. A crash between
-    the two leaves orphan shingle rows, which are harmless (probes traverse
-    bands → shingles, so a row no band references is never a candidate);
-    the reverse order would leave band rows whose verification set is
-    missing, silently dropping candidate pairs the inner verify join can't
-    score. Plain parquet has no multi-table snapshot isolation, so a probe
-    CONCURRENT with an append can still observe the batch's bands without
-    its shingles (file listings race); gate admission batches against probe
-    schedules, or use :class:`operators.gate_index.DedupGateIndex` (round
-    8), whose manifest-line commit makes every append's tables visible
-    atomically — the production-grade successor to this layout.
-    """
-    sh = spread(docs).select(
+def _minhash_shingle_rows(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = SHINGLE_K
+) -> DataFrame:
+    """(id, shingles): the verification sets of the near-dup admission
+    gate — shared by :func:`minhash_dedup_against_corpus` and the
+    persisted ``shingles`` table of ``DedupGateIndex(kind='minhash')``."""
+    return docs.select(
         F.col(id_col),
         shingles_expr(tokens_expr(F.col(text_col)), k).alias("shingles"),
-    ).persist()
-    sig = sh.select(id_col, *minhash_signature_exprs(F.col("shingles")))
-    bands = sig.select(F.col(id_col), F.explode(lsh_bands_expr()).alias("bk")).select(
-        id_col, "bk.band", "bk.key"
     )
-    sh.write.mode(mode).parquet(f"{path}/shingles")
-    bands.repartition("band", "key").write.mode(mode).parquet(f"{path}/bands")
-    sh.unpersist()
 
 
-def append_to_neardup_index(
-    docs: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = SHINGLE_K,
-) -> None:
-    """Append newly-admitted docs to an existing near-dup index — the
-    maintenance step after each :func:`minhash_dedup_against_corpus` batch:
-    gate the batch, append only the survivors. Identical expressions to
-    :func:`build_neardup_index`, parquet append mode (each call adds files;
-    compact periodically with a rebuild if small-file count grows)."""
-    build_neardup_index(docs, path, id_col=id_col, text_col=text_col, k=k, mode="append")
-
-
-def load_neardup_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
-    """(bands, shingles) handles for :func:`build_neardup_index` output.
-
-    Consistency contract: bands commit after shingles (see
-    build_neardup_index), so every band row's id has its verification set —
-    the invariant the probe join relies on; orphan shingle rows from a
-    crashed append are unreachable and need no cleanup."""
-    return spark.read.parquet(f"{path}/bands"), spark.read.parquet(f"{path}/shingles")
+def _minhash_band_rows(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, band, key): the LSH candidate probes derived from
+    :func:`_minhash_shingle_rows` output — 4 constant-width rows per doc,
+    the gate index's ``bands`` table."""
+    sig = sh.select(id_col, *minhash_signature_exprs(F.col("shingles")))
+    return sig.select(
+        F.col(id_col), F.explode(lsh_bands_expr()).alias("bk")
+    ).select(id_col, "bk.band", "bk.key")
 
 
 def minhash_dedup_against_corpus(
@@ -1159,9 +1107,9 @@ def minhash_dedup_against_corpus(
 
     The corpus is EITHER raw ``corpus_docs`` (signatures recomputed
     inline — tests/small corpora) or a prebuilt ``corpus_index`` =
-    (bands, shingles) from :func:`build_neardup_index` — the production
-    path: each batch probes the maintained index table instead of
-    re-hashing the corpus.
+    (bands, shingles) from ``DedupGateIndex(kind='minhash').tables()``
+    (operators/gate_index.py) — the production path: each batch probes
+    the maintained index tables instead of re-hashing the corpus.
 
     Scale shape: the corpus contributes 4 constant-width band rows per doc
     for candidates; candidates carry ids only; corpus shingle sets are
@@ -1169,31 +1117,19 @@ def minhash_dedup_against_corpus(
     construction, so its joins broadcast under AQE.
     """
 
-    def _sh(df: DataFrame) -> DataFrame:
-        return spread(df).select(
-            F.col(id_col),
-            shingles_expr(tokens_expr(F.col(text_col)), k).alias("shingles"),
-        )
-
-    def _banded(sh: DataFrame) -> DataFrame:
-        sig = sh.select(id_col, *minhash_signature_exprs(F.col("shingles")))
-        return sig.select(
-            F.col(id_col), F.explode(lsh_bands_expr()).alias("bk")
-        ).select(id_col, "bk.band", "bk.key")
-
     if (corpus_docs is None) == (corpus_index is None):
         raise ValueError(
             "pass exactly one of corpus_docs (inline recompute) or "
             "corpus_index (prebuilt bands+shingles tables)"
         )
-    new_sh = _sh(new_docs).persist()
+    new_sh = _minhash_shingle_rows(spread(new_docs), id_col, text_col, k).persist()
     if corpus_index is not None:
         cor_banded, cor_sh = corpus_index
     else:
-        cor_sh = _sh(corpus_docs)
-        cor_banded = _banded(cor_sh)
+        cor_sh = _minhash_shingle_rows(spread(corpus_docs), id_col, text_col, k)
+        cor_banded = _minhash_band_rows(cor_sh, id_col)
     cand = (
-        _banded(new_sh)
+        _minhash_band_rows(new_sh, id_col)
         .withColumnRenamed(id_col, "new_id")
         .join(cor_banded.withColumnRenamed(id_col, "cor_id"), ["band", "key"])
         .select("new_id", "cor_id")
@@ -1614,46 +1550,6 @@ def _simhash64_block_rows(
     )
 
 
-def build_simhash64_index(
-    docs: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    mode: str = "overwrite",
-) -> None:
-    """Materialize the corpus 64-bit SimHash block index (r6 VERDICT item
-    8) — the persisted twin of the bands/shingles minhash index, so the
-    streaming admission gate can probe simhash64 without re-hashing the
-    corpus per batch: ONE parquet table ``blocks/`` of (id, sig, blk,
-    bval), written clustered on (blk, bval) so a probe join's shuffle
-    reads each block bucket from one input split (bucket the table on a
-    real deployment, sources/bucketing.py:write_bucketed).
-
-    Maintenance is append-only via :func:`append_to_simhash64_index`; the
-    single-table layout makes a crashed append leave only a clean prefix
-    of the batch's files — no cross-table inconsistency possible.
-    """
-    sigs = with_simhash64(spread(docs), id_col, text_col)
-    _simhash64_block_rows(sigs, id_col).repartition("blk", "bval").write.mode(
-        mode
-    ).parquet(f"{path}/blocks")
-
-
-def append_to_simhash64_index(
-    docs: DataFrame, path: str, id_col: str = "doc_id", text_col: str = "text"
-) -> None:
-    """Append newly-admitted docs to an existing simhash64 block index —
-    identical expressions to :func:`build_simhash64_index`, parquet append
-    mode (compact periodically with a rebuild if small-file count grows)."""
-    build_simhash64_index(docs, path, id_col=id_col, text_col=text_col, mode="append")
-
-
-def load_simhash64_index(spark, path: str) -> DataFrame:
-    """The (id, sig, blk, bval) handle for :func:`build_simhash64_index`
-    output."""
-    return spark.read.parquet(f"{path}/blocks")
-
-
 def simhash64_dedup_against_corpus(
     new_docs: DataFrame,
     corpus_docs: DataFrame | None = None,
@@ -1670,8 +1566,9 @@ def simhash64_dedup_against_corpus(
 
     The corpus is EITHER raw ``corpus_docs`` (signatures recomputed
     inline — tests/small corpora) or a prebuilt ``corpus_index`` block
-    table from :func:`build_simhash64_index` / :func:`load_simhash64_index`
-    — the production path the streaming gate uses.
+    table, ``DedupGateIndex(kind='simhash64').tables()["blocks"]``
+    (operators/gate_index.py) — the production path the streaming gate
+    uses.
 
     Scale shape: the batch side emits 4 block rows per doc; the only
     shuffle keys on (blk, bval) against the corpus index (clustered on

@@ -4,27 +4,23 @@
 The ingestion admission gates (exact digest, MinHash-LSH near-dup,
 SimHash64, containment) share one shape — derive a probe index from the
 corpus, candidate-join the batch against it, anti-join the verified hits
-away — but grew four ad-hoc signatures and three index layouts
-(build_neardup_index's bands+shingles pair, build_simhash64_index's
-blocks table, and no persisted form at all for exact/containment). This
-module is the common contract:
+away. This module is their one persisted form:
 
 - :class:`DedupGateIndex` — ONE on-disk layout for the index-able kinds
   (``exact``, ``minhash``, ``simhash64``), with build / append / load /
   gate methods, kind + options pinned in a metadata file so an append can
   never silently mix configurations (a gram size or band count change
-  invalidates the index; the old per-kind appenders would happily
-  interleave);
+  invalidates the index);
 - atomic publication: every build/append writes ALL of its tables into
   batch-scoped subdirectories (``<table>/b_<uuid>/``) FIRST, then commits
   by appending ONE line to ``_MANIFEST.log``; readers resolve the
   manifest and read only committed batch dirs. This closes the
-  bands/shingles two-write visibility gap for good: build_neardup_index's
-  shingles-before-bands ordering protects against CRASHES, but a reader
-  listing files CONCURRENT with an append could still see a batch's bands
-  without its shingles (file-listing race, documented there). With the
-  manifest, visibility is a single appended line covering every table at
-  once — the same single-point-of-commit discipline as
+  bands/shingles two-write visibility gap: ordering the two table writes
+  protects only against CRASHES, while a reader listing files CONCURRENT
+  with an append could still see a batch's bands without its shingles
+  (file-listing race). With the manifest, visibility is a single
+  appended line covering every table at once — the same
+  single-point-of-commit discipline as
   streaming.outbox._VersionedParquet's pointer swap, adapted to
   append-only growth: full-snapshot versions would rewrite the whole
   index on every append (wrong at 100 TB); here the manifest line IS the
@@ -78,16 +74,15 @@ from pyspark.sql import functions as F
 from .common import spread
 from .dedup import (
     SHINGLE_K,
+    _minhash_band_rows,
+    _minhash_shingle_rows,
     _simhash64_block_rows,
     containment_grams,
     content_digest_expr,
-    lsh_bands_expr,
-    minhash_signature_exprs,
     minhash_dedup_against_corpus,
     simhash64_dedup_against_corpus,
     with_simhash64,
 )
-from .text import shingles_expr, tokens_expr
 
 _KIND_TABLES = {
     "exact": ("digests",),
@@ -203,15 +198,8 @@ class DedupGateIndex:
                 )
             return out
         if self.kind == "minhash":
-            k = o.get("k", SHINGLE_K)
-            sh = docs.select(
-                F.col(id_col),
-                shingles_expr(tokens_expr(F.col(text_col)), k).alias("shingles"),
-            )
-            sig = sh.select(id_col, *minhash_signature_exprs(F.col("shingles")))
-            bands = sig.select(
-                F.col(id_col), F.explode(lsh_bands_expr()).alias("bk")
-            ).select(id_col, "bk.band", "bk.key")
+            sh = _minhash_shingle_rows(docs, id_col, text_col, o.get("k", SHINGLE_K))
+            bands = _minhash_band_rows(sh, id_col)
             return {"shingles": sh, "bands": bands.repartition("band", "key")}
         if self.kind == "simhash64":
             sigs = with_simhash64(docs, id_col, text_col)

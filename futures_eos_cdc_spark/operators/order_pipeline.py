@@ -74,25 +74,6 @@ def market_prices_df(spark) -> DataFrame:
     return spark.sql(f"SELECT * FROM VALUES {rows} AS t(symbol, price)")
 
 
-def filter_actionable(decisions: DataFrame, threshold: float = DEFAULT_CONFIDENCE_THRESHOLD) -> DataFrame:
-    """P7 + P8: actionable actions whose boosted confidence clears the gate."""
-    adj = F.when(
-        F.col("action").startswith("STRONG"), F.col("confidence") * 1.2
-    ).otherwise(F.col("confidence"))
-    return (
-        decisions.filter(F.col("action").isin(*ACTIONABLE))
-        .withColumn("adj_confidence", adj)
-        .filter(F.col("adj_confidence") >= F.lit(threshold))
-    )
-
-
-def confidence_scaled_qty(conf_col, threshold: float = DEFAULT_CONFIDENCE_THRESHOLD):
-    """P12: qty = base + (max-base) * clamp((conf-thr)/(1-thr), 0, 1), 2dp."""
-    frac = (conf_col - threshold) / (1.0 - threshold)
-    clamped = F.least(F.lit(1.0), F.greatest(F.lit(0.0), frac))
-    return F.round(F.lit(QTY_BASE) + (QTY_MAX - QTY_BASE) * clamped, 2)
-
-
 def decisions_to_orders(
     decisions: DataFrame,
     prices: DataFrame,
@@ -118,7 +99,7 @@ def decisions_to_orders(
     else:
         order_id = "uuid()"
         created_at_s = "unix_timestamp(current_timestamp())"
-    # P12 (confidence_scaled_qty): qty = base + span * clamp(frac, 0, 1), 2dp
+    # P12: qty = base + span * clamp(frac, 0, 1), 2dp
     frac = f"((adj_confidence - {threshold!r}d) / {(1.0 - threshold)!r}d)"
     qty = (
         f"round({QTY_BASE!r}d + {(QTY_MAX - QTY_BASE)!r}d"

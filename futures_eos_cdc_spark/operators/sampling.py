@@ -32,8 +32,8 @@ def split_thresholds(weights: dict[str, float]) -> list[tuple[str, str]]:
         b = round(acc * 256)
         # A cumulative share reaching 1.0 must cover bucket 0xff as well:
         # 'ff' as an EXCLUSIVE bound would silently drop ~0.39% of rows
-        # (e.g. deterministic_sample(fraction=1.0)). 'zz' sorts above every
-        # hex byte, making the bound always-true.
+        # (e.g. a {'keep': 1.0, 'drop': 0.0} split). 'zz' sorts above
+        # every hex byte, making the bound always-true.
         bounds.append((label, "zz" if b >= 256 else format(b, "02x")))
     return bounds
 
@@ -73,16 +73,6 @@ def hash_split(
     """Add a ``split`` column: deterministic train/val/test assignment."""
     weights = weights or {"train": 0.8, "val": 0.1, "test": 0.1}
     return df.withColumn("split", split_label_expr(F.col(id_col), weights, salt))
-
-
-def deterministic_sample(
-    df: DataFrame, fraction: float, id_col: str, salt: str = "sample"
-) -> DataFrame:
-    """Content-stable Bernoulli sample: same rows every run, append-safe
-    (unlike ``df.sample``, whose selection depends on partitioning)."""
-    return hash_split(
-        df, id_col, {"keep": fraction, "drop": 1.0 - fraction}, salt
-    ).filter(F.col("split") == "keep").drop("split")
 
 
 def group_keep_expr(

@@ -144,16 +144,6 @@ def signals_from_events(events: DataFrame) -> DataFrame:
     )
 
 
-def with_ts_us(signals: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Normalize a wire-format signal (epoch-millis ``ts``, Signal.kt:19) to
-    the engine's canonical epoch-micros ``ts_us`` event time.
-
-    Micros (not nanos): Spark timestamps are micros internally, and DuckDB's
-    parquet reader truncates ns to µs — so µs is the finest precision every
-    engine in the toolchain can agree on."""
-    return signals.withColumn("ts_us", F.col(ts_col).cast("long") * 1_000)
-
-
 # ---------------------------------------------------------------------------
 # A1: epoch-aligned tumbling window bucket
 # ---------------------------------------------------------------------------

@@ -28,36 +28,6 @@ def dot_expr(a: Column, b: Column) -> Column:
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def dot_pandas_udf():
-    """Arrow-vectorized pair dot product: the scale path for candidate
-    VERIFICATION stages that evaluate millions of dots (near-dup verify).
-
-    Spark's higher-order functions (zip_with/aggregate) are interpreted per
-    element — fine on N rows, dominant on N² candidate pairs. This kernel
-    moves each Arrow batch to numpy once and does one einsum: ~50x fewer
-    per-element dispatches. Oracle-checked paths keep the fold-based
-    ``dot_expr`` (bit-reproducible left fold); this is for engine-specific
-    operators where throughput wins.
-
-    Built lazily (inside a function) so importing the module never triggers
-    a pandas/pyarrow import on the driver path that doesn't need it.
-    """
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _dot(a, b):
-        import numpy as np
-
-        stacked_a = np.vstack(a.to_numpy())
-        stacked_b = np.vstack(b.to_numpy())
-        return pd.Series(np.einsum("ij,ij->i", stacked_a, stacked_b))
-
-    # Annotate at runtime (PEP-563 string hints from `from __future__ import
-    # annotations` don't resolve for locally-imported pandas).
-    _dot.__annotations__ = {"a": pd.Series, "b": pd.Series, "return": pd.Series}
-    return pandas_udf(_dot, "double")
-
-
 def norm_expr(a: Column) -> Column:
     return F.sqrt(
         F.aggregate(
@@ -340,10 +310,6 @@ def _dot_lit_sql(vec_sql: str, plane: list[float]) -> str:
         f"aggregate(zip_with({vec_sql}, {_const_array_sql(plane)}, "
         f"(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, x) -> acc + x)"
     )
-
-
-def _dot_lit_expr(vec_sql: str, plane: list[float]) -> Column:
-    return F.expr(_dot_lit_sql(vec_sql, plane))
 
 
 def _lsh_bucket_sql(vec_sql: str, planes: list[list[float]]) -> str:

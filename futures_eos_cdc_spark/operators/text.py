@@ -105,7 +105,7 @@ def punct_ratio_expr(text: Column) -> Column:
 # set most from-scratch pipelines implement verbatim. Constants adapted to
 # the fixture's scale; the expressions are shared by the registered batch
 # query (plans/dataprep.py:q_gopher_quality_rules, oracle-checked) and the
-# streaming selection gate (streaming/pipeline.py:stream_selection_gate).
+# streaming selection gate (streaming/pipeline.py:selection_gate_expr).
 # ---------------------------------------------------------------------------
 GOPHER_MIN_WORDS, GOPHER_MAX_WORDS = 10, 1000
 GOPHER_MIN_MWL, GOPHER_MAX_MWL = 2.0, 12.0

@@ -224,19 +224,3 @@ def doc_unigram_token_counts(
             "fertility", F.col("n_tokens").cast("double") / F.col("n_words")
         )
     )
-
-
-def save_unigram_pieces(spark, pieces: list[tuple[str, float]], path: str) -> None:
-    """Persist a trained piece table (train once per corpus, apply
-    everywhere). One tiny parquet (piece, logp) — logp already 6dp, the
-    cross-engine contract the oracle replays Viterbi from."""
-    spark.createDataFrame(
-        list(pieces), "piece string, logp double"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_unigram_pieces(spark, path: str) -> list[tuple[str, float]]:
-    return [
-        (r["piece"], r["logp"])
-        for r in spark.read.parquet(path).orderBy("piece").collect()
-    ]

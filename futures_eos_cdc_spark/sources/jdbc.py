@@ -1,41 +1,15 @@
-"""S6: JDBC scan/sink wrappers (DatabaseManager.kt:90-121's query surface).
+"""S6: the reference's recent-orders query (DatabaseManager.kt:90-121's
+query surface) over an orders DataFrame.
 
-Code-complete over the standard spark JDBC source; a driver jar on the
-classpath is required at call time (none ships in this container, so these
-are exercised only by plan construction in tests, not execution).
-
-Scale notes: ``partition_column``/bounds split the scan into parallel range
-queries — without them a JDBC read is a single task regardless of cluster
-size. Predicates push down into the remote WHERE clause.
+Reading the orders table over JDBC is Spark's stock JDBC source
+(``spark.read.format("jdbc")``); no JDBC driver jar is bundled, so the
+query is tested over the parquet orders shape.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def read_jdbc_table(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    num_partitions: int = 8,
-    **options: str,
-) -> DataFrame:
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-            .option("numPartitions", str(num_partitions))
-        )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
 
 
 def recent_orders(orders: DataFrame, n: int = 20) -> DataFrame:

@@ -127,7 +127,7 @@ def refresh_scan_manifest(
     footers ONLY for files not already covered by ``manifest`` and return
     the merged manifest. An appended batch of K files costs K footer
     reads, never a full re-scan — the same append-only discipline as
-    :func:`operators.dedup.append_to_neardup_index`. Entries for files
+    :meth:`operators.gate_index.DedupGateIndex.append`. Entries for files
     that no longer exist are dropped (compaction/GC)."""
     cols = tuple(cols)
     known = {e["file"] for e in manifest}

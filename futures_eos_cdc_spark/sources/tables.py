@@ -9,8 +9,6 @@ loader is where partition discovery would plug in.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, TimestampNTZType
 
@@ -28,13 +26,6 @@ TABLE_NAMES = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-
-def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", default)
-
 
 # Per-session table handles: `spark.read.parquet` pays a JVM file listing +
 # footer schema read on EVERY call (~0.1-0.3 s per table), and a query that

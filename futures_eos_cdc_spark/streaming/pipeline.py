@@ -148,99 +148,6 @@ def dedup_signals(signals: DataFrame, ts_col: str = "event_time") -> DataFrame:
     )
 
 
-def stream_bpe_token_counts(
-    stream: DataFrame,
-    merges,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Streaming twin of ``operators.bpe.doc_bpe_token_counts``: exact BPE
-    token accounting at INGESTION time. The apply is a pure projection
-    (the merge-table replace chain — no state, no watermark, no
-    foreachBatch), so the same expressions plan natively on a stream and
-    per-row cost equals the batch pass. Train offline, ``load_bpe_merges``
-    the table, meter the stream — the shape a token-budgeted ingestion
-    pipeline actually runs."""
-    from ..operators.bpe import doc_bpe_token_counts
-
-    return doc_bpe_token_counts(stream, merges, id_col=id_col, text_col=text_col)
-
-
-def bpe_token_meter_writer(
-    merges,
-    sink,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """foreachBatch twin of the PRODUCTION-vocab apply
-    (``operators.bpe.doc_bpe_token_counts_joined``): meters a document
-    stream in exact BPE tokens at merge depths the replace-chain
-    projection cannot reach (8-32 k ranks). The join apply needs a
-    per-micro-batch distinct + aggregation, so it runs under foreachBatch
-    with full batch semantics — the dedup-gate rationale. The pure-stream
-    projection twin (:func:`stream_bpe_token_counts`) remains the right
-    shape for small merge tables.
-
-    Returns a (batch_df, epoch_id) callable handing the per-doc count
-    rows (same schema as the batch operator) to ``sink``."""
-    from ..operators.bpe import doc_bpe_token_counts_joined
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        sink(
-            doc_bpe_token_counts_joined(
-                batch_df, merges, id_col=id_col, text_col=text_col
-            ),
-            epoch_id,
-        )
-
-    return write
-
-
-def unigram_token_meter_writer(
-    pieces,
-    sink,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """foreachBatch unigram-LM token meter — the
-    :func:`bpe_token_meter_writer` twin for the SentencePiece-style
-    tokenizer (operators/unigram.py): Viterbi apply needs a
-    per-micro-batch distinct-word pass + aggregation, so it runs under
-    foreachBatch with full batch semantics; per-doc count rows (same
-    schema as ``doc_unigram_token_counts``) go to ``sink``."""
-    from ..operators.unigram import doc_unigram_token_counts
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        sink(
-            doc_unigram_token_counts(
-                batch_df, pieces, id_col=id_col, text_col=text_col
-            ),
-            epoch_id,
-        )
-
-    return write
-
-
-def stream_quality_gate(
-    stream: DataFrame,
-    threshold: float = 0.0,
-    text_col: str = "text",
-) -> DataFrame:
-    """Streaming twin of the hard quality gate (quality_classifier_scores'
-    keep rule): drop documents whose hashed-classifier logit
-    (operators/text.py: hashed_classifier_logit_expr) is at or below
-    ``threshold``. The classifier is ONE scan-shaped column expression —
-    no state, no watermark, no foreachBatch needed: the same filter plans
-    natively on a stream, so ingestion-time quality gating costs exactly
-    what the batch pass costs per row. (The soft quality-WEIGHTED sampler
-    streams the same way — its keep rule is also a pure projection.)"""
-    from ..operators.text import hashed_classifier_logit_expr
-
-    return stream.filter(
-        hashed_classifier_logit_expr(F.col(text_col)) > threshold
-    )
-
-
 def selection_gate_expr(
     text: Column,
     *,
@@ -317,34 +224,6 @@ def selection_gate_expr(
     return cond
 
 
-def stream_selection_gate(
-    stream: DataFrame, text_col: str = "text", **gate_kw
-) -> DataFrame:
-    """The composed selection gate as a native stream filter — no
-    foreachBatch, no state store, no watermark: every component of
-    :func:`selection_gate_expr` is a projection, so the SAME plan runs on
-    a stream and on a batch (the parity the pytest pins). Per-row cost is
-    exactly the batch pass's cost."""
-    return stream.filter(selection_gate_expr(F.col(text_col), **gate_kw))
-
-
-def selection_gate_writer(sink, text_col: str = "text", **gate_kw):
-    """foreachBatch form of :func:`stream_selection_gate`, for sinks that
-    need epoch semantics (idempotent writes keyed by epoch_id — the
-    dedup_gate_writer calling convention): hands the ADMITTED subset of
-    each micro-batch to ``sink(admitted_df, epoch_id)``. The gate itself
-    is stateless, so a retried epoch re-admits exactly the same rows —
-    idempotency needs only the sink's own epoch handling."""
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        sink(
-            batch_df.filter(selection_gate_expr(F.col(text_col), **gate_kw)),
-            epoch_id,
-        )
-
-    return write
-
-
 def stream_dedup_against_corpus(
     stream: DataFrame, corpus: DataFrame, content_cols: list[str]
 ) -> DataFrame:
@@ -385,10 +264,8 @@ def dedup_gate_writer(
     **opts,
 ):
     """THE unified foreachBatch admission gate (r7 VERDICT #8): one entry
-    for all four dedup kinds, replacing the four ad-hoc writer signatures
-    (stream_dedup_against_corpus, neardup_gate_writer,
-    simhash64_gate_writer, containment_gate_writer — kept as thin
-    documented aliases of the same batch operators).
+    for all four dedup kinds over the same batch operators
+    (operators/dedup.py ``*_against_corpus``, ``contained_in_corpus``).
 
     ``kind``: 'exact' | 'minhash' | 'simhash64' | 'containment'.
     ``corpus``: raw documents DataFrame — the index derivation recomputes
@@ -431,11 +308,15 @@ def dedup_gate_writer(
     text its grams were derived from).
 
     Returns a (batch_df, epoch_id) callable handing SURVIVORS (batch rows
-    unchanged) to ``sink(survivors_df, epoch_id)``. Same foreachBatch
-    rationale as the aliases: every kind but 'exact' needs a per-doc
-    aggregation over a stream-derived join, outside pure stream-static
-    shapes ('exact' also streams natively — stream_dedup_against_corpus —
-    when no sink-side index maintenance is wanted).
+    unchanged) to ``sink(survivors_df, epoch_id)``. Why foreachBatch and
+    not a pure streaming plan: every kind but 'exact' keeps "docs where NO
+    candidate verified", a per-doc aggregation over a stream-derived join
+    — outside Structured Streaming's supported stream-static shapes.
+    foreachBatch gives each micro-batch full batch semantics, and with a
+    checkpointed query + idempotent sink the usual effectively-once
+    contract holds ('exact' also streams natively —
+    stream_dedup_against_corpus — when no sink-side index maintenance is
+    wanted).
     """
     from ..operators.dedup import (
         SHINGLE_K,
@@ -585,145 +466,6 @@ def dedup_gate_writer(
                 survivors.unpersist()
         else:
             sink(survivors, epoch_id)
-
-    return write
-
-
-def neardup_gate_writer(
-    corpus: DataFrame,
-    sink,
-    threshold: float = 0.4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """foreachBatch writer running the NEAR-dup admission gate on a document
-    stream (kept as the documented minhash alias of
-    :func:`dedup_gate_writer`): each micro-batch keeps only docs with no LSH-candidate
-    near-duplicate (exact jaccard ≥ threshold) in the static corpus, then
-    hands the survivors to ``sink(survivors_df, epoch_id)``.
-
-    Why foreachBatch and not a pure streaming plan: the gate's survivor set
-    is "docs where NO banded candidate verified", which needs a per-doc
-    aggregation over a stream-derived join — outside Structured Streaming's
-    supported stream-static shapes. foreachBatch gives each micro-batch
-    full batch semantics (the exact operator batch pipelines run —
-    operators/dedup.minhash_dedup_against_corpus), and with a checkpointed
-    query + idempotent sink the usual effectively-once contract holds.
-    The exact-hash twin (stream_dedup_against_corpus) stays a pure
-    stream-static anti-join because its survivor predicate is per-row.
-
-    At 100 TB pass the maintained signature index — the (bands, shingles)
-    tuple from ``operators.dedup.load_neardup_index`` — as ``corpus``:
-    each micro-batch then probes the index tables instead of recomputing
-    corpus signatures (and ``append_to_neardup_index`` with each batch's
-    survivors keeps the index current).
-    """
-    from ..operators.dedup import minhash_dedup_against_corpus
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        if isinstance(corpus, tuple):
-            survivors = minhash_dedup_against_corpus(
-                batch_df,
-                corpus_index=corpus,
-                id_col=id_col,
-                text_col=text_col,
-                threshold=threshold,
-            )
-        else:
-            survivors = minhash_dedup_against_corpus(
-                batch_df, corpus, id_col=id_col, text_col=text_col, threshold=threshold
-            )
-        sink(survivors, epoch_id)
-
-    return write
-
-
-def simhash64_gate_writer(
-    corpus=None,
-    sink=None,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    corpus_index: DataFrame | None = None,
-):
-    """The simhash64 twin of :func:`neardup_gate_writer` (r6 VERDICT item
-    8; kept as the documented alias of :func:`dedup_gate_writer`): each micro-batch keeps only docs with no corpus document at 64-bit
-    SimHash Hamming ≤ ``max_hamming``, then hands survivors to
-    ``sink(survivors_df, epoch_id)``. Same foreachBatch rationale (the
-    survivor predicate aggregates over a stream-derived join).
-
-    Pass a raw documents DataFrame as ``corpus`` (signatures recomputed
-    per batch — tests/small corpora) or the persisted block-index
-    DataFrame from ``operators.dedup.load_simhash64_index`` as
-    ``corpus_index`` — the production path: each micro-batch's only
-    shuffle keys on the 4 (blk, bval) probes against the index's
-    clustering, and ``append_to_simhash64_index`` with each batch's
-    survivors keeps the index current. The explicit keyword mirrors
-    ``simhash64_dedup_against_corpus``'s unambiguous API (ADVICE r7: the
-    old columns-present duck-typing would silently treat a raw documents
-    frame that happens to carry sig/blk/bval columns as an index); a
-    prebuilt index passed positionally is still recognized, but only by
-    the EXACT 4-column integer layout ``_simhash64_block_rows`` emits.
-    """
-    from ..operators.dedup import simhash64_dedup_against_corpus
-
-    if corpus is not None and corpus_index is not None:
-        raise ValueError("pass corpus OR corpus_index, not both")
-    if corpus is None and corpus_index is None:
-        raise ValueError("one of corpus / corpus_index is required")
-
-    def _is_index(df: DataFrame) -> bool:
-        # exact layout check: the 4 columns of _simhash64_block_rows with
-        # integer types (sig/bval LongType, blk IntegerType), nothing else
-        d = dict(df.dtypes)
-        return (
-            set(df.columns) == {id_col, "sig", "blk", "bval"}
-            and d.get("sig") == "bigint"
-            and d.get("blk") == "int"
-            and d.get("bval") == "bigint"
-        )
-
-    index = corpus_index if corpus_index is not None else (
-        corpus if _is_index(corpus) else None
-    )
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        kwargs = dict(id_col=id_col, text_col=text_col, max_hamming=max_hamming)
-        if index is not None:
-            survivors = simhash64_dedup_against_corpus(
-                batch_df, corpus_index=index, **kwargs
-            )
-        else:
-            survivors = simhash64_dedup_against_corpus(batch_df, corpus, **kwargs)
-        sink(survivors, epoch_id)
-
-    return write
-
-
-def containment_gate_writer(
-    corpus: DataFrame,
-    sink,
-    gram_n: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """The containment twin of :func:`neardup_gate_writer` (kept as the
-    documented alias of :func:`dedup_gate_writer`): each micro-batch
-    keeps only docs whose full text is NOT a verbatim substring of some
-    longer corpus doc (operators/dedup.py: contained_in_corpus — the
-    fragment-of-existing-page ingestion rule), then hands survivors to
-    ``sink(survivors_df, epoch_id)``. Same foreachBatch rationale: the
-    survivor predicate aggregates over a stream-derived join. At 100 TB,
-    persist the corpus aligned-gram table and swap it in here instead of
-    recomputing per batch (verification still reads corpus text for
-    candidate containers only — see the operator docstring)."""
-    from ..operators.dedup import contained_in_corpus
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        survivors = contained_in_corpus(
-            batch_df, corpus, gram_n=gram_n, id_col=id_col, text_col=text_col
-        )
-        sink(survivors, epoch_id)
 
     return write
 

@@ -152,10 +152,8 @@ def test_merge_table_save_load_roundtrip(spark, sf_dir, tmp_path):
 
 
 def test_stream_bpe_token_counts_matches_batch(spark, sf_dir, tmp_path):
-    """The streaming twin meters exactly the batch counts: the apply is a
-    pure projection, so it plans natively on a file-source stream."""
-    from futures_eos_cdc_spark.streaming.pipeline import stream_bpe_token_counts
-
+    """The batch operator meters a stream exactly: the apply is a pure
+    projection, so it plans natively on a file-source stream."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     merges = train_bpe(docs)
     want = {(r.doc_id, r.n_words, r.n_tokens)
@@ -169,7 +167,7 @@ def test_stream_bpe_token_counts_matches_batch(spark, sf_dir, tmp_path):
         got.update((r.doc_id, r.n_words, r.n_tokens) for r in df.collect())
 
     q = (
-        stream_bpe_token_counts(
+        doc_bpe_token_counts(
             spark.readStream.schema("doc_id long, text string").parquet(src),
             merges,
         )
@@ -390,7 +388,6 @@ def test_stream_v1k_meter_matches_batch(spark, sf_dir, tmp_path):
         doc_bpe_token_counts_joined,
         train_bpe,
     )
-    from futures_eos_cdc_spark.streaming.pipeline import bpe_token_meter_writer
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     merges = train_bpe(docs, n_merges=1000)
@@ -409,7 +406,9 @@ def test_stream_v1k_meter_matches_batch(spark, sf_dir, tmp_path):
     q = (
         spark.readStream.schema("doc_id long, text string")
         .parquet(src)
-        .writeStream.foreachBatch(bpe_token_meter_writer(merges, sink))
+        .writeStream.foreachBatch(
+            lambda df, e: sink(doc_bpe_token_counts_joined(df, merges), e)
+        )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )

@@ -804,11 +804,8 @@ def test_minhash_dedup_prebuilt_index_parity(spark, sf_dir, tmp_path):
     """The prebuilt bands+shingles index path must admit exactly the same
     batch docs as the inline corpus-recompute path (the production form:
     probe the maintained index table instead of re-hashing the corpus)."""
-    from futures_eos_cdc_spark.operators.dedup import (
-        build_neardup_index,
-        load_neardup_index,
-        minhash_dedup_against_corpus,
-    )
+    from futures_eos_cdc_spark.operators.dedup import minhash_dedup_against_corpus
+    from futures_eos_cdc_spark.operators.gate_index import DedupGateIndex
 
     corpus = _docs(spark, sf_dir).select("doc_id", "text").limit(100)
     base = corpus.collect()[0]
@@ -820,13 +817,12 @@ def test_minhash_dedup_prebuilt_index_parity(spark, sf_dir, tmp_path):
         "doc_id long, text string",
     )
     # production maintenance shape: initial build + per-batch append
-    from futures_eos_cdc_spark.operators.dedup import append_to_neardup_index
-
     half = corpus.limit(50)
     rest = corpus.subtract(half)
-    build_neardup_index(half, str(tmp_path / "ndidx"))
-    append_to_neardup_index(rest, str(tmp_path / "ndidx"))
-    idx = load_neardup_index(spark, str(tmp_path / "ndidx"))
+    gate_idx = DedupGateIndex.build(half, str(tmp_path / "ndidx"), "minhash")
+    gate_idx.append(rest)
+    t = gate_idx.tables(spark)
+    idx = (t["bands"], t["shingles"])
     kept_inline = {r.doc_id for r in minhash_dedup_against_corpus(batch, corpus).collect()}
     kept_index = {
         r.doc_id
@@ -887,12 +883,10 @@ def test_simhash64_dedup_prebuilt_index_parity(spark, sf_dir, tmp_path):
     recompute does, and both must match the brute-force Hamming verdict
     over the raw signatures."""
     from futures_eos_cdc_spark.operators.dedup import (
-        append_to_simhash64_index,
-        build_simhash64_index,
-        load_simhash64_index,
         simhash64_dedup_against_corpus,
         with_simhash64,
     )
+    from futures_eos_cdc_spark.operators.gate_index import DedupGateIndex
 
     corpus = _docs(spark, sf_dir).select("doc_id", "text").limit(100)
     base = corpus.collect()[0]
@@ -914,9 +908,9 @@ def test_simhash64_dedup_prebuilt_index_parity(spark, sf_dir, tmp_path):
     assert want == {10_000_002}
 
     half = corpus.limit(50)
-    build_simhash64_index(half, str(tmp_path / "shidx"))
-    append_to_simhash64_index(corpus.subtract(half), str(tmp_path / "shidx"))
-    idx = load_simhash64_index(spark, str(tmp_path / "shidx"))
+    gate_idx = DedupGateIndex.build(half, str(tmp_path / "shidx"), "simhash64")
+    gate_idx.append(corpus.subtract(half))
+    idx = gate_idx.tables(spark)["blocks"]
     assert idx.count() == 100 * 4  # 4 block rows per corpus doc
 
     kept_inline = {

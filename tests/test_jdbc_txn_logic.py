@@ -93,6 +93,23 @@ def test_empty_partition_never_connects():
     assert log == []
 
 
+
+def test_foreach_batch_writer_runs_the_partition_body_on_executors(spark):
+    """jdbc_orders_outbox_writer hands every partition to the partition
+    body on the executors: an empty epoch never connects, and a non-empty
+    one without a JDBC bridge fails loudly instead of dropping the batch."""
+    from futures_eos_cdc_spark.streaming.outbox import jdbc_orders_outbox_writer
+
+    schema = (
+        "id string, client_order_id string, symbol string, side string, "
+        "qty double, price double, status string, event_id string, "
+        "payload string"
+    )
+    write = jdbc_orders_outbox_writer("jdbc:x", {"driver": "d"})
+    write(spark.createDataFrame([], schema), 0)
+    with pytest.raises(Exception, match="JDBC bridge"):
+        write(spark.createDataFrame(_rows(), schema), 1)
+
 # ---------------------------------------------------------------------------
 # Frozen Postgres-dialect goldens (r12 VERDICT next #6): the DuckDB
 # executor (test_jdbc_duckdb_txn) proves the script RUNS, but DuckDB's ON

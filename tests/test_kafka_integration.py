@@ -123,3 +123,25 @@ def test_kafka_signal_roundtrip(spark, tmp_path):
     # Lenient parse dropped nothing (all rows well-formed) and ts_us is
     # micros derived from the wire ts (ms * 1000).
     assert got.filter(f"ts_us < {now_ms * 1000}").count() == 0
+
+
+def test_kafka_sink_without_connector_raises_documented_error(spark, tmp_path):
+    """write_decisions_kafka (S2's sink) fails with the RuntimeError that
+    names the missing connector package, not a raw analysis error, when
+    spark-sql-kafka is absent. Nothing connects: the data source lookup
+    fails before the query starts."""
+    if _kafka_connector_error(spark) is None:
+        pytest.skip("spark-sql-kafka is on the classpath")
+    from futures_eos_cdc_spark.sources.kafka import write_decisions_kafka
+    from futures_eos_cdc_spark.streaming.pipeline import (
+        read_signal_stream_files,
+        streaming_decide,
+    )
+
+    src = tmp_path / "signals"
+    src.mkdir()
+    decisions = streaming_decide(read_signal_stream_files(spark, str(src)))
+    with pytest.raises(RuntimeError, match="spark-sql-kafka"):
+        write_decisions_kafka(
+            decisions, "localhost:9092", checkpoint=str(tmp_path / "ckpt")
+        )

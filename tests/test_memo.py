@@ -110,6 +110,18 @@ def test_floor_queries_warm_pass_records_no_misses(spark, sf_dir):
         assert hits.get(f"memo.{ns}.hits", 0) > 0, hits
 
 
+def test_refresh_tables_drops_table_handles(spark, sf_dir):
+    """refresh_tables is how a caller sees files an external writer
+    appended: the next load re-lists instead of reusing the memoized
+    handle."""
+    from futures_eos_cdc_spark.sources.tables import load_table, refresh_tables
+
+    first = load_table(spark, sf_dir, "region")
+    assert load_table(spark, sf_dir, "region") is first
+    refresh_tables()
+    assert load_table(spark, sf_dir, "region") is not first
+
+
 def test_application_id_is_read_only_by_the_memo():
     """Session scoping is decided in memo.py alone; operators/dedup.py
     keeps a refcount of Spark's plan-equal caches, which is not a value

