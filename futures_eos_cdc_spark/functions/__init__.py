@@ -11,7 +11,8 @@ Grouped by domain:
               ``lang_id``, ``fingerprint``
 - tokenizer:  ``bpe_tokens``, ``bpe_token_count`` (trained-merge-table BPE
               as pure replace-chain expressions; small vocabs — the
-              production join apply lives in operators.bpe)
+              production apply is operators.text.doc_token_counts with
+              operators.bpe.bpe_segmenter)
 - similarity: ``dot``, ``norm``, ``cosine``
 - sets:       ``jaccard``
 - hashing:    ``minhash_signatures``, ``lsh_bucket``, ``simhash16``

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .common import const_array
+
 BLOOM_M_HEX = 4  # bit positions = 16 bits -> m = 65536
 BLOOM_K = 4  # hash functions
 
@@ -110,10 +112,11 @@ def bloom_probe_expr(
     bitmap — a PURE projection (the bitmap rides as ONE array literal
     shared by all k checks via the forall lambda; per probe: k O(1) word
     lookups, no join, no shuffle)."""
-    # The explicit cast is load-bearing: F.lit infers array<int> whenever
-    # every word happens to fit int32 (e.g. a saturated filter whose words
-    # are all -1), and bit_get on an int rejects positions >= 32.
-    words = F.lit(bitmap).cast("array<bigint>")
+    # One parsed literal (one py4j call, not one per word). Every word
+    # renders as a BIGINT literal, so the array is array<bigint> even when
+    # all words fit int32 (a saturated filter's are all -1): bit_get on an
+    # int rejects positions >= 32.
+    words = const_array(bitmap)
     return F.forall(
         bloom_positions_expr(digest, k, m_hex_chars),
         lambda pos: F.bit_get(

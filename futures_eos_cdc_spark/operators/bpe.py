@@ -41,22 +41,25 @@ pattern ``SEP lhs SEP SEP rhs SEP`` can never share characters and
 non-overlapping". End-of-word is the single-char symbol EOW appended to
 every word (so merges learn word-final units, per the paper).
 
-Two apply shapes, picked by merge-table size (r8 VERDICT next #1):
+Two apply shapes (r8 VERDICT next #1):
 
 - **replace-chain projection** (:func:`doc_bpe_token_counts`): a chain of
   ``n_merges`` JVM ``replace`` calls inside ``transform()`` over the words
   array — pure whole-stage-codegen projection, NO shuffle, no Python.
   Zero extra exchanges, but the nested-expression depth caps it at a few
   hundred ranks (plan/codegen size limits) — the toy-vocab regime.
-- **distinct-words join-back** (:func:`doc_bpe_token_counts_joined`): the
-  corpus_token_stats shape — tokenize DISTINCT words in Arrow batches
-  (:func:`bpe_word_token_counts`, running :func:`apply_bpe_str`, the
-  pytest-pinned string twin of the reference), join counts back on word,
-  aggregate per doc. Corpus-side cost is n_merges-INDEPENDENT (one
-  explode + one word-keyed join + one doc-keyed agg); the tokenizer runs
-  once per distinct word. This is the production shape: an 8-32 k-merge
-  vocabulary is a few hundred KB of closure data and vocabulary-sized
-  Python work.
+- **distinct-words join-back**: the shared subword apply of
+  operators.text (``doc_token_counts`` / ``word_tokens``) driven by
+  :func:`bpe_segmenter` — tokenize DISTINCT words in Arrow batches, join
+  counts back on word, aggregate per doc. Corpus-side cost is
+  n_merges-INDEPENDENT (one explode + one word-keyed broadcast join + one
+  doc-keyed agg); the tokenizer runs once per distinct word. This is the
+  production shape: an 8-32 k-merge vocabulary is a few hundred KB of
+  closure data and vocabulary-sized Python work. The segmenter is the
+  string-level sequential apply (:func:`_make_str_word_apply`) for small
+  tables and the pair-indexed apply (:func:`_make_ranked_word_apply`)
+  above :data:`BPE_APPLY_AUTO_THRESHOLD` ranks; both are pytest-pinned
+  twins of :func:`apply_bpe_py`.
 
 Reference parity: the reference pipeline has no subword tokenizer (its
 token accounting is whitespace-based); this operator is part of the
@@ -157,36 +160,44 @@ def _merge_pats(merges) -> list[tuple[str, str]]:
     ]
 
 
-def _encode_word_py(word: str) -> str:
-    return "".join(SEP + c + SEP for c in word) + SEP + EOW + SEP
+def _make_str_word_apply(merges):
+    """Build the string-level per-word tokenizer for one merge table and
+    return a closure ``word -> list[token]``: sequential-by-rank apply on
+    the separator-encoded SYMBOL STRING — the exact string-level twin of
+    :func:`apply_bpe_py` (pytest-pinned), but each rank is one C-level
+    substring scan instead of a Python list walk, so every rank costs one
+    short ``in`` check per word; most ranks are absent from any given
+    word and cost only the failed scan. Rank-count-LINEAR, so it serves
+    only small tables (:func:`bpe_segmenter`).
 
+    Like :func:`_make_ranked_word_apply`, the closure is dynamically
+    created: cloudpickle ships it BY VALUE (its cells: the pattern list,
+    ``sep`` and ``eow``)."""
+    pats = _merge_pats(merges)
+    sep, eow = SEP, EOW
 
-def apply_bpe_str(word: str, pats: list[tuple[str, str]]) -> str:
-    """Sequential-by-rank apply on the separator-encoded SYMBOL STRING —
-    the exact string-level twin of :func:`apply_bpe_py` (pytest-pinned),
-    but each rank is one C-level substring scan instead of a Python list
-    walk, so a production-sized merge table (8-32 k ranks) costs
-    n_merges short ``in`` checks per word; most ranks are absent from
-    any given word and cost only the failed scan."""
-    s = _encode_word_py(word)
-    for pat, repl in pats:
-        if pat in s:
-            s = s.replace(pat, repl)
-    return s
+    def apply_word(w: str) -> list:
+        s = "".join(sep + c + sep for c in w) + sep + eow + sep
+        for pat, repl in pats:
+            if pat in s:
+                s = s.replace(pat, repl)
+        return [t for t in s.split(sep) if t]
+
+    return apply_word
 
 
 def _make_ranked_word_apply(merges, eow: str = EOW):
     """Build the pair-indexed per-word tokenizer for one merge table and
     return a closure ``word -> list[token]`` — THE single implementation
     of the ranked apply (r9 VERDICT next #1, the subword-nmt/GPT-2
-    production shape): :func:`apply_bpe_ranked` and both Arrow batch
-    bodies call the closure this factory returns, so the semantics live
-    in exactly one place (code-review r10 — four textual copies would
-    let a future fix silently diverge from the pytest-pinned twins).
+    production shape): :func:`apply_bpe_ranked` and :func:`bpe_segmenter`
+    call the closure this factory returns, so the semantics live in
+    exactly one place (code-review r10 — four textual copies would let a
+    future fix silently diverge from the pytest-pinned twins).
 
     Instead of giving every rank a turn (one failed substring scan per
-    ABSENT rank — :func:`apply_bpe_str` is rank-count-LINEAR, 32 k scans
-    per word at 32 k ranks), look up only the pairs PRESENT in this word
+    ABSENT rank — :func:`_make_str_word_apply` is rank-count-LINEAR, 32 k
+    scans per word at 32 k ranks), look up only the pairs PRESENT in this word
     in a pair→rank index and process their ranks in ascending order off
     a heap. Cost is O(word_len · merges_performed) — INDEPENDENT of the
     table size.
@@ -207,8 +218,7 @@ def _make_ranked_word_apply(merges, eow: str = EOW):
     Shipping discipline: the returned closure is DYNAMICALLY created, so
     cloudpickle serializes it BY VALUE (its cells: the ranks dict, the
     pair list, ``eow``, and stdlib functions) — workers never need this
-    package importable, the rule the str closures follow by
-    inlining."""
+    package importable."""
     from bisect import bisect_right
     from heapq import heappop, heappush
 
@@ -257,8 +267,8 @@ def apply_bpe_ranked(word: str, merges, _apply=None) -> list[str]:
     """One-word convenience wrapper over :func:`_make_ranked_word_apply`
     (semantics and cost model documented there). ``_apply`` is the
     prebuilt factory closure — pass it when applying one table to many
-    words, as the Arrow batch bodies and the parity tests do (building
-    the rank index is O(table) and must not repeat per word)."""
+    words, as the parity tests do (building the rank index is O(table)
+    and must not repeat per word)."""
     return (_make_ranked_word_apply(merges) if _apply is None else _apply)(word)
 
 
@@ -272,14 +282,28 @@ def apply_bpe_ranked(word: str, merges, _apply=None) -> list[str]:
 BPE_APPLY_AUTO_THRESHOLD = 64
 
 
-def _resolve_apply_shape(apply_shape: str, n_merges: int) -> str:
-    if apply_shape == "auto":
-        return "ranked" if n_merges > BPE_APPLY_AUTO_THRESHOLD else "str"
-    if apply_shape not in ("str", "ranked"):
-        raise ValueError(
-            f"apply_shape={apply_shape!r}; expected 'auto' | 'str' | 'ranked'"
-        )
-    return apply_shape
+def bpe_segmenter(merges, byte_level: bool = False):
+    """The per-word BPE tokenizer ``word -> list[token]`` for the shared
+    distinct-word apply (operators.text ``doc_token_counts`` /
+    ``word_tokens``): the str apply up to :data:`BPE_APPLY_AUTO_THRESHOLD`
+    ranks, the ranked apply above it. ``byte_level`` maps each RAW word
+    through the bytes→unicode table first (the byte-level family —
+    ``merges`` are then over byte-char symbols), inside the closure, so
+    joining back on the raw word keeps the corpus side byte-free."""
+    make = (
+        _make_ranked_word_apply
+        if len(merges) > BPE_APPLY_AUTO_THRESHOLD
+        else _make_str_word_apply
+    )
+    apply_w = make(merges)
+    if not byte_level:
+        return apply_w
+    bc = BYTE_CHARS
+
+    def apply_bytes(w: str) -> list:
+        return apply_w("".join(bc[b] for b in w.encode("utf-8")))
+
+    return apply_bytes
 
 
 def train_bpe_py_fast(
@@ -439,197 +463,6 @@ def bpe_token_count_expr(word: Column, merges) -> Column:
     ).cast("long")
 
 
-def bpe_word_token_counts(
-    words_df: DataFrame, merges, word_col: str = "word",
-    apply_shape: str = "auto", pre=None,
-) -> DataFrame:
-    """(word, n_tok): exact BPE token counts for a table of DISTINCT
-    words — the vocabulary-shaped half of the join-based apply
-    (:func:`doc_bpe_token_counts_joined`). Arrow ``mapInPandas``: the
-    merge table rides the closure (a few hundred KB even at 32 k ranks
-    — far below broadcast limits). Python touches only the distinct-word
-    table, never the corpus — the corpus_token_stats discipline the
-    module docstring names as the 100 TB shape.
-
-    ``apply_shape`` picks the per-word tokenizer (both pytest-pinned
-    twins of :func:`apply_bpe_py`): ``'str'`` runs the string-level
-    sequential apply (:func:`apply_bpe_str` — one C substring scan per
-    rank, fastest for small tables), ``'ranked'`` runs the pair-indexed
-    apply (:func:`apply_bpe_ranked` — cost flat in table size, the
-    production shape at 8-32 k ranks; r9 VERDICT next #1). ``'auto'``
-    switches on the measured crossover (:data:`BPE_APPLY_AUTO_THRESHOLD`).
-
-    ``pre``: optional word→str transform applied before the symbol
-    encoding, inside the batch body — the byte-level family passes the
-    bytes→unicode map here (code review r13: ONE tokenizer
-    implementation, the byte variant is a pre-map, not a copy). Must be
-    a self-contained closure (cloudpickle ships it by value)."""
-    shape = _resolve_apply_shape(apply_shape, len(merges))
-    sep, eow = SEP, EOW
-
-    # fully self-contained nested closures: cloudpickle ships them by
-    # VALUE (dynamically created functions always are), so workers never need
-    # this package importable on their own sys.path. Each body is its
-    # module-level twin inlined — parity pytests pin them together.
-    if shape == "str":
-        pats = _merge_pats(merges)
-
-        def tok(batches):
-            import pandas as _pd
-
-            def n_tok(w: str) -> int:
-                if pre is not None:
-                    w = pre(w)
-                s = "".join(sep + c + sep for c in w) + sep + eow + sep
-                for pat, repl in pats:
-                    if pat in s:
-                        s = s.replace(pat, repl)
-                return s.count(sep) // 2
-
-            for pdf in batches:
-                ws = pdf[word_col]
-                yield _pd.DataFrame(
-                    {word_col: ws, "n_tok": [n_tok(w) for w in ws]}
-                )
-
-    else:
-        # ONE implementation: the factory's dynamic closure ships by
-        # value inside this batch body (factory docstring) — no package
-        # import on workers, no textual copy of the heap walk here
-        apply_w = _make_ranked_word_apply(merges, eow)
-
-        def tok(batches):
-            import pandas as _pd
-
-            def n_tok(w: str) -> int:
-                return len(apply_w(w if pre is None else pre(w)))
-
-            for pdf in batches:
-                ws = pdf[word_col]
-                yield _pd.DataFrame(
-                    {word_col: ws, "n_tok": [n_tok(w) for w in ws]}
-                )
-
-    return words_df.select(word_col).mapInPandas(
-        tok, schema=f"{word_col} string, n_tok long"
-    )
-
-
-def bpe_word_tokens(
-    words_df: DataFrame, merges, word_col: str = "word",
-    apply_shape: str = "auto",
-) -> DataFrame:
-    """(word, toks array<string>): the token LISTS for a table of
-    DISTINCT words — :func:`bpe_word_token_counts`'s sibling for
-    consumers that need the subwords themselves (vocabulary reports,
-    OOV audits), same vocabulary-shaped Arrow scale shape, the same
-    self-contained-closure discipline, and the same ``apply_shape``
-    rungs (str / ranked / auto)."""
-    shape = _resolve_apply_shape(apply_shape, len(merges))
-    sep, eow = SEP, EOW
-
-    if shape == "str":
-        pats = _merge_pats(merges)
-
-        def tok(batches):
-            import pandas as _pd
-
-            def toks(w: str) -> list[str]:
-                s = "".join(sep + c + sep for c in w) + sep + eow + sep
-                for pat, repl in pats:
-                    if pat in s:
-                        s = s.replace(pat, repl)
-                return [t for t in s.split(sep) if t]
-
-            for pdf in batches:
-                ws = pdf[word_col]
-                yield _pd.DataFrame(
-                    {word_col: ws, "toks": [toks(w) for w in ws]}
-                )
-
-    else:
-        # same single-implementation discipline as bpe_word_token_counts
-        apply_w = _make_ranked_word_apply(merges, eow)
-
-        def tok(batches):
-            import pandas as _pd
-
-            for pdf in batches:
-                ws = pdf[word_col]
-                yield _pd.DataFrame(
-                    {word_col: ws, "toks": [apply_w(w) for w in ws]}
-                )
-
-    return words_df.select(word_col).mapInPandas(
-        tok, schema=f"{word_col} string, toks array<string>"
-    )
-
-
-def doc_bpe_token_counts_joined(
-    docs: DataFrame,
-    merges,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    keep_cols: tuple[str, ...] = (),
-    broadcast_vocab: bool = True,
-    apply_shape: str = "auto",
-    clean: bool = True,
-    pre=None,
-) -> DataFrame:
-    """(doc_id, n_words, n_tokens, fertility) — same output contract as
-    :func:`doc_bpe_token_counts`, but apply runs over DISTINCT words and
-    joins back (the module-docstring alternative the r8 VERDICT asked to
-    build): the replace-chain projection is a chain of ``n_merges``
-    nested JVM expressions, which cannot reach a production 8-32 k-merge
-    vocabulary (plan/codegen size limits at a few hundred ranks), while
-    this shape is n_merges-INDEPENDENT on the corpus side — one word
-    explode, one word-keyed join, one doc-keyed aggregation; the
-    tokenizer itself runs once per distinct word (vocabulary-shaped
-    Arrow batch work, :func:`bpe_word_token_counts`).
-
-    ``broadcast_vocab=True`` broadcasts the (word, n_tok) table — right
-    while the tokenized vocabulary fits the broadcast budget (tens of
-    MB covers millions of words: two small columns). At web-corpus
-    vocabularies (1e8+ distinct words) set it False for a shuffle join
-    on ``word``; the doc-keyed aggregation behind it is unchanged.
-
-    ``clean=False`` + ``pre`` are the byte-level hooks (code review
-    r13): keep every word and pre-map it inside the tokenizer kernel —
-    see :func:`doc_bpe_token_counts_bytes`."""
-    words_arr = (
-        _clean_words(F.col(text_col)) if clean else tokens_expr(F.col(text_col))
-    )
-    docs2 = docs.filter(F.col(text_col).isNotNull())
-    if clean:
-        # same all-marker-words guard as doc_bpe_token_counts (tokens_expr
-        # never yields an empty array on non-null text, so the unclean
-        # path needs no guard)
-        docs2 = docs2.filter(F.size(words_arr) > 0)
-    words = docs2.select(
-        F.col(id_col),
-        *[F.col(c) for c in keep_cols],
-        F.explode(words_arr).alias("word"),
-    )
-    wtok = bpe_word_token_counts(
-        words.select("word").distinct(), merges, apply_shape=apply_shape,
-        pre=pre,
-    )
-    if broadcast_vocab:
-        wtok = F.broadcast(wtok)
-    return (
-        words.join(wtok, "word")
-        .groupBy(id_col, *[F.col(c) for c in keep_cols])
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_words"),
-            F.sum("n_tok").cast("long").alias("n_tokens"),
-        )
-        .withColumn(
-            "fertility",
-            F.col("n_tokens").cast("double") / F.col("n_words"),
-        )
-    )
-
-
 def save_bpe_merges(spark, merges, path: str) -> None:
     """Persist a trained merge table (train once per corpus, apply
     everywhere — the deployment shape). One tiny parquet table
@@ -734,18 +567,6 @@ def byte_encode_py(word: str) -> str:
     return "".join(BYTE_CHARS[b] for b in word.encode("utf-8"))
 
 
-def _byte_pre():
-    """The bytes→unicode pre-map as a SELF-CONTAINED closure (only the
-    BYTE_CHARS list rides the cells), shippable by value into the
-    tokenizer batch bodies — the single place the byte mapping runs."""
-    bc = BYTE_CHARS
-
-    def pre(w: str) -> str:
-        return "".join(bc[b] for b in w.encode("utf-8"))
-
-    return pre
-
-
 def word_freq_table_bytes(
     docs: DataFrame, text_col: str = "text", cap: int = BPE_VOCAB_CAP
 ) -> DataFrame:
@@ -774,44 +595,3 @@ def train_bpe_bytes(
         for r in word_freq_table_bytes(docs, text_col, vocab_cap).collect()
     ]
     return train_bpe_py_fast(wf, n_merges, min_pair_freq)
-
-
-def bpe_word_token_counts_bytes(
-    words_df: DataFrame, merges, word_col: str = "word",
-    apply_shape: str = "auto",
-) -> DataFrame:
-    """(word, n_tok) for DISTINCT RAW words under a byte-level merge
-    table: :func:`bpe_word_token_counts` with the bytes→unicode pre-map
-    — the same pinned per-word applies run over the mapped string, and
-    joining back on the RAW word keeps the corpus side byte-free (the
-    mapping runs once per distinct word, never per occurrence)."""
-    return bpe_word_token_counts(
-        words_df, merges, word_col, apply_shape, pre=_byte_pre()
-    )
-
-
-def doc_bpe_token_counts_bytes(
-    docs: DataFrame,
-    merges,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_vocab: bool = True,
-    apply_shape: str = "auto",
-) -> DataFrame:
-    """(doc_id, n_words, n_tokens, fertility) under a BYTE-level merge
-    table — :func:`doc_bpe_token_counts_joined` with the byte-level
-    hooks (clean=False + the bytes→unicode pre-map): no word filter
-    anywhere (every word counts), n_words is the full whitespace-token
-    count, and the scale shape is inherited unchanged — one word
-    explode, the mapping + tokenizer over DISTINCT words only, one
-    broadcast join back, one doc-keyed aggregation."""
-    return doc_bpe_token_counts_joined(
-        docs,
-        merges,
-        id_col=id_col,
-        text_col=text_col,
-        broadcast_vocab=broadcast_vocab,
-        apply_shape=apply_shape,
-        clean=False,
-        pre=_byte_pre(),
-    )

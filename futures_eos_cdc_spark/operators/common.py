@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numbers
+
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -18,3 +21,30 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+# ---------------------------------------------------------------------------
+# Literal arrays as ONE parsed SQL expression. ``F.array(*map(F.lit, xs))``
+# or ``F.lit(list)`` costs py4j round trips PER ELEMENT (a 4,096-word Bloom
+# bitmap made ~4,100 of them); ``F.expr`` of the rendered text costs one.
+# Each element renders by its Python type: a float as CAST('repr' AS
+# DOUBLE) — shortest-roundtrip repr + correctly-rounded string->double
+# reproduces the exact double in any engine; an int as a BIGINT literal;
+# a str as a quoted, backslash-escaped literal.
+# ---------------------------------------------------------------------------
+def _sql_literal(v) -> str:
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, numbers.Integral):
+        return f"{int(v)}L"
+    # float(): numpy scalars repr as 'np.float64(...)'
+    return f"CAST('{float(v)!r}' AS DOUBLE)"
+
+
+def const_array_sql(values) -> str:
+    return "array(" + ", ".join(_sql_literal(v) for v in values) + ")"
+
+
+def const_array(values) -> Column:
+    """A literal array Column in one py4j call."""
+    return F.expr(const_array_sql(values))

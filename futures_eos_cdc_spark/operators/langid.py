@@ -56,6 +56,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..memo import memo
+from .common import const_array
 from .text import bind_expr
 
 LANGID_N = 3  # character trigrams
@@ -294,15 +295,13 @@ def _candidates_array(
 
         structs = []
         for lang in sorted(model):
-            # ONE parsed expression per weight vector, not F.lit(list):
-            # building a 1024-element array literal through py4j cost ~1 s
-            # PER LANGUAGE of plan-construction time per invocation
-            # (profiled r12: langid_confidence construct=2.9 s vs
-            # execute=1.5 s at sf0.1) — the same literal-array lesson the
-            # r5 bench notes record for the ANN centroid planes.
-            arr = F.expr(
-                "array(" + ",".join(f"{w}L" for w in model[lang]) + ")"
-            )
+            # ONE parsed expression per weight vector (const_array), not
+            # F.lit(list): building a 1024-element array literal through
+            # py4j cost ~1 s PER LANGUAGE of plan-construction time per
+            # invocation (profiled r12: langid_confidence construct=2.9 s
+            # vs execute=1.5 s at sf0.1) — the same literal-array lesson
+            # the r5 bench notes record for the ANN centroid planes.
+            arr = const_array(model[lang])
             structs.append(
                 F.struct((-_fold(arr)).alias("neg"), F.lit(lang).alias("lang"))
             )

@@ -21,6 +21,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .common import const_array, const_array_sql
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     """Left-fold dot product over double-cast elements (order-stable)."""
@@ -284,30 +286,16 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
 # array literals, lambdas and all. Py4j lambda conversion alone costs
 # ~10-20 ms per lambda and the ANN queries build ~100; one parse removes
 # both that and the per-literal hops (measured: ann_lsh 3.4 → 1.8 s,
-# ann_ivf 3.3 → 2.3 s end-to-end at sf0.1). Constants render as
-# CAST('repr' AS DOUBLE): shortest-roundtrip repr + correctly-rounded
-# string→double reproduces the exact original double in any engine.
+# ann_ivf 3.3 → 2.3 s end-to-end at sf0.1). Constant arrays render via
+# common.const_array_sql (floats as CAST('repr' AS DOUBLE)).
 # ---------------------------------------------------------------------------
-def _f(v: float) -> str:
-    return f"CAST('{float(v)!r}' AS DOUBLE)"
-
-
-def _const_array_sql(values: list[float]) -> str:
-    return "array(" + ", ".join(_f(v) for v in values) + ")"
-
-
-def _const_array(values: list[float]) -> Column:
-    """A literal double-array in one py4j call."""
-    return F.expr(_const_array_sql(values))
-
-
 def _dot_lit_sql(vec_sql: str, plane: list[float]) -> str:
     """vec · literal plane: the order-stable left fold, as SQL text (the
     HOF evaluates exactly as the Column form — only construction differs:
     py4j lambda conversion costs ~10-20 ms per lambda, and the ANN queries
     build ~100 of these)."""
     return (
-        f"aggregate(zip_with({vec_sql}, {_const_array_sql(plane)}, "
+        f"aggregate(zip_with({vec_sql}, {const_array_sql(plane)}, "
         f"(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, x) -> acc + x)"
     )
 
@@ -332,7 +320,7 @@ def lsh_bucket_expr(vec: Column | str, planes: list[list[float]]) -> Column:
         d = F.aggregate(
             F.zip_with(
                 vec,
-                _const_array(p),
+                const_array(p),
                 lambda x, y: x.cast("double") * y,
             ),
             F.lit(0.0),
@@ -407,7 +395,7 @@ def _dist2_sql(vec_sql: str, centroid: list[float]) -> str:
     """Squared L2 distance to a literal centroid (left-fold, order-stable),
     as SQL text — same construction rationale as ``_dot_lit_sql``."""
     return (
-        f"aggregate(zip_with({vec_sql}, {_const_array_sql(centroid)}, "
+        f"aggregate(zip_with({vec_sql}, {const_array_sql(centroid)}, "
         f"(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
         f"0.0D, (acc, x) -> acc + x)"
     )
@@ -1277,7 +1265,7 @@ def _pq_codebook_sql(codebooks: list[list[list[float]]]) -> str:
     return (
         "array("
         + ", ".join(
-            "array(" + ", ".join(_const_array_sql(cw) for cw in sub) + ")"
+            "array(" + ", ".join(const_array_sql(cw) for cw in sub) + ")"
             for sub in codebooks
         )
         + ")"

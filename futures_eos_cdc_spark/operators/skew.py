@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .common import const_array
+
 # (partial-stage expr builder, merge-stage expr builder) per algebraic op
 _ALGEBRAIC = {
     "sum": (lambda c: F.sum(c), lambda c: F.sum(c)),
@@ -117,6 +119,6 @@ def salted_join(
         )
     b = big.withColumn("__salt", _salt_expr(big, n_salts))
     s = small.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
+        "__salt", F.explode(const_array(range(n_salts)))
     )
     return b.join(s, on + ["__salt"], how).drop("__salt")

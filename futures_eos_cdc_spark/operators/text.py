@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .common import const_array
+
 # Tiny per-language function-word lexicons for the n-gram/stopword heuristic.
 LANG_LEXICONS: dict[str, tuple[str, ...]] = {
     "de": ("der", "die", "das", "und", "nicht", "zu", "ist", "ein"),
@@ -33,6 +35,71 @@ def tokens_expr(text: Column) -> Column:
     """Whitespace tokenization of lowercased text (BPE-ish splitting can be
     layered on top with a further regexp)."""
     return F.split(F.trim(F.lower(text)), r"\s+")
+
+
+# ---------------------------------------------------------------------------
+# Distinct-word subword apply, shared by every tokenizer family (BPE, byte
+# BPE, Unigram-LM, WordPiece): each family supplies only a per-word
+# segmenter ``word -> list[str]``. Python touches the DISTINCT-word table,
+# never the corpus: the corpus side is one word explode, one broadcast join
+# of (word, n_tok) ints and one doc-keyed aggregation, independent of the
+# vocabulary size.
+# ---------------------------------------------------------------------------
+def _make_word_tokens_fn(segment):
+    """mapInPandas function (word) -> (word, toks). Module-level factory
+    so the returned closure is dynamically created: cloudpickle ships it
+    and ``segment`` (itself a factory closure) BY VALUE, so Python
+    workers never import this package."""
+
+    def tokenize(batches):
+        import pandas as _pd
+
+        for pdf in batches:
+            ws = pdf["word"]
+            yield _pd.DataFrame({"word": ws, "toks": [segment(w) for w in ws]})
+
+    return tokenize
+
+
+def word_tokens(words_df: DataFrame, segment) -> DataFrame:
+    """(word, toks array<string>) for a table of DISTINCT words in a
+    ``word`` column, in Arrow batches."""
+    return words_df.select("word").mapInPandas(
+        _make_word_tokens_fn(segment), "word string, toks array<string>"
+    )
+
+
+def doc_token_counts(
+    docs: DataFrame,
+    segment,
+    words=tokens_expr,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    keep_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """(id, *keep_cols, n_words, n_tokens, fertility): exact subword token
+    counts per document. ``words`` maps the text column to its words
+    array. NULL text drops; a doc whose words array is empty (every word
+    filtered out) drops too, since its fertility would be 0/0. The token
+    lists shrink to ``size(toks)`` JVM-side before the broadcast join."""
+    arr = words(F.col(text_col))
+    occ = (
+        docs.filter(F.col(text_col).isNotNull())
+        .filter(F.size(arr) > 0)
+        .select(F.col(id_col), *[F.col(c) for c in keep_cols], F.explode(arr).alias("word"))
+    )
+    wtok = word_tokens(occ.select("word").distinct(), segment).select(
+        "word", F.size("toks").alias("n_tok")
+    )
+    return (
+        occ.join(F.broadcast(wtok), "word")
+        .groupBy(id_col, *keep_cols)
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_words"),
+            F.sum("n_tok").cast("long").alias("n_tokens"),
+        )
+        .withColumn("fertility", F.col("n_tokens").cast("double") / F.col("n_words"))
+    )
 
 
 def bind_expr(e: Column, f) -> Column:
@@ -131,7 +198,7 @@ def gopher_metrics(text: Column) -> dict[str, Column]:
         / n
     )
     swr = F.length(F.regexp_replace(text, PUNCT_CLASS, "")).cast("double") / n
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS_EN])
+    stop_arr = const_array(STOPWORDS_EN)
     n_stop = bind_expr(
         toks,
         lambda t: F.size(F.filter(stop_arr, lambda s: F.array_contains(t, s))),

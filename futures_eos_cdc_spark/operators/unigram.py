@@ -27,18 +27,16 @@ table in the same order.
 
 Scale shape (100 TB): training runs on the bounded word-frequency table
 (the BPE trainer's TakeOrderedAndProject collect, <= vocab_cap rows);
-apply is the distinct-words + Arrow + join-back discipline of
-operators.bpe.doc_bpe_token_counts_joined — Python touches only the
-vocabulary, the corpus sees one word explode, one broadcast join, one
-doc-keyed aggregation, all n_pieces-INDEPENDENT. Unknown characters
+apply is the shared distinct-word path of operators.text
+(``doc_token_counts`` / ``word_tokens``) with :func:`_make_viterbi` as
+the segmenter — Python touches only the vocabulary, the corpus sees one
+word explode, one broadcast join, one doc-keyed aggregation, all
+n_pieces-INDEPENDENT. Unknown characters
 (absent from the training corpus) segment as single-char tokens at a
 fixed floor log-prob — the UNK convention, identical in every engine.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 UNIGRAM_VOCAB_SIZE = 512
 UNIGRAM_MAX_PIECE_LEN = 6
@@ -52,11 +50,11 @@ def _make_viterbi(
     max_piece_len: int = UNIGRAM_MAX_PIECE_LEN,
     unk_logp: float = UNIGRAM_UNK_LOGP,
 ):
-    """THE Viterbi segmenter, built once per vocabulary — the single
-    implementation every caller shares (the bpe._make_ranked_word_apply
-    factory discipline: a dynamically-created closure that cloudpickle
-    ships BY VALUE into Arrow batch bodies, so workers never import this
-    package, and a fix here cannot silently miss an inlined twin).
+    """THE Viterbi segmenter ``word -> list[piece]``, built once per
+    vocabulary — the single implementation every caller shares, and the
+    segmenter the shared distinct-word apply (operators.text) runs: a
+    dynamically-created closure that cloudpickle ships BY VALUE into the
+    Arrow batch body, so workers never import this package.
 
     dp over codepoint positions; candidates scanned by piece length
     ASCENDING with strict >, so ties keep the shortest piece ending at
@@ -159,68 +157,3 @@ def train_unigram_py(
                 em_counts[tok] = em_counts.get(tok, 0) + freq
         logp = estimate(select(em_counts, n_multi), em_counts)
     return sorted(logp.items())
-
-
-def unigram_word_tokens(
-    words_df: DataFrame,
-    pieces: list[tuple[str, float]],
-    word_col: str = "word",
-    max_piece_len: int = UNIGRAM_MAX_PIECE_LEN,
-) -> DataFrame:
-    """(word, toks): Viterbi segmentation for a table of DISTINCT words —
-    the vocabulary-shaped Arrow half of the join-based apply (the
-    bpe_word_token_counts discipline: the piece table rides the closure,
-    Python never touches the corpus). The segmenter is the ONE
-    :func:`_make_viterbi` closure — cloudpickle ships it by value, so
-    there is no inlined twin to drift (code-review r10)."""
-    vit = _make_viterbi(dict(pieces), max_piece_len)
-
-    def tok(batches):
-        import pandas as _pd
-
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {"word": pdf["word"], "toks": pdf["word"].map(vit)}
-            )
-
-    return words_df.select(F.col(word_col).alias("word")).mapInPandas(
-        tok, "word string, toks array<string>"
-    )
-
-
-def doc_unigram_token_counts(
-    docs: DataFrame,
-    pieces: list[tuple[str, float]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_vocab: bool = True,
-) -> DataFrame:
-    """(doc_id, n_words, n_tokens, fertility) — the unigram twin of
-    operators.bpe.doc_bpe_token_counts_joined, same output contract and
-    the same 100 TB plan: one word explode, one broadcast join against
-    the Arrow-tokenized DISTINCT-word table (projected down to
-    (word, n_tok) ints before the join), one doc-keyed aggregation."""
-    from .text import tokens_expr
-
-    docs2 = docs.filter(F.col(text_col).isNotNull()).filter(
-        F.size(tokens_expr(F.col(text_col))) > 0
-    )
-    words = docs2.select(
-        F.col(id_col), F.explode(tokens_expr(F.col(text_col))).alias("word")
-    )
-    wtok = unigram_word_tokens(words.select("word").distinct(), pieces).select(
-        "word", F.size("toks").alias("n_tok")
-    )
-    if broadcast_vocab:
-        wtok = F.broadcast(wtok)
-    return (
-        words.join(wtok, "word")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_words"),
-            F.sum("n_tok").cast("long").alias("n_tokens"),
-        )
-        .withColumn(
-            "fertility", F.col("n_tokens").cast("double") / F.col("n_words")
-        )
-    )

@@ -30,12 +30,14 @@ novel characters do.
 
 Scale shape (100 TB): identical to the BPE/unigram discipline — training
 runs on the bounded word-frequency table (<= vocab_cap rows, one
-TakeOrderedAndProject collect); apply is the distinct-words + Arrow +
-join-back plan (one word explode, one broadcast join of (word, n_tok)
-ints, one doc-keyed aggregation); Python only ever touches the
-vocabulary-sized distinct-word table, never the corpus. Greedy matching
-is O(|word| * max_piece_len) per DISTINCT word — corpus-size-independent
-per-word cost, vocabulary lookups O(1) via the closure's set.
+TakeOrderedAndProject collect); apply is the shared distinct-word path of
+operators.text (``doc_token_counts`` / ``word_tokens``) with
+:func:`_make_wordpiece` as the segmenter (one word explode, one broadcast
+join of (word, n_tok) ints, one doc-keyed aggregation); Python only ever
+touches the vocabulary-sized distinct-word table, never the corpus.
+Greedy matching is O(|word| * max_piece_len) per DISTINCT word —
+corpus-size-independent per-word cost, vocabulary lookups O(1) via the
+closure's set.
 
 The DuckDB oracle replays the greedy matcher step-for-step from the
 persisted vocabulary (plans/dataprep.py WORDPIECE oracles), so every
@@ -43,9 +45,6 @@ segmentation is bit-checked cross-engine, not just the counts' plumbing.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 WORDPIECE_VOCAB_SIZE = 512
 WORDPIECE_MAX_PIECE_LEN = 8  # content chars (excluding the ## prefix)
@@ -57,10 +56,10 @@ def _make_wordpiece(
     max_piece_len: int = WORDPIECE_MAX_PIECE_LEN,
     unk: str = WORDPIECE_UNK,
 ):
-    """THE greedy longest-match-first segmenter, built once per
-    vocabulary (the bpe._make_ranked_word_apply / unigram._make_viterbi
-    factory discipline: one closure cloudpickle ships by value into
-    Arrow batch bodies — no inlined twin to drift)."""
+    """THE greedy longest-match-first segmenter ``word -> list[piece]``,
+    built once per vocabulary (the unigram._make_viterbi factory
+    discipline: one closure cloudpickle ships by value into the shared
+    distinct-word apply's Arrow batch body — no inlined twin to drift)."""
     vset = set(vocab)
 
     def wp(word: str) -> list:
@@ -188,67 +187,3 @@ def train_wordpiece_py(
                 pair_counts[p] = pair_counts.get(p, 0) + f
                 pair_words.setdefault(p, set()).add(wi)
     return sorted(vocab.items())
-
-
-def wordpiece_word_tokens(
-    words_df: DataFrame,
-    vocab: list[tuple[str, int]] | list[str] | set[str],
-    word_col: str = "word",
-    max_piece_len: int = WORDPIECE_MAX_PIECE_LEN,
-) -> DataFrame:
-    """(word, toks): greedy segmentation for a table of DISTINCT words —
-    the vocabulary-shaped Arrow half of the join-based apply (the
-    bpe_word_token_counts discipline: the vocabulary rides the closure,
-    Python never touches the corpus)."""
-    pieces = {p[0] if isinstance(p, tuple) else p for p in vocab}
-    wp = _make_wordpiece(pieces, max_piece_len)
-
-    def tok(batches):
-        import pandas as _pd
-
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {"word": pdf["word"], "toks": pdf["word"].map(wp)}
-            )
-
-    return words_df.select(F.col(word_col).alias("word")).mapInPandas(
-        tok, "word string, toks array<string>"
-    )
-
-
-def doc_wordpiece_token_counts(
-    docs: DataFrame,
-    vocab: list[tuple[str, int]] | list[str] | set[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_vocab: bool = True,
-) -> DataFrame:
-    """(doc_id, n_words, n_tokens, fertility) — the WordPiece twin of
-    doc_unigram_token_counts / doc_bpe_token_counts_joined: same output
-    contract, same 100 TB plan (one word explode, one broadcast join
-    against the Arrow-tokenized DISTINCT-word table projected to
-    (word, n_tok) ints, one doc-keyed aggregation)."""
-    from .text import tokens_expr
-
-    docs2 = docs.filter(F.col(text_col).isNotNull()).filter(
-        F.size(tokens_expr(F.col(text_col))) > 0
-    )
-    words = docs2.select(
-        F.col(id_col), F.explode(tokens_expr(F.col(text_col))).alias("word")
-    )
-    wtok = wordpiece_word_tokens(words.select("word").distinct(), vocab).select(
-        "word", F.size("toks").alias("n_tok")
-    )
-    if broadcast_vocab:
-        wtok = F.broadcast(wtok)
-    return (
-        words.join(wtok, "word")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_words"),
-            F.sum("n_tok").cast("long").alias("n_tokens"),
-        )
-        .withColumn(
-            "fertility", F.col("n_tokens").cast("double") / F.col("n_words")
-        )
-    )

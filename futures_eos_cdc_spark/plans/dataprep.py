@@ -31,7 +31,13 @@ from ..operators.similarity import (
     brute_force_topk,
     embedding_near_dup,
 )
-from ..operators.text import ngrams_expr, with_text_stats
+from ..operators.text import (
+    doc_token_counts,
+    ngrams_expr,
+    tokens_expr,
+    with_text_stats,
+    word_tokens,
+)
 
 # ---------------------------------------------------------------------------
 # Exact dedup: keep-first per content hash
@@ -752,7 +758,6 @@ def q_benchmark_contamination(spark: SparkSession, sf_dir: str, _t) -> DataFrame
     filtered to actual collisions (≪ corpus size). Gram explosion is
     partition-local; nothing quadratic anywhere.
     """
-    from ..operators.text import tokens_expr
 
     docs = spread(_t(spark, sf_dir, "documents")).select(
         "doc_id", tokens_expr(F.col("text")).alias("t")
@@ -1170,7 +1175,6 @@ def q_corpus_token_stats(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     break replayability.
     """
     docs = spread(_t(spark, sf_dir, "documents"))
-    from ..operators.text import tokens_expr
 
     toks = docs.select("doc_id", F.explode(tokens_expr(F.col("text"))).alias("tok"))
     vocab = toks.groupBy("tok").agg(F.count_distinct("doc_id").alias("df"))
@@ -1340,7 +1344,6 @@ def q_decontaminate(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     semi-join to find contaminated doc ids, then a broadcast ANTI join back
     to the doc table (the contaminated set ≪ corpus). No corpus-sized
     shuffle anywhere."""
-    from ..operators.text import tokens_expr
 
     docs = spread(_t(spark, sf_dir, "documents"))
     toks = docs.select(
@@ -1440,7 +1443,6 @@ def _bigrams_frame(
     factored by code-review r12 so the size>=2 guard protecting Spark's
     descending sequence() and the struct field names cannot fork).
     ``keep_cols`` ride both frames (doc-constant columns, e.g. lang)."""
-    from ..operators.text import tokens_expr
 
     keep = list(keep_cols)
     toks = docs.select("doc_id", *keep, tokens_expr(F.col("text")).alias("t"))
@@ -1830,8 +1832,6 @@ def _bm25_scores(
         qterms = qt.select("term").distinct()
         df_ = model["df_all"].join(F.broadcast(qterms), "term", "left_semi")
     else:
-        from ..operators.text import tokens_expr
-
         toks = docs.select("doc_id", tokens_expr(F.col("text")).alias("t"))
         lens = toks.select("doc_id", F.size("t").cast("long").alias("len_d"))
         ex = toks.select("doc_id", F.explode("t").alias("term"))
@@ -1914,8 +1914,6 @@ def _retrieval_core(
         ),
         dict,
     )
-
-    from ..operators.text import tokens_expr
 
     if "bm25" not in core:
         docs = spread(_t(spark, sf_dir, "documents"))
@@ -2030,7 +2028,6 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     score so cross-engine ULP noise in ln() cannot flip the order; ties
     break on the term itself."""
     from ..operators.dedup import input_bytes_at_most
-    from ..operators.text import tokens_expr
 
     docs = spread(_t(spark, sf_dir, "documents"))
     ex = docs.select("doc_id", F.explode(tokens_expr(F.col("text"))).alias("term"))
@@ -4165,9 +4162,9 @@ from ..operators.bpe import (  # noqa: E402
     BPE_MIN_PAIR_FREQ,
     BPE_N_MERGES,
     BPE_VOCAB_CAP,
+    _clean_words,
+    bpe_segmenter,
     doc_bpe_token_counts,
-    doc_bpe_token_counts_bytes,
-    doc_bpe_token_counts_joined,
     train_bpe,
     train_bpe_bytes,
     train_bpe_py_fast,
@@ -4393,14 +4390,14 @@ def q_bpe_token_counts_bytes(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
 
     Spark shape: training is the same bounded word-freq collect (the
     byte mapping runs driver-side on the capped vocabulary); apply is
-    the join-based production shape — the Arrow kernel byte-maps each
+    the shared distinct-word path — the segmenter byte-maps each
     DISTINCT word and runs the pinned ranked/str apply, the corpus side
     stays byte-free (one explode + broadcast join + doc agg). The oracle
     replays the ENTIRE pipeline — bijection (_BYTE_MAP_SQL), 40-step
     training unroll, replace-chain apply — in SQL."""
     docs = spread(_t(spark, sf_dir, "documents"))
     merges = train_bpe_bytes(docs)
-    return doc_bpe_token_counts_bytes(docs, merges)
+    return doc_token_counts(docs, bpe_segmenter(merges, byte_level=True))
 
 
 def q_bpe_subword_vocab(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
@@ -4410,7 +4407,7 @@ def q_bpe_subword_vocab(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     or OOV/fertility audit reads. Scale: one corpus word-freq aggregation,
     then the replace-chain apply over DISTINCT words only
     (vocabulary-shaped) and one token-keyed aggregation."""
-    from ..operators.bpe import _clean_words, bpe_tokens_expr
+    from ..operators.bpe import bpe_tokens_expr
 
     docs = spread(_t(spark, sf_dir, "documents"))
     merges = train_bpe(docs)
@@ -4562,9 +4559,10 @@ def q_bpe_token_counts_v1k(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     (n_merges={n} — r8 VERDICT next #1): the replace-chain projection
     tops out at a few hundred nested JVM replaces (plan/codegen limits),
     so this query uses the join-based apply — tokenize DISTINCT words in
-    Arrow batches (operators/bpe.py:bpe_word_token_counts, the
-    pytest-pinned twin of apply_bpe_py), join counts back on word, one
-    doc-keyed aggregation. Corpus-side cost is n_merges-INDEPENDENT.
+    Arrow batches (operators/text.py:doc_token_counts driven by
+    operators/bpe.py:bpe_segmenter, a pytest-pinned twin of
+    apply_bpe_py), join counts back on word, one doc-keyed aggregation.
+    Corpus-side cost is n_merges-INDEPENDENT.
 
     HONEST fixture ceiling: the driver corpus has a ~31-word vocabulary,
     so training exhausts every adjacent pair well before the {n}-merge
@@ -4586,7 +4584,7 @@ def q_bpe_token_counts_v1k(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     training too, so THAT comparison is symmetric the other way.)
     """
     docs, merges = _persisted_model(spark, sf_dir, _t, "v1k")
-    return doc_bpe_token_counts_joined(docs, merges)
+    return doc_token_counts(docs, bpe_segmenter(merges), words=_clean_words)
 
 
 q_bpe_token_counts_v1k.__doc__ = q_bpe_token_counts_v1k.__doc__.format(
@@ -4632,7 +4630,9 @@ def q_bpe_token_blocks_v1k(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     observation asks for. Oracle replays apply from the persisted merge
     table (recursive CTE) and the prefix sum over (lang, doc_id)."""
     docs, merges = _persisted_model(spark, sf_dir, _t, "v1k")
-    counts = doc_bpe_token_counts_joined(docs, merges, keep_cols=("lang",))
+    counts = doc_token_counts(
+        docs, bpe_segmenter(merges), words=_clean_words, keep_cols=("lang",)
+    )
     return _pack_token_blocks(counts)
 
 
@@ -4662,20 +4662,36 @@ def q_bpe_subword_vocab_v1k(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     """The subword vocabulary the PRODUCTION-cap tokenizer induces on the
     corpus (per-token corpus occurrence mass + distinct-word spread —
     the OOV/fertility audit at the {n}-merge cap). Token lists come from
-    the Arrow join apply's sibling (operators/bpe.py:bpe_word_tokens —
-    vocabulary-shaped Python, corpus touched only by the word-freq
-    aggregation); the oracle replays apply from the persisted merge
-    table and unnests the same symbol strings."""
-    from ..operators.bpe import _clean_words, bpe_word_tokens
-
+    the shared subword-vocabulary builder (_subword_vocab — vocabulary-
+    shaped Python, corpus touched only by the word-freq aggregation);
+    the oracle replays apply from the persisted merge table and unnests
+    the same symbol strings."""
     docs, merges = _persisted_model(spark, sf_dir, _t, "v1k")
-    words = docs.filter(F.col("text").isNotNull()).select(
-        F.explode(_clean_words(F.col("text"))).alias("word")
+    return _subword_vocab(docs, bpe_segmenter(merges), words=_clean_words)
+
+
+q_bpe_subword_vocab_v1k.__doc__ = q_bpe_subword_vocab_v1k.__doc__.format(
+    n=BPE_N_MERGES_LARGE
+)
+
+
+def _subword_vocab(docs: DataFrame, segment, words=tokens_expr) -> DataFrame:
+    """(token, n_occurrences, n_words): the subword vocabulary a
+    tokenizer (per-word ``segment``, over the ``words`` array of each
+    text) induces on the corpus — per token, its word-frequency-weighted
+    corpus occurrences and the number of distinct words it appears in.
+    Word frequencies aggregate FIRST, so the tokenizer runs once per
+    distinct word, and the (word, toks) table broadcast-joins back onto
+    the (word, wfreq) table before one explode and one token-keyed
+    aggregation."""
+    wstats = (
+        docs.filter(F.col("text").isNotNull())
+        .select(F.explode(words(F.col("text"))).alias("word"))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("wfreq"))
     )
-    wstats = words.groupBy("word").agg(F.count(F.lit(1)).alias("wfreq"))
-    wtoks = bpe_word_tokens(wstats.select("word"), merges)
     return (
-        wstats.join(F.broadcast(wtoks), "word")
+        wstats.join(F.broadcast(word_tokens(wstats, segment)), "word")
         .select("word", "wfreq", F.explode("toks").alias("token"))
         .groupBy("token")
         .agg(
@@ -4683,11 +4699,6 @@ def q_bpe_subword_vocab_v1k(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
             F.count_distinct("word").alias("n_words"),
         )
     )
-
-
-q_bpe_subword_vocab_v1k.__doc__ = q_bpe_subword_vocab_v1k.__doc__.format(
-    n=BPE_N_MERGES_LARGE
-)
 
 
 def q_bpe_token_blocks(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
@@ -5326,6 +5337,7 @@ from ..operators.unigram import (  # noqa: E402
     UNIGRAM_MAX_PIECE_LEN,
     UNIGRAM_UNK_LOGP,
     UNIGRAM_VOCAB_SIZE,
+    _make_viterbi,
     train_unigram_py,
 )
 
@@ -5443,38 +5455,20 @@ def q_unigram_token_counts(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     the identical ascending-length strict-improvement tie rule, so every
     segmentation is bit-checked, not just the counts' plumbing."""
     docs, pieces = _persisted_model(spark, sf_dir, _t, "unigram")
-    from ..operators.unigram import doc_unigram_token_counts
-
-    return doc_unigram_token_counts(docs, pieces)
+    return doc_token_counts(docs, _make_viterbi(dict(pieces)))
 
 
 def q_unigram_subword_vocab(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     """Per-piece corpus audit for the unigram tokenizer (the
     bpe_subword_vocab twin): total corpus occurrences + distinct words
     using each piece — the OOV/fertility table a tokenizer rollout
-    reviews. Same plan as the counts query with the (word, toks) table
-    exploded once; the oracle replays the full Viterbi segmentation."""
+    reviews. The shared _subword_vocab plan; the oracle replays the full
+    Viterbi segmentation."""
     docs, pieces = _persisted_model(spark, sf_dir, _t, "unigram")
-    from ..operators.text import tokens_expr
-    from ..operators.unigram import unigram_word_tokens
-
-    docs2 = docs.filter(F.col("text").isNotNull()).filter(
-        F.size(tokens_expr(F.col("text"))) > 0
-    )
-    words = docs2.select(
-        "doc_id", F.explode(tokens_expr(F.col("text"))).alias("word")
-    )
-    wtok = F.broadcast(
-        unigram_word_tokens(words.select("word").distinct(), pieces)
-    )
-    return (
-        words.join(wtok, "word")
-        .select("word", F.explode("toks").alias("piece"))
-        .groupBy("piece")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("occurrences"),
-            F.count_distinct("word").cast("long").alias("n_words"),
-        )
+    return _subword_vocab(docs, _make_viterbi(dict(pieces))).select(
+        F.col("token").alias("piece"),
+        F.col("n_occurrences").alias("occurrences"),
+        "n_words",
     )
 
 
@@ -5500,6 +5494,7 @@ q_unigram_token_counts.__doc__ = q_unigram_token_counts.__doc__.format(
 from ..operators.wordpiece import (  # noqa: E402
     WORDPIECE_MAX_PIECE_LEN,
     WORDPIECE_VOCAB_SIZE,
+    _make_wordpiece,
     train_wordpiece_py,
 )
 
@@ -5533,7 +5528,6 @@ def _spark_word_freqs(docs: DataFrame) -> list[tuple[str, int]]:
     """(word, freq) of the corpus's top BPE_VOCAB_CAP words, most frequent
     first — the training input of the unigram and WordPiece trainers (no
     symbol-marker encoding, so no BPE word filter)."""
-    from ..operators.text import tokens_expr
 
     wf_df = (
         docs.filter(F.col("text").isNotNull())
@@ -5790,10 +5784,8 @@ def q_wordpiece_token_counts(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     longest-match-first from it as a recursive CTE, so every
     segmentation is bit-checked cross-engine, not just the counts'
     plumbing."""
-    from ..operators.wordpiece import doc_wordpiece_token_counts
-
     docs, vocab = _persisted_model(spark, sf_dir, _t, "wordpiece")
-    return doc_wordpiece_token_counts(docs, vocab).select(
+    return doc_token_counts(docs, _make_wordpiece({p for p, _ in vocab})).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "n_words",
         "n_tokens",
@@ -5807,30 +5799,13 @@ def q_wordpiece_subword_vocab(
     """Per-piece corpus audit for the WordPiece tokenizer (the
     bpe/unigram_subword_vocab triplet-completer): total corpus
     occurrences + distinct words using each piece — the OOV/fertility
-    table a tokenizer rollout reviews. Same plan as the counts query
-    with the (word, toks) table exploded once; the oracle replays the
-    full greedy segmentation."""
-    from ..operators.text import tokens_expr
-    from ..operators.wordpiece import wordpiece_word_tokens
-
+    table a tokenizer rollout reviews. The shared _subword_vocab plan;
+    the oracle replays the full greedy segmentation."""
     docs, vocab = _persisted_model(spark, sf_dir, _t, "wordpiece")
-    docs2 = docs.filter(F.col("text").isNotNull()).filter(
-        F.size(tokens_expr(F.col("text"))) > 0
-    )
-    words = docs2.select(
-        "doc_id", F.explode(tokens_expr(F.col("text"))).alias("word")
-    )
-    wtok = F.broadcast(
-        wordpiece_word_tokens(words.select("word").distinct(), vocab)
-    )
-    return (
-        words.join(wtok, "word")
-        .select("word", F.explode("toks").alias("piece"))
-        .groupBy("piece")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("occurrences"),
-            F.count_distinct("word").cast("long").alias("n_words"),
-        )
+    return _subword_vocab(docs, _make_wordpiece({p for p, _ in vocab})).select(
+        F.col("token").alias("piece"),
+        F.col("n_occurrences").alias("occurrences"),
+        "n_words",
     )
 
 

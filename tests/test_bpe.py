@@ -235,9 +235,7 @@ def test_apply_str_matches_apply_py():
     import random
 
     from futures_eos_cdc_spark.operators.bpe import (
-        SEP,
-        _merge_pats,
-        apply_bpe_str,
+        _make_str_word_apply,
         train_bpe_py_fast,
     )
 
@@ -250,9 +248,9 @@ def test_apply_str_matches_apply_py():
     )
     wf = [(w, rng.randint(1, 9)) for w in vocab]
     merges = train_bpe_py_fast(wf, n_merges=300)
-    pats = _merge_pats(merges)
+    apply_str = _make_str_word_apply(merges)
     for w in vocab:
-        toks = [t for t in apply_bpe_str(w, pats).split(SEP) if t]
+        toks = apply_str(w)
         assert toks == apply_bpe_py(w, merges), w
 
 
@@ -260,7 +258,8 @@ def test_join_apply_matches_replace_chain_on_fixture(spark, sf_dir):
     """The distinct-words + Arrow join-back apply produces the SAME
     doc-level counts as the JVM replace-chain projection (same merges,
     same corpus) — two plans, one answer."""
-    from futures_eos_cdc_spark.operators.bpe import doc_bpe_token_counts_joined
+    from futures_eos_cdc_spark.operators.bpe import _clean_words, bpe_segmenter
+    from futures_eos_cdc_spark.operators.text import doc_token_counts
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     merges = train_bpe(docs)
@@ -270,7 +269,9 @@ def test_join_apply_matches_replace_chain_on_fixture(spark, sf_dir):
     }
     joined = {
         r["doc_id"]: (r["n_words"], r["n_tokens"], r["fertility"])
-        for r in doc_bpe_token_counts_joined(docs, merges).collect()
+        for r in doc_token_counts(
+            docs, bpe_segmenter(merges), words=_clean_words
+        ).collect()
     }
     assert chain == joined
 
@@ -287,9 +288,11 @@ def test_join_apply_at_1000_merges(spark):
     import random
 
     from futures_eos_cdc_spark.operators.bpe import (
-        doc_bpe_token_counts_joined,
+        _clean_words,
+        bpe_segmenter,
         train_bpe_py_fast,
     )
+    from futures_eos_cdc_spark.operators.text import doc_token_counts
 
     rng = random.Random(20260815)
     vocab = sorted(
@@ -308,7 +311,9 @@ def test_join_apply_at_1000_merges(spark):
     )
     got = {
         r["doc_id"]: (r["n_words"], r["n_tokens"])
-        for r in doc_bpe_token_counts_joined(docs, merges).collect()
+        for r in doc_token_counts(
+            docs, bpe_segmenter(merges), words=_clean_words
+        ).collect()
     }
     for row in docs.collect():
         ws = row["text"].strip().lower().split()
@@ -325,10 +330,11 @@ def test_non_bmp_boundary(spark):
     apply, and DuckDB's RE2 all agree on astral words: one symbol per
     emoji. All three engine paths verified equal here, tokens included."""
     from futures_eos_cdc_spark.operators.bpe import (
+        bpe_segmenter,
         bpe_token_count_expr,
         bpe_tokens_expr,
-        bpe_word_token_counts,
     )
+    from futures_eos_cdc_spark.operators.text import word_tokens
 
     word = "ab\U0001F600"  # 3 codepoints, 4 UTF-16 units
     merges: list[tuple[str, str, int]] = []  # no merges: counts = symbols
@@ -344,9 +350,11 @@ def test_non_bmp_boundary(spark):
     assert len(want) == 4
     assert row["n"] == 4 and list(row["toks"]) == want
 
-    arrow = bpe_word_token_counts(
-        spark.createDataFrame([(word,)], "word string"), merges
-    ).collect()[0]["n_tok"]
+    arrow = len(
+        word_tokens(
+            spark.createDataFrame([(word,)], "word string"), bpe_segmenter(merges)
+        ).collect()[0]["toks"]
+    )
     assert arrow == 4
 
 
@@ -385,15 +393,22 @@ def test_stream_v1k_meter_matches_batch(spark, sf_dir, tmp_path):
     produces exactly the batch operator's counts over a file-source
     stream — the at-depth twin of test_stream_bpe_token_counts."""
     from futures_eos_cdc_spark.operators.bpe import (
-        doc_bpe_token_counts_joined,
+        _clean_words,
+        bpe_segmenter,
         train_bpe,
     )
+    from futures_eos_cdc_spark.operators.text import doc_token_counts
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     merges = train_bpe(docs, n_merges=1000)
+    segment = bpe_segmenter(merges)
+
+    def doc_bpe_counts(df):
+        return doc_token_counts(df, segment, words=_clean_words)
+
     want = {
         (r.doc_id, r.n_words, r.n_tokens)
-        for r in doc_bpe_token_counts_joined(docs, merges).collect()
+        for r in doc_bpe_counts(docs).collect()
     }
 
     src = str(tmp_path / "src")
@@ -407,7 +422,7 @@ def test_stream_v1k_meter_matches_batch(spark, sf_dir, tmp_path):
         spark.readStream.schema("doc_id long, text string")
         .parquet(src)
         .writeStream.foreachBatch(
-            lambda df, e: sink(doc_bpe_token_counts_joined(df, merges), e)
+            lambda df, e: sink(doc_bpe_counts(df), e)
         )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
@@ -527,12 +542,10 @@ def test_ranked_apply_at_16k_ranks_parity_and_flat_cost():
     import time
 
     from futures_eos_cdc_spark.operators.bpe import (
-        SEP,
         _make_ranked_word_apply,
-        _merge_pats,
+        _make_str_word_apply,
         apply_bpe_py,
         apply_bpe_ranked,
-        apply_bpe_str,
     )
 
     merges16k, words = _synthetic_merge_table(16384)
@@ -541,10 +554,10 @@ def test_ranked_apply_at_16k_ranks_parity_and_flat_cost():
 
     sample = words[:: max(1, len(words) // 300)][:300]
     # (a) parity at full depth: ranked == str on every sampled word...
-    pats = _merge_pats(merges16k)
+    str16k = _make_str_word_apply(merges16k)
     ap16k = _make_ranked_word_apply(merges16k)
     for w in sample:
-        toks = [t for t in apply_bpe_str(w, pats).split(SEP) if t]
+        toks = str16k(w)
         assert apply_bpe_ranked(w, merges16k, ap16k) == toks, w
     # ...with the list-level reference spot-checked directly (it walks
     # all 16k ranks per word, so keep the direct check small)
@@ -571,41 +584,42 @@ def test_ranked_apply_at_16k_ranks_parity_and_flat_cost():
 
 
 def test_join_apply_ranked_shape_matches_str_on_spark(spark):
-    """Both Arrow closures (str / ranked) produce identical word token
-    counts through Spark on a synthetic table deep enough to cross the
-    auto threshold — and 'auto' picks the ranked rung there."""
+    """Both per-word closures (str / ranked) produce identical token lists
+    and counts on a synthetic table deep enough to cross the auto
+    threshold, bpe_segmenter picks the ranked rung there (and str at the
+    threshold), and one Spark word_tokens run equals both closures."""
     from futures_eos_cdc_spark.operators.bpe import (
         BPE_APPLY_AUTO_THRESHOLD,
-        _resolve_apply_shape,
-        bpe_word_token_counts,
-        bpe_word_tokens,
+        _make_ranked_word_apply,
+        _make_str_word_apply,
+        bpe_segmenter,
     )
+    from futures_eos_cdc_spark.operators.text import word_tokens
 
     merges, words = _synthetic_merge_table(2048)
-    assert _resolve_apply_shape("auto", len(merges)) == "ranked"
-    assert _resolve_apply_shape("auto", BPE_APPLY_AUTO_THRESHOLD) == "str"
+    words = words[:400]
+    str_apply = _make_str_word_apply(merges)
+    ranked_apply = _make_ranked_word_apply(merges)
+    # the rung is the factory that built the closure
+    assert bpe_segmenter(merges).__code__ is ranked_apply.__code__
+    at_threshold = merges[:BPE_APPLY_AUTO_THRESHOLD]
+    assert bpe_segmenter(at_threshold).__code__ is str_apply.__code__
 
-    wdf = spark.createDataFrame([(w,) for w in words[:400]], "word string")
-    a = {
-        r["word"]: r["n_tok"]
-        for r in bpe_word_token_counts(wdf, merges, apply_shape="str").collect()
-    }
-    b = {
-        r["word"]: r["n_tok"]
-        for r in bpe_word_token_counts(wdf, merges, apply_shape="ranked").collect()
-    }
+    a = {w: len(str_apply(w)) for w in words}
+    b = {w: len(ranked_apply(w)) for w in words}
     assert a == b and len(a) == 400
 
-    ta = {
-        r["word"]: list(r["toks"])
-        for r in bpe_word_tokens(wdf, merges, apply_shape="str").collect()
-    }
-    tb = {
-        r["word"]: list(r["toks"])
-        for r in bpe_word_tokens(wdf, merges, apply_shape="ranked").collect()
-    }
+    ta = {w: str_apply(w) for w in words}
+    tb = {w: ranked_apply(w) for w in words}
     assert ta == tb
     assert all(len(ta[w]) == a[w] for w in ta)
+
+    wdf = spark.createDataFrame([(w,) for w in words], "word string")
+    spark_toks = {
+        r["word"]: list(r["toks"])
+        for r in word_tokens(wdf, bpe_segmenter(merges)).collect()
+    }
+    assert spark_toks == ta == tb
 
 
 def test_v1k_poisoned_dir_fails_readably_at_construction(spark, sf_dir, monkeypatch):
@@ -664,10 +678,8 @@ def test_byte_bpe_ascii_parity_with_char_path(spark):
     """On printable-ASCII text the byte mapping is the identity, so the
     byte-level trainer must learn the SAME merge table as the char-level
     trainer and the counts queries must agree row-for-row."""
-    from futures_eos_cdc_spark.operators.bpe import (
-        doc_bpe_token_counts_bytes,
-        train_bpe_bytes,
-    )
+    from futures_eos_cdc_spark.operators.bpe import bpe_segmenter, train_bpe_bytes
+    from futures_eos_cdc_spark.operators.text import doc_token_counts
 
     rows = [
         (i, "the cat sat on the mat " * (i % 3 + 1) + "catnap mats")
@@ -683,7 +695,9 @@ def test_byte_bpe_ascii_parity_with_char_path(spark):
     }
     b = {
         r.doc_id: (r.n_words, r.n_tokens)
-        for r in doc_bpe_token_counts_bytes(docs, m_byte).collect()
+        for r in doc_token_counts(
+            docs, bpe_segmenter(m_byte, byte_level=True)
+        ).collect()
     }
     assert a == b
 
@@ -696,9 +710,10 @@ def test_byte_bpe_never_drops_a_word(spark):
     from futures_eos_cdc_spark.operators.bpe import (
         SEP,
         EOW as _EOW,
-        doc_bpe_token_counts_bytes,
+        bpe_segmenter,
         train_bpe_bytes,
     )
+    from futures_eos_cdc_spark.operators.text import doc_token_counts
 
     rows = [
         (1, f"ok {SEP}weird{_EOW} word"),
@@ -707,7 +722,12 @@ def test_byte_bpe_never_drops_a_word(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     merges = train_bpe_bytes(docs, min_pair_freq=1)
-    got = {r.doc_id: r for r in doc_bpe_token_counts_bytes(docs, merges).collect()}
+    got = {
+        r.doc_id: r
+        for r in doc_token_counts(
+            docs, bpe_segmenter(merges, byte_level=True)
+        ).collect()
+    }
     want_words = {1: 3, 2: 3, 3: 2}
     for d, n in want_words.items():
         assert got[d].n_words == n, (d, got[d])
@@ -723,10 +743,11 @@ def test_byte_kernel_matches_python_reference(spark):
     1/2/3/4-byte codepoints and the empty word."""
     from futures_eos_cdc_spark.operators.bpe import (
         apply_bpe_ranked,
-        bpe_word_token_counts_bytes,
+        bpe_segmenter,
         byte_encode_py,
         train_bpe_py_fast,
     )
+    from futures_eos_cdc_spark.operators.text import word_tokens
 
     words = ["hello", "héllo", "日本", "𝄞𝄞x", "", "a"]
     merges = train_bpe_py_fast(
@@ -734,8 +755,70 @@ def test_byte_kernel_matches_python_reference(spark):
     )
     wdf = spark.createDataFrame([(w,) for w in words], "word string")
     got = {
-        r.word: r.n_tok
-        for r in bpe_word_token_counts_bytes(wdf, merges).collect()
+        r.word: len(r.toks)
+        for r in word_tokens(wdf, bpe_segmenter(merges, byte_level=True)).collect()
     }
     for w in words:
         assert got[w] == len(apply_bpe_ranked(byte_encode_py(w), merges)), w
+
+
+def test_word_tokens_kernel_pickles_self_contained_for_every_segmenter():
+    """The one distinct-word Arrow kernel must serialize BY VALUE with
+    each family's segmenter inside: Python workers share the Spark
+    application's cwd but NOT its sys.path, so a by-reference pickle
+    (qualified module name) would die with ModuleNotFoundError when a
+    query runs from outside the repo. Each kernel runs in a fresh
+    interpreter with cwd=/ and no repo on sys.path, and must reproduce
+    the tokens the segmenter gives in this process."""
+    import subprocess
+    import sys
+    import tempfile
+
+    import cloudpickle
+
+    from futures_eos_cdc_spark.operators.bpe import (
+        BPE_APPLY_AUTO_THRESHOLD,
+        bpe_segmenter,
+        byte_encode_py,
+        train_bpe_py_fast,
+    )
+    from futures_eos_cdc_spark.operators.text import _make_word_tokens_fn
+    from futures_eos_cdc_spark.operators.unigram import _make_viterbi, train_unigram_py
+    from futures_eos_cdc_spark.operators.wordpiece import (
+        _make_wordpiece,
+        train_wordpiece_py,
+    )
+
+    big, synthetic = _synthetic_merge_table(256)
+    words = ["hello", "held", "world", "word", "lowword", "héllo", "日本", ""]
+    words += synthetic[:4]
+    wf = [(w, 3 + i) for i, w in enumerate(words) if w]
+    small = train_bpe_py_fast(wf, n_merges=BPE_APPLY_AUTO_THRESHOLD, min_pair_freq=1)
+    byte_merges = train_bpe_py_fast(
+        [(byte_encode_py(w), f) for w, f in wf], n_merges=30, min_pair_freq=1
+    )
+    segmenters = {
+        "bpe_str": bpe_segmenter(small),
+        "bpe_ranked": bpe_segmenter(big),
+        "bpe_bytes": bpe_segmenter(byte_merges, byte_level=True),
+        "unigram": _make_viterbi(dict(train_unigram_py(wf, vocab_size=40))),
+        "wordpiece": _make_wordpiece(
+            {p for p, _ in train_wordpiece_py(wf, vocab_size=40)}
+        ),
+    }
+    for name, segment in segmenters.items():
+        want = [segment(w) for w in words]
+        with tempfile.NamedTemporaryFile(suffix=".bin") as f:
+            f.write(cloudpickle.dumps(_make_word_tokens_fn(segment)))
+            f.flush()
+            code = (
+                "import pickle, pandas as pd;"
+                f"fn = pickle.load(open({f.name!r}, 'rb'));"
+                f"out = list(fn(iter([pd.DataFrame({{'word': {words!r}}})])))[0];"
+                f"assert list(out['word']) == {words!r}, out;"
+                f"assert [list(t) for t in out['toks']] == {want!r}, out"
+            )
+            proc = subprocess.run(
+                [sys.executable, "-c", code], cwd="/", capture_output=True, timeout=120
+            )
+            assert proc.returncode == 0, (name, proc.stderr.decode()[-2000:])

@@ -1,6 +1,6 @@
 """tools/dead_defs.py over the package source (parsed, never imported; no
-Spark session): no top-level def is reached by nothing, and the defs only
-tests reach are exactly the allowlisted ones."""
+Spark session): no top-level def is reached by nothing, the defs only
+tests reach are exactly the allowlisted ones, and no import goes unused."""
 
 from __future__ import annotations
 
@@ -24,3 +24,7 @@ def test_no_def_is_reached_by_nothing_and_test_only_defs_are_allowlisted():
     dead, test_only = tool.scan()
     assert dead == []
     assert test_only == sorted(tool.TEST_ONLY_ALLOWED)
+
+
+def test_no_package_import_is_unused():
+    assert _tool().unused_imports() == []

@@ -279,3 +279,60 @@ def test_bloom_gate_query_builds_reference_artifacts_once(spark, sf_dir):
         QUERIES["bloom_dedup_gate"](spark, sf_dir).count()
         assert bb.call_count == 1, "bitmap must build once per session"
         assert sum(k[0] == "bloom_prepared" for _app, k in memo._ENTRIES) == 1
+
+
+def test_bloom_probe_expr_builds_in_few_py4j_round_trips(spark, monkeypatch):
+    """The bitmap rides as ONE parsed literal: building the probe over a
+    4,096-word bitmap costs fewer than 100 py4j round trips more than
+    over a 1-word bitmap, not one or more per word (F.lit(list) made
+    ~16,500 more). The rest of the probe (the k bit-position
+    expressions, ~200 round trips while PySpark's DataFrame debugging
+    wraps every functions call) costs the same for both."""
+    from py4j.clientserver import ClientServerConnection
+
+    from futures_eos_cdc_spark.operators.bloom import bloom_probe_expr
+
+    bitmap = [(i * 0x9E3779B97F4A7C15) % (1 << 64) - (1 << 63) for i in range(4096)]
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counting_send(self, command, *args, **kwargs):
+        calls.append(1)
+        return send(self, command, *args, **kwargs)
+
+    def round_trips(words):
+        del calls[:]
+        bloom_probe_expr(F.col("digest"), words)
+        return len(calls)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting_send)
+    round_trips(bitmap[:1])  # first build pays one-off lookups
+    small, big = round_trips(bitmap[:1]), round_trips(bitmap)
+    monkeypatch.undo()
+    assert small > 0 and big - small < 100, (small, big)
+
+
+def test_const_array_round_trips_each_element_type(spark):
+    """common.const_array renders each element by its Python type and the
+    parsed literal collects back unchanged: BIGINT extremes, doubles that
+    need all 17 digits, and strings holding quotes and backslashes."""
+    import numpy as np
+
+    from futures_eos_cdc_spark.operators.common import const_array
+
+    ints = [-(1 << 63), (1 << 63) - 1, -1, 0, 7]
+    floats = [0.1, -2.5e-300, 1 / 3, float(np.float64(2.0) / 3)]
+    strs = ["it's", "back\\slash", 'dq"', "", "日本"]
+    row = spark.range(1).select(
+        const_array(ints).alias("i"),
+        const_array(floats).alias("f"),
+        const_array(strs).alias("s"),
+        const_array([np.float64(0.25)]).alias("np"),
+    ).collect()[0]
+    assert list(row.i) == ints
+    assert list(row.f) == floats
+    assert list(row.s) == strs
+    assert list(row.np) == [0.25]
+    assert dict(
+        spark.range(1).select(const_array(ints).alias("i")).dtypes
+    )["i"] == "array<bigint>"

@@ -396,15 +396,36 @@ def test_q8_rerank_band_and_queries_broadcast(spark, sf_dir):
 
 
 def test_bpe_v1k_corpus_side_shape(spark, sf_dir):
-    """The production BPE apply keeps Python on the VOCABULARY only: one
-    Arrow stage (the distinct-words tokenizer), the corpus joins the
+    """Every subword apply (BPE, byte BPE, Unigram-LM, WordPiece; counts,
+    blocks and vocabulary queries) keeps Python on the VOCABULARY only:
+    one Arrow stage (the distinct-words tokenizer), the corpus joins the
     tokenized vocab via broadcast (no corpus-side shuffle on word), and
-    the only wide corpus exchange is the doc-keyed aggregation."""
-    plan = _plan(spark, sf_dir, "bpe_token_counts_v1k")
-    assert plan.count("ArrowEvalPython") == 0  # mapInPandas shows as...
-    assert plan.count("MapInPandas") == 1  # ...exactly one vocab stage
-    assert "BroadcastHashJoin" in plan  # wtok joins the corpus broadcast
-    assert "SortMergeJoin" not in plan
+    the only wide corpus exchanges are the doc- or token-keyed
+    aggregations."""
+    for name in (
+        "bpe_token_counts_v1k",
+        "bpe_token_blocks_v1k",
+        "bpe_subword_vocab_v1k",
+        "bpe_token_counts_bytes",
+        "unigram_token_counts",
+        "unigram_subword_vocab",
+        "wordpiece_token_counts",
+        "wordpiece_subword_vocab",
+    ):
+        plan = _plan(spark, sf_dir, name)
+        assert plan.count("ArrowEvalPython") == 0, name  # mapInPandas shows as...
+        if name == "bpe_token_blocks_v1k":
+            # the packing prefix sum reads the counts subplan in two
+            # branches; at run time AQE reuses the one broadcast of the
+            # tokenized vocabulary, so the final plan tokenizes once
+            df = QUERIES[name](spark, sf_dir)
+            df.collect()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            plan = plan.split("== Initial Plan ==")[0]
+            assert "ReusedExchange" in plan, name
+        assert plan.count("MapInPandas") == 1, name  # ...exactly one vocab stage
+        assert "BroadcastHashJoin" in plan, name  # wtok joins the corpus broadcast
+        assert "SortMergeJoin" not in plan, name
 
 
 def test_bpe_v1k_blocks_and_subwords_shapes(spark, sf_dir):

@@ -13,12 +13,12 @@ import math
 
 import pyspark.sql.functions as F
 
+from futures_eos_cdc_spark.operators.text import doc_token_counts, word_tokens
 from futures_eos_cdc_spark.operators.unigram import (
     UNIGRAM_MAX_PIECE_LEN,
     UNIGRAM_UNK_LOGP,
-    doc_unigram_token_counts,
+    _make_viterbi,
     train_unigram_py,
-    unigram_word_tokens,
     viterbi_tokens_py,
 )
 
@@ -115,7 +115,7 @@ def test_arrow_apply_matches_python(spark, sf_dir):
     logp = dict(pieces)
     got = {
         r["word"]: list(r["toks"])
-        for r in unigram_word_tokens(words.select("word"), pieces).collect()
+        for r in word_tokens(words, _make_viterbi(logp)).collect()
     }
     assert len(got) == len(wf)
     for w, _ in wf:
@@ -129,7 +129,7 @@ def test_doc_counts_plan_shape(spark, sf_dir):
     vocabulary via broadcast, no corpus-side sort-merge join."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     pieces = [("a", -1.0), ("b", -2.0)]
-    df = doc_unigram_token_counts(docs, pieces)
+    df = doc_token_counts(docs, _make_viterbi(dict(pieces)))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1
     assert "BroadcastHashJoin" in plan
@@ -152,9 +152,10 @@ def test_stream_unigram_meter_matches_batch(spark, sf_dir, tmp_path):
         .agg(F.count(F.lit(1)).alias("freq"))
     )
     pieces = train_unigram_py([(r["word"], r["freq"]) for r in wf_df.collect()])
+    segment = _make_viterbi(dict(pieces))
     want = {
         (r.doc_id, r.n_words, r.n_tokens)
-        for r in doc_unigram_token_counts(docs, pieces).collect()
+        for r in doc_token_counts(docs, segment).collect()
     }
 
     src = str(tmp_path / "src")
@@ -168,7 +169,7 @@ def test_stream_unigram_meter_matches_batch(spark, sf_dir, tmp_path):
         spark.readStream.schema("doc_id long, text string")
         .parquet(src)
         .writeStream.foreachBatch(
-            lambda df, e: sink(doc_unigram_token_counts(df, pieces), e)
+            lambda df, e: sink(doc_token_counts(df, segment), e)
         )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()

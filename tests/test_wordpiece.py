@@ -9,13 +9,12 @@ from __future__ import annotations
 
 import pytest
 
+from futures_eos_cdc_spark.operators.text import doc_token_counts, word_tokens
 from futures_eos_cdc_spark.operators.wordpiece import (
     WORDPIECE_MAX_PIECE_LEN,
     _make_wordpiece,
-    doc_wordpiece_token_counts,
     train_wordpiece_py,
     wordpiece_tokens_py,
-    wordpiece_word_tokens,
 )
 
 # ---------------------------------------------------------------------------
@@ -118,7 +117,7 @@ def test_spark_apply_matches_python_reference(spark):
     wdf = spark.createDataFrame([(w,) for w in words], "word string")
     got = {
         r["word"]: list(r["toks"])
-        for r in wordpiece_word_tokens(wdf, vocab).collect()
+        for r in word_tokens(wdf, _make_wordpiece({p for p, _ in vocab})).collect()
     }
     wp = _make_wordpiece({p for p, _ in vocab})
     assert got == {w: wp(w) for w in words}
@@ -134,7 +133,10 @@ def test_doc_token_counts_contract(spark):
         [(1, "big dog"), (2, "bigdog bigdog big"), (3, None), (4, "  ")],
         "doc_id long, text string",
     )
-    out = {r.doc_id: r for r in doc_wordpiece_token_counts(docs, vocab).collect()}
+    out = {
+        r.doc_id: r
+        for r in doc_token_counts(docs, _make_wordpiece({p for p, _ in vocab})).collect()
+    }
     # NULL text drops; a whitespace-only doc tokenizes to one empty word
     # with zero pieces (the same contract as the unigram/BPE twins)
     assert set(out) == {1, 2, 4}

@@ -1,4 +1,5 @@
-"""List package top-level defs that nothing outside the tests reaches.
+"""List package top-level defs that nothing outside the tests reaches,
+and package imports that nothing uses.
 
 Usage:
     python tools/dead_defs.py
@@ -10,11 +11,14 @@ anywhere in a package module (outside the def's own body), in ``tools/``,
 ``perfbench/``, ``bench.py`` or ``__spark_entry__.py``. ``q_*`` query
 builders always count as reached: they register by decorator.
 
-Prints two lists and exits 1 when either disagrees with this file:
+Prints three lists and exits 1 when any disagrees with this file:
 
 - defs reached by nothing at all, tests included (must be empty);
 - defs reached only from ``tests/`` (must equal ``TEST_ONLY_ALLOWED``,
-  whose values name the COVERAGE.md row or reference test each one backs).
+  whose values name the COVERAGE.md row or reference test each one backs);
+- imported names (module-level or local, ``__future__`` aside) that their
+  module never mentions, neither as a name nor as a whole string constant
+  such as an ``__all__`` entry (must be empty).
 
 Matching is by name, not by resolved binding, so a def shadowed by a
 same-named def elsewhere can read as reached: the scan under-reports,
@@ -39,10 +43,6 @@ TEST_PATHS = ("tests",)
 TEST_ONLY_ALLOWED = {
     "bpe.apply_bpe_py": "reference implementation: test_spark_apply_matches_python_on_fixture",
     "bpe.apply_bpe_ranked": "COVERAGE pair-indexed BPE apply row",
-    "bpe.apply_bpe_str": "reference implementation: test_apply_str_matches_apply_py",
-    "bpe.bpe_word_token_counts_bytes": (
-        "reference implementation: test_byte_kernel_matches_python_reference"
-    ),
     "bpe.load_bpe_merges": "public API: test_merge_table_save_load_roundtrip",
     "bpe.save_bpe_merges": "public API: test_merge_table_save_load_roundtrip",
     "bpe.train_bpe_py": "reference implementation: test_train_hand_example",
@@ -183,6 +183,31 @@ def scan() -> tuple[list[str], list[str]]:
     return dead, test_only
 
 
+def unused_imports() -> list[str]:
+    """Sorted ``path:line:name`` for every package import whose bound
+    name its module never uses. Per module, not per scope: a local import
+    whose name the module uses elsewhere reads as used."""
+    out = []
+    for path in _py_files(PACKAGE):
+        tree = _parse(path)
+        bound: dict[str, int] = {}
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom) and n.module == "__future__":
+                continue
+            if isinstance(n, (ast.Import, ast.ImportFrom)):
+                for a in n.names:
+                    bound[(a.asname or a.name).split(".")[0]] = n.lineno
+        used = set()
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name):
+                used.add(n.id)
+            elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+                used.add(n.value)
+        rel = os.path.relpath(path, ROOT)
+        out += [f"{rel}:{line}:{name}" for name, line in bound.items() if name not in used]
+    return sorted(out)
+
+
 def main() -> int:
     dead, test_only = scan()
     print(f"reached by nothing ({len(dead)}):")
@@ -194,7 +219,13 @@ def main() -> int:
     stale = sorted(set(TEST_ONLY_ALLOWED) - set(test_only))
     for key in stale:
         print(f"allowlisted but no longer test-only: {key}")
-    return 1 if dead or stale or set(test_only) - set(TEST_ONLY_ALLOWED) else 0
+    unused = unused_imports()
+    print(f"unused imports ({len(unused)}):")
+    for key in unused:
+        print(f"  {key}")
+    return (
+        1 if dead or stale or unused or set(test_only) - set(TEST_ONLY_ALLOWED) else 0
+    )
 
 
 if __name__ == "__main__":
