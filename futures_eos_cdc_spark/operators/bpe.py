@@ -80,9 +80,6 @@ _SENTINEL = "\x02"  # never-matching replace pattern for exhausted ranks
 BPE_N_MERGES = 40
 BPE_MIN_PAIR_FREQ = 2
 BPE_VOCAB_CAP = 65536
-# words containing any marker char cannot round-trip the symbol encoding;
-# they are excluded from BOTH training and counting (and from the oracle)
-_MARKERS = (SEP, EOW, _SENTINEL)
 
 
 # ---------------------------------------------------------------------------

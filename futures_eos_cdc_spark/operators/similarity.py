@@ -244,9 +244,9 @@ def auto_n_cells(
     ceil(n / target_cell), clamped. With the target constant the expected
     within-cell pair scan is O(n * target_cell) total — linear in the
     corpus — instead of O(n^2 / n_cells) with a fixed cell count. The cap
-    bounds the driver-held centroid table (cells x dim doubles) and the
-    per-row assignment expression; past it, raise target_cell instead (the
-    paper's regime: at 100 TB you also shard training by corpus partition).
+    bounds the driver-held centroid table (cells x dim doubles); past it,
+    raise target_cell instead (the paper's regime: at 100 TB you also shard
+    training by corpus partition).
     """
     import math as _math
 
@@ -401,18 +401,195 @@ def _dist2_sql(vec_sql: str, centroid: list[float]) -> str:
     )
 
 
-def _cell_ranking_expr(vec_sql: str, centroids: list[list[float]]) -> Column:
-    """Array of cell ids ordered by ascending distance to the vector,
-    parsed as ONE expression.
+# Nearest-centroid assignment (IVF cell or PQ codeword, Jégou et al. 2011)
+# has two shapes. The literal expression embeds every centroid term in ONE
+# expression — ideal while small (pure JVM, zero Python), but it grows with
+# the model once n_cells is auto-sized: measured on semantic_dedup, 157
+# cells x 64 dims is fine (1.7 s at sf0.1) but 1563 cells x 64 dims = 100k
+# fold terms PER ROW took 32 s at 10x and 15625 cells would not finish —
+# the per-row cost is O(n_cells * dim), i.e. O(n^2) corpus-total under
+# auto-sizing. Past this term budget, assignment runs in a vectorized Arrow
+# kernel (BLAS matmul pre-filter + exact left-fold re-score of the epsilon
+# band), bit-identical to the fold at O(flops) instead of
+# O(interpreted-ops). Threshold: the 16-cell fixture model (16 x 64 = 1024
+# terms) stays on the pure-JVM expression; at sf0.1's 63 cells the kernel
+# runs ann_cosine_ivf in 1.18 s vs 2.52 s for the expression, while at a
+# 4-cell model it is the slower side (BENCH_NOTES.md).
+_ASSIGN_EXPR_MAX_TERMS = 1024
 
-    Ties break on cell id (struct comparison is lexicographic), so the
-    assignment is deterministic.
-    """
+
+def _use_kernel(tables: list[list[list[float]]]) -> bool:
+    """The one routing test between the two assignment shapes: the
+    per-row literal-term count of ``tables`` (one centroid table for IVF,
+    n_cells x dim; m codebooks for PQ, m x ksub x dsub, since every
+    subspace's table takes part in every row) against the term budget.
+    Counted on the ACTUAL tables, never on a ``dim`` parameter that can
+    lag the data's width."""
+    return sum(len(t) * len(t[0]) for t in tables) > _ASSIGN_EXPR_MAX_TERMS
+
+
+def _nearest_sql(vec_sql: str, centroids: list[list[float]], take: int = 1) -> str:
+    """(d, cell) structs of a vector against a literal centroid table as
+    ONE SQL expression, d the squared L2 distance (``_dist2_sql``'s left
+    fold). ``take=1`` gives the nearest struct (``array_min``); ``take=k``
+    an array of the k nearest, ascending (``slice(array_sort(...))``).
+    Ties break on cell id (struct comparison is lexicographic), so both
+    are deterministic."""
     structs = ", ".join(
         f"named_struct('d', {_dist2_sql(vec_sql, c)}, 'cell', {i})"
         for i, c in enumerate(centroids)
     )
-    return F.expr(f"transform(array_sort(array({structs})), s -> s.cell)")
+    if take == 1:
+        return f"array_min(array({structs}))"
+    return f"slice(array_sort(array({structs})), 1, {take})"
+
+
+def _make_nearest_fn(
+    tables, vec_col: str, keep: list[str], out: str, take: int, dist: bool
+):
+    """The mapInPandas batch function of the Arrow assignment kernel,
+    bit-identical to the ``_nearest_sql`` fold.
+
+    ``tables`` are float64 centroid matrices over consecutive slices of
+    the vector: one for IVF, the m codebooks for PQ. Each batch yields
+    the ``keep`` columns as read, then ``codes`` (``out="codes"``: one
+    nearest code per table) or ``cell`` of the single table, repeated
+    once per row for each of its ``take`` nearest cells (the probe's
+    explode), plus ``d`` (``dist``): the exact squared distance to the
+    nearest cell, a per-dim left fold in SQL order.
+
+    - BLAS matmul gives APPROXIMATE squared distances (wrong only in the
+      last ~1e-13 relative ULPs vs the fold's left-to-right order);
+    - every cell within a band of the approx take-th smallest (a >1e6x
+      superset of the possible reorder) is RE-SCORED exactly — a per-dim
+      left fold, the same op order as ``aggregate(zip_with(...))`` — and
+      sorted on (exact d, cell), the struct sort's order.
+
+    Helpers are bound LOCALLY on purpose, so cloudpickle serializes the
+    closure BY VALUE. A module-level reference pickles by qualified name,
+    and executor Python workers only have the driver's cwd — not its
+    sys.path — so the first large-cell query run from outside the repo
+    dies with ModuleNotFoundError (measured from /tmp).
+    """
+    spans, lo = [], 0
+    for C in tables:
+        spans.append((C, lo, lo + C.shape[1]))
+        lo += C.shape[1]
+
+    def ranked(x, C, take):
+        import numpy as _np
+
+        take = min(take, len(C))
+        cells = _np.empty((len(x), take), dtype=_np.int64)
+        c_sq = (C * C).sum(axis=1)
+        # chunk rows so the (rows x n_cells) distance block stays ~32 MB:
+        # measured 10x faster than a 500 MB block (3.35 s -> 0.34 s per 10k
+        # rows at 6250 cells) — the matmul+argmin pass is cache/allocation
+        # bound, and 32 concurrent workers each holding half-GB blocks page
+        chunk = max(1, 4_000_000 // max(1, C.shape[0]))
+        for lo in range(0, len(x), chunk):
+            hi = min(lo + chunk, len(x))
+            d2 = x[lo:hi] @ (-2.0 * C.T) + c_sq[None, :]  # |x|^2 const/row
+            if take == 1:
+                t = d2.min(axis=1)
+            else:
+                t = _np.partition(d2, take - 1, axis=1)[:, take - 1]
+            # band width scales with the distance magnitude: the matmul's
+            # error is RELATIVE (~1e-16 of the magnitude), so an absolute
+            # 1e-6 band under-covers once squared distances exceed ~1e10
+            # (widening only ADDS candidates to the exact re-score)
+            band = d2 <= (t + _np.maximum(1e-6, _np.abs(t) * 1e-9))[:, None]
+            cells[lo:hi, 0] = d2.argmin(axis=1)
+            # rows whose band holds one cell keep the argmin: vectorizing
+            # that fast path matters — a per-row Python loop measured
+            # 29x/decade at the 100x corpus
+            for i in _np.nonzero(band.sum(axis=1) > 1)[0]:
+                cand = _np.nonzero(band[i])[0]
+                acc = _np.zeros(len(cand))
+                for d in range(x.shape[1]):
+                    diff = x[lo + i, d] - C[cand, d]
+                    acc += diff * diff
+                cells[lo + i] = cand[_np.lexsort((cand, acc))[:take]]
+        return cells
+
+    def assign(batches):
+        import numpy as _np
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            x = _np.vstack(pdf[vec_col].to_numpy()).astype(_np.float64)
+            res = pdf[keep].reset_index(drop=True)
+            if out == "codes":
+                codes = [ranked(x[:, a:b], C, 1)[:, 0] for C, a, b in spans]
+                res["codes"] = list(_np.stack(codes, axis=1).astype(_np.int32))
+                yield res
+                continue
+            C = tables[0]
+            cells = ranked(x, C, take)
+            if cells.shape[1] > 1:
+                rows = _np.repeat(_np.arange(len(res)), cells.shape[1])
+                res = res.iloc[rows].reset_index(drop=True)
+            res["cell"] = cells.ravel()
+            if dist:
+                nearest = C[cells[:, 0]]
+                d = _np.zeros(len(x), dtype=_np.float64)
+                for j in range(x.shape[1]):  # left fold over dims, SQL order
+                    diff = x[:, j] - nearest[:, j]
+                    d = d + diff * diff
+                res["d"] = d
+            yield res
+
+    return assign
+
+
+def _assign(
+    df: DataFrame,
+    tables: list[list[list[float]]],
+    vec_col: str,
+    keep: list[str],
+    out: str = "cell",
+    take: int = 1,
+    dist: bool = False,
+) -> DataFrame:
+    """The nearest-centroid projection: ``keep`` plus ``codes`` (PQ,
+    ``out="codes"``, one code per subspace table) or ``cell`` (IVF, one
+    table; ``take`` > 1 explodes each row to its ``take`` nearest cells;
+    ``dist`` adds ``d``). ``_use_kernel`` picks the literal expression or
+    the Arrow kernel; both give the same rows, the kernel keeping each
+    input column's own type. A pure map: vectors never shuffle."""
+    if _use_kernel(tables):
+        import numpy as np
+
+        types = dict(df.dtypes)
+        schema = [f"{c} {types[c]}" for c in keep]
+        schema += ["codes array<int>"] if out == "codes" else ["cell int"]
+        schema += ["d double"] if dist else []
+        fn = _make_nearest_fn(
+            [np.asarray(t, dtype=np.float64) for t in tables],
+            vec_col, keep, out, take, dist,
+        )
+        return df.select(*dict.fromkeys([*keep, vec_col])).mapInPandas(
+            fn, ", ".join(schema)
+        )
+    if out == "codes":
+        dsub = len(tables[0][0])
+        codes = ", ".join(
+            _nearest_sql(f"slice({vec_col}, {s * dsub + 1}, {dsub})", t) + ".cell"
+            for s, t in enumerate(tables)
+        )
+        return df.select(*keep, F.expr(f"array({codes})").alias("codes"))
+    if take > 1:
+        top = _nearest_sql(vec_col, tables[0], take)
+        return df.select(
+            *keep, F.explode(F.expr(f"transform({top}, s -> s.cell)")).alias("cell")
+        )
+    best = F.expr(_nearest_sql(vec_col, tables[0]))
+    return df.select(
+        *keep,
+        best.getField("cell").alias("cell"),
+        *([best.getField("d").alias("d")] if dist else []),
+    )
 
 
 def ivf_train(
@@ -487,42 +664,13 @@ def ivf_train(
             "init centroids from"
         )
     # pre-cast once: the fold path casts element-wise anyway, and the Arrow
-    # kernel path needs a concrete array<double> output schema
+    # kernel passes the vector through under a concrete array<double> type
     v = embeddings.select(F.col(vec_col).cast("array<double>").alias("vec"))
-    # gate on the ACTUAL centroid width, like ivf_assign (ADVICE r7: `dim`
-    # is a parameter that can lag the data's true width)
-    use_kernel = len(centroids) * len(centroids[0]) > _ASSIGN_EXPR_MAX_TERMS
-    if use_kernel:
-        import numpy as _np_train
-
-        def _lloyd_assign(cents):
-            C = _np_train.asarray(cents, dtype=_np_train.float64)
-            nearest = _nearest_cells_impl()  # by-value pickle (see factory)
-
-            def assign(batches):
-                import numpy as _np
-                import pandas as _pd
-
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    x = _np.vstack(pdf["vec"].to_numpy()).astype(_np.float64)
-                    yield _pd.DataFrame(
-                        {"cell": nearest(x, C), "vec": pdf["vec"]}
-                    )
-
-            return v.mapInPandas(assign, "cell int, vec array<double>")
-
     for _ in range(iters):
         # same routing (and bit-identical assignment) as ivf_assign: the
         # literal expression is O(n_cells * dim) PER ROW — auto-sized cell
         # counts make Lloyd steps quadratic in the corpus without the kernel
-        if use_kernel:
-            assigned = _lloyd_assign(centroids)
-        else:
-            assigned = v.withColumn(
-                "cell", _cell_ranking_expr("vec", centroids).getItem(0)
-            )
+        assigned = _assign(v, [centroids], "vec", keep=["vec"])
         # (cell, dim_idx) grid: dim_sums is n_cells x dim rows of scalar
         # sums; counts is n_cells rows. Both are partial-aggregated
         # map-side, so the shuffle carries O(n_cells * dim) doubles total.
@@ -567,134 +715,6 @@ def ivf_train(
     return centroids
 
 
-# The literal-expression assignment embeds n_cells x dim constant terms in
-# ONE expression — ideal while small (pure JVM, zero Python), but the
-# expression itself grows with the corpus once n_cells is auto-sized:
-# measured on semantic_dedup, 157 cells x 64 dims is fine (1.7 s at sf0.1)
-# but 1563 cells x 64 dims = 100k fold terms PER ROW took 32 s at 10x and
-# 15625 cells would not finish — the per-row cost is O(n_cells * dim), i.e.
-# O(n^2) corpus-total under auto-sizing. Past this term budget, assignment
-# routes to a vectorized Arrow kernel (BLAS matmul pre-filter + exact
-# left-fold re-score of the epsilon band), which is bit-identical to the
-# fold (see _nearest_cells) at O(flops) instead of O(interpreted-ops).
-# Threshold: the 16-cell fixture model (16 x 64 = 1024 terms) stays on the
-# pure-JVM expression; the crossover was measured ABOVE the first auto-sized
-# model already — at sf0.1's 63 cells the kernel runs ann_cosine_ivf in
-# 1.18 s vs 2.52 s for the expression (interpreted fold ops dominate well
-# before the expression becomes unbuildable).
-_ASSIGN_EXPR_MAX_TERMS = 1024
-
-
-def _nearest_cells_impl():
-    """Factory for the per-batch nearest-centroid function, bit-identical
-    to the SQL ``array_sort(named_struct(d, cell))`` fold path:
-
-    - BLAS matmul gives APPROXIMATE squared distances (wrong only in the
-      last ~1e-13 relative ULPs vs the fold's left-to-right order);
-    - every cell within a 1e-6 band of the approx minimum (a >1e6x
-      superset of the possible reorder) is RE-SCORED exactly — a per-dim
-      left fold, the same op order as ``aggregate(zip_with(...))`` — and
-      argmin over exact distances with numpy's first-index tie-break
-      reproduces the struct sort's (d, cell) ordering exactly.
-
-    A factory (not a module function) on purpose: kernels bind the result
-    LOCALLY, so cloudpickle serializes it BY VALUE into the task closure.
-    A module-level reference pickles by qualified name, and executor
-    Python workers only have the driver's cwd — not its sys.path — so the
-    first large-cell query run from outside the repo dies with
-    ModuleNotFoundError (measured from /tmp, exactly how the grading
-    driver runs).
-    """
-
-    def nearest(x, C):
-        import numpy as _np
-
-        cells = _np.empty(len(x), dtype=_np.int64)
-        c_sq = (C * C).sum(axis=1)
-        # chunk rows so the (rows x n_cells) distance block stays ~32 MB:
-        # measured 10x faster than a 500 MB block (3.35 s -> 0.34 s per 10k
-        # rows at 6250 cells) — the matmul+argmin pass is cache/allocation
-        # bound, and 32 concurrent workers each holding half-GB blocks page
-        chunk = max(1, 4_000_000 // max(1, C.shape[0]))
-        for lo in range(0, len(x), chunk):
-            hi = min(lo + chunk, len(x))
-            d2 = x[lo:hi] @ (-2.0 * C.T) + c_sq[None, :]  # |x|^2 const/row
-            best = d2.min(axis=1)
-            # band width scales with the distance magnitude (ADVICE r7):
-            # the matmul's error is RELATIVE (~1e-16 of the magnitude), so
-            # an absolute 1e-6 band under-covers once squared distances
-            # exceed ~1e10; max() keeps the old width for O(1)-magnitude
-            # embeddings (fixture parity unchanged — widening only ADDS
-            # candidates to the exact re-score, never changes its answer)
-            band = d2 <= (best + _np.maximum(1e-6, _np.abs(best) * 1e-9))[:, None]
-            cells[lo:hi] = d2.argmin(axis=1)
-            # rows whose band holds >1 cell (includes every approx tie) take
-            # the exact path; vectorizing the unique-band fast path matters —
-            # a per-row Python loop measured 29x/decade at the 100x corpus
-            for i in _np.nonzero(band.sum(axis=1) > 1)[0]:
-                cand = _np.nonzero(band[i])[0]
-                acc = _np.zeros(len(cand))
-                for d in range(x.shape[1]):
-                    diff = x[lo + i, d] - C[cand, d]
-                    acc += diff * diff
-                cells[lo + i] = cand[int(_np.argmin(acc))]
-        return cells
-
-    return nearest
-
-
-_nearest_cells = _nearest_cells_impl()  # driver-side uses (tests, ivf_train)
-
-
-def _make_assign_fn(C, id_col: str, vec_col: str, keep_vec: bool = False):
-    """mapInPandas function for (id, cell[, vec]) assignment — module-level
-    factory so tests can assert the returned closure pickles self-contained
-    (no package import on the worker). ``keep_vec`` passes the (double-cast)
-    vector through, so consumers that need (id, cell, vec) avoid a
-    corpus-wide re-join on id."""
-    nearest = _nearest_cells_impl()
-
-    def assign(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = _np.vstack(pdf[vec_col].to_numpy()).astype(_np.float64)
-            out = {id_col: pdf[id_col], "cell": nearest(x, C)}
-            if keep_vec:
-                out[vec_col] = list(x)
-            yield _pd.DataFrame(out)
-
-    return assign
-
-
-def _assign_cells_kernel(
-    embeddings: DataFrame,
-    centroids: list[list[float]],
-    id_col: str,
-    vec_col: str,
-    keep_vec: bool = False,
-) -> DataFrame:
-    """(id, cell[, vec]) assignment via the Arrow kernel — the scale path
-    once the centroid table outgrows the literal expression. The centroid
-    matrix rides the task closure (n_cells x dim doubles, bounded by
-    AUTO_CELL_MAX); vectors never shuffle — assignment is a map. The id
-    column keeps ITS OWN type (routing across the term budget must not
-    change behavior for string/int ids)."""
-    import numpy as np
-
-    C = np.asarray(centroids, dtype=np.float64)
-    id_type = dict(embeddings.dtypes)[id_col]
-    schema = f"{id_col} {id_type}, cell int"
-    if keep_vec:
-        schema += f", {vec_col} array<double>"
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        _make_assign_fn(C, id_col, vec_col, keep_vec), schema
-    )
-
-
 def ivf_assign(
     embeddings: DataFrame,
     centroids: list[list[float]],
@@ -704,47 +724,10 @@ def ivf_assign(
     """(id, cell) hard assignment to trained centroids — k-means cluster
     membership as a pure projection (ties on cell id, deterministic).
     The IVF index's partitioning step, exposed for corpus-curation use
-    (cluster sizes, cluster-balanced sampling, semantic dedup).
-
-    Below ``_ASSIGN_EXPR_MAX_TERMS`` (= n_cells x dim) the assignment is
-    one literal JVM expression; above it, the bit-identical Arrow kernel
-    (see _nearest_cells) — same rows either way."""
-    if len(centroids) * len(centroids[0]) > _ASSIGN_EXPR_MAX_TERMS:
-        return _assign_cells_kernel(embeddings, centroids, id_col, vec_col)
-    return embeddings.select(
-        F.col(id_col),
-        _cell_ranking_expr(vec_col, centroids).getItem(0).alias("cell"),
-    )
-
-
-def _make_assign_dist_fn(C, id_col: str, vec_col: str):
-    """mapInPandas function for (id, cell, d) — assignment plus the EXACT
-    squared L2 distance to the assigned centroid. The cell comes from the
-    shared banded-argmin kernel; the distance is then recomputed as a
-    per-dim LEFT FOLD over the assigned centroid (acc += diff² in dim
-    order), the same association order as the SQL
-    ``aggregate(zip_with(...))`` / ``list_reduce(list_transform(...))``
-    folds — so the emitted doubles are bit-identical to the oracle's.
-    Locally bound (by-value pickle), the _make_assign_fn discipline."""
-    nearest = _nearest_cells_impl()
-
-    def assign(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = _np.vstack(pdf[vec_col].to_numpy()).astype(_np.float64)
-            cells = nearest(x, C)
-            assigned = C[cells]
-            d = _np.zeros(len(x), dtype=_np.float64)
-            for j in range(x.shape[1]):  # left fold over dims, SQL order
-                diff = x[:, j] - assigned[:, j]
-                d = d + diff * diff
-            yield _pd.DataFrame({id_col: pdf[id_col], "cell": cells, "d": d})
-
-    return assign
+    (cluster sizes, cluster-balanced sampling, semantic dedup). One
+    literal expression or the bit-identical Arrow kernel (``_assign``) —
+    same rows either way."""
+    return _assign(embeddings, [centroids], vec_col, keep=[id_col])
 
 
 def ivf_assign_with_dist(
@@ -757,75 +740,11 @@ def ivf_assign_with_dist(
     assigned centroid — the "prototype distance" SSL-prototype data
     pruning ranks on (Sorscher et al. 2022, Beyond neural scaling laws:
     examples close to their cluster prototype are the easy/redundant
-    ones). Same two shapes as :func:`ivf_assign`: below the term budget
-    ONE literal expression (array_min over (d, cell) structs — min d,
-    tie smallest cell, identical to the ranking expr's order); above it
-    the Arrow kernel with an exact per-dim fold for the emitted
-    distance. Pure projection either way — vectors never shuffle."""
-    if len(centroids) * len(centroids[0]) > _ASSIGN_EXPR_MAX_TERMS:
-        import numpy as np
-
-        Cm = np.asarray(centroids, dtype=np.float64)
-        id_type = dict(embeddings.dtypes)[id_col]
-        return embeddings.select(id_col, vec_col).mapInPandas(
-            _make_assign_dist_fn(Cm, id_col, vec_col),
-            f"{id_col} {id_type}, cell int, d double",
-        )
-    structs = ", ".join(
-        f"named_struct('d', {_dist2_sql(vec_col, c)}, 'cell', {i})"
-        for i, c in enumerate(centroids)
-    )
-    best = F.expr(f"array_min(array({structs}))")
-    return embeddings.select(
-        F.col(id_col),
-        best.getField("cell").alias("cell"),
-        best.getField("d").alias("d"),
-    )
-
-
-def _make_probe_fn(C, nprobe: int, id_col: str, vec_col: str):
-    """mapInPandas function: (q_id, q_vec, cell) exploded to each query's
-    nprobe nearest cells, in the SAME (distance, cell) order as
-    ``slice(_cell_ranking_expr(...), 1, nprobe)`` — approx distances pick a
-    candidate band around the nprobe-th, the band is re-scored with the
-    exact per-dim left fold, and the final sort is (exact d, cell). Bound
-    locally (by-value pickle) like _make_assign_fn."""
-    import numpy as np
-
-    n_cells = len(C)
-    take = min(nprobe, n_cells)
-    c_sq = (np.asarray(C) * np.asarray(C)).sum(axis=1)
-
-    def probe(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = _np.vstack(pdf[vec_col].to_numpy()).astype(_np.float64)
-            d2 = x @ (-2.0 * C.T) + c_sq[None, :]
-            ids, vecs, cells = [], [], []
-            for i in range(len(pdf)):
-                row = d2[i]
-                part = _np.partition(row, take - 1)
-                # magnitude-scaled band, same rationale as _nearest_cells
-                t = part[take - 1]
-                cand = _np.nonzero(row <= t + max(1e-6, abs(t) * 1e-9))[0]
-                acc = _np.zeros(len(cand))
-                for dd in range(x.shape[1]):
-                    diff = x[i, dd] - C[cand, dd]
-                    acc += diff * diff
-                order = _np.lexsort((cand, acc))[:take]
-                for j in order:
-                    ids.append(pdf[id_col].iloc[i])
-                    vecs.append(x[i])
-                    cells.append(int(cand[j]))
-            yield _pd.DataFrame(
-                {"q_id": ids, "q_vec": vecs, "cell": cells}
-            )
-
-    return probe
+    ones). Same two shapes as :func:`ivf_assign`; the kernel emits the
+    distance as an exact per-dim fold, so the doubles are bit-identical
+    to the expression's (and the oracle's). Pure projection either way —
+    vectors never shuffle."""
+    return _assign(embeddings, [centroids], vec_col, keep=[id_col], dist=True)
 
 
 def _probe_frame(
@@ -834,33 +753,13 @@ def _probe_frame(
     nprobe: int,
     id_col: str,
     vec_col: str,
-    _force_expr: bool = False,
 ) -> DataFrame:
     """(q_id, q_vec, cell): each query exploded to its ``nprobe`` nearest
     cells — THE single probe-side construction shared by ann_topk_ivf and
-    ann_topk_ivf_pq (code review r13: two verbatim copies of the routing
-    branch would let a future fix silently miss one). Routes through the
-    Arrow probe kernel past _ASSIGN_EXPR_MAX_TERMS on the actual centroid
-    width; bit-parity of the two paths is pytest-pinned via the callers."""
-    if (
-        len(centroids) * len(centroids[0]) > _ASSIGN_EXPR_MAX_TERMS
-        and not _force_expr
-    ):
-        import numpy as np
-
-        C = np.asarray(centroids, dtype=np.float64)
-        id_type = dict(queries.dtypes)[id_col]
-        return queries.select(id_col, vec_col).mapInPandas(
-            _make_probe_fn(C, nprobe, id_col, vec_col),
-            f"q_id {id_type}, q_vec array<double>, cell int",
-        )
-    return queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(
-            F.slice(_cell_ranking_expr(vec_col, centroids), 1, nprobe)
-        ).alias("cell"),
-    )
+    ann_topk_ivf_pq (two copies would let a future fix silently miss
+    one)."""
+    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
+    return _assign(q, [centroids], "q_vec", keep=["q_id", "q_vec"], take=nprobe)
 
 
 def ann_topk_ivf(
@@ -874,7 +773,6 @@ def ann_topk_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
-    _force_expr: bool = False,
 ) -> DataFrame:
     """Approximate cosine top-k via IVF: partition vectors into Voronoi cells
     around trained centroids; each query probes only its `nprobe` nearest
@@ -884,34 +782,25 @@ def ann_topk_ivf(
     you'd persist the table partitioned/bucketed BY cell so the probe join is
     shuffle-free on the big side); queries explode to nprobe rows and
     broadcast; expected candidate count is nprobe/n_cells of the corpus.
-    Both the corpus assignment and the query probe ranking route through
-    the Arrow kernels past _ASSIGN_EXPR_MAX_TERMS (same bit-parity
-    discipline — the literal expression is O(n_cells * dim) per row, which
-    under auto-sized cell counts is the O(n^2) shape round 7 measured).
+    Both the corpus assignment and the query probe ranking take the Arrow
+    kernel past the term budget (``_use_kernel``: the literal expression is
+    O(n_cells * dim) per row, which under auto-sized cell counts is the
+    O(n^2) shape round 7 measured).
     """
     if centroids is None:
         centroids = ivf_train(
             embeddings, n_cells, seed=seed, dim=dim, vec_col=vec_col, id_col=id_col
         )
-    # route on the ACTUAL centroid width, like ivf_assign (ADVICE r7:
-    # pre-trained centroids of a different dimension than the `dim`
-    # parameter would compute the term budget from the wrong width)
-    if len(centroids) * len(centroids[0]) > _ASSIGN_EXPR_MAX_TERMS and not _force_expr:
-        # id-keyed re-join, NOT keep_vec pass-through: measured at the 100x
+    c = embeddings.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"))
+    if _use_kernel([centroids]):
+        # id-keyed re-join, NOT vector pass-through: measured at the 100x
         # corpus the join (ids through the kernel, vectors staying in the
         # JVM's columnar scan) beats Arrow-round-tripping every vector
         # through Python (4.98 s vs 6.36 s end-to-end)
-        assigned = _assign_cells_kernel(embeddings, centroids, id_col, vec_col)
-        c = embeddings.select(
-            F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
-        ).join(assigned.select(F.col(id_col).alias("c_id"), "cell"), "c_id")
+        c = c.join(_assign(c, [centroids], "c_vec", keep=["c_id"]), "c_id")
     else:
-        c = embeddings.select(
-            F.col(id_col).alias("c_id"),
-            F.col(vec_col).alias("c_vec"),
-            _cell_ranking_expr(vec_col, centroids).getItem(0).alias("cell"),
-        )
-    q = _probe_frame(queries, centroids, nprobe, id_col, vec_col, _force_expr)
+        c = _assign(c, [centroids], "c_vec", keep=["c_id", "c_vec"])
+    q = _probe_frame(queries, centroids, nprobe, id_col, vec_col)
     scored = (
         c.join(F.broadcast(q), "cell")
         .filter(F.col("q_id") != F.col("c_id"))
@@ -1272,96 +1161,6 @@ def _pq_codebook_sql(codebooks: list[list[list[float]]]) -> str:
     )
 
 
-def _pq_codes_expr(
-    vec_sql: str, codebooks: list[list[list[float]]]
-) -> Column:
-    """codes array<int> (one code per subspace) as one literal JVM
-    expression — the below-term-budget path. Per subspace s the argmin is
-    the same named_struct/array_min fold as :func:`_cell_ranking_expr`
-    over the SLICED subvector (ties on code id), so parity with the
-    kernel and the oracle is inherited from the IVF family."""
-    dsub = len(codebooks[0][0])
-    per_s = []
-    for s, sub in enumerate(codebooks):
-        sl = f"slice({vec_sql}, {s * dsub + 1}, {dsub})"
-        structs = ", ".join(
-            f"named_struct('d', {_dist2_sql(sl, cw)}, 'code', {c})"
-            for c, cw in enumerate(sub)
-        )
-        per_s.append(f"array_min(array({structs})).code")
-    return F.expr("array(" + ", ".join(per_s) + ")")
-
-
-def _make_pq_codes_fn(CBs, id_col: str | None, vec_col: str, keep_vec: bool):
-    """mapInPandas factory for (id?, vec?, codes) — one banded-exact
-    nearest-centroid call per subspace (bit-identical to the fold, see
-    _nearest_cells_impl), vectorized over the whole Arrow batch. Locally
-    bound (by-value pickle), the _make_assign_fn discipline."""
-    nearest = _nearest_cells_impl()
-    m, dsub = len(CBs), len(CBs[0][0])
-
-    def assign(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = _np.vstack(pdf[vec_col].to_numpy()).astype(_np.float64)
-            codes = _np.empty((len(pdf), m), dtype=_np.int32)
-            for s in range(m):
-                codes[:, s] = nearest(x[:, s * dsub : (s + 1) * dsub], CBs[s])
-            out = {}
-            if id_col is not None:
-                out[id_col] = pdf[id_col]
-            if keep_vec:
-                out[vec_col] = list(x)
-            out["codes"] = list(codes)
-            yield _pd.DataFrame(out)
-
-    return assign
-
-
-def _pq_assigned(
-    embeddings: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str | None,
-    vec_col: str,
-    keep_vec: bool,
-    _force_expr: bool = False,
-) -> DataFrame:
-    """Shared encode core: (id?, vec?, codes array<int>). Routes on the
-    TOTAL per-row term count m*ksub*dsub (the whole codebook participates
-    in every row's assignment, unlike IVF where one centroid table does) —
-    the production shape 8x256x8 = 16384 always takes the Arrow kernel;
-    tiny models stay pure-JVM. ``_force_expr`` pins kernel==expression
-    bit-parity in pytest (the ann_topk_ivf convention)."""
-    m, ksub, dsub = len(codebooks), len(codebooks[0]), len(codebooks[0][0])
-    if m * ksub * dsub > _ASSIGN_EXPR_MAX_TERMS and not _force_expr:
-        import numpy as np
-
-        CBs = np.asarray(codebooks, dtype=np.float64)
-        cols = [id_col] if id_col else []
-        schema = ", ".join(
-            ([f"{id_col} {dict(embeddings.dtypes)[id_col]}"] if id_col else [])
-            + ([f"{vec_col} array<double>"] if keep_vec else [])
-            + ["codes array<int>"]
-        )
-        return embeddings.select(*cols, vec_col).mapInPandas(
-            _make_pq_codes_fn(CBs, id_col, vec_col, keep_vec), schema
-        )
-    base = embeddings.select(
-        *([id_col] if id_col else []),
-        F.col(vec_col).cast("array<double>").alias(vec_col),
-    )
-    out_cols = ([F.col(id_col)] if id_col else []) + (
-        [F.col(vec_col)] if keep_vec else []
-    )
-    return base.select(
-        *out_cols, _pq_codes_expr(vec_col, codebooks).alias("codes")
-    )
-
-
 def pq_train(
     embeddings: DataFrame,
     m: int = PQ_M,
@@ -1431,7 +1230,7 @@ def pq_train(
     ]
     v = embeddings.select(F.col(vec_col).cast("array<double>").alias("vec"))
     for _ in range(iters):
-        assigned = _pq_assigned(v, codebooks, None, "vec", keep_vec=True)
+        assigned = _assign(v, codebooks, "vec", keep=["vec"], out="codes")
         # (s, code, subvector) rows → (s, code, dim_idx) grid; the count
         # per group IS the code's member count (one row per member per dim)
         parts = assigned.select(
@@ -1474,17 +1273,15 @@ def pq_encode(
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    _force_expr: bool = False,
 ) -> DataFrame:
     """(id, codes array<int>): the PQ-compressed corpus — 1-4 bytes per
-    subspace instead of dsub floats. Pure projection (expression or Arrow
-    kernel per the term budget); vectors never shuffle. This is the table
-    a deployment PERSISTS next to the coarse cell assignment — the scan
-    side of every IVF-PQ query reads codes, not vectors."""
-    return _pq_assigned(
-        embeddings, codebooks, id_col, vec_col, keep_vec=False,
-        _force_expr=_force_expr,
-    )
+    subspace instead of dsub floats. Pure projection; vectors never
+    shuffle. The route counts the WHOLE codebook (m*ksub*dsub terms take
+    part in every row), so the production shape 8x256x8 = 16384 always
+    takes the Arrow kernel and tiny models stay pure-JVM. This is the
+    table a deployment PERSISTS next to the coarse cell assignment — the
+    scan side of every IVF-PQ query reads codes, not vectors."""
+    return _assign(embeddings, codebooks, vec_col, keep=[id_col], out="codes")
 
 
 def _pq_rvec_sql(codes_sql: str, codebooks: list[list[list[float]]]) -> str:

@@ -79,14 +79,13 @@ def doc_token_counts(
 ) -> DataFrame:
     """(id, *keep_cols, n_words, n_tokens, fertility): exact subword token
     counts per document. ``words`` maps the text column to its words
-    array. NULL text drops; a doc whose words array is empty (every word
-    filtered out) drops too, since its fertility would be 0/0. The token
+    array, evaluated once per document (in the explode). NULL text drops;
+    a doc whose words array is empty (every word filtered out) explodes
+    to no rows and drops too, since its fertility would be 0/0. The token
     lists shrink to ``size(toks)`` JVM-side before the broadcast join."""
     arr = words(F.col(text_col))
-    occ = (
-        docs.filter(F.col(text_col).isNotNull())
-        .filter(F.size(arr) > 0)
-        .select(F.col(id_col), *[F.col(c) for c in keep_cols], F.explode(arr).alias("word"))
+    occ = docs.filter(F.col(text_col).isNotNull()).select(
+        F.col(id_col), *[F.col(c) for c in keep_cols], F.explode(arr).alias("word")
     )
     wtok = word_tokens(occ.select("word").distinct(), segment).select(
         "word", F.size("toks").alias("n_tok")

@@ -1373,18 +1373,20 @@ def q_decontaminate(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
 PPLX_K = 0.5  # add-k smoothing
 
 
-def _lm_model_join_side(model: DataFrame) -> DataFrame:
+def _lm_model_join_side(docs: DataFrame, model: DataFrame) -> DataFrame:
     """The bigram-TYPE model table as a join side. Bigram types grow
     roughly like a Heaps law in the corpus (~O(n^0.7)): 931 rows at
     sf0.1, but plausibly tens of GB at the 100 TB narrative, where a
     forced broadcast hint would blow the 8 GB relation cap / driver
-    memory instead of degrading (ADVICE r13, guide §3.1 — broadcast only
-    what fits). The hint is therefore GATED: on by default for
-    local/bench scale (where it saves AQE's speculative corpus-side
-    shuffle write of the scoring stream), off via
-    SPARK_GRAFT_LM_BROADCAST=0 for production scale, where AQE picks the
-    strategy from measured stage sizes."""
-    if os.environ.get("SPARK_GRAFT_LM_BROADCAST", "1") != "0":
+    memory instead of degrading (broadcast only what fits). So the hint
+    is gated on the documents' input size, as tfidf_top_terms gates its
+    df table (both are vocabulary-sized): known-small local input
+    broadcasts the model, which saves AQE's speculative corpus-side
+    shuffle write of the scoring stream; larger or unknown input leaves
+    the strategy to AQE's measured stage sizes."""
+    from ..operators.dedup import input_bytes_at_most
+
+    if input_bytes_at_most(docs, TFIDF_BROADCAST_MAX_INPUT_BYTES):
         return F.broadcast(model)
     return model
 
@@ -1481,7 +1483,7 @@ def _perplexity_frame(docs: DataFrame, keep_cols: tuple[str, ...] = ()) -> DataF
         F.countDistinct("term").alias("v")
     )
     scored = (
-        bg.join(_lm_model_join_side(model), ["w1", "w2"])
+        bg.join(_lm_model_join_side(docs, model), ["w1", "w2"])
         .crossJoin(F.broadcast(vocab))
         .withColumn(
             "lp",
@@ -1675,7 +1677,7 @@ def q_moore_lewis_selection(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
         f" / (coalesce(c1_g, 0) + {PPLX_K!r}d * v_g)), 6)"
     )
     scored = (
-        bg.join(_lm_model_join_side(model), ["w1", "w2"], "left")
+        bg.join(_lm_model_join_side(docs, model), ["w1", "w2"], "left")
         .crossJoin(F.broadcast(va))
         .withColumn("lp_t", F.expr(lp_t))
         .withColumn("lp_g", F.expr(lp_g))
@@ -2002,7 +2004,8 @@ SELECT doc_id, term, tfidf, CAST(rank AS BIGINT) AS rank
 FROM ranked WHERE rank <= 3
 """
 
-# Gate for broadcasting the vocabulary-sized df table in tfidf_top_terms.
+# Gate for broadcasting the vocabulary-sized df table in tfidf_top_terms
+# (and the bigram-LM model table, _lm_model_join_side).
 # Heaps' law: vocab ~ corpus^beta (beta~0.5-0.6); at ~256 MiB of document
 # parquet the distinct-term table is ~1-2M rows / tens of MB serialized —
 # the edge of comfortable broadcast. Beyond it (or whenever the input size

@@ -932,7 +932,7 @@ def test_simhash64_dedup_prebuilt_index_parity(spark, sf_dir, tmp_path):
         simhash64_dedup_against_corpus(batch, corpus, max_hamming=4)
 
 
-def test_ivf_assign_kernel_bit_identical_to_expression(spark, sf_dir):
+def test_ivf_assign_kernel_bit_identical_to_expression(spark, sf_dir, monkeypatch):
     """The Arrow assignment kernel (the auto-sized-cells scale path) must
     reproduce the literal-expression fold EXACTLY — argmin cell ids equal
     on every vector, including band ties (epsilon re-score)."""
@@ -940,21 +940,15 @@ def test_ivf_assign_kernel_bit_identical_to_expression(spark, sf_dir):
 
     e = _emb(spark, sf_dir)
     cents = S._hyperplanes(64, 157, 7)  # >4096 terms: the kernel regime
-    expr = sorted(
-        tuple(r)
-        for r in e.select(
-            "vec_id",
-            S._cell_ranking_expr("embedding", cents).getItem(0).alias("cell"),
-        ).collect()
-    )
-    kern = sorted(
-        tuple(r)
-        for r in S._assign_cells_kernel(e, cents, "vec_id", "embedding").collect()
-    )
-    assert expr == kern
-    # and the router picks the kernel in this regime (no giant expression)
+    # the router picks the kernel in this regime (no giant expression)
     routed = S.ivf_assign(e, cents)
     assert "MapInPandas" in routed._jdf.queryExecution().toString()
+    kern = sorted(tuple(r) for r in routed.collect())
+    monkeypatch.setattr(S, "_ASSIGN_EXPR_MAX_TERMS", 1 << 30)
+    forced = S.ivf_assign(e, cents)
+    assert "MapInPandas" not in forced._jdf.queryExecution().toString()
+    expr = sorted(tuple(r) for r in forced.collect())
+    assert expr == kern
 
 
 def test_assign_kernel_closure_pickles_self_contained():
@@ -971,9 +965,11 @@ def test_assign_kernel_closure_pickles_self_contained():
     import cloudpickle
     import numpy as np
 
-    from futures_eos_cdc_spark.operators.similarity import _make_assign_fn
+    from futures_eos_cdc_spark.operators.similarity import _make_nearest_fn
 
-    fn = _make_assign_fn(np.eye(4, dtype=np.float64), "vec_id", "embedding")
+    fn = _make_nearest_fn(
+        [np.eye(4, dtype=np.float64)], "embedding", ["vec_id"], "cell", 1, False
+    )
     blob = cloudpickle.dumps(fn)
     with tempfile.NamedTemporaryFile(suffix=".bin") as f:
         f.write(blob)
@@ -992,7 +988,7 @@ def test_assign_kernel_closure_pickles_self_contained():
         )
 
 
-def test_ann_ivf_kernel_path_matches_expression_path(spark, sf_dir):
+def test_ann_ivf_kernel_path_matches_expression_path(spark, sf_dir, monkeypatch):
     """Past _ASSIGN_EXPR_MAX_TERMS, ann_topk_ivf routes corpus assignment
     AND query probe ranking through the Arrow kernels; the result set must
     equal the literal-expression plan bit-for-bit (same candidate cells in
@@ -1006,11 +1002,10 @@ def test_ann_ivf_kernel_path_matches_expression_path(spark, sf_dir):
         tuple(r)
         for r in S.ann_topk_ivf(e, q, k=3, nprobe=4, centroids=cents).collect()
     )
+    monkeypatch.setattr(S, "_ASSIGN_EXPR_MAX_TERMS", 1 << 30)
     expr = sorted(
         tuple(r)
-        for r in S.ann_topk_ivf(
-            e, q, k=3, nprobe=4, centroids=cents, _force_expr=True
-        ).collect()
+        for r in S.ann_topk_ivf(e, q, k=3, nprobe=4, centroids=cents).collect()
     )
     assert kern == expr
     assert kern  # non-vacuous
@@ -1200,28 +1195,20 @@ def test_pagerank_rejects_zero_checkpoint_every(spark):
         pagerank(edges, iters=1, checkpoint_every=0)
 
 
-def test_ivf_kernel_preserves_id_type(spark):
+def test_ivf_kernel_preserves_id_type(spark, monkeypatch):
     """Routing across the term budget must not change id behavior: string
     ids survive the Arrow kernel (the first kernel hardcoded `long`, which
     would throw or NULL them only past the threshold)."""
-    import numpy as np
-
     from futures_eos_cdc_spark.operators import similarity as S
 
     rows = [(f"id{i}", [float(i % 7), 1.0, 0.0, 0.0]) for i in range(40)]
     e = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
-    cents = S._hyperplanes(4, 8, 3)
-    kern = {
-        (r.vec_id, r.cell)
-        for r in S._assign_cells_kernel(e, cents, "vec_id", "embedding").collect()
-    }
-    expr = {
-        (r.vec_id, r.cell)
-        for r in e.select(
-            "vec_id",
-            S._cell_ranking_expr("embedding", cents).getItem(0).alias("cell"),
-        ).collect()
-    }
+    cents = S._hyperplanes(4, 8, 3)  # 32 terms: the expression regime
+    expr = {(r.vec_id, r.cell) for r in S.ivf_assign(e, cents).collect()}
+    monkeypatch.setattr(S, "_ASSIGN_EXPR_MAX_TERMS", 0)
+    routed = S.ivf_assign(e, cents)
+    assert "MapInPandas" in routed._jdf.queryExecution().toString()
+    kern = {(r.vec_id, r.cell) for r in routed.collect()}
     assert kern == expr and len(kern) == 40
 
 
@@ -1429,7 +1416,7 @@ def test_temperature_mixture_excludes_unweighted_groups(spark):
     assert rates["en"]["rate"] == clean_rates["en"]["rate"]
 
 
-def test_ivf_assign_with_dist_kernel_matches_expression(spark, sf_dir):
+def test_ivf_assign_with_dist_kernel_matches_expression(spark, sf_dir, monkeypatch):
     """ivf_assign_with_dist's two shapes (literal array_min expression vs
     the Arrow kernel with the per-dim fold distance) must agree on cell
     AND on the distance DOUBLE bit-for-bit — the prototype-pruning rank
@@ -1442,29 +1429,19 @@ def test_ivf_assign_with_dist_kernel_matches_expression(spark, sf_dir):
         r.vec_id: (r.cell, r.d)
         for r in S.ivf_assign_with_dist(e, cents).collect()
     }
-    # force the expression path on the same centroids via the struct expr
-    structs = ", ".join(
-        f"named_struct('d', {S._dist2_sql('embedding', c)}, 'cell', {i})"
-        for i, c in enumerate(cents)
-    )
-    import pyspark.sql.functions as _F
-
-    best = _F.expr(f"array_min(array({structs}))")
-    expr = {
-        r.vec_id: (r.cell, r.d)
-        for r in e.select(
-            "vec_id",
-            best.getField("cell").alias("cell"),
-            best.getField("d").alias("d"),
-        ).collect()
-    }
-    assert kern == expr  # exact double equality, not approx
-
     # small-model regime routes to the expression (no Python in the plan)
     small = S._hyperplanes(64, 8, 7)
     routed = S.ivf_assign_with_dist(e, small)
     plan = routed._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" not in plan
+
+    # force the expression path on the same centroids
+    monkeypatch.setattr(S, "_ASSIGN_EXPR_MAX_TERMS", 1 << 30)
+    expr = {
+        r.vec_id: (r.cell, r.d)
+        for r in S.ivf_assign_with_dist(e, cents).collect()
+    }
+    assert kern == expr  # exact double equality, not approx
 
 
 def test_prototype_pruning_semantics(spark, sf_dir):
@@ -1644,7 +1621,7 @@ def test_ivf_pq_degrades_to_brute_force(spark, sf_dir):
     assert full == bf and full
 
 
-def test_pq_encode_kernel_matches_expression(spark, sf_dir):
+def test_pq_encode_kernel_matches_expression(spark, sf_dir, monkeypatch):
     """The fixture codebook (8x32x8 = 2048 terms) is past
     _ASSIGN_EXPR_MAX_TERMS, so pq_encode routes through the Arrow kernel;
     the codes must equal the literal-expression plan bit-for-bit (same
@@ -1656,10 +1633,8 @@ def test_pq_encode_kernel_matches_expression(spark, sf_dir):
     e = _emb(spark, sf_dir).filter(F.col("vec_id") < 120)
     cbs = S.pq_train(_emb(spark, sf_dir), m=8, ksub=32, iters=1, seed=42)
     kern = {r.vec_id: list(r.codes) for r in S.pq_encode(e, cbs).collect()}
-    expr = {
-        r.vec_id: list(r.codes)
-        for r in S.pq_encode(e, cbs, _force_expr=True).collect()
-    }
+    monkeypatch.setattr(S, "_ASSIGN_EXPR_MAX_TERMS", 1 << 30)
+    expr = {r.vec_id: list(r.codes) for r in S.pq_encode(e, cbs).collect()}
     assert kern == expr and kern
 
 

@@ -1,6 +1,7 @@
 """tools/dead_defs.py over the package source (parsed, never imported; no
 Spark session): no top-level def is reached by nothing, the defs only
-tests reach are exactly the allowlisted ones, and no import goes unused."""
+tests reach are exactly the allowlisted ones, no import goes unused, and
+no private module-level binding goes unread."""
 
 from __future__ import annotations
 
@@ -28,3 +29,7 @@ def test_no_def_is_reached_by_nothing_and_test_only_defs_are_allowlisted():
 
 def test_no_package_import_is_unused():
     assert _tool().unused_imports() == []
+
+
+def test_no_private_module_binding_is_unread():
+    assert _tool().unread_bindings() == []

@@ -33,3 +33,32 @@ def test_all_queries_run(spark, sf_dir):
     for name, fn in QUERIES.items():
         df = fn(spark, sf_dir)
         assert df.columns, name
+
+
+# The registered queries whose nearest-centroid assignment routes on
+# similarity._ASSIGN_EXPR_MAX_TERMS. The fixtures' 16-cell model stays on
+# the literal expression, so the parity test above covers only that side.
+IVF_FAMILY = (
+    "ann_cosine_ivf",
+    "ann_cosine_ivf_pq",
+    "d4_selection",
+    "embedding_kmeans_clusters",
+    "prototype_pruning",
+    "semantic_dedup_embeddings",
+)
+
+
+@pytest.mark.parametrize("name", IVF_FAMILY)
+def test_ivf_family_matches_oracle_on_kernel_side(spark, sf_dir, con, name, monkeypatch):
+    """The same oracles with every assignment, probe, Lloyd step and PQ
+    encode forced through the Arrow kernel; the trained models are
+    dropped first so training takes the kernel too."""
+    from futures_eos_cdc_spark import memo
+    from futures_eos_cdc_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "_ASSIGN_EXPR_MAX_TERMS", 0)
+    memo.forget("ivf_centroids")
+    memo.forget("pq_model")
+    df = QUERIES[name](spark, sf_dir)
+    assert "MapInPandas" in df._jdf.queryExecution().toString()
+    compare(df, con, ORACLES[name])

@@ -565,15 +565,29 @@ def test_moore_lewis_models_broadcast_no_python(spark, sf_dir, monkeypatch):
     vocab/entropy scalar frame still plans as a single
     BroadcastNestedLoopJoin (broadcast of a 1-row frame always does in
     Spark — bounded, accepted).  Whole plan stays JVM-side, nothing
-    cartesian or quadratic.  The model broadcast is pinned on: it is the
-    bench-scale default, which SPARK_GRAFT_LM_BROADCAST=0 turns off."""
-    monkeypatch.setenv("SPARK_GRAFT_LM_BROADCAST", "1")
+    cartesian or quadratic.  The model broadcast is the small-input
+    plan; past TFIDF_BROADCAST_MAX_INPUT_BYTES of documents the model
+    join loses its hint."""
+    from futures_eos_cdc_spark.plans import dataprep
+
     plan = _plan(spark, sf_dir, "moore_lewis_selection")
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
     assert plan.count("BroadcastHashJoin") == 1  # the single collapsed model join
     assert plan.count("BroadcastNestedLoopJoin") <= 1  # 1-row scalar frame only
+    # Force the large path (input "not known small") and emulate the large
+    # model's size estimate by disabling auto-broadcast: the un-hinted
+    # model join must fall back to a sort-merge join on (w1, w2).
+    monkeypatch.setattr(dataprep, "TFIDF_BROADCAST_MAX_INPUT_BYTES", -1)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan_large = _plan(spark, sf_dir, "moore_lewis_selection")
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert "BroadcastHashJoin" not in plan_large
+    assert "SortMergeJoin" in plan_large
 
 
 def test_ann_ivf_pq_plan_shape(spark, sf_dir):

@@ -136,6 +136,20 @@ def test_doc_counts_plan_shape(spark, sf_dir):
     assert "SortMergeJoin" not in plan
     row = df.agg(F.sum("n_tokens"), F.sum("n_words")).collect()[0]
     assert row[0] >= row[1]  # at least one token per word
+    # each corpus branch of the registered query splits the text once, in
+    # its explode: no filter or scan predicate re-evaluates the words
+    from futures_eos_cdc_spark.plans import QUERIES
+
+    q = QUERIES["unigram_token_counts"](spark, sf_dir)
+    lines = [
+        ln
+        for ln in q._jdf.queryExecution().executedPlan().toString().splitlines()
+        if "split(trim(lower(" in ln
+    ]
+    assert lines
+    for ln in lines:
+        assert ln.count("split(trim(lower(") == 1
+        assert "Generate explode(split(trim(lower(" in ln
 
 
 def test_stream_unigram_meter_matches_batch(spark, sf_dir, tmp_path):

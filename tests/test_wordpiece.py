@@ -147,3 +147,14 @@ def test_doc_token_counts_contract(spark):
     assert out[2].n_words == 3
     assert out[2].n_tokens == 2 * len(wp("bigdog")) + len(wp("big"))
     assert out[2].fertility == pytest.approx(out[2].n_tokens / 3)
+    # a doc whose words array is empty (every word filtered out) drops
+    import pyspark.sql.functions as F
+
+    from futures_eos_cdc_spark.operators.text import tokens_expr
+
+    def no_dog(t):
+        return F.filter(tokens_expr(t), lambda w: w != "dog")
+
+    more = spark.createDataFrame([(5, "dog dog"), (6, "dog big")], "doc_id long, text string")
+    kept = {r.doc_id: r for r in doc_token_counts(more, wp, words=no_dog).collect()}
+    assert set(kept) == {6} and kept[6].n_words == 1

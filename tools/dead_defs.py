@@ -1,5 +1,6 @@
 """List package top-level defs that nothing outside the tests reaches,
-and package imports that nothing uses.
+package imports that nothing uses, and private module-level bindings
+that nothing reads.
 
 Usage:
     python tools/dead_defs.py
@@ -11,14 +12,17 @@ anywhere in a package module (outside the def's own body), in ``tools/``,
 ``perfbench/``, ``bench.py`` or ``__spark_entry__.py``. ``q_*`` query
 builders always count as reached: they register by decorator.
 
-Prints three lists and exits 1 when any disagrees with this file:
+Prints four lists and exits 1 when any disagrees with this file:
 
 - defs reached by nothing at all, tests included (must be empty);
 - defs reached only from ``tests/`` (must equal ``TEST_ONLY_ALLOWED``,
   whose values name the COVERAGE.md row or reference test each one backs);
 - imported names (module-level or local, ``__future__`` aside) that their
   module never mentions, neither as a name nor as a whole string constant
-  such as an ``__all__`` entry (must be empty).
+  such as an ``__all__`` entry (must be empty);
+- underscore-prefixed module-level names a package module binds
+  (``_X = ...``) that no code reads — package, callers or tests — by
+  name, attribute or whole string constant (must be empty).
 
 Matching is by name, not by resolved binding, so a def shadowed by a
 same-named def elsewhere can read as reached: the scan under-reports,
@@ -208,6 +212,38 @@ def unused_imports() -> list[str]:
     return sorted(out)
 
 
+def unread_bindings() -> list[str]:
+    """Sorted ``path:line:name`` for every underscore-prefixed (not
+    dunder) module-level binding of a package module that no scanned
+    file reads: a load of the name, an attribute of that name (so
+    ``module._X`` from another file counts) or a string constant equal
+    to it (``getattr``/``monkeypatch.setattr`` targets)."""
+    bound: dict[str, str] = {}  # name -> "path:line"
+    for path in _py_files(PACKAGE):
+        for node in _parse(path).body:
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign):
+                targets = [node.target]
+            else:
+                continue
+            for n in (n for t in targets for n in ast.walk(t)):
+                if isinstance(n, ast.Name) and n.id.startswith("_") and not n.id.startswith("__"):
+                    bound[n.id] = f"{os.path.relpath(path, ROOT)}:{node.lineno}"
+    read = set()
+    for rel in (PACKAGE, *CALLER_PATHS, *TEST_PATHS):
+        for path in _py_files(rel):
+            for n in ast.walk(_parse(path)):
+                if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+                    read.add(n.id)
+                elif isinstance(n, ast.Attribute):
+                    read.add(n.attr)
+                elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+                    read.add(n.value)
+                    read |= _names_in_code_string(n.value)
+    return sorted(f"{where}:{name}" for name, where in bound.items() if name not in read)
+
+
 def main() -> int:
     dead, test_only = scan()
     print(f"reached by nothing ({len(dead)}):")
@@ -223,9 +259,12 @@ def main() -> int:
     print(f"unused imports ({len(unused)}):")
     for key in unused:
         print(f"  {key}")
-    return (
-        1 if dead or stale or unused or set(test_only) - set(TEST_ONLY_ALLOWED) else 0
-    )
+    unread = unread_bindings()
+    print(f"unread private bindings ({len(unread)}):")
+    for key in unread:
+        print(f"  {key}")
+    failed = dead or stale or unused or unread or set(test_only) - set(TEST_ONLY_ALLOWED)
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
