@@ -32,7 +32,7 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
 # reproduces the exact double in any engine; an int as a BIGINT literal;
 # a str as a quoted, backslash-escaped literal.
 # ---------------------------------------------------------------------------
-def _sql_literal(v) -> str:
+def sql_literal(v) -> str:
     if isinstance(v, str):
         return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
     if isinstance(v, numbers.Integral):
@@ -42,9 +42,44 @@ def _sql_literal(v) -> str:
 
 
 def const_array_sql(values) -> str:
-    return "array(" + ", ".join(_sql_literal(v) for v in values) + ")"
+    return "array(" + ", ".join(sql_literal(v) for v in values) + ")"
 
 
 def const_array(values) -> Column:
     """A literal array Column in one py4j call."""
     return F.expr(const_array_sql(values))
+
+
+# ---------------------------------------------------------------------------
+# Multi-term expressions as ONE parsed SQL expression. Every PySpark Column
+# operation (``F.transform``, ``F.concat``, ``F.lit``, ``.alias``, each
+# Python lambda variable) is at least one py4j round trip, so a builder
+# folding dozens of terms costs dozens of round trips per query build; the
+# same expression rendered as SQL text and parsed JVM-side costs one.
+# Lambda parameters inside rendered text are ``_``-prefixed (``_s``, ``_acc``)
+# so they cannot shadow a spliced column name.
+# ---------------------------------------------------------------------------
+_BOUND = ("_b0", "_b1")
+
+
+def sql_expr(render, *inputs) -> Column:
+    """The parsed SQL expression ``render(*refs)`` over one or two inputs.
+
+    ``render`` maps the SQL text of each input to the expression's text.
+    A ``str`` input is a column name and is spliced in as is: a column
+    reference costs nothing to read twice. A Column input is bound to a
+    lambda parameter instead (``transform(array(e), _b0 -> …)``, or
+    ``zip_with`` of two one-element arrays for two), so it is evaluated
+    once per row however often ``render`` reads it, and a NULL input
+    gives what ``render`` gives for NULL."""
+    cols = [x for x in inputs if not isinstance(x, str)]
+    if not cols:
+        return F.expr(render(*inputs))
+    params = _BOUND[: len(cols)]
+    it = iter(params)
+    refs = [x if isinstance(x, str) else next(it) for x in inputs]
+    # SQL writes one lambda parameter bare, two in parentheses
+    head = params[0] if len(params) == 1 else f"({', '.join(params)})"
+    lam = F.expr(f"{head} -> {render(*refs)}")
+    fn = "transform" if len(cols) == 1 else "zip_with"
+    return F.element_at(F.call_function(fn, *[F.array(c) for c in cols], lam), 1)

@@ -25,7 +25,7 @@ import weakref
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .common import spread
+from .common import spread, sql_expr
 from .text import bind_expr, shingles_expr, tokens_expr
 
 MINHASH_HASHES = 8
@@ -955,41 +955,30 @@ def _cached_count(df: DataFrame) -> int:
     return df.count()
 
 
-def _salted_md5(salt: str):
-    # NB: a plain `lambda s, i=i: ...` would be treated by PySpark as a
-    # TWO-argument higher-order lambda — the array index silently overrides
-    # the default. Single-arg closures only.
-    def f(s: Column) -> Column:
-        return F.md5(F.concat(F.lit(salt), s))
-
-    return f
-
-
-def minhash_signature_exprs(shingles: Column, n_hashes: int = MINHASH_HASHES) -> list[Column]:
-    """H permutation-free min-hashes: min over salted md5 of each shingle."""
+def minhash_signature_exprs(shingles: Column | str, n_hashes: int = MINHASH_HASHES) -> list[Column]:
+    """H permutation-free min-hashes ``mh0``..: min over salted md5 of each
+    shingle, one parsed SQL expression per hash (``shingles`` is a column
+    name or a Column, common.sql_expr)."""
     return [
-        F.array_min(F.transform(shingles, _salted_md5(f"{i}|"))).alias(f"mh{i}")
+        sql_expr(
+            lambda s, i=i: f"array_min(transform({s}, _s -> md5(concat('{i}|', _s))))",
+            shingles,
+        ).alias(f"mh{i}")
         for i in range(n_hashes)
     ]
 
 
-def with_minhash(docs: DataFrame, text_col: str = "text", k: int = SHINGLE_K) -> DataFrame:
-    sh = shingles_expr(tokens_expr(F.col(text_col)), k)
-    return docs.withColumn("shingles", sh).select(
-        "*", *minhash_signature_exprs(F.col("shingles"))
-    )
-
-
 def lsh_bands_expr(n_hashes: int = MINHASH_HASHES, n_bands: int = LSH_BANDS) -> Column:
-    """Array of (band, key) structs; key concatenates the band's minhashes."""
+    """Array of (band, key) structs; key concatenates the band's minhashes
+    (the ``mh*`` columns of :func:`minhash_signature_exprs`)."""
     rows_per_band = n_hashes // n_bands
-    bands = []
-    for b in range(n_bands):
-        cols = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-        bands.append(
-            F.struct(F.lit(b).alias("band"), F.concat_ws("#", *cols).alias("key"))
-        )
-    return F.array(*bands)
+    bands = [
+        f"named_struct('band', {b}, 'key', concat_ws('#', "
+        + ", ".join(f"mh{b * rows_per_band + r}" for r in range(rows_per_band))
+        + "))"
+        for b in range(n_bands)
+    ]
+    return F.expr(f"array({', '.join(bands)})")
 
 
 def jaccard_expr(a: Column, b: Column) -> Column:
@@ -1024,7 +1013,7 @@ def minhash_lsh_pairs(
     # the cost lives in shingle materialization and the candidate joins,
     # not here, so the shuffle-free projection stays.
     sig = shingle_sets.select(
-        id_col, *minhash_signature_exprs(F.col("shingles"))
+        id_col, *minhash_signature_exprs("shingles")
     )
     # Candidate generation carries ONLY ids through the band join — shingle
     # sets would otherwise ride the shuffle 4x (once per band) and again
@@ -1083,7 +1072,7 @@ def _minhash_band_rows(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, band, key): the LSH candidate probes derived from
     :func:`_minhash_shingle_rows` output — 4 constant-width rows per doc,
     the gate index's ``bands`` table."""
-    sig = sh.select(id_col, *minhash_signature_exprs(F.col("shingles")))
+    sig = sh.select(id_col, *minhash_signature_exprs("shingles"))
     return sig.select(
         F.col(id_col), F.explode(lsh_bands_expr()).alias("bk")
     ).select(id_col, "bk.band", "bk.key")

@@ -56,7 +56,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..memo import memo
-from .common import const_array
+from .common import const_array, sql_expr
 from .text import bind_expr
 
 LANGID_N = 3  # character trigrams
@@ -65,35 +65,21 @@ LANGID_SCALE = 1 << 20  # fixed-point denominator for the weights
 LANGID_MAX_CHARS = 254  # padded text <= 256 chars -> <= 254 grams/doc
 
 
-def _padded_expr(text: Column, max_chars: int = LANGID_MAX_CHARS) -> Column:
-    return F.concat(
-        F.lit(" "), F.lower(F.substring(text, 1, max_chars)), F.lit(" ")
+def _char_grams_sql(text: str, n: int, max_chars: int) -> str:
+    """The padded text's character n-grams (positions 1..len-n+1) as SQL
+    text. Empty/short texts yield an empty array (Spark's ``sequence(1,
+    0)`` would COUNT DOWN, so the guard is load-bearing); the padded text
+    is bound once per row (the outer ``_p`` lambda), not once per gram."""
+    grams = (
+        f"CASE WHEN length(_p) >= {n} THEN "
+        f"transform(sequence(1, length(_p) - {n - 1}), _i -> substr(_p, _i, {n})) "
+        "ELSE CAST(array() AS array<string>) END"
     )
+    padded = f"concat(' ', lower(substring({text}, 1, {max_chars})), ' ')"
+    return f"element_at(transform(array({padded}), _p -> {grams}), 1)"
 
 
-def char_grams_expr(
-    text: Column, n: int = LANGID_N, max_chars: int = LANGID_MAX_CHARS
-) -> Column:
-    """Array of the padded text's character n-grams (positions 1..len-n+1).
-
-    Empty/short texts yield an empty array (Spark's ``sequence(1, 0)``
-    would COUNT DOWN, so the guard is load-bearing). The padded text is
-    built once per row (bind_expr), not once per gram."""
-
-    def grams(s: Column) -> Column:
-        ln = F.length(s)
-        g = F.transform(
-            F.sequence(F.lit(1), ln - (n - 1)),
-            lambda i: s.substr(i, F.lit(n)),
-        )
-        return F.when(ln >= n, g).otherwise(F.array().cast("array<string>"))
-
-    return bind_expr(_padded_expr(text, max_chars), grams)
-
-
-def gram_bucket_expr(
-    gram: Column, buckets: int = LANGID_BUCKETS, n: int = LANGID_N
-) -> Column:
+def _gram_bucket_sql(gram: str, buckets: int, n: int) -> str:
     """Base-31 polynomial over the gram's code points, mod ``buckets`` —
     exact integer arithmetic every engine reproduces (Spark ``ascii`` ==
     DuckDB ``ord`` == the code point, verified on multibyte chars).
@@ -105,22 +91,26 @@ def gram_bucket_expr(
     1994 uses raw gram identity; fastText uses a polynomial-style hash
     too). Code points < 2^21 keep the n=3 polynomial < 2^31 — exact in
     BIGINT everywhere."""
-    acc: Column | int = 0
+    acc = "0"
     for j in range(n):
-        acc = acc * 31 + F.ascii(F.substring(gram, j + 1, 1)).cast("long")
-    return acc % buckets
+        acc = f"({acc} * 31 + CAST(ascii(substring({gram}, {j + 1}, 1)) AS BIGINT))"
+    return f"{acc} % {buckets}"
 
 
 def gram_buckets_expr(
-    text: Column,
+    text: Column | str,
     n: int = LANGID_N,
     buckets: int = LANGID_BUCKETS,
     max_chars: int = LANGID_MAX_CHARS,
 ) -> Column:
-    """Array of hashed gram buckets for one document — the feature vector."""
-    return F.transform(
-        char_grams_expr(text, n, max_chars),
-        lambda g: gram_bucket_expr(g, buckets, n),
+    """Array of hashed gram buckets for one document — the feature vector,
+    one bucket per character n-gram, as one parsed SQL expression
+    (``text``: a column name, or a Column evaluated once per row —
+    common.sql_expr)."""
+    return sql_expr(
+        lambda t: f"transform({_char_grams_sql(t, n, max_chars)}, "
+        f"_g -> {_gram_bucket_sql('_g', buckets, n)})",
+        text,
     )
 
 
@@ -152,7 +142,7 @@ def train_langid(
         docs.filter(F.col(text_col).isNotNull() & F.col(lang_col).isNotNull())
         .select(
             F.col(lang_col).alias("lang"),
-            F.explode(gram_buckets_expr(F.col(text_col), n, buckets, max_chars)).alias(
+            F.explode(gram_buckets_expr(text_col, n, buckets, max_chars)).alias(
                 "bucket"
             ),
         )
@@ -221,7 +211,7 @@ def langid_score(
     A document with no grams (empty text) scores 0 for every language
     and predicts the lexicographically smallest — callers gate on text
     length upstream if that matters. NULL text predicts NULL."""
-    bcol = gram_buckets_expr(F.col(text_col), n, buckets, max_chars)
+    bcol = gram_buckets_expr(text_col, n, buckets, max_chars)
     docs = docs.withColumn("_lid_buckets", bcol)
     # bind the argmax struct to ONE temp column (r13 opt): embedding the
     # per-language fold tree in both output expressions doubled its
@@ -461,7 +451,7 @@ def langid_score_join(
         .select(
             id_col,
             F.explode(
-                gram_buckets_expr(F.col(text_col), n, buckets, max_chars)
+                gram_buckets_expr(text_col, n, buckets, max_chars)
             ).alias("bucket"),
         )
         .crossJoin(F.broadcast(langs))

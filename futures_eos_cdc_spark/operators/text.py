@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .common import const_array
+from .common import const_array, sql_expr, sql_literal
 
 # Tiny per-language function-word lexicons for the n-gram/stopword heuristic.
 LANG_LEXICONS: dict[str, tuple[str, ...]] = {
@@ -115,7 +115,7 @@ def bind_expr(e: Column, f) -> Column:
     return F.element_at(F.transform(F.array(e), f), 1)
 
 
-def ngrams_expr(arr: Column, k: int, sep: str = " ") -> Column:
+def ngrams_expr(arr: Column | str, k: int, sep: str = " ") -> Column:
     """Every run of ``k`` consecutive elements of ``arr``, joined by
     ``sep``, in position order (duplicates kept); an empty array when
     ``arr`` holds fewer than ``k`` elements, NULL when it is NULL.
@@ -126,18 +126,24 @@ def ngrams_expr(arr: Column, k: int, sep: str = " ") -> Column:
     call, no lambda) and a ``transform`` joining each tuple. Interleaved
     on 50,000 docs, 2 cores: a chain of k-1 ``zip_with``s took 1.27x the
     ``arrays_zip`` time at k=3 and 2.2x at k=8; at k=2 ``zip_with`` took
-    0.91x. Each slice re-reads ``arr``, so pass a column reference or a
-    :func:`bind_expr` lambda variable, not an expression to recompute."""
+    0.91x. One parsed SQL expression (common.sql_expr): ``arr`` is a
+    column name, or a Column evaluated once per row."""
+    return sql_expr(lambda a: _ngrams_sql(a, k, sep), arr)
+
+
+def _ngrams_sql(arr: str, k: int, sep: str = " ") -> str:
+    """:func:`ngrams_expr` as SQL text over the array reference ``arr``,
+    which it reads k + 1 times (a column name or a lambda parameter)."""
     if k == 1:
         return arr
-    m = F.greatest(F.size(arr) - (k - 1), F.lit(0))
-    slices = [F.slice(arr, j, m) for j in range(1, k + 1)]
+    m = f"greatest(size({arr}) - {k - 1}, 0)"
+    slices = [f"slice({arr}, {j}, {m})" for j in range(1, k + 1)]
+    sep = sql_literal(sep)
     if k == 2:
-        return F.zip_with(*slices, lambda a, b: F.concat_ws(sep, a, b))
+        return f"zip_with({slices[0]}, {slices[1]}, (_a, _b) -> concat_ws({sep}, _a, _b))"
     # arrays_zip names the fields of unnamed inputs "0".."k-1"
-    return F.transform(
-        F.arrays_zip(*slices), lambda x: F.concat_ws(sep, *[x[str(j)] for j in range(k)])
-    )
+    fields = ", ".join(f"_z['{j}']" for j in range(k))
+    return f"transform(arrays_zip({', '.join(slices)}), _z -> concat_ws({sep}, {fields}))"
 
 
 def token_count_expr(text: Column) -> Column:
@@ -272,17 +278,19 @@ def lang_id_expr(text: Column) -> Column:
     )
 
 
-def shingles_expr(tokens: Column, k: int) -> Column:
+def shingles_expr(tokens: Column | str, k: int) -> Column:
     """Distinct k-token shingles in first-occurrence order; documents
     shorter than k tokens collapse to a single whole-document shingle (so
-    every doc has ≥1 shingle). ``tokens`` is evaluated once per row."""
+    every doc has ≥1 shingle). One parsed SQL expression: ``tokens`` is a
+    column name, or a Column evaluated once per row (common.sql_expr)."""
+    return sql_expr(lambda t: _shingles_sql(t, k), tokens)
 
-    def f(t: Column) -> Column:
-        return F.when(F.size(t) >= k, F.array_distinct(ngrams_expr(t, k))).otherwise(
-            F.array(F.concat_ws(" ", t))
-        )
 
-    return bind_expr(tokens, f)
+def _shingles_sql(t: str, k: int) -> str:
+    return (
+        f"CASE WHEN size({t}) >= {k} THEN array_distinct({_ngrams_sql(t, k)}) "
+        f"ELSE array(concat_ws(' ', {t})) END"
+    )
 
 
 def fingerprint_expr(text: Column, k: int = 8) -> Column:
@@ -292,8 +300,10 @@ def fingerprint_expr(text: Column, k: int = 8) -> Column:
     shingle hash is shared as long as the minimizing shingle survives edits).
     One pass over the token array, no shuffle.
     """
-    sh = shingles_expr(tokens_expr(text), k)
-    return F.array_min(F.transform(sh, F.md5))
+    return sql_expr(
+        lambda t: f"array_min(transform({_shingles_sql(t, k)}, _s -> md5(_s)))",
+        tokens_expr(text),
+    )
 
 
 def with_text_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:

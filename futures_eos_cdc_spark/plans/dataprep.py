@@ -764,7 +764,7 @@ def q_benchmark_contamination(spark: SparkSession, sf_dir: str, _t) -> DataFrame
     ).filter(F.size("t") >= CONTAM_K)
     grams = docs.select(
         "doc_id",
-        F.explode(ngrams_expr(F.col("t"), CONTAM_K)).alias("g"),
+        F.explode(ngrams_expr("t", CONTAM_K)).alias("g"),
     )
     eval_g = grams.filter(F.col("doc_id") % 17 == 0).select("g").distinct()
     return (
@@ -890,7 +890,7 @@ def q_train_val_test_split(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     docs = hash_split(spread(_t(spark, sf_dir, "documents")), "doc_id", _SPLIT_WEIGHTS)
     return docs.groupBy("split", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        _davg(F.col("n_chars"), "avg_chars"),
+        _davg("n_chars", "avg_chars"),
     )
 
 
@@ -1351,7 +1351,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     ).filter(F.size("t") >= CONTAM_K)
     grams = toks.select(
         "doc_id",
-        F.explode(ngrams_expr(F.col("t"), CONTAM_K)).alias("g"),
+        F.explode(ngrams_expr("t", CONTAM_K)).alias("g"),
     )
     eval_g = grams.filter(F.col("doc_id") % 17 == 0).select("g").distinct()
     contaminated = (
@@ -2266,7 +2266,7 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     )
     bigrams = docs.select(
         "doc_id",
-        F.explode(ngrams_expr(F.col("arr"), 2)).alias("bg"),
+        F.explode(ngrams_expr("arr", 2)).alias("bg"),
     )
     bstats = (
         bigrams.groupBy("doc_id", "bg")
@@ -5324,7 +5324,7 @@ def q_semantic_decontamination(spark: SparkSession, sf_dir: str, _t) -> DataFram
         "vec_id", F.col("embedding").alias("c_vec")
     )
     scored = tr.crossJoin(F.broadcast(ev)).withColumn(
-        "cosine", cosine_expr(F.col("q_vec"), F.col("c_vec"))
+        "cosine", cosine_expr("q_vec", "c_vec")
     )
     return scored.groupBy("vec_id").agg(
         F.round(F.max("cosine"), 6).alias("max_sim"),

@@ -47,14 +47,17 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def _dsum(col, alias: str):
-    """Order-independent double sum: exact decimal sum, cast back to double."""
-    return F.sum(col.cast(DEC)).cast("double").alias(alias)
+def _dsum(sql: str, alias: str):
+    """Order-independent double sum of the SQL expression ``sql``: exact
+    decimal sum, cast back to double. One parsed expression, alias
+    included (one py4j round trip)."""
+    return F.expr(f"CAST(sum(CAST({sql} AS {DEC})) AS DOUBLE) AS {alias}")
 
 
-def _davg(col, alias: str):
-    """Order-independent mean: exact decimal sum / count."""
-    return (F.sum(col.cast(DEC)).cast("double") / F.count(col)).alias(alias)
+def _davg(sql: str, alias: str):
+    """Order-independent mean of the SQL expression ``sql``: exact decimal
+    sum / count, as one parsed expression."""
+    return F.expr(f"CAST(sum(CAST({sql} AS {DEC})) AS DOUBLE) / count({sql}) AS {alias}")
 
 
 def _ntz_lit(iso: str):
@@ -122,19 +125,19 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     (low-cardinality) group keys; AQE coalesces the post-shuffle partitions.
     """
     li = _t(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1.0 - F.col("l_discount"))
-    charge = disc_price * (1.0 + F.col("l_tax"))
+    disc_price = "l_extendedprice * (1D - l_discount)"
+    charge = f"{disc_price} * (1D + l_tax)"
     return (
         li.filter(F.col("l_shipdate") <= _ntz_lit("1998-09-02 00:00:00"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            _dsum(F.col("l_quantity"), "sum_qty"),
-            _dsum(F.col("l_extendedprice"), "sum_base_price"),
+            _dsum("l_quantity", "sum_qty"),
+            _dsum("l_extendedprice", "sum_base_price"),
             _dsum(disc_price, "sum_disc_price"),
             _dsum(charge, "sum_charge"),
-            _davg(F.col("l_quantity"), "avg_qty"),
-            _davg(F.col("l_extendedprice"), "avg_price"),
-            _davg(F.col("l_discount"), "avg_disc"),
+            _davg("l_quantity", "avg_qty"),
+            _davg("l_extendedprice", "avg_price"),
+            _davg("l_discount", "avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
     )
@@ -180,7 +183,7 @@ def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("c_custkey", "c_name", F.col("n_name").alias("nation"), F.col("r_name").alias("region"))
         .agg(
-            _dsum(F.col("o_totalprice"), "revenue"),
+            _dsum("o_totalprice", "revenue"),
             F.count(F.lit(1)).alias("n_orders"),
         )
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))

@@ -312,7 +312,7 @@ def q_cube(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
     return o.cube("o_orderpriority", "o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        _dsum(F.col("o_totalprice"), "revenue"),
+        _dsum("o_totalprice", "revenue"),
     )
 
 
@@ -534,7 +534,7 @@ def q_range_join(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     )
     return joined.groupBy("purchase_id").agg(
         F.count(F.col("c_us")).alias("n_clicks"),
-        _dsum(F.col("value"), "click_value"),
+        _dsum("value", "click_value"),
     )
 
 
@@ -629,7 +629,7 @@ def q_histogram(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
         .groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            _dsum(F.col("o_totalprice"), "total"),
+            _dsum("o_totalprice", "total"),
         )
     )
 

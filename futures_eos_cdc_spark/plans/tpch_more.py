@@ -50,7 +50,7 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
             _ntz_epoch_s("o_orderdate").alias("o_orderdate_s"),
             "o_orderpriority",
         )
-        .agg(_dsum(F.col("l_extendedprice") * (1.0 - F.col("l_discount")), "revenue"))
+        .agg(_dsum("l_extendedprice * (1D - l_discount)", "revenue"))
         .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
         .limit(10)
     )
@@ -136,7 +136,7 @@ def q_forecast_revenue(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
             & (F.col("l_quantity") < 24.0)
         )
         .agg(
-            _dsum(F.col("l_extendedprice") * F.col("l_discount"), "revenue"),
+            _dsum("l_extendedprice * l_discount", "revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -362,7 +362,7 @@ def q_large_volume_orders(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
             _ntz_epoch_s("o_orderdate").alias("o_orderdate_s"),
             "o_totalprice",
         )
-        .agg(_dsum(F.col("l_quantity"), "total_qty"))
+        .agg(_dsum("l_quantity", "total_qty"))
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
         .limit(20)
     )

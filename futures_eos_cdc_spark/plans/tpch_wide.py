@@ -256,7 +256,7 @@ def q_returned_items(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
         .join(li, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", F.col("n_name").alias("nation"))
-        .agg(_dsum(F.col("l_extendedprice") * (1.0 - F.col("l_discount")), "revenue"))
+        .agg(_dsum("l_extendedprice * (1D - l_discount)", "revenue"))
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))
         .limit(20)
     )
@@ -370,7 +370,7 @@ def q_top_supplier(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
         & (F.col("l_shipdate") < _ntz_lit("1997-04-01 00:00:00"))
     )
     rev = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        _dsum(F.col("l_extendedprice") * (1.0 - F.col("l_discount")), "total_revenue")
+        _dsum("l_extendedprice * (1D - l_discount)", "total_revenue")
     )
     mx = rev.agg(F.max("total_revenue").alias("mx"))
     s = _t(spark, sf_dir, "supplier")

@@ -20,6 +20,17 @@ overwrite "in a non-atomic way"), and the FileSystem manager checks
 overwrite=false)`` of one offset or commit file still fails. Spark's
 ``ChecksumCheckpointFileManager`` still wraps the chosen manager for state
 files, so their checksum files are still written and verified.
+
+PySpark's DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``,
+on by default since 4.0) is off. With it on, every ``functions``/Column call
+also records its Python call site in the JVM: extra py4j round trips to set
+and clear the origin and to read ``spark.sql.stackTracesInDataFrameContext``,
+plus a failed ``import ipykernel`` per call when IPython is installed. That
+more than doubled the round trips of a query build (q1_pricing_summary: 517
+against 127) and is paid on every build, since queries are rebuilt per
+call. Analysis errors still name the unresolved column and the plan; they
+only lose the Python line of the failing call. PySpark reads the flag once
+per process, on its first wrapped call, so the builder sets it before any.
 """
 
 from __future__ import annotations
@@ -51,6 +62,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config(
             "spark.sql.streaming.checkpointFileManagerClass",
             "org.apache.spark.sql.execution.streaming.checkpointing."

@@ -6,10 +6,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from futures_eos_cdc_spark.operators.dedup import (
+    SHINGLE_K,
     jaccard_expr,
     minhash_lsh_pairs,
+    minhash_signature_exprs,
     ngram_jaccard_pairs,
-    with_minhash,
 )
 from futures_eos_cdc_spark.operators.multimodal import (
     MEDIA_FEATURES_SCHEMA,
@@ -123,8 +124,16 @@ def test_minhash_pairs_symmetric_and_thresholded(spark, sf_dir):
 
 def test_minhash_identical_docs_have_identical_signatures(spark, sf_dir):
     d = _docs(spark, sf_dir).limit(20)
-    sig1 = with_minhash(d.select("doc_id", "text")).select("doc_id", "mh0", "mh7")
-    sig2 = with_minhash(d.select("doc_id", "text")).select("doc_id", "mh0", "mh7")
+
+    def signatures():
+        sh = d.select(
+            "doc_id", shingles_expr(tokens_expr(F.col("text")), SHINGLE_K).alias("shingles")
+        )
+        return sh.select("doc_id", *minhash_signature_exprs("shingles")).select(
+            "doc_id", "mh0", "mh7"
+        )
+
+    sig1, sig2 = signatures(), signatures()
     assert sorted(map(tuple, sig1.collect())) == sorted(map(tuple, sig2.collect()))
 
 
@@ -986,6 +995,54 @@ def test_assign_kernel_closure_pickles_self_contained():
         subprocess.run(
             [sys.executable, "-c", code], cwd="/", check=True, timeout=120
         )
+
+
+def _probe_cells_by_loop(x, C, take):
+    """Per-row reference of the probe kernel: re-score every cell in the
+    band of the approximate take-th smallest distance exactly (per-dim
+    left fold) and keep the first ``take`` by (exact d, cell)."""
+    import numpy as np
+
+    d2 = x @ (-2.0 * C.T) + (C * C).sum(axis=1)[None, :]
+    t = np.partition(d2, take - 1, axis=1)[:, take - 1]
+    band = d2 <= (t + np.maximum(1e-6, np.abs(t) * 1e-9))[:, None]
+    out = []
+    for i in range(len(x)):
+        cand = np.nonzero(band[i])[0]
+        acc = np.zeros(len(cand))
+        for d in range(x.shape[1]):
+            diff = x[i, d] - C[cand, d]
+            acc += diff * diff
+        out.extend(cand[np.lexsort((cand, acc))[:take]])
+    return out
+
+
+def test_probe_kernel_matches_per_row_rescore():
+    """The probe kernel (take > 1) re-scores bands of exactly ``take`` cells
+    vectorized and only wider bands per row; it must emit the same cells in
+    the same order as re-scoring every row in a loop, on random input and
+    on tie-heavy input (duplicated centroids put more than ``take`` cells
+    in most bands)."""
+    import numpy as np
+    import pandas as pd
+
+    from futures_eos_cdc_spark.operators.similarity import _make_nearest_fn
+
+    rng = np.random.default_rng(7)
+    base = rng.normal(size=(12, 6))
+    cases = {
+        "random": rng.normal(size=(40, 6)),
+        "duplicated": np.vstack([base, base, base[:5]]),
+    }
+    x = rng.normal(size=(300, 6))
+    x[:20] = base[:20 // 2].repeat(2, axis=0)  # rows sitting on centroids
+    pdf = pd.DataFrame({"vec_id": np.arange(len(x)), "embedding": list(x)})
+    for name, C in cases.items():
+        for take in (2, 3, 5):
+            fn = _make_nearest_fn([C], "embedding", ["vec_id"], "cell", take, False)
+            out = pd.concat(list(fn(iter([pdf]))))
+            assert list(out["vec_id"]) == list(np.repeat(pdf["vec_id"], take)), name
+            assert list(out["cell"]) == _probe_cells_by_loop(x, C, take), (name, take)
 
 
 def test_ann_ivf_kernel_path_matches_expression_path(spark, sf_dir, monkeypatch):

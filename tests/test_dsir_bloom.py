@@ -286,8 +286,8 @@ def test_bloom_probe_expr_builds_in_few_py4j_round_trips(spark, monkeypatch):
     4,096-word bitmap costs fewer than 100 py4j round trips more than
     over a 1-word bitmap, not one or more per word (F.lit(list) made
     ~16,500 more). The rest of the probe (the k bit-position
-    expressions, ~200 round trips while PySpark's DataFrame debugging
-    wraps every functions call) costs the same for both."""
+    expressions, ~160 round trips with PySpark's DataFrame debugging off,
+    as get_spark sets it) costs the same for both."""
     from py4j.clientserver import ClientServerConnection
 
     from futures_eos_cdc_spark.operators.bloom import bloom_probe_expr

@@ -13,7 +13,7 @@ import pytest
 from futures_eos_cdc_spark.operators.langid import (
     LANGID_BUCKETS,
     LANGID_SCALE,
-    char_grams_expr,
+    gram_buckets_expr,
     langid_model,
     langid_score,
     langid_score_join,
@@ -136,7 +136,7 @@ def test_langid_weights_are_exact_fixed_point(spark):
             r["total"] + LANGID_BUCKETS
         )
     grams = (
-        docs.select(F.explode(char_grams_expr(F.col("text"))).alias("g"))
+        docs.select(F.explode(gram_buckets_expr(F.col("text"))).alias("g"))
         .count()
     )
     assert grams == sum(r["count"] for r in rows)

@@ -16,9 +16,9 @@ from futures_eos_cdc_spark.operators.dedup import (
     simhash16_expr,
 )
 from futures_eos_cdc_spark.operators.dsir import grams_expr
+from futures_eos_cdc_spark.operators.common import sql_expr
 from futures_eos_cdc_spark.operators.langid import (
-    _padded_expr,
-    char_grams_expr,
+    _char_grams_sql,
     gram_buckets_expr,
     langid_best_expr,
     langid_ranked_expr,
@@ -77,8 +77,13 @@ def _old_contam_grams(t, k):
     )
 
 
+def _char_grams(text, n=3, max_chars=254):
+    """The character n-grams gram_buckets_expr hashes, as a Column."""
+    return sql_expr(lambda t: _char_grams_sql(t, n, max_chars), text)
+
+
 def _old_char_grams(text, n=3, max_chars=254):
-    s = _padded_expr(text, max_chars)
+    s = F.concat(F.lit(" "), F.lower(F.substring(text, 1, max_chars)), F.lit(" "))
     ln = F.length(s)
     grams = F.transform(
         F.sequence(F.lit(1), ln - (n - 1)), lambda i: s.substr(i, F.lit(n))
@@ -169,8 +174,8 @@ def test_bigram_constructions_match_k2(texts):
 
 def test_char_grams_match_per_element_form(texts):
     t = F.col("text")
-    got = _same(texts, char_grams_expr(t), _old_char_grams(t))
-    _same(texts, char_grams_expr(t, 2, 5), _old_char_grams(t, 2, 5))
+    got = _same(texts, _char_grams(t), _old_char_grams(t))
+    _same(texts, _char_grams(t, 2, 5), _old_char_grams(t, 2, 5))
     assert got[TEXTS.index(None)] == [] and got[TEXTS.index("")] == []
     cjk = got[TEXTS.index("東京は日本の首都です。大阪も大きい")]
     assert cjk[:2] == [" 東京", "東京は"]
@@ -189,7 +194,7 @@ def _kernels():
     out = {
         "shingles_expr": shingles_expr(tokens_expr(t), 3),
         "fingerprint_expr": fingerprint_expr(t),
-        "char_grams_expr": char_grams_expr(t),
+        "char_grams": _char_grams(t),
         "gram_buckets_expr": gram_buckets_expr(t),
         "simhash16_expr": simhash16_expr(tokens_expr(t)),
         "dsir.grams_expr": grams_expr(tokens_expr(t)),

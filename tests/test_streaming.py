@@ -388,6 +388,20 @@ def test_session_uses_filesystem_checkpoint_manager(spark, tmp_path):
     assert _checkpoint_manager(spark, str(tmp_path)).getClass().getName() == _FS_MANAGER
 
 
+def test_session_turns_dataframe_debugging_off_and_errors_stay_readable(spark, sf_dir):
+    """get_spark turns PySpark's DataFrame debugging off (each Column call
+    would otherwise record its call site through extra py4j round trips).
+    An analysis error still names its error class and the column."""
+    from pyspark.errors import AnalysisException
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    docs = load_table(spark, sf_dir, "documents")
+    with pytest.raises(AnalysisException) as err:
+        docs.select(F.col("doc_idd"))
+    assert "UNRESOLVED_COLUMN" in str(err.value)
+    assert "doc_idd" in str(err.value)
+
+
 def test_checkpoint_create_atomic_never_overwrites(spark, tmp_path):
     """The no-overwrite guarantee the offset and commit logs rely on: a
     second createAtomic(path, overwriteIfPossible=false) fails on close."""

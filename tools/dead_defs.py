@@ -56,7 +56,6 @@ TEST_ONLY_ALLOWED = {
     "bucketing.write_partitioned": "COVERAGE Hive-partitioned layout row",
     "clustering.dedup_keep_representatives": "public API: test_dedup_keep_representatives",
     "dataprep._ml_lm_frame": "COVERAGE Moore-Lewis row: test_moore_lewis_separates_domains",
-    "dedup.with_minhash": "public API: test_minhash_identical_docs_have_identical_signatures",
     "dsir.dsir_ratio_literal": "COVERAGE composed streaming selection gate row",
     "generator.generate_signals": "COVERAGE S3/P17 (synthetic signal generator)",
     "jdbc.recent_orders": "COVERAGE S6 (recent orders)",
