@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .common import spread, sql_expr
-from .text import bind_expr, shingles_expr, tokens_expr
+from .text import shingles_expr, tokens_expr
 
 MINHASH_HASHES = 8
 LSH_BANDS = 4  # 4 bands x 2 rows: catches jaccard ≳ 0.4 pairs w.h.p.
@@ -1328,28 +1328,17 @@ def simhash16_expr(tokens: Column) -> Column:
     """Portable 16-bit SimHash over distinct tokens.
 
     Bit c is set iff more than half the token hashes have the top bit of
-    md5 hex digit c set (the classic ±1 vote, restated as 2·count > n).
-    The md5 array is computed once per row (bind_expr: an expression
-    argument of 17 higher-order functions would otherwise be re-evaluated
-    by each); 16 bit-votes read substrings of it. A 64-bit xxhash64
-    variant is the production path; this one is reproducible in any SQL
-    engine.
+    md5 hex digit c+1 set (the classic ±1 vote, restated as 2·count > n):
+    bit 2c of the 64-bit vote (``_simhash_vote_sql``). The md5 array is
+    computed once per row (common.sql_expr binds it to a lambda variable:
+    an expression argument of 17 higher-order functions would otherwise be
+    re-evaluated by each). A 64-bit variant is the production path; this
+    one is reproducible in any SQL engine.
     """
-    def _top_bit_at(pos: int):
-        def f(h: Column) -> Column:
-            return F.substring(h, pos, 1).isin("8", "9", "a", "b", "c", "d", "e", "f")
-
-        return f
-
-    def votes(hs: Column) -> Column:
-        n = F.size(hs)
-        total = F.lit(0)
-        for c in range(16):
-            set_cnt = F.size(F.filter(hs, _top_bit_at(c + 1)))
-            total = total + F.when(set_cnt * 2 > n, F.lit(1 << c)).otherwise(F.lit(0))
-        return total.cast("long")
-
-    return bind_expr(F.transform(F.array_distinct(tokens), F.md5), votes)
+    return sql_expr(
+        lambda hs: _simhash_vote_sql(hs, range(0, 32, 2)),
+        F.transform(F.array_distinct(tokens), F.md5),
+    )
 
 
 def simhash_hamming_pairs(
@@ -1407,29 +1396,30 @@ _HEX_TOP = "'8','9','a','b','c','d','e','f'"  # hex digit with bit 3 set
 _HEX_BIT2 = "'4','5','6','7','c','d','e','f'"  # hex digit with bit 2 set
 
 
-def _simhash64_sum_sql(hs_col: str) -> str:
-    """SQL for the 64-bit majority-vote sum over an md5-hex array column.
+def _simhash_vote_sql(hs: str, bits) -> str:
+    """SQL for the majority-vote SimHash over the md5-hex array ``hs``:
+    the i-th entry of ``bits`` is signature bit i.
 
-    Bit c reads md5 hex digit c//2: even c votes on the digit's top bit
-    (value ≥ 8), odd c on its bit 2 (value & 4) — two independent hash bits
-    per digit, so 32 digits yield 64 signature bits, and every vote is a
+    Vote bit b reads md5 hex digit b//2: even b votes on the digit's top
+    bit (value ≥ 8), odd b on its bit 2 (value & 4) — two independent hash
+    bits per digit, so 32 digits yield 64 vote bits, and every vote is a
     plain substring+IN any SQL engine replays byte-identically. Built as ONE
-    SQL string (not 64 py4j Column calls) per the plan-construction-cost
-    rule; the terms are CASE sums, not an unrolled fold, so codegen is the
-    same plan the 16-bit loop-built variant produces.
+    SQL string (not one py4j Column call per term) per the
+    plan-construction-cost rule; the terms are CASE sums, not an unrolled
+    fold.
 
-    Bit 63's weight is two's-complement MIN_LONG (spelled -(2^63-1)-1: the
-    literal -9223372036854775808 would parse as a DECIMAL in Spark). Summing
-    distinct powers of two never overflows: positive terms total ≤ 2^63-1.
+    Signature bit 63's weight is two's-complement MIN_LONG (spelled
+    -(2^63-1)-1: the literal -9223372036854775808 would parse as a DECIMAL
+    in Spark). Summing distinct powers of two never overflows: positive
+    terms total ≤ 2^63-1.
     """
     terms = []
-    for c in range(64):
-        digit_pos = c // 2 + 1  # 1-based substring position
-        hexset = _HEX_TOP if c % 2 == 0 else _HEX_BIT2
-        val = "(-9223372036854775807 - 1)" if c == 63 else str(1 << c)
+    for i, b in enumerate(bits):
+        hexset = _HEX_TOP if b % 2 == 0 else _HEX_BIT2
+        val = "(-9223372036854775807 - 1)" if i == 63 else str(1 << i)
         terms.append(
-            f"(CASE WHEN 2 * size(filter({hs_col}, h -> "
-            f"substring(h, {digit_pos}, 1) IN ({hexset}))) > size({hs_col}) "
+            f"(CASE WHEN 2 * size(filter({hs}, h -> "
+            f"substring(h, {b // 2 + 1}, 1) IN ({hexset}))) > size({hs}) "
             f"THEN {val} ELSE CAST(0 AS BIGINT) END)"
         )
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
@@ -1444,7 +1434,7 @@ def with_simhash64(
     )
     return (
         docs.select(F.col(id_col), hs.alias("_hs"))
-        .select(id_col, F.expr(_simhash64_sum_sql("_hs")).alias("sig"))
+        .select(id_col, F.expr(_simhash_vote_sql("_hs", range(64))).alias("sig"))
     )
 
 

@@ -293,11 +293,26 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
 # ---------------------------------------------------------------------------
 # SimHash buckets (portable 16-bit)
 # ---------------------------------------------------------------------------
-_SIMHASH_BITS_SQL = " + ".join(
-    f"CASE WHEN 2 * len(list_filter(hs, h -> substring(h, {c + 1}, 1) IN "
-    f"('8','9','a','b','c','d','e','f'))) > len(hs) THEN {1 << c} ELSE 0 END"
-    for c in range(16)
-)
+def _simhash_vote_duck(bits) -> str:
+    """DuckDB replay of operators/dedup._simhash_vote_sql: the i-th entry of
+    ``bits`` is signature bit i; vote bit b reads md5 hex digit b//2 (even
+    b its top bit, odd b its bit 2), bit 63 weighted two's-complement
+    MIN_LONG."""
+    top = "'8','9','a','b','c','d','e','f'"
+    bit2 = "'4','5','6','7','c','d','e','f'"
+    terms = []
+    for i, b in enumerate(bits):
+        hexset = top if b % 2 == 0 else bit2
+        val = "(-9223372036854775807 - 1)" if i == 63 else str(1 << i)
+        terms.append(
+            f"(CASE WHEN 2 * len(list_filter(hs, h -> "
+            f"substring(h, {b // 2 + 1}, 1) IN ({hexset}))) > len(hs) "
+            f"THEN {val} ELSE 0 END)"
+        )
+    return " + ".join(terms)
+
+
+_SIMHASH_BITS_SQL = _simhash_vote_duck(range(0, 32, 2))
 
 SIMHASH_ORACLE = f"""
 WITH t AS (
@@ -353,24 +368,6 @@ def q_simhash_hamming(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
 # ---------------------------------------------------------------------------
 # 64-bit SimHash + Charikar block index (Hamming ≤ 3) — production width
 # ---------------------------------------------------------------------------
-def _simhash64_bits_duck() -> str:
-    """DuckDB replay of operators/dedup._simhash64_sum_sql: 2 vote bits per
-    md5 hex digit, bit 63 weighted two's-complement MIN_LONG."""
-    top = "'8','9','a','b','c','d','e','f'"
-    bit2 = "'4','5','6','7','c','d','e','f'"
-    terms = []
-    for c in range(64):
-        pos = c // 2 + 1
-        hexset = top if c % 2 == 0 else bit2
-        val = "(-9223372036854775807 - 1)" if c == 63 else str(1 << c)
-        terms.append(
-            f"(CASE WHEN 2 * len(list_filter(hs, h -> "
-            f"substring(h, {pos}, 1) IN ({hexset}))) > len(hs) "
-            f"THEN {val} ELSE 0 END)"
-        )
-    return " + ".join(terms)
-
-
 def _blk_differs_duck(j: int) -> str:
     return f"(((a.sig >> {16 * j}) & 65535) != ((b.sig >> {16 * j}) & 65535))"
 
@@ -383,7 +380,7 @@ WITH t AS (
   FROM documents
 ),
 s AS (
-  SELECT doc_id, CAST({_simhash64_bits_duck()} AS BIGINT) AS sig FROM t
+  SELECT doc_id, CAST({_simhash_vote_duck(range(64))} AS BIGINT) AS sig FROM t
 ),
 bk AS (
   SELECT doc_id, sig, unnest([0, 1, 2, 3]) AS blk FROM s

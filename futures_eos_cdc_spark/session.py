@@ -31,6 +31,33 @@ against 127) and is paid on every build, since queries are rebuilt per
 call. Analysis errors still name the unresolved column and the plan; they
 only lose the Python line of the failing call. PySpark reads the flag once
 per process, on its first wrapped call, so the builder sets it before any.
+
+Spark keeps the classes Janino compiles for generated code in one JVM-wide
+LRU cache of ``spark.sql.codegen.cache.maxEntries`` entries, 100 by default.
+A warm pass of the six queries the repository benchmark mixes needs 121
+classes on its inputs (141 on the sf0.001 fixture), so at the default every
+warm call missed the cache and recompiled all of its classes: 1.6 s of
+Janino per pass on the fixture, 4 vCPUs. The 138 registered queries, run
+in rotation in one session on the fixture, compiled ~2,560 classes in each
+warm rotation at the default; their working set is ~1,640 classes. The
+builder sizes the cache at 4,096 entries, about 2.5 times that. It stays
+bounded because a stream compiles one new class per micro-batch: Spark
+inlines the current watermark as a literal into the state-eviction
+predicate of a windowed aggregation, so an unbounded cache would grow for
+as long as the stream runs. The size is a static conf, read once when the
+JVM first generates code, so the builder sets it before any query runs.
+
+Whole-stage generated classes are named without their codegen stage id
+(``spark.sql.codegen.useIdInClassName=false``). Adaptive execution numbers
+a query's stages in the order it plans them, which varies from call to
+call, and the id is part of the generated source, so the same pipeline
+under a new id is a new class: with the id in the name, six registered
+queries (``q2_min_cost_supplier``, the containment pair, ...) still
+recompiled 4-11 classes per warm call with the large cache. Without it,
+the registry's third rotation compiled 0-6 classes in three sessions
+(adaptive plan variants met late). Plans still print the stage id
+(``*(9)``). ``tools/codegen_budget.py`` counts the compiles per query and
+rotation.
 """
 
 from __future__ import annotations
@@ -63,6 +90,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config(
             "spark.sql.streaming.checkpointFileManagerClass",
             "org.apache.spark.sql.execution.streaming.checkpointing."

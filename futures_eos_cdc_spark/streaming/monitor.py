@@ -89,10 +89,11 @@ def operator_counters() -> dict[str, int]:
     read, so stale entries still clear within three monitoring polls; a
     transient error resets on the next successful read). Monitoring itself
     never throws. The session memo's per-namespace ``memo.<ns>.hits`` and
-    ``memo.<ns>.misses`` counts (memo.py) are merged in.
+    ``memo.<ns>.misses`` counts (memo.py) and the JVM's ``codegen_counters``
+    are merged in.
     """
     with _OP_LOCK:
-        out, dead = memo_counters(), []
+        out, dead = {**memo_counters(), **codegen_counters()}, []
         for k, v in _OPERATOR_COUNTERS.items():
             try:
                 out[k] = v.value
@@ -106,6 +107,28 @@ def operator_counters() -> dict[str, int]:
             del _OPERATOR_COUNTERS[k]
             _OP_READ_FAILURES.pop(k, None)
         return out
+
+
+def codegen_counters() -> dict[str, int]:
+    """``codegen.compiles`` and ``codegen.compile_ms``: the classes Janino
+    has compiled for generated code in this JVM, and the time it took —
+    misses of Spark's codegen class cache (session.py sizes it). Empty when
+    no SparkContext is active or the JVM cannot be read."""
+    from py4j.protocol import Py4JError
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return {}
+    try:
+        jvm = sc._jvm
+        compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+            .METRIC_COMPILATION_TIME().getCount()
+        nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen \
+            .CodeGenerator.compileTime()
+    except (Py4JError, AttributeError):  # gateway closed, or no JVM view
+        return {}
+    return {"codegen.compiles": int(compiles), "codegen.compile_ms": int(nanos) // 1_000_000}
 
 
 # Per-trigger time breakdown kept by ProgressRecorder: its column name and

@@ -172,3 +172,20 @@ def test_console_peek_writer_runs(spark, sf_dir, tmp_path):
         assert q.lastProgress is not None
     finally:
         q.stop()
+
+
+def test_operator_counters_carry_codegen_compiles(spark, monkeypatch):
+    """The JVM's codegen class-cache misses reach the monitor surface while
+    a SparkContext is active, and are omitted (never raised) without one."""
+    from pyspark import SparkContext
+
+    from futures_eos_cdc_spark.streaming.monitor import operator_counters
+
+    before = operator_counters()
+    spark.range(3).selectExpr("id * 6007 + 104723").collect()  # a new class
+    after = operator_counters()
+    assert after["codegen.compiles"] > before["codegen.compiles"]
+    assert after["codegen.compile_ms"] >= before["codegen.compile_ms"]
+
+    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
+    assert not any(k.startswith("codegen.") for k in operator_counters())

@@ -1,5 +1,6 @@
 """Plan construction stays cheap: a ceiling on the main-thread py4j round
-trips of each batch_mix query's warm build (tools/py4j_budget.py's counter).
+trips of each batch_mix query's warm build, and of the SimHash pair's
+(tools/py4j_budget.py's counter).
 
 The count of a warm build is deterministic, so a builder that goes back to
 one Column call per element, or a session that turns PySpark's DataFrame
@@ -18,7 +19,7 @@ _TOOL = os.path.join(
 )
 
 # measured + ~20% headroom
-CEILINGS = {
+BATCH_MIX = {
     "signal_decisions": 30,
     "q1_pricing_summary": 80,
     "langid_scores": 150,
@@ -26,6 +27,8 @@ CEILINGS = {
     "ngram_jaccard_near_dup": 650,
     "minhash_lsh_near_dup": 400,
 }
+# 1,447 and 1,560 while the 16-bit vote was folded one Column call per bit
+CEILINGS = {**BATCH_MIX, "simhash_buckets": 145, "simhash_hamming_near_dup": 280}
 
 
 def _tool():
@@ -47,7 +50,7 @@ def test_warm_build_round_trips_under_ceiling(counts, name):
 
 
 def test_batch_mix_builds_total_under_1500(counts):
-    assert sum(counts.values()) <= 1500, counts
+    assert sum(counts[name] for name in BATCH_MIX) <= 1500, counts
 
 
 def test_counter_counts_only_the_main_thread(spark):
