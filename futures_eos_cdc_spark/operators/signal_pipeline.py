@@ -48,7 +48,7 @@ skew-join; the ranking window is bounded per group only by window span.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import SIGNAL_WIRE_SCHEMA
@@ -145,30 +145,73 @@ def signals_from_events(events: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# A1: epoch-aligned tumbling window bucket
-# ---------------------------------------------------------------------------
-def window_start_s_expr(window_seconds: int = WINDOW_SECONDS) -> Column:
-    """Tumbling-window start (epoch seconds, BIGINT) from epoch-micros ts_us.
-
-    Integer `div` — NEVER double division: epoch-micros (~1.7e15) sits at the
-    edge of a double's 53-bit exact-integer range, so float math could
-    mis-bucket. Epoch-aligned exactly like Kafka Streams' TimeWindows
-    (SignalTopology.kt:52).
-    """
-    w_us = window_seconds * 1_000_000
-    return F.expr(f"(ts_us div {w_us}) * {window_seconds}").cast("long")
-
-
-def _dec_avg(sum_col: str, cnt_col: str) -> Column:
-    return F.col(sum_col).cast("double") / F.col(cnt_col)
-
-
-# ---------------------------------------------------------------------------
 # The full decision pipeline (batch form, window-function based)
 # ---------------------------------------------------------------------------
+def decision_tail_sql(rel: str, round_dp: int) -> str:
+    """The decision math (D1-D5, confidence, price, qty, reason and the
+    output casts) as the ``act`` CTE plus the final SELECT: the one
+    rendering that batch :func:`decide` and the streaming decides
+    (streaming/pipeline.py) both end with. Follows a ``WITH ...,`` prefix.
+
+    ``rel`` is a relation with one row per (symbol, window) that passed P5
+    and the columns symbol, window_start_s, n_timeframes, balance,
+    n_signals, avg_price, avg_volatility, alignment and recent5 (an array
+    of the five most recent buffered signals, structs with a ``qty``
+    field)."""
+    dec = DEC.upper()
+    return f"""act AS (
+  SELECT *,
+    CAST(aggregate(recent5, CAST('0' AS {dec}),
+                   (acc, x) -> CAST(acc + CAST(x.qty AS {dec}) AS {dec}))
+         AS DOUBLE) / size(recent5) AS qty_recent,
+    CASE WHEN balance > {STRONG_BUY_MIN} THEN 'STRONG_BUY'
+         WHEN balance > {BUY_MIN} THEN 'BUY'
+         WHEN balance < {STRONG_SELL_MAX} THEN 'STRONG_SELL'
+         WHEN balance < {SELL_MAX} THEN 'SELL'
+         ELSE 'HOLD' END AS action
+  FROM {rel}
+)
+SELECT symbol,
+  CAST(window_start_s AS BIGINT) AS window_start_s,
+  CAST(n_timeframes AS BIGINT) AS n_timeframes,
+  CAST(n_signals AS BIGINT) AS n_signals,
+  CAST(balance AS BIGINT) AS balance,
+  round(avg_price, {round_dp}) AS avg_price,
+  alignment,
+  round(avg_volatility, {round_dp}) AS avg_volatility,
+  action,
+  CASE WHEN action = 'HOLD' THEN 0.5d ELSE
+    round(least(1.0d,
+                alignment * 0.4d
+                + least(1.0d, abs(balance) / 10.0d) * 0.4d
+                + greatest(0.3d, 1.0d - avg_volatility / 100.0d) * 0.2d),
+          {round_dp}) END AS confidence,
+  round(avg_price * CASE WHEN action = 'STRONG_BUY' THEN {PRICE_MULT["STRONG_BUY"]}d
+                         WHEN action = 'BUY' THEN {PRICE_MULT["BUY"]}d
+                         WHEN action = 'SELL' THEN {PRICE_MULT["SELL"]}d
+                         WHEN action = 'STRONG_SELL' THEN {PRICE_MULT["STRONG_SELL"]}d
+                         ELSE 1.0d END,
+        {round_dp}) AS suggested_price,
+  CASE WHEN action = 'HOLD' THEN 0.0d
+       ELSE floor(qty_recent * 10000) / 10000.0d END AS suggested_qty,
+  CASE WHEN startswith(action, 'STRONG') THEN
+         CASE WHEN alignment > 0.8d THEN 'ALIGNED_SIGNALS' ELSE 'MOMENTUM_SHIFT' END
+       WHEN action IN ('BUY', 'SELL') THEN 'ALIGNED_SIGNALS'
+       ELSE CASE WHEN alignment < 0.6d THEN 'DIVERGENT_SIGNALS'
+                 ELSE 'INSUFFICIENT_DATA' END END AS reason
+FROM act
+"""
+
+
 def _decide_sql(view: str, window_seconds: int, round_dp: int) -> str:
-    """The whole decide() pipeline as ONE SQL statement (see decide()'s
-    docstring for the operator semantics and the per-clause A*/D* mapping).
+    """The whole decide() pipeline as ONE SQL statement: A1-A10 and P5 over
+    window functions and two aggregates, then :func:`decision_tail_sql`
+    (see decide()'s docstring for the operator semantics).
+
+    A1 buckets with integer ``div``, never double division: epoch-micros
+    (~1.7e15) sits at the edge of a double's 53-bit exact-integer range, so
+    float math could mis-bucket. Windows are epoch-aligned like Kafka
+    Streams' TimeWindows (SignalTopology.kt:52).
 
     Why SQL and not the Column API: the logical plan is identical either
     way (one parse, same Catalyst tree), but building it expression-object
@@ -223,48 +266,7 @@ WITH b AS (
   FROM tf2
   GROUP BY symbol, window_start_s
   HAVING count(1) >= 2
-), act AS (
-  SELECT *,
-    CAST(aggregate(recent5, CAST('0' AS {dec}),
-                   (acc, x) -> CAST(acc + CAST(x.qty AS {dec}) AS {dec}))
-         AS DOUBLE) / size(recent5) AS qty_recent,
-    CASE WHEN balance > {STRONG_BUY_MIN} THEN 'STRONG_BUY'
-         WHEN balance > {BUY_MIN} THEN 'BUY'
-         WHEN balance < {STRONG_SELL_MAX} THEN 'STRONG_SELL'
-         WHEN balance < {SELL_MAX} THEN 'SELL'
-         ELSE 'HOLD' END AS action
-  FROM agg
-)
-SELECT symbol,
-  CAST(window_start_s AS BIGINT) AS window_start_s,
-  CAST(n_timeframes AS BIGINT) AS n_timeframes,
-  CAST(n_signals AS BIGINT) AS n_signals,
-  CAST(balance AS BIGINT) AS balance,
-  round(avg_price, {round_dp}) AS avg_price,
-  alignment,
-  round(avg_volatility, {round_dp}) AS avg_volatility,
-  action,
-  CASE WHEN action = 'HOLD' THEN 0.5d ELSE
-    round(least(1.0d,
-                alignment * 0.4d
-                + least(1.0d, abs(balance) / 10.0d) * 0.4d
-                + greatest(0.3d, 1.0d - avg_volatility / 100.0d) * 0.2d),
-          {round_dp}) END AS confidence,
-  round(avg_price * CASE WHEN action = 'STRONG_BUY' THEN {PRICE_MULT["STRONG_BUY"]}d
-                         WHEN action = 'BUY' THEN {PRICE_MULT["BUY"]}d
-                         WHEN action = 'SELL' THEN {PRICE_MULT["SELL"]}d
-                         WHEN action = 'STRONG_SELL' THEN {PRICE_MULT["STRONG_SELL"]}d
-                         ELSE 1.0d END,
-        {round_dp}) AS suggested_price,
-  CASE WHEN action = 'HOLD' THEN 0.0d
-       ELSE floor(qty_recent * 10000) / 10000.0d END AS suggested_qty,
-  CASE WHEN startswith(action, 'STRONG') THEN
-         CASE WHEN alignment > 0.8d THEN 'ALIGNED_SIGNALS' ELSE 'MOMENTUM_SHIFT' END
-       WHEN action IN ('BUY', 'SELL') THEN 'ALIGNED_SIGNALS'
-       ELSE CASE WHEN alignment < 0.6d THEN 'DIVERGENT_SIGNALS'
-                 ELSE 'INSUFFICIENT_DATA' END END AS reason
-FROM act
-"""
+), {decision_tail_sql("agg", round_dp)}"""
 
 
 def decide(
@@ -283,178 +285,12 @@ def decide(
     (see :func:`_decide_sql` for why); ``spark.sql`` analyzes eagerly, so
     the returned DataFrame's plan is fixed at this call — re-registering
     the view for a later decide() cannot retroactively change it. The
-    sections below document the operator semantics clause by clause.
+    module docstring maps each clause to its A*/D* operator.
     """
     from ..sqlutil import sql_over_views
 
     return sql_over_views(
         lambda v: _decide_sql(v["sig"], window_seconds, round_dp), sig=signals
-    )
-
-
-def _decide_column_api(
-    signals: DataFrame,
-    window_seconds: int = WINDOW_SECONDS,
-    round_dp: int = 6,
-) -> DataFrame:
-    """The original Column-API construction of decide(), kept as the
-    readable clause-by-clause reference AND pinned equal to the SQL path by
-    tests/test_relational_extra.py — if the two ever diverge, the pytest
-    names the clause."""
-    b = signals.withColumn("window_start_s", window_start_s_expr(window_seconds))
-
-    # A2: rank within (symbol, window, timeframe) by recency; rn<=10 is the buffer
-    w_tf = Window.partitionBy("symbol", "window_start_s", "timeframe").orderBy(
-        F.desc("ts_us"), F.desc("signal_id")
-    )
-    r = b.withColumn("rn", F.row_number().over(w_tf))
-
-    in_buf = F.col("rn") <= BUFFER_KEEP
-    price_dec = F.col("price").cast(DEC)
-    # price*price is a double multiply (bit-identical on any engine), cast
-    # AFTER the multiply so decimal precision never truncates differently.
-    price2_dec = (F.col("price") * F.col("price")).cast(DEC)
-
-    # Per-timeframe aggregates: A3 (avg over buffer), A4 (untrimmed balance),
-    # A6 (capped count), A9 majority inputs, A10 (population stddev over
-    # buffer), and the ≤5-element recency buffer feeding D5. Grouping keys are
-    # a superset of the window-partition keys, so Catalyst reuses the exchange
-    # — the whole per-timeframe stage costs ONE shuffle.
-    is_buy = F.col("side") == "BUY"
-    tf_agg = r.groupBy("symbol", "window_start_s", "timeframe").agg(
-        F.sum(F.when(is_buy, 1).otherwise(-1)).alias("balance_tf"),
-        F.count(F.lit(1)).alias("cnt_all"),
-        F.count(F.when(in_buf, 1)).alias("cnt_buf"),
-        F.sum(F.when(in_buf, price_dec)).alias("sum_p"),
-        F.sum(F.when(in_buf, price2_dec)).alias("sum_p2"),
-        # A9 majority side inputs: buffered BUY vs SELL counts
-        F.count(F.when(in_buf & is_buy, 1)).alias("buf_buy"),
-        F.count(F.when(in_buf & ~is_buy, 1)).alias("buf_sell"),
-        # D5 feed: the 5 most-recent buffered (ts, id, qty) — bounded (≤10
-        # collected, ≤5 kept), NOT an unbounded collect_list
-        F.slice(
-            F.reverse(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(in_buf, F.struct("ts_us", "signal_id", "qty"))
-                    )
-                )
-            ),
-            1,
-            TOP_RECENT,
-        ).alias("recent_tf"),
-    )
-    mean_p = _dec_avg("sum_p", "cnt_buf")
-    mean_p2 = _dec_avg("sum_p2", "cnt_buf")
-    tf_agg = tf_agg.withColumn("avg_price_tf", mean_p).withColumn(
-        # A10: population stddev via the exact-sum identity; <2 prices → 0.0
-        "vol_tf",
-        F.when(F.col("cnt_buf") < 2, F.lit(0.0)).otherwise(
-            F.sqrt(F.greatest(mean_p2 - mean_p * mean_p, F.lit(0.0)))
-        ),
-    ).withColumn(
-        # A9: majority side over the buffer; tie → lexicographic max ("SELL")
-        # per SURVEY.md §7.4.2 — a plain CASE, no extra aggregation needed
-        "maj_side",
-        F.when(F.col("buf_buy") > F.col("buf_sell"), "BUY").otherwise("SELL"),
-    )
-
-    # Rollup to (symbol, window): A5, A6, A8, A9, P5 HAVING, D5 — one more
-    # shuffle on the 2-key prefix; no joins anywhere in the pipeline.
-    recent5 = F.slice(
-        F.reverse(F.array_sort(F.flatten(F.collect_list("recent_tf")))), 1, TOP_RECENT
-    )
-    qty_recent = F.aggregate(
-        recent5,
-        F.lit("0").cast(DEC),
-        lambda acc, x: (acc + x.getField("qty").cast(DEC)).cast(DEC),
-    ).cast("double") / F.size(recent5)
-    agg = (
-        tf_agg.groupBy("symbol", "window_start_s")
-        .agg(
-            F.count(F.lit(1)).alias("n_timeframes"),
-            F.sum("balance_tf").alias("balance"),
-            F.sum(F.least(F.col("cnt_all"), F.lit(BUFFER_KEEP))).alias("n_signals"),
-            (
-                F.sum(F.col("avg_price_tf").cast(DEC)).cast("double")
-                / F.count(F.lit(1))
-            ).alias("avg_price"),  # A8 two-level mean
-            (
-                F.sum(F.col("vol_tf").cast(DEC)).cast("double") / F.count(F.lit(1))
-            ).alias("avg_volatility"),
-            # A9: all timeframes' majorities agree ⇔ min == max (maj_side is
-            # never null) — algebraic, so no distinct-agg Expand/exchange
-            F.when(F.min("maj_side") == F.max("maj_side"), F.lit(1.0))
-            .otherwise(F.lit(0.5))
-            .alias("alignment"),
-            qty_recent.alias("qty_recent"),  # D5 mean qty of 5 most-recent
-        )
-        .filter(F.col("n_timeframes") >= 2)  # P5
-    )
-
-    # D1: action thresholds
-    bal = F.col("balance")
-    action = (
-        F.when(bal > STRONG_BUY_MIN, "STRONG_BUY")
-        .when(bal > BUY_MIN, "BUY")
-        .when(bal < STRONG_SELL_MAX, "STRONG_SELL")
-        .when(bal < SELL_MAX, "SELL")
-        .otherwise("HOLD")
-    )
-    agg = agg.withColumn("action", action)
-
-    # D2: price adjustment
-    mult = (
-        F.when(F.col("action") == "STRONG_BUY", PRICE_MULT["STRONG_BUY"])
-        .when(F.col("action") == "BUY", PRICE_MULT["BUY"])
-        .when(F.col("action") == "SELL", PRICE_MULT["SELL"])
-        .when(F.col("action") == "STRONG_SELL", PRICE_MULT["STRONG_SELL"])
-        .otherwise(F.lit(1.0))
-    )
-
-    # D3: confidence = min(1, align*0.4 + min(1,|bal|/10)*0.4 + max(0.3, 1-vol/100)*0.2)
-    confidence = F.least(
-        F.lit(1.0),
-        F.col("alignment") * 0.4
-        + F.least(F.lit(1.0), F.abs(bal) / 10.0) * 0.4
-        + F.greatest(F.lit(0.3), F.lit(1.0) - F.col("avg_volatility") / 100.0) * 0.2,
-    )
-
-    # D4: reason
-    reason = (
-        F.when(
-            F.col("action").startswith("STRONG"),
-            F.when(F.col("alignment") > 0.8, "ALIGNED_SIGNALS").otherwise("MOMENTUM_SHIFT"),
-        )
-        .when(F.col("action").isin("BUY", "SELL"), "ALIGNED_SIGNALS")
-        .otherwise(  # HOLD
-            F.when(F.col("alignment") < 0.6, "DIVERGENT_SIGNALS").otherwise(
-                "INSUFFICIENT_DATA"
-            )
-        )
-    )
-
-    is_hold = F.col("action") == "HOLD"
-    return agg.select(
-        "symbol",
-        F.col("window_start_s").cast("long").alias("window_start_s"),
-        F.col("n_timeframes").cast("long").alias("n_timeframes"),
-        F.col("n_signals").cast("long").alias("n_signals"),
-        F.col("balance").cast("long").alias("balance"),
-        F.round("avg_price", round_dp).alias("avg_price"),
-        F.col("alignment"),
-        F.round("avg_volatility", round_dp).alias("avg_volatility"),
-        "action",
-        F.when(is_hold, F.lit(0.5))
-        .otherwise(F.round(confidence, round_dp))
-        .alias("confidence"),
-        F.round(F.col("avg_price") * mult, round_dp).alias("suggested_price"),
-        # D5: truncate to 4dp (DecisionMaker.kt:125); HOLD → 0.0. Deterministic
-        # mode: the uniform(0.9,1.1) factor is fixed to 1.0 (SURVEY.md §7.4.3).
-        F.when(is_hold, F.lit(0.0))
-        .otherwise(F.floor(F.col("qty_recent") * 10000) / 10000.0)
-        .alias("suggested_qty"),
-        reason.alias("reason"),
     )
 
 

@@ -19,14 +19,16 @@ Maps the reference's Kafka Streams topology onto Spark Structured Streaming
 
 Streaming plan shape: unlike the batch path (window functions), streaming
 uses ONE stateful aggregation per (symbol, window) that collects the window's
-signals and computes every A2-A10/D1-D5 quantity with array expressions in
-the finishing projection. One shuffle, one state store; state per key is
-bounded by the rows that fall in one 5-minute window per symbol. At 100 TB/d
-ingest with few symbols that per-key bound is the thing to watch — the
-mitigation is pre-aggregating per (symbol, window, timeframe) with chained
-windowed aggregations (Spark ≥3.4 supports multiple stateful operators), at
-the cost of a second state store; the array form keeps the demo simple and
-bit-compatible with the batch path (decimal-exact folds, same tie-breaks).
+signals and computes every A2-A10 quantity with array expressions in the
+finishing statement, which ends in the batch path's own D1-D5 decision tail
+(``signal_pipeline.decision_tail_sql``). One shuffle, one state store; state
+per key is bounded by the rows that fall in one 5-minute window per symbol.
+At 100 TB/d ingest with few symbols that per-key bound is the thing to watch
+— :func:`streaming_decide_bounded` keeps only the last-10 buffers and
+running counters instead. The array folds are decimal-exact, so streaming
+equals batch cell for cell (same tie-breaks) while every summed element
+(a price, or a price squared) is below 1e17 in magnitude, i.e. for prices
+below ~3e8.
 """
 
 from __future__ import annotations
@@ -37,9 +39,9 @@ from pyspark.sql import functions as F
 from ..operators.signal_pipeline import (
     BUFFER_KEEP,
     DEC,
-    PRICE_MULT,
     TOP_RECENT,
     WINDOW_SECONDS,
+    decision_tail_sql,
 )
 from ..schemas import SIGNAL_WIRE_SCHEMA
 
@@ -473,235 +475,86 @@ def dedup_gate_writer(
 # ---------------------------------------------------------------------------
 # The streaming decision aggregate
 # ---------------------------------------------------------------------------
-def _cmp_recent_first(x: Column, y: Column) -> Column:
-    """array_sort comparator: ts_us DESC, signal_id DESC (the deterministic
-    'most recent first' total order, SURVEY.md §7.4.1)."""
+_TFS = ("1m", "5m", "15m")
+
+
+def _dec_fold(arr: str, value: str) -> str:
+    """Exact sum of ``value`` (an expression over the element ``x``) across
+    the array ``arr``, as DOUBLE. A DECIMAL(37,10) accumulator plus a
+    DECIMAL(27,10) element widens to DECIMAL(38,10) with no scale loss, so
+    the fold equals batch decide's decimal(38,10) ``sum`` while every
+    element is below 1e17 in magnitude."""
     return (
-        F.when(x["ts_us"] > y["ts_us"], -1)
-        .when(x["ts_us"] < y["ts_us"], 1)
-        .when(x["signal_id"] > y["signal_id"], -1)
-        .when(x["signal_id"] < y["signal_id"], 1)
-        .otherwise(0)
+        f"CAST(aggregate({arr}, CAST(0 AS DECIMAL(37,10)), (acc, x) -> "
+        f"CAST(acc + CAST({value} AS DECIMAL(27,10)) AS DECIMAL(37,10))) AS DOUBLE)"
     )
 
 
-def _dec_sum(arr: Column, field: str) -> Column:
-    """Near-exact left-fold sum of a struct field on decimals.
+def _decide_array_sql(view: str, round_dp: int) -> str:
+    """The streaming front (A2-A10, P5 over each window's signal array) and
+    the shared decision tail, as one statement.
 
-    Decimal addition widens (38,10)+(38,10)->(38,9), so the fold re-casts the
-    accumulator each step — each add can round at the 9th decimal (~1e-9
-    absolute), which is deterministic and invisible at the pipeline's 6-dp
-    outputs. (True exactness would need Spark's two-level streaming
-    aggregation — see the module docstring's scale note.)"""
-    return F.aggregate(
-        arr,
-        F.lit(0).cast(DEC),
-        lambda acc, x: (acc + x[field].cast(DEC)).cast(DEC),
-    ).cast("double")
+    ``view`` has one row per (symbol, window): symbol, window_start_s,
+    ``sigs`` (an array of signal structs whose first two fields are ts_us
+    and signal_id, so their natural descending order is the deterministic
+    most-recent-first order of SURVEY.md §7.4.1) and, per timeframe, the
+    untrimmed whole-window count ``cnt_<tf>`` and buy/sell balance
+    ``bal_<tf>`` (A4, A6). ``sigs`` must hold at least each timeframe's
+    last-10 buffer. Divisions stay under a presence ``CASE``: an absent
+    timeframe's buffer is empty."""
 
+    def per_tf(template: str, sep: str = ",\n    ") -> str:
+        return sep.join(template.format(tf=tf, keep=BUFFER_KEEP) for tf in _TFS)
 
-def _tf_cols(
-    sorted_sigs: Column, tf: str, ext: tuple[Column, Column] | None = None
-) -> dict[str, Column]:
-    """Per-timeframe stats from the sorted signal array.
-
-    ``ext`` (cnt_all, balance) supplies the untrimmed whole-window counters
-    externally — used by the bounded-state path, where ``sorted_sigs`` holds
-    only the last-10 buffers and the untrimmed quantities (A4 balance, A6's
-    min(count,10)) live in O(1) running counters instead of the array.
-    """
-    tf_arr = F.filter(sorted_sigs, lambda s: s["timeframe"] == tf)
-    buf = F.slice(tf_arr, 1, BUFFER_KEEP)  # already recent-first
-    n_buf = F.size(buf)
-    sum_p = _dec_sum(buf, "price")
-    sum_p2 = F.aggregate(
-        buf,
-        F.lit(0).cast(DEC),
-        lambda acc, x: (acc + (x["price"] * x["price"]).cast(DEC)).cast(DEC),
-    ).cast("double")
-    mean_p = sum_p / n_buf
-    nbuy = F.size(F.filter(buf, lambda s: s["side"] == "BUY"))
-    if ext is None:
-        cnt_all = F.size(tf_arr)
-        balance = F.aggregate(
-            tf_arr,
-            F.lit(0),
-            lambda acc, x: acc + F.when(x["side"] == "BUY", 1).otherwise(-1),
-        )
-    else:
-        cnt_all, balance = ext
-    return {
-        "present": cnt_all > 0,
-        "cnt_all": cnt_all,
-        "balance": balance,
-        "avg_price": mean_p,
-        "vol": F.when(n_buf < 2, F.lit(0.0)).otherwise(
-            F.sqrt(F.greatest(sum_p2 / n_buf - mean_p * mean_p, F.lit(0.0)))
-        ),
-        # majority side over the buffer; tie → 'SELL' (lexicographic max,
-        # matching the batch ORDER BY c DESC, side DESC tie-break)
-        "maj": F.when(nbuy * 2 > n_buf, "BUY").otherwise("SELL"),
-        "n_kept": F.least(cnt_all, F.lit(BUFFER_KEEP)),
-    }
+    return f"""
+WITH b AS (
+  SELECT *,
+    {per_tf("slice(sort_array(filter(sigs, s -> s.timeframe = '{tf}'), false), "
+            "1, {keep}) AS buf_{tf}")}
+  FROM {view}
+), f AS (
+  SELECT *,
+    {per_tf("size(buf_{tf}) AS n_{tf}")},
+    {per_tf(_dec_fold("buf_{tf}", "x.price") + " AS sp_{tf}")},
+    {per_tf(_dec_fold("buf_{tf}", "x.price * x.price") + " AS sp2_{tf}")},
+    {per_tf("size(filter(buf_{tf}, x -> x.side = 'BUY')) AS buy_{tf}")},
+    {per_tf("IF(cnt_{tf} > 0, 1, 0)", " + ")} AS n_timeframes
+  FROM b
+), g AS (
+  SELECT *,
+    {per_tf("CASE WHEN cnt_{tf} > 0 THEN sp_{tf} / n_{tf} END AS avg_{tf}")},
+    {per_tf("CASE WHEN n_{tf} >= 2 THEN sqrt(greatest(sp2_{tf} / n_{tf} "
+            "- (sp_{tf} / n_{tf}) * (sp_{tf} / n_{tf}), 0.0d)) "
+            "WHEN cnt_{tf} > 0 THEN 0.0d END AS vol_{tf}")},
+    {per_tf("CASE WHEN cnt_{tf} > 0 THEN "
+            "IF(buy_{tf} > n_{tf} - buy_{tf}, 'BUY', 'SELL') END AS maj_{tf}")}
+  FROM f
+  WHERE n_timeframes >= 2
+), w AS (
+  SELECT symbol, window_start_s, n_timeframes,
+    {per_tf("bal_{tf}", " + ")} AS balance,
+    {per_tf("least(cnt_{tf}, {keep})", " + ")} AS n_signals,
+    CAST({per_tf("coalesce(CAST(avg_{tf} AS DECIMAL(27,10)), 0)", " + ")} AS DOUBLE)
+      / n_timeframes AS avg_price,
+    CAST({per_tf("coalesce(CAST(vol_{tf} AS DECIMAL(27,10)), 0)", " + ")} AS DOUBLE)
+      / n_timeframes AS avg_volatility,
+    CASE WHEN least({per_tf("maj_{tf}", ", ")}) = greatest({per_tf("maj_{tf}", ", ")})
+         THEN 1.0d ELSE 0.5d END AS alignment,
+    slice(sort_array(concat({per_tf("buf_{tf}", ", ")}), false), 1, {TOP_RECENT}) AS recent5
+  FROM g
+), {decision_tail_sql("w", round_dp)}"""
 
 
-def decisions_from_signal_array(
-    agg: DataFrame,
-    round_dp: int = 6,
-    per_tf_counts: dict[str, tuple[Column, Column]] | None = None,
-) -> DataFrame:
-    """Finishing projection: (symbol, window_start_s, sigs array) → decision.
+def decisions_from_signal_array(agg: DataFrame, round_dp: int = 6) -> DataFrame:
+    """Finishing projection: one row per (symbol, window) with
+    (symbol, window_start_s, sigs, cnt_<tf>, bal_<tf>) → one decision.
 
-    Pure array expressions — computed identically in streaming and batch; the
-    semantics mirror operators.signal_pipeline.decide (A2-A10, D1-D5, P5).
+    The semantics mirror operators.signal_pipeline.decide (A2-A10, D1-D5,
+    P5), whose decision tail this statement shares; one ``spark.sql``
+    parse, on a streaming DataFrame as on a batch one."""
+    from ..sqlutil import sql_over_views
 
-    ``per_tf_counts`` maps timeframe → (cnt_all, balance) columns for the
-    bounded-state path where ``sigs`` holds only the per-timeframe last-10
-    buffers (the untrimmed counters travel as scalar columns).
-    """
-    out = agg.withColumn("sorted_sigs", F.array_sort("sigs", _cmp_recent_first))
-
-    tfs = ["1m", "5m", "15m"]
-    per_tf = {
-        tf: _tf_cols(
-            F.col("sorted_sigs"),
-            tf,
-            per_tf_counts.get(tf) if per_tf_counts else None,
-        )
-        for tf in tfs
-    }
-
-    n_timeframes = sum(
-        (F.when(per_tf[tf]["present"], 1).otherwise(0) for tf in tfs), F.lit(0)
-    )
-    balance = sum((per_tf[tf]["balance"] for tf in tfs), F.lit(0))
-    n_signals = sum(
-        (F.when(per_tf[tf]["present"], per_tf[tf]["n_kept"]).otherwise(0) for tf in tfs),
-        F.lit(0),
-    )
-    sum_avg = sum(
-        (
-            F.when(per_tf[tf]["present"], per_tf[tf]["avg_price"].cast(DEC)).otherwise(
-                F.lit(0).cast(DEC)
-            )
-            for tf in tfs
-        ),
-        F.lit(0).cast(DEC),
-    )
-    sum_vol = sum(
-        (
-            F.when(per_tf[tf]["present"], per_tf[tf]["vol"].cast(DEC)).otherwise(
-                F.lit(0).cast(DEC)
-            )
-            for tf in tfs
-        ),
-        F.lit(0).cast(DEC),
-    )
-    avg_price = sum_avg.cast("double") / n_timeframes
-    avg_vol = sum_vol.cast("double") / n_timeframes
-
-    majs = F.array_distinct(
-        F.filter(
-            F.array(
-                *[
-                    F.when(per_tf[tf]["present"], per_tf[tf]["maj"]).otherwise(
-                        F.lit(None)
-                    )
-                    for tf in tfs
-                ]
-            ),
-            lambda m: m.isNotNull(),
-        )
-    )
-    alignment = F.when(F.size(majs) == 1, F.lit(1.0)).otherwise(F.lit(0.5))
-
-    # top-5 most recent across the per-timeframe buffers (A7/D5).
-    # (closure factory, not a defaulted lambda — PySpark would read a
-    # two-parameter lambda as (element, index))
-    def _is_tf(tf: str):
-        def f(s: Column) -> Column:
-            return s["timeframe"] == tf
-
-        return f
-
-    buffers = F.flatten(
-        F.array(
-            *[
-                F.slice(F.filter(F.col("sorted_sigs"), _is_tf(tf)), 1, BUFFER_KEEP)
-                for tf in tfs
-            ]
-        )
-    )
-    top5 = F.slice(F.array_sort(buffers, _cmp_recent_first), 1, TOP_RECENT)
-    qty_recent = _dec_sum(top5, "qty") / F.size(top5)
-
-    enriched = (
-        out.withColumn("n_timeframes", n_timeframes.cast("long"))
-        .withColumn("balance", balance.cast("long"))
-        .withColumn("n_signals", n_signals.cast("long"))
-        .withColumn("avg_price", avg_price)
-        .withColumn("avg_volatility", avg_vol)
-        .withColumn("alignment", alignment)
-        .withColumn("qty_recent", qty_recent)
-        .filter(F.col("n_timeframes") >= 2)  # P5 HAVING
-    )
-
-    bal = F.col("balance")
-    action = (
-        F.when(bal > 5, "STRONG_BUY")
-        .when(bal > 2, "BUY")
-        .when(bal < -5, "STRONG_SELL")
-        .when(bal < -2, "SELL")
-        .otherwise("HOLD")
-    )
-    enriched = enriched.withColumn("action", action)
-    mult = (
-        F.when(F.col("action") == "STRONG_BUY", PRICE_MULT["STRONG_BUY"])
-        .when(F.col("action") == "BUY", PRICE_MULT["BUY"])
-        .when(F.col("action") == "SELL", PRICE_MULT["SELL"])
-        .when(F.col("action") == "STRONG_SELL", PRICE_MULT["STRONG_SELL"])
-        .otherwise(F.lit(1.0))
-    )
-    confidence = F.least(
-        F.lit(1.0),
-        F.col("alignment") * 0.4
-        + F.least(F.lit(1.0), F.abs(bal) / 10.0) * 0.4
-        + F.greatest(F.lit(0.3), F.lit(1.0) - F.col("avg_volatility") / 100.0) * 0.2,
-    )
-    reason = (
-        F.when(
-            F.col("action").startswith("STRONG"),
-            F.when(F.col("alignment") > 0.8, "ALIGNED_SIGNALS").otherwise(
-                "MOMENTUM_SHIFT"
-            ),
-        )
-        .when(F.col("action").isin("BUY", "SELL"), "ALIGNED_SIGNALS")
-        .otherwise(
-            F.when(F.col("alignment") < 0.6, "DIVERGENT_SIGNALS").otherwise(
-                "INSUFFICIENT_DATA"
-            )
-        )
-    )
-    is_hold = F.col("action") == "HOLD"
-    return enriched.select(
-        "symbol",
-        F.col("window_start_s").cast("long").alias("window_start_s"),
-        "n_timeframes",
-        "n_signals",
-        "balance",
-        F.round("avg_price", round_dp).alias("avg_price"),
-        "alignment",
-        F.round("avg_volatility", round_dp).alias("avg_volatility"),
-        "action",
-        F.when(is_hold, F.lit(0.5)).otherwise(F.round(confidence, round_dp)).alias(
-            "confidence"
-        ),
-        F.round(F.col("avg_price") * mult, round_dp).alias("suggested_price"),
-        F.when(is_hold, F.lit(0.0))
-        .otherwise(F.floor(F.col("qty_recent") * 10000) / 10000.0)
-        .alias("suggested_qty"),
-        reason.alias("reason"),
-    )
+    return sql_over_views(lambda v: _decide_array_sql(v["agg"], round_dp), agg=agg)
 
 
 def streaming_sessionize(
@@ -820,17 +673,28 @@ def streaming_decide(
     sig = sig.withWatermark("event_time", watermark)
     if dedup:
         sig = dedup_signals(sig)
-    agg = (
-        sig.groupBy("symbol", F.window("event_time", f"{window_seconds} seconds"))
-        .agg(
-            F.collect_list(
-                F.struct("ts_us", "signal_id", "side", "qty", "price", "timeframe")
-            ).alias("sigs")
-        )
-        .withColumn("window_start_s", F.unix_timestamp(F.col("window.start")))
-        .drop("window")
+    agg = sig.groupBy(
+        "symbol", F.window("event_time", f"{window_seconds} seconds")
+    ).agg(
+        F.expr(
+            "collect_list(struct(ts_us, signal_id, side, qty, price, timeframe))"
+        ).alias("sigs")
     )
-    return decisions_from_signal_array(agg)
+    # the untrimmed per-timeframe counters come from the collected window
+    # in the projection, so the aggregation's state keeps its schema
+    counters = [
+        expr
+        for tf in _TFS
+        for expr in (
+            f"CAST(size(filter(sigs, s -> s.timeframe = '{tf}')) AS BIGINT) AS cnt_{tf}",
+            f"aggregate(sigs, 0L, (acc, s) -> acc + CASE WHEN s.timeframe = '{tf}'"
+            f" THEN IF(s.side = 'BUY', 1, -1) ELSE 0 END) AS bal_{tf}",
+        )
+    ]
+    framed = agg.selectExpr(
+        "symbol", "unix_timestamp(window.start) AS window_start_s", "sigs", *counters
+    )
+    return decisions_from_signal_array(framed)
 
 
 def streaming_candles(
@@ -871,7 +735,6 @@ def streaming_candles(
     )
 
 
-_TFS = ("1m", "5m", "15m")
 _BOUNDED_OUT_SCHEMA = (
     "symbol string, window_start_s long, "
     "ts_us array<long>, signal_id array<long>, side array<string>, "
@@ -987,12 +850,13 @@ def streaming_decide_bounded(
     (SignalAggregator.kt:16-23 keeps only the last-10 buffers and running
     counters, never the raw window).
 
-    The finishing math is the SAME JVM array expressions as the default path
-    (decisions_from_signal_array) — the Python side only maintains buffers
-    and counters; per-timeframe stats, thresholds, and the decision CASEs all
-    run as Catalyst expressions on the emitted partials — so results match
-    streaming_decide / batch ``decide`` (asserted row-for-row in
-    tests/test_streaming.py).
+    The finishing statement is the default path's
+    (decisions_from_signal_array): the Python side only maintains buffers
+    and counters, which it emits as the ``sigs`` array and the
+    ``cnt_<tf>``/``bal_<tf>`` columns; per-timeframe stats, thresholds, and
+    the decision CASEs all run as Catalyst expressions on the emitted
+    partials — so results match streaming_decide / batch ``decide``
+    (asserted row-for-row in tests/test_streaming.py).
 
     Emission contract: one row per (symbol, window) when the watermark passes
     the window end (append semantics, zero-grace late drops — T1/T3), same as
@@ -1020,22 +884,15 @@ def streaming_decide_bounded(
         "append",
         GroupStateTimeout.EventTimeTimeout,
     )
-    # Re-assemble the array<struct> shape the finishing expressions consume;
+    # Re-assemble the array<struct> shape the finishing statement consumes;
     # arrays_zip names struct fields after the source columns.
-    with_sigs = partials.select(
+    framed = partials.selectExpr(
         "symbol",
         "window_start_s",
-        F.arrays_zip(
-            "ts_us", "signal_id", "side", "qty", "price", "timeframe"
-        ).alias("sigs"),
-        *[c for c in _BOUNDED_OUT_COLS[8:]],
+        "arrays_zip(ts_us, signal_id, side, qty, price, timeframe) AS sigs",
+        *_BOUNDED_OUT_COLS[8:],
     )
-    return decisions_from_signal_array(
-        with_sigs,
-        per_tf_counts={
-            tf: (F.col(f"cnt_{tf}"), F.col(f"bal_{tf}")) for tf in _TFS
-        },
-    )
+    return decisions_from_signal_array(framed)
 
 
 def stream_stream_click_attribution(

@@ -1,6 +1,7 @@
 """Plan construction stays cheap: a ceiling on the main-thread py4j round
-trips of each batch_mix query's warm build, and of the SimHash pair's
-(tools/py4j_budget.py's counter).
+trips of each batch_mix query's warm build, of the SimHash pair's and of
+the two streaming decides' over a file source (tools/py4j_budget.py's
+counter).
 
 The count of a warm build is deterministic, so a builder that goes back to
 one Column call per element, or a session that turns PySpark's DataFrame
@@ -28,7 +29,10 @@ BATCH_MIX = {
     "minhash_lsh_near_dup": 400,
 }
 # 1,447 and 1,560 while the 16-bit vote was folded one Column call per bit
-CEILINGS = {**BATCH_MIX, "simhash_buckets": 145, "simhash_hamming_near_dup": 280}
+QUERY_CEILINGS = {**BATCH_MIX, "simhash_buckets": 145, "simhash_hamming_near_dup": 280}
+# the build reads its file source too
+STREAMING = {"streaming_decide": 75, "streaming_decide_bounded": 130}
+CEILINGS = {**QUERY_CEILINGS, **STREAMING}
 
 
 def _tool():
@@ -39,9 +43,19 @@ def _tool():
 
 
 @pytest.fixture(scope="module")
-def counts(spark, sf_dir):
+def counts(spark, sf_dir, tmp_path_factory):
+    from futures_eos_cdc_spark.streaming import pipeline
+
     tool = _tool()
-    return {name: tool.warm_build(spark, name, sf_dir)[0] for name in CEILINGS}
+    out = {name: tool.warm_build(spark, name, sf_dir)[0] for name in QUERY_CEILINGS}
+    src = str(tmp_path_factory.mktemp("signals"))
+    for name in STREAMING:
+        decide = getattr(pipeline, name)
+        decide(pipeline.read_signal_stream_files(spark, src))
+        with tool.round_trips() as n:
+            decide(pipeline.read_signal_stream_files(spark, src))
+        out[name] = n[0]
+    return out
 
 
 @pytest.mark.parametrize("name", sorted(CEILINGS))

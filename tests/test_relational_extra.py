@@ -67,26 +67,6 @@ def test_recent_orders_take_ordered(spark):
     assert "TakeOrderedAndProject" in top._jdf.queryExecution().executedPlan().toString()
 
 
-def test_decide_sql_equals_column_api(spark):
-    """decide() is built as ONE spark.sql parse for construction speed; the
-    original Column-API formulation is retained as _decide_column_api and
-    pinned here — schema AND values must match exactly, so any clause drift
-    between the two constructions fails loudly."""
-    from futures_eos_cdc_spark.operators.signal_pipeline import (
-        _decide_column_api,
-        decide,
-        signals_from_events,
-    )
-    from futures_eos_cdc_spark.sources.tables import load_table
-
-    sig = signals_from_events(load_table(spark, "/root/testdata/sf0.01", "events"))
-    a, b = decide(sig), _decide_column_api(sig)
-    assert a.schema == b.schema
-    ra = sorted([tuple(r) for r in a.collect()], key=repr)
-    rb = sorted([tuple(r) for r in b.collect()], key=repr)
-    assert ra == rb and len(ra) > 0
-
-
 def test_ohlcv_candles_invariants_and_hand_check(spark):
     """Candle semantics: low <= open/close/vwap <= high, volume exact, and a
     hand-built 2-symbol stream produces exactly the expected candles."""

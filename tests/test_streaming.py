@@ -53,9 +53,10 @@ def _write_stream_input(spark, sf_dir, tmp_path, extra_df=None):
     return path
 
 
-def _run_stream(spark, path, name, dedup=False):
+def _run_stream(spark, path, name, dedup=False, decide_fn=streaming_decide):
+    stream = read_signal_stream_files(spark, path)
     q = (
-        streaming_decide(read_signal_stream_files(spark, path), dedup=dedup)
+        (decide_fn(stream, dedup=True) if dedup else decide_fn(stream))
         .writeStream.outputMode("append")
         .format("memory")
         .queryName(name)
@@ -77,24 +78,96 @@ def test_streaming_matches_batch(spark, sf_dir, tmp_path):
         (r.symbol, r.window_start_s): r for r in decide(_signals(spark, sf_dir)).collect()
     }
     assert set(stream_rows) == set(batch_rows)
-    # exact for ints/strings; small tolerance for floats: the streaming
-    # array-fold rounds at the 9th decimal per add (see _dec_sum), the batch
-    # path is decimal-exact — both deterministic, equal to ~1e-9 pre-rounding.
-    exact_cols = ("n_timeframes", "n_signals", "balance", "alignment", "action", "reason")
-    float_tols = {
-        "avg_price": 1e-5,
-        "avg_volatility": 1e-5,
-        "confidence": 1e-5,
-        "suggested_price": 1e-5,
-        "suggested_qty": 2.1e-4,  # floor(x*1e4)/1e4 can flip one ulp of 1e-4
-    }
+    # every column equal: the streaming array folds are decimal-exact, like
+    # batch decide's sums, and both end in the same decision tail
     for key, b in batch_rows.items():
-        s = stream_rows[key]
-        for col in exact_cols:
-            assert getattr(s, col) == getattr(b, col), (key, col)
-        for col, tol in float_tols.items():
-            assert abs(getattr(s, col) - getattr(b, col)) <= tol, (
-                key, col, getattr(s, col), getattr(b, col))
+        assert stream_rows[key] == b, (key, stream_rows[key], b)
+
+
+# (balance, aligned) → per-timeframe (buys, sells) of a two-timeframe window:
+# both majorities agree (alignment 1.0) or not (0.5), the balances summing to
+# ``balance``; every timeframe holds at most 10 signals, so all are buffered
+def _boundary_counts(balance, aligned):
+    buy = balance > 0
+    if aligned:
+        halves = ((abs(balance) + 1) // 2, abs(balance) // 2)
+        return [(h, 0) if buy else (0, h) for h in halves]
+    return [(abs(balance) + 1, 0), (0, 1)] if buy else [(0, abs(balance) + 1), (1, 0)]
+
+
+def _expected_decision(balance, alignment):
+    from futures_eos_cdc_spark.operators.signal_pipeline import (
+        BUY_MIN,
+        SELL_MAX,
+        STRONG_BUY_MIN,
+        STRONG_SELL_MAX,
+    )
+
+    if balance > STRONG_BUY_MIN:
+        action = "STRONG_BUY"
+    elif balance > BUY_MIN:
+        action = "BUY"
+    elif balance < STRONG_SELL_MAX:
+        action = "STRONG_SELL"
+    elif balance < SELL_MAX:
+        action = "SELL"
+    else:
+        action = "HOLD"
+    if action.startswith("STRONG"):
+        reason = "ALIGNED_SIGNALS" if alignment > 0.8 else "MOMENTUM_SHIFT"
+    elif action in ("BUY", "SELL"):
+        reason = "ALIGNED_SIGNALS"
+    else:
+        reason = "DIVERGENT_SIGNALS" if alignment < 0.6 else "INSUFFICIENT_DATA"
+    return action, reason
+
+
+def test_decision_thresholds_at_the_boundaries(spark, tmp_path):
+    """Hand-built windows on each side of every action threshold (balances
+    ±2, ±3, ±5, ±6), each with aligned and divergent timeframes, plus a
+    window with one timeframe only (dropped by P5): batch decide and both
+    streaming decides emit the action and reason the D1/D4 constants give."""
+    from futures_eos_cdc_spark.streaming.pipeline import streaming_decide_bounded
+
+    window_start_us = 1_699_999_800 * 1_000_000  # a 5-minute boundary
+    rows, want = [], {}
+
+    def add(symbol, counts):
+        for tf, (buys, sells) in zip(("1m", "5m"), counts):
+            for side in ["BUY"] * buys + ["SELL"] * sells:
+                i = len(rows)
+                rows.append((i, symbol, side, 0.1 + i / 100, 100.0 + i, tf,
+                             window_start_us + i * 1_000_000))
+
+    for balance in (-6, -5, -3, -2, 2, 3, 5, 6):
+        for aligned in (True, False):
+            symbol = f"B{balance}_{'A' if aligned else 'D'}"
+            add(symbol, _boundary_counts(balance, aligned))
+            want[symbol] = (balance, 1.0 if aligned else 0.5,
+                            *_expected_decision(balance, 1.0 if aligned else 0.5))
+    add("ONE_TF", [(6, 0)])
+    schema = (
+        "signal_id long, symbol string, side string, qty double, price double,"
+        " timeframe string, ts_us long"
+    )
+    sig = spark.createDataFrame(rows, schema)
+    path = str(tmp_path / "boundary_in")
+    sig.unionByName(spark.createDataFrame(
+        [(999_999_999, "SENTINEL", "BUY", 0.1, 1.0, "1m", SENTINEL_TS_US)], schema
+    )).coalesce(1).write.parquet(path)
+
+    outputs = {
+        "batch": decide(sig),
+        "streaming": _run_stream(spark, path, "boundary_sd"),
+        "bounded": _run_stream(spark, path, "boundary_bd",
+                               decide_fn=streaming_decide_bounded),
+    }
+    for name, out in outputs.items():
+        got = {
+            r.symbol: (r.balance, r.alignment, r.action, r.reason)
+            for r in out.collect()
+        }
+        assert got == want, name
 
 
 def test_streaming_append_emits_one_decision_per_window(spark, sf_dir, tmp_path):
@@ -993,21 +1066,8 @@ def test_bounded_state_streaming_matches_batch(spark, sf_dir, tmp_path):
         (r.symbol, r.window_start_s): r for r in decide(_signals(spark, sf_dir)).collect()
     }
     assert set(stream_rows) == set(batch_rows) and len(stream_rows) > 0
-    exact_cols = ("n_timeframes", "n_signals", "balance", "alignment", "action", "reason")
-    float_tols = {
-        "avg_price": 1e-5,
-        "avg_volatility": 1e-5,
-        "confidence": 1e-5,
-        "suggested_price": 1e-5,
-        "suggested_qty": 2.1e-4,
-    }
     for key2, b in batch_rows.items():
-        s = stream_rows[key2]
-        for col in exact_cols:
-            assert getattr(s, col) == getattr(b, col), (key2, col)
-        for col, tol in float_tols.items():
-            assert abs(getattr(s, col) - getattr(b, col)) <= tol, (
-                key2, col, getattr(s, col), getattr(b, col))
+        assert stream_rows[key2] == b, (key2, stream_rows[key2], b)
 
 
 def test_bounded_state_trims_under_flood(spark, tmp_path):

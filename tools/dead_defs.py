@@ -97,9 +97,6 @@ TEST_ONLY_ALLOWED = {
     "pipeline.streaming_decide_bounded": "COVERAGE bounded-state decide row",
     "pipeline.streaming_sessionize": "COVERAGE T4 (session windows)",
     "sampling.write_training_shards": "COVERAGE training-shard export row",
-    "signal_pipeline._decide_column_api": (
-        "reference implementation: test_decide_sql_equals_column_api"
-    ),
     "signal_pipeline.parse_signals": "COVERAGE P1/P2 (lenient JSON parse)",
     "skew.salted_join": "COVERAGE hot-key salting row",
     "tables.refresh_tables": "public API: test_refresh_tables_drops_table_handles",
