@@ -34,11 +34,8 @@ ENGINE-EXACT by construction (the quality-classifier / bloom discipline):
   the lexicographically smallest language. Corpus rows never shuffle and
   never join: the plan a 100 TB language-ID pass must have.
 
-Scale shapes: :func:`langid_score` (literal arrays, default) for models
-up to ~10^4 buckets; :func:`langid_score_join` (explode + broadcast join
-+ one doc-keyed re-aggregation) for fastText-sized models (2^20 buckets)
-where array literals would bloat the plan — semantically identical,
-pinned by a parity pytest.
+Scale shape: :func:`langid_score` (literal arrays) serves models up to
+~10^4 buckets.
 
 Training reads the corpus once (one groupBy(lang, bucket) with map-side
 combine; output is bounded by n_langs x buckets, NOT by data) and the
@@ -396,98 +393,6 @@ def langid_pred_expr(
     """The predicted language alone (NULL text -> NULL) — the filter form
     the selection gate composes on (keep iff pred isin allowed set)."""
     return langid_best_expr(text, model, **kw)["lang"]
-
-
-def langid_score_join(
-    docs: DataFrame,
-    profiles: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    *,
-    n: int = LANGID_N,
-    buckets: int = LANGID_BUCKETS,
-    scale: int = LANGID_SCALE,
-    max_chars: int = LANGID_MAX_CHARS,
-) -> DataFrame:
-    """The big-model scale path (fastText sizing, 2^20 buckets — array
-    literals would put megabytes in the plan): explode gram buckets, LEFT
-    broadcast-join the sparse (lang, bucket, weight) profile table, one
-    doc-keyed re-aggregation. Semantically identical to
-    :func:`langid_score` (parity-pinned): an unseen (lang, bucket) pair
-    contributes the count=0 Laplace weight, reconstructed from the
-    broadcast per-lang totals.
-
-    One exchange (the doc-keyed aggregation) — acceptable when the model
-    genuinely cannot ride as a literal; prefer :func:`langid_score`.
-
-    Row contract matches the literal path EXACTLY (code-review r11: the
-    explode drops gram-less documents, which the first version silently
-    lost): every input row comes back — a non-NULL gram-less text (only
-    '' can be one) scores 0 for every language and predicts the
-    lexicographically smallest, NULL text predicts NULL."""
-    # A NULL-lang profile row (possible when the profiles table was built
-    # outside train_langid, which filters NULL langs) would make the
-    # smallest-lang tie-break below raise (None unorderable vs str) and
-    # can never win the argmax anyway (NULL join keys never match) —
-    # drop it here so caller-supplied tables degrade like trained ones
-    # (ADVICE r12).
-    langs = (
-        profiles.select("lang", "total")
-        .filter(F.col("lang").isNotNull())
-        .distinct()
-    )
-    lang_rows = langs.select("lang").collect()  # bounded: n_langs rows
-    if not lang_rows:
-        # empty/degenerate training corpus: degrade like semantic_dedup
-        # (ADVICE r11) — every document scores NULL rather than min()
-        # raising on an empty sequence
-        return docs.select(
-            id_col,
-            F.lit(None).cast("string").alias("pred_lang"),
-            F.lit(None).cast("long").alias("pred_score"),
-        )
-    exploded = (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(
-            id_col,
-            F.explode(
-                gram_buckets_expr(text_col, n, buckets, max_chars)
-            ).alias("bucket"),
-        )
-        .crossJoin(F.broadcast(langs))
-        .join(F.broadcast(profiles.select("lang", "bucket", "weight")),
-              ["lang", "bucket"], "left")
-        .withColumn(
-            "w",
-            F.coalesce(
-                F.col("weight"),
-                F.expr(f"{scale} div (total + {buckets})").cast("long"),
-            ),
-        )
-        .groupBy(id_col, "lang")
-        .agg(F.sum("w").alias("score"))
-    )
-    pick = exploded.groupBy(id_col).agg(
-        F.min(F.struct((-F.col("score")).alias("neg"), F.col("lang"))).alias("best")
-    )
-    # complete the row contract: a gram-less doc has no exploded rows, so
-    # it takes the all-zero-scores verdict (the smallest language, the
-    # literal path's tie-break); NULL text stays NULL. The langs table is
-    # bounded (n_langs rows), so min() here is a driver-side constant.
-    smallest = min(r["lang"] for r in lang_rows)
-    return docs.select(id_col, F.col(text_col).alias("_lid_text")).join(
-        pick, id_col, "left"  # doc-keyed join: both sides corpus-sized
-    ).select(
-        id_col,
-        F.when(
-            F.col("_lid_text").isNotNull(),
-            F.coalesce(F.col("best.lang"), F.lit(smallest)),
-        ).alias("pred_lang"),
-        F.when(
-            F.col("_lid_text").isNotNull(),
-            F.coalesce(-F.col("best.neg"), F.lit(0)),
-        ).cast("long").alias("pred_score"),
-    )
 
 
 def with_derived_lang(

@@ -21,7 +21,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .common import const_array, const_array_sql, sql_expr
+from .common import const_array_sql, sql_expr
 
 
 def dot_expr(a: Column | str, b: Column | str) -> Column:
@@ -50,6 +50,29 @@ def _norm_sql(a: str) -> str:
     return f"sqrt(aggregate({sq}, 0D, (_acc, _p) -> _acc + _p))"
 
 
+def _top_n(
+    scored: DataFrame, score: str, n: int, keep: list[str] | None = None
+) -> DataFrame:
+    """The one ranking tail of every cosine ranker: rank ``scored``'s rows
+    per ``q_id`` on (``score`` desc, ``c_id`` asc) — ties break on
+    candidate id, so ranks are deterministic — and keep rank <= ``n``, as
+    (q_id, c_id, score rounded to 6 places, rank BIGINT). ``keep`` names
+    the columns to carry instead: IVF-PQ's ADC band, which the exact
+    re-rank scores again."""
+    w = Window.partitionBy("q_id").orderBy(F.desc(score), F.asc("c_id"))
+    ranked = scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= n
+    )
+    if keep is not None:
+        return ranked.select(*keep)
+    return ranked.select(
+        "q_id",
+        "c_id",
+        F.round(score, 6).alias(score),
+        F.col("rank").cast("long").alias("rank"),
+    )
+
+
 def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -72,17 +95,7 @@ def brute_force_topk(
         c.join(F.broadcast(q), F.col("q_id") != F.col("c_id"))
         .withColumn("cosine", cosine_expr("q_vec", "c_vec"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "c_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _top_n(scored, "cosine", k)
 
 
 def q8_quantize(
@@ -163,17 +176,7 @@ def brute_force_topk_q8(
             ),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("q8_cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "c_id",
-            F.round("q8_cosine", 6).alias("q8_cosine"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _top_n(scored, "q8_cosine", k)
 
 
 def brute_force_topk_q8_rerank(
@@ -218,17 +221,7 @@ def brute_force_topk_q8_rerank(
         .join(F.broadcast(q), "q_id")
         .withColumn("cosine", cosine_expr("q_vec", "c_vec"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "c_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _top_n(scored, "cosine", k)
 
 
 AUTO_CELL_TARGET = 32  # target per-cell membership for auto-sized k-means
@@ -316,24 +309,9 @@ def _lsh_bucket_sql(vec_sql: str, planes: list[list[float]]) -> str:
 
 
 def lsh_bucket_expr(vec: Column | str, planes: list[list[float]]) -> Column:
-    """Bucket id as a Column; accepts a column NAME (one parse — the cheap
-    path) or a Column (legacy py4j construction, kept for the public
-    functions surface where callers pass arbitrary expressions)."""
-    if isinstance(vec, str):
-        return F.expr(_lsh_bucket_sql(vec, planes))
-    total = F.lit(0)
-    for i, p in enumerate(planes):
-        d = F.aggregate(
-            F.zip_with(
-                vec,
-                const_array(p),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        total = total + F.when(d >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return total
+    """Bucket id as one parsed expression over a column name or a Column
+    (evaluated once per row, common.sql_expr)."""
+    return sql_expr(lambda v: _lsh_bucket_sql(v, planes), vec)
 
 
 def _table_buckets_expr(vec_sql: str, tables: list[list[list[float]]]) -> Column:
@@ -384,17 +362,7 @@ def ann_topk_lsh(
         .dropDuplicates(["q_id", "c_id"])
     )
     scored = cand.withColumn("cosine", cosine_expr("q_vec", "c_vec"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "c_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _top_n(scored, "cosine", k)
 
 
 def _dist2_sql(vec_sql: str, centroid: list[float]) -> str:
@@ -611,6 +579,133 @@ def _assign(
     )
 
 
+def _lloyd_train(
+    embeddings: DataFrame,
+    m: int,
+    k: int,
+    iters: int,
+    seed: int,
+    salt: str,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+) -> list[list[list[float]]]:
+    """k-means over each vector's ``m`` consecutive ``dim / m``-wide
+    slices: data-sampled init + ``iters`` Lloyd steps in Spark. Returns
+    [m][k'][dsub] doubles, k' = min(k, corpus rows). PQ codebooks are the
+    m > 1 case; IVF centroids are m = 1, one slice that is the whole
+    vector (Jégou et al. 2011: IVF is PQ with one subspace).
+
+    Init is the ``k`` DATA VECTORS with the smallest content-stable hash
+    (md5('{salt}{seed}|' || id), id-tie-broken), sliced per subspace — one
+    sampled row seeds code c in every subspace. Deterministic,
+    partition-independent, and trivially replayable in any SQL engine
+    (the DuckDB oracles sample the identical rows and slice).
+    Random-Gaussian init (the pre-round-7 design) collapses at auto-sized
+    cell counts: centroids that match no data vector never receive
+    members, and Lloyd steps can't resurrect them — measured at the 100x
+    corpus, 6250 requested cells left only NINE non-empty (max cell 57k
+    members), which degrades IVF probing to a near-full scan and makes
+    SemDeDup's within-cell pass quadratic. Sampling init points from the
+    data guarantees every centroid starts ON a real vector, so occupancy
+    tracks the data distribution.
+
+    Each Lloyd step is ONE hash aggregation on (code, pos), pos the
+    element's position in the whole vector (its subspace is pos div
+    dsub). Partial (map-side) sums keep per-group state at one decimal,
+    so the shuffle carries O(m * k * dsub) values whatever the corpus
+    size, and a hot cell never materializes its member vectors (the
+    collect_list formulation OOMs at corpus scale — a cell with 1e9
+    members is a 256 GB array). Each member contributes exactly one row
+    per position, so the group's row count IS the code's member count —
+    no separate count job. Empty codes keep their previous value.
+
+    Exact, order-independent sums: float addition is order-sensitive and
+    shuffle partial order is not deterministic, so double sums would make
+    retrained centroids differ run-to-run (and across task retries). Each
+    value is quantized onto a 1e-10 grid with floor() — floor of a double
+    has NO rounding-tie ambiguity (unlike a decimal cast, whose
+    half-up/half-even boundary behavior differs between engines) — and
+    the integer grid values accumulate exactly in DECIMAL(38,0). Training
+    is therefore reproducible under any partitioning AND bit-replayable in
+    an external SQL engine (the DuckDB oracles unroll the same Lloyd
+    steps).
+
+    PRECONDITION (ADVICE r5): every embedding must be non-null with
+    exactly ``dim`` elements. Member counts are derived from the group
+    row counts — a NULL/empty vector emits no posexplode rows (it would
+    vanish from the averages), and a ragged vector would skew the
+    per-position counts. Enforced with one cheap aggregate rather than
+    silently mistraining.
+    """
+    who = salt.removesuffix("init") + "_train"  # the salt names its caller
+    bad = (
+        embeddings.select(F.col(vec_col).alias("vec"))
+        .filter(F.col("vec").isNull() | (F.size("vec") != dim))
+        .limit(1)
+        .count()
+    )
+    if bad:
+        raise ValueError(
+            f"{who}: embeddings must be non-null with exactly dim={dim} "
+            "elements (null/ragged vectors would silently skew the "
+            "count-from-grid centroid averaging)"
+        )
+    h = F.md5(F.concat(F.lit(f"{salt}{seed}|"), F.col(id_col).cast("string")))
+    init_rows = (
+        embeddings.select(
+            F.col(vec_col).cast("array<double>").alias("vec"),
+            h.alias("h"),
+            F.col(id_col).alias("tid"),
+        )
+        .orderBy("h", "tid")
+        .limit(k)  # TakeOrderedAndProject: k x dim to the driver
+        .collect()
+    )
+    if not init_rows:
+        # loud, not []: downstream assignment would crash on tables[0][0]
+        # with an opaque IndexError
+        raise ValueError(
+            f"{who}: embeddings table is empty — nothing to sample init "
+            "centroids from"
+        )
+    dsub = dim // m
+    tables = [
+        [list(r["vec"][s * dsub : (s + 1) * dsub]) for r in init_rows]
+        for s in range(m)
+    ]
+    # pre-cast once: the fold path casts element-wise anyway, and the Arrow
+    # kernel passes the vector through under a concrete array<double> type
+    v = embeddings.select(F.col(vec_col).cast("array<double>").alias("vec"))
+    for _ in range(iters):
+        # same routing (and bit-identical assignment) as ivf_assign and
+        # pq_encode: the literal expression is O(m * k * dsub) PER ROW —
+        # auto-sized cell counts make Lloyd steps quadratic in the corpus
+        # without the kernel
+        assigned = _assign(v, tables, "vec", keep=["vec"], out="codes")
+        grid = (
+            assigned.select("codes", F.posexplode("vec").alias("pos", "val"))
+            .groupBy(F.expr(f"codes[pos div {dsub}]").alias("code"), "pos")
+            .agg(
+                F.sum(
+                    F.floor(F.col("val") * F.lit(1e10)).cast("decimal(38,0)")
+                ).alias("s"),
+                F.count(F.lit(1)).alias("n"),
+            )
+            # Arrow transfer: the grid is m x k x dsub rows — 400k at the
+            # 100x corpus's auto-sized 6250 cells, where row-based collect()
+            # costs ~10 s/iteration of pure py4j deserialization
+            .toPandas()
+        )
+        new = [[list(c) for c in t] for t in tables]
+        for code, pos, sm, n in grid.itertuples(index=False):
+            # exact-integer sum → one float division chain — deterministic
+            # (sm arrives as decimal.Decimal; float() is correctly rounded)
+            new[pos // dsub][code][pos % dsub] = float(sm) / int(n) / 1e10
+        tables = new
+    return tables
+
+
 def ivf_train(
     embeddings: DataFrame,
     n_cells: int = 16,
@@ -620,118 +715,16 @@ def ivf_train(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> list[list[float]]:
-    """Train IVF centroids: data-sampled init + `iters` Lloyd steps in Spark.
+    """Train IVF centroids: the one-subspace case of ``_lloyd_train``
+    (init rows salted ``ivfinit``), ``n_cells`` x dim doubles.
 
-    Init is the ``n_cells`` DATA VECTORS with the smallest content-stable
-    hash (md5('ivfinit{seed}|' || id), id-tie-broken) — deterministic,
-    partition-independent, and trivially replayable in any SQL engine
-    (the DuckDB oracle samples the identical rows). Random-Gaussian init
-    (the pre-round-7 design) collapses at auto-sized cell counts: centroids
-    that match no data vector never receive members, and Lloyd steps can't
-    resurrect them — measured at the 100x corpus, 6250 requested cells left
-    only NINE non-empty (max cell 57k members), which degrades IVF probing
-    to a near-full scan and makes SemDeDup's within-cell pass quadratic.
-    Sampling init points from the data guarantees every centroid starts ON
-    a real vector, so occupancy tracks the data distribution.
-
-    This is the offline "train" phase of IVF (at 100 TB you run it once on a
-    sample and persist the centroids); only n_cells x dim doubles ever reach
-    the driver. Each Lloyd step is one hash aggregation on (cell, dim_idx) —
-    partial (map-side) sums keep per-group state at one double, so a hot cell
-    never materializes its member vectors (the collect_list formulation OOMs
-    at corpus scale — a cell with 1e9 members is a 256 GB array).
-
-    PRECONDITION (ADVICE r5): every embedding must be non-null with exactly
-    ``dim`` elements. The member counts are derived from the (cell, dim_idx)
-    group row counts — a NULL/empty vector emits no posexplode rows (it
-    would vanish from the averages), and a ragged vector would skew the
-    per-dimension counts. Enforced below with one cheap aggregate rather
-    than silently mistraining.
-    """
-    bad = (
-        embeddings.select(F.col(vec_col).alias("vec"))
-        .filter(F.col("vec").isNull() | (F.size("vec") != dim))
-        .limit(1)
-        .count()
-    )
-    if bad:
-        raise ValueError(
-            f"ivf_train: embeddings must be non-null with exactly dim={dim} "
-            "elements (null/ragged vectors would silently skew the "
-            "count-from-grid centroid averaging)"
-        )
-    h = F.md5(
-        F.concat(F.lit(f"ivfinit{seed}|"), F.col(id_col).cast("string"))
-    )
-    init_rows = (
-        embeddings.select(
-            F.col(vec_col).cast("array<double>").alias("vec"),
-            h.alias("h"),
-            F.col(id_col).alias("tid"),
-        )
-        .orderBy("h", "tid")
-        .limit(n_cells)  # TakeOrderedAndProject: n_cells x dim to the driver
-        .collect()
-    )
-    centroids = [list(r["vec"]) for r in init_rows]
-    if not centroids:
-        # loud, not []: downstream ivf_assign/semantic_dedup would crash on
-        # centroids[0] with an opaque IndexError (pre-r7's Gaussian init
-        # masked the empty corpus by returning data-free centroids)
-        raise ValueError(
-            "ivf_train: embeddings table is empty — nothing to sample "
-            "init centroids from"
-        )
-    # pre-cast once: the fold path casts element-wise anyway, and the Arrow
-    # kernel passes the vector through under a concrete array<double> type
-    v = embeddings.select(F.col(vec_col).cast("array<double>").alias("vec"))
-    for _ in range(iters):
-        # same routing (and bit-identical assignment) as ivf_assign: the
-        # literal expression is O(n_cells * dim) PER ROW — auto-sized cell
-        # counts make Lloyd steps quadratic in the corpus without the kernel
-        assigned = _assign(v, [centroids], "vec", keep=["vec"])
-        # (cell, dim_idx) grid: dim_sums is n_cells x dim rows of scalar
-        # sums; counts is n_cells rows. Both are partial-aggregated
-        # map-side, so the shuffle carries O(n_cells * dim) doubles total.
-        exploded = assigned.select(
-            "cell", F.posexplode(F.col("vec")).alias("dim_idx", "val")
-        )
-        # Exact, order-independent partial sums: float addition is
-        # order-sensitive and shuffle partial order is not deterministic, so
-        # double sums would make retrained centroids differ run-to-run (and
-        # across task retries). Each value is quantized onto a 1e-10 grid
-        # with floor() — floor of a double has NO rounding-tie ambiguity
-        # (unlike a decimal cast, whose half-up/half-even boundary behavior
-        # differs between engines) — and the integer grid values accumulate
-        # exactly in DECIMAL(38,0). Training is therefore reproducible under
-        # any partitioning AND bit-replayable in an external SQL engine
-        # (the DuckDB oracle unrolls these same two Lloyd steps).
-        # ONE aggregation per Lloyd step: each member contributes exactly one
-        # row per dimension, so the (cell, dim_idx) group's row count IS the
-        # cell's member count — the separate per-cell count job (a second
-        # full pass + collect per iteration) is redundant.
-        dim_sums = (
-            exploded.groupBy("cell", "dim_idx")
-            .agg(
-                F.sum(
-                    F.floor(F.col("val").cast("double") * F.lit(1e10)).cast(
-                        "decimal(38,0)"
-                    )
-                ).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            # Arrow transfer: the grid is n_cells x dim rows — 400k at the
-            # 100x corpus's auto-sized 6250 cells, where row-based collect()
-            # costs ~10 s/iteration of pure py4j deserialization
-            .toPandas()
-        )
-        new = [list(c) for c in centroids]
-        for cell, dim_idx, s, cnt in dim_sums.itertuples(index=False):
-            # exact-integer sum → one float division chain — deterministic
-            # (s arrives as decimal.Decimal; float() is correctly rounded)
-            new[cell][dim_idx] = float(s) / int(cnt) / 1e10
-        centroids = new
-    return centroids
+    This is the offline "train" phase of IVF (at 100 TB you run it once on
+    a sample and persist the centroids); only n_cells x dim doubles ever
+    reach the driver. A corpus smaller than ``n_cells`` trains one
+    centroid per row."""
+    return _lloyd_train(
+        embeddings, 1, n_cells, iters, seed, "ivfinit", dim, id_col, vec_col
+    )[0]
 
 
 def ivf_assign(
@@ -825,17 +818,7 @@ def ann_topk_ivf(
         .filter(F.col("q_id") != F.col("c_id"))
         .withColumn("cosine", cosine_expr("q_vec", "c_vec"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "c_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _top_n(scored, "cosine", k)
 
 
 def embedding_near_dup(
@@ -1191,99 +1174,26 @@ def pq_train(
     vec_col: str = "embedding",
 ) -> list[list[list[float]]]:
     """Train PQ codebooks: per subspace, ksub centroids over the corpus'
-    subvectors — data-sampled init + `iters` Lloyd steps, the exact
-    ivf_train discipline (content-stable-hash init rows shared across
-    subspaces, floor-grid DECIMAL(38,0) partial sums so training is
-    order-independent AND bit-replayable in an external SQL engine; empty
-    codes keep their previous codeword).
+    subvectors — ``_lloyd_train`` over m subspaces (init rows salted
+    ``pqinit``), all m trained in ONE aggregation per Lloyd step.
 
     Returns [m][ksub][dsub] doubles — m*ksub*dsub values to the driver
-    (16 KB at the production shape), never data-sized. All m subspaces
-    train in ONE aggregation per Lloyd step: assignment emits the codes
-    array per row, the (s, code, dim_idx) grid aggregates map-side — the
-    shuffle carries O(m*ksub*dsub) decimals total regardless of corpus
-    size. At 100 TB you train on a sample and persist the codebooks, like
-    ivf_train's centroids."""
+    (16 KB at the production shape), never data-sized. At 100 TB you
+    train on a sample and persist the codebooks, like ivf_train's
+    centroids."""
     if dim % m:
         raise ValueError(f"pq_train: dim={dim} not divisible by m={m}")
-    dsub = dim // m
-    bad = (
-        embeddings.select(F.col(vec_col).alias("vec"))
-        .filter(F.col("vec").isNull() | (F.size("vec") != dim))
-        .limit(1)
-        .count()
+    codebooks = _lloyd_train(
+        embeddings, m, ksub, iters, seed, "pqinit", dim, id_col, vec_col
     )
-    if bad:
+    # the trainer samples min(ksub, rows) init rows: a short corpus shows
+    # in the codebook size
+    if len(codebooks[0]) < ksub:
         raise ValueError(
-            f"pq_train: embeddings must be non-null with exactly dim={dim} "
-            "elements (null/ragged vectors would skew the count-from-grid "
-            "codeword averaging)"
-        )
-    h = F.md5(
-        F.concat(F.lit(f"pqinit{seed}|"), F.col(id_col).cast("string"))
-    )
-    init_rows = (
-        embeddings.select(
-            F.col(vec_col).cast("array<double>").alias("vec"),
-            h.alias("h"),
-            F.col(id_col).alias("tid"),
-        )
-        .orderBy("h", "tid")
-        .limit(ksub)
-        .collect()
-    )
-    if not init_rows:
-        raise ValueError("pq_train: embeddings table is empty")
-    if len(init_rows) < ksub:
-        raise ValueError(
-            f"pq_train: corpus has {len(init_rows)} rows < ksub={ksub}; "
+            f"pq_train: corpus has {len(codebooks[0])} rows < ksub={ksub}; "
             "shrink the codebook (a deployment trains on a sample LARGER "
             "than its codebook by construction)"
         )
-    # shared init rows, sliced per subspace — one sampled row seeds code c
-    # in EVERY subspace (trivially replayed: the oracle samples once and
-    # slices, same as here)
-    codebooks = [
-        [list(r["vec"][s * dsub : (s + 1) * dsub]) for r in init_rows]
-        for s in range(m)
-    ]
-    v = embeddings.select(F.col(vec_col).cast("array<double>").alias("vec"))
-    for _ in range(iters):
-        assigned = _assign(v, codebooks, "vec", keep=["vec"], out="codes")
-        # (s, code, subvector) rows → (s, code, dim_idx) grid; the count
-        # per group IS the code's member count (one row per member per dim)
-        parts = assigned.select(
-            F.posexplode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.element_at("codes", s + 1).alias("code"),
-                            F.slice("vec", s * dsub + 1, dsub).alias("v"),
-                        )
-                        for s in range(m)
-                    ]
-                )
-            ).alias("s", "sc")
-        )
-        grid = (
-            parts.select(
-                "s",
-                F.col("sc.code").alias("code"),
-                F.posexplode(F.col("sc.v")).alias("dim_idx", "val"),
-            )
-            .groupBy("s", "code", "dim_idx")
-            .agg(
-                F.sum(
-                    F.floor(F.col("val") * F.lit(1e10)).cast("decimal(38,0)")
-                ).alias("sm"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .toPandas()  # m*ksub*dsub rows — model-sized, never data-sized
-        )
-        new = [[list(cw) for cw in sub] for sub in codebooks]
-        for s, code, dim_idx, sm, n in grid.itertuples(index=False):
-            new[s][code][dim_idx] = float(sm) / int(n) / 1e10
-        codebooks = new
     return codebooks
 
 
@@ -1387,26 +1297,11 @@ def ann_topk_ivf_pq(
         .withColumn("rvec", F.expr(_pq_rvec_sql("codes", codebooks)))
         .withColumn("approx", cosine_expr("q_vec", "rvec"))
     )
-    wb = Window.partitionBy("q_id").orderBy(F.desc("approx"), F.asc("c_id"))
-    band_rows = (
-        adc.withColumn("rn", F.row_number().over(wb))
-        .filter(F.col("rn") <= band)
-        .select("q_id", "q_vec", "c_id")
-    )
+    band_rows = _top_n(adc, "approx", band, keep=["q_id", "q_vec", "c_id"])
     exact = band_rows.join(
         embeddings.select(
             F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
         ),
         "c_id",
     ).withColumn("cosine", cosine_expr("q_vec", "c_vec"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "c_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _top_n(exact, "cosine", k)

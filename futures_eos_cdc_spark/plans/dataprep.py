@@ -2457,7 +2457,8 @@ def _ann_ivf_oracle_sql(
     checkable (same pattern as _ann_lsh_oracle_sql).
 
     Bit-exactness rests on three properties shared with
-    operators.similarity.ivf_train / ann_topk_ivf:
+    operators.similarity._lloyd_train (ivf_train's m = 1 call) /
+    ann_topk_ivf:
     - every distance/cosine is the same left fold (list_reduce ≡
       F.aggregate) over double-cast elements;
     - per-(cell,dim) sums are floor(v*1e10) integers accumulated in
@@ -2468,13 +2469,13 @@ def _ann_ivf_oracle_sql(
     - argmin ties break on cell id (array_sort struct order ≡
       ORDER BY d, cell).
 
-    Empty cells keep their previous centroid (COALESCE ≡ ivf_train's
+    Empty cells keep their previous centroid (COALESCE ≡ _lloyd_train's
     copy-then-overwrite loop).
 
     Init (round 7) samples the n_cells data vectors with the smallest
     content-stable hash — zero arithmetic, so init parity is trivial; the
     pre-r7 Gaussian init collapsed to a handful of occupied cells at
-    auto-sized cell counts (see ivf_train's docstring).
+    auto-sized cell counts (see _lloyd_train's docstring).
     """
     init_order = f"md5('ivfinit{seed}|' || CAST(vec_id AS VARCHAR)), vec_id"
     rng = f"range(1, {dim + 1})"
@@ -2607,8 +2608,9 @@ def _ann_ivf_pq_oracle_sql(
     """DuckDB oracle for q_ann_ivf_pq: the ENTIRE IVF-PQ pipeline — coarse
     training (the shared _ann_ivf_oracle_sql prefix), per-subspace PQ
     codebook training (shared smallest-hash init rows sliced per subspace,
-    floor-grid DECIMAL(38,0) Lloyd sums — operators.similarity.pq_train's
-    exact arithmetic), encoding, ADC scoring against the PQ reconstruction
+    floor-grid DECIMAL(38,0) Lloyd sums — the exact arithmetic of
+    operators.similarity._lloyd_train, which pq_train runs over m
+    subspaces), encoding, ADC scoring against the PQ reconstruction
     (flatten(list(cvec ORDER BY s)) ≡ the engine's literal-indexed rvec),
     band selection and exact cosine re-rank — replayed in SQL. Bit parity
     rests on the same three properties as _ann_ivf_oracle_sql, applied

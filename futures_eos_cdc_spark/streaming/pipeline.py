@@ -35,6 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.signal_pipeline import (
     BUFFER_KEEP,
@@ -591,6 +592,22 @@ def _dec_sum_plain(col: Column) -> Column:
     return F.sum(col.cast(DEC)).cast("double")
 
 
+def _schema(*fields: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(n, t) for n, t in fields])
+
+
+# The stateful operators' schemas are StructTypes, not DDL strings:
+# applyInPandasWithState parses a DDL string through the JVM on every build.
+_STR, _INT, _LONG, _DBL = T.StringType(), T.IntegerType(), T.LongType(), T.DoubleType()
+_ARRIVAL_OUT_SCHEMA = _schema(
+    ("symbol", _STR), ("window_start_s", _LONG), ("timeframe", _STR),
+    ("n_buffered", _INT), ("avg_price", _DBL), ("newest_ts_us", _LONG),
+)
+_ARRIVAL_STATE_SCHEMA = _schema(
+    ("prices", T.ArrayType(_DBL)), ("tss", T.ArrayType(_LONG))
+)
+
+
 def arrival_order_last10(
     signals: DataFrame,
     window_seconds: int = WINDOW_SECONDS,
@@ -614,12 +631,6 @@ def arrival_order_last10(
     """
     import pandas as pd  # noqa: PLC0415 — worker-side import
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = (
-        "symbol string, window_start_s long, timeframe string, "
-        "n_buffered int, avg_price double, newest_ts_us long"
-    )
-    state_schema = "prices array<double>, tss array<long>"
 
     def update(key, pdfs, state: GroupState):
         if state.exists:
@@ -654,7 +665,11 @@ def arrival_order_last10(
         "window_start_s", F.expr(f"(ts_us div {w_us}) * {window_seconds}").cast("long")
     )
     return keyed.groupBy("symbol", "window_start_s", "timeframe").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+        update,
+        _ARRIVAL_OUT_SCHEMA,
+        _ARRIVAL_STATE_SCHEMA,
+        "update",
+        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -735,21 +750,22 @@ def streaming_candles(
     )
 
 
-_BOUNDED_OUT_SCHEMA = (
-    "symbol string, window_start_s long, "
-    "ts_us array<long>, signal_id array<long>, side array<string>, "
-    "qty array<double>, price array<double>, timeframe array<string>, "
-    "cnt_1m long, bal_1m long, cnt_5m long, bal_5m long, cnt_15m long, bal_15m long"
+_BOUNDED_OUT_SCHEMA = _schema(
+    ("symbol", _STR), ("window_start_s", _LONG),
+    ("ts_us", T.ArrayType(_LONG)), ("signal_id", T.ArrayType(_LONG)),
+    ("side", T.ArrayType(_STR)), ("qty", T.ArrayType(_DBL)),
+    ("price", T.ArrayType(_DBL)), ("timeframe", T.ArrayType(_STR)),
+    ("cnt_1m", _LONG), ("bal_1m", _LONG), ("cnt_5m", _LONG),
+    ("bal_5m", _LONG), ("cnt_15m", _LONG), ("bal_15m", _LONG),
 )
-_BOUNDED_STATE_SCHEMA = (
-    "tss array<long>, ids array<long>, sides array<string>, qtys array<double>, "
-    "prices array<double>, tfs array<string>, "
-    "c1 long, b1 long, c5 long, b5 long, c15 long, b15 long"
+_BOUNDED_STATE_SCHEMA = _schema(
+    ("tss", T.ArrayType(_LONG)), ("ids", T.ArrayType(_LONG)),
+    ("sides", T.ArrayType(_STR)), ("qtys", T.ArrayType(_DBL)),
+    ("prices", T.ArrayType(_DBL)), ("tfs", T.ArrayType(_STR)),
+    ("c1", _LONG), ("b1", _LONG), ("c5", _LONG),
+    ("b5", _LONG), ("c15", _LONG), ("b15", _LONG),
 )
-_BOUNDED_OUT_COLS = [
-    "symbol", "window_start_s", "ts_us", "signal_id", "side", "qty", "price",
-    "timeframe", "cnt_1m", "bal_1m", "cnt_5m", "bal_5m", "cnt_15m", "bal_15m",
-]
+_BOUNDED_OUT_COLS = _BOUNDED_OUT_SCHEMA.names
 
 
 def _make_bounded_update(window_seconds: int, keep: int):

@@ -30,6 +30,22 @@ def test_similarity_functions_compose(spark, sf_dir):
     assert all(abs(r.self_cos - 1.0) < 1e-9 for r in row)
 
 
+def test_lsh_bucket_column_and_name_forms_match_ann_lsh(spark, sf_dir):
+    """fx.lsh_bucket over a Column, over a column name, and ann_topk_lsh's
+    first-table signature give every vector the same bucket id."""
+    from futures_eos_cdc_spark.operators import similarity as S
+
+    planes = S._hyperplanes(64, 5, 42)  # ann_topk_lsh's table 0 at its defaults
+    e = load_table(spark, sf_dir, "embeddings")
+    rows = e.select(
+        fx.lsh_bucket(F.col("embedding"), planes).alias("col"),
+        fx.lsh_bucket("embedding", planes).alias("name"),
+        S._table_buckets_expr("embedding", [planes])[0]["bucket"].alias("ann"),
+    ).collect()
+    assert len({r.col for r in rows}) > 1
+    assert all(r.col == r.name == r.ann for r in rows)
+
+
 def test_all_exports_exist():
     for name in fx.__all__:
         assert callable(getattr(fx, name)), name

@@ -1,9 +1,8 @@
 """Language-ID classifier semantics (operators/langid.py) the oracle
 cannot state: discriminative power on corpora with genuinely distinct
 character distributions (the driver fixture's lang column is random
-w.r.t. its synthetic text), literal-array vs broadcast-join shape
-parity, the pure-projection plan contract, and the derived-lang wiring
-into the per-language operators."""
+w.r.t. its synthetic text), the pure-projection plan contract, and the
+derived-lang wiring into the per-language operators."""
 
 from __future__ import annotations
 
@@ -16,7 +15,6 @@ from futures_eos_cdc_spark.operators.langid import (
     gram_buckets_expr,
     langid_model,
     langid_score,
-    langid_score_join,
     train_langid,
     with_derived_lang,
 )
@@ -66,35 +64,6 @@ def test_langid_generalizes_to_unseen_docs(spark):
     )
     out = {r.doc_id: r.pred_lang for r in langid_score(held, model).collect()}
     assert out == {100: "aa", 101: "bb", 102: "cc"}
-
-
-def test_langid_literal_and_join_shapes_agree(spark):
-    """The dense literal-array projection and the big-model broadcast-join
-    path must produce identical predictions AND identical integer scores
-    (the unseen-bucket Laplace weight reconstruction is the subtle part),
-    INCLUDING the degenerate rows the explode would otherwise lose
-    (code-review r11): empty text -> (smallest lang, 0), NULL text ->
-    (NULL, NULL) — one output row per input row on both paths."""
-    docs = _corpus(spark).unionByName(
-        _corpus(spark)
-        .sparkSession.createDataFrame(
-            [(900, "aa", ""), (901, "aa", None)],
-            "doc_id long, lang string, text string",
-        )
-    )
-    model = langid_model(docs)
-    profiles = train_langid(docs)
-    lit = {
-        r.doc_id: (r.pred_lang, r.pred_score)
-        for r in langid_score(docs, model).collect()
-    }
-    jn = {
-        r.doc_id: (r.pred_lang, r.pred_score)
-        for r in langid_score_join(docs, profiles).collect()
-    }
-    assert lit == jn
-    assert lit[900] == ("aa", 0)  # gram-less: all-zero scores, tie-break
-    assert lit[901] == (None, None)
 
 
 def test_langid_score_is_pure_projection(spark):
@@ -240,16 +209,6 @@ def test_train_langid_drops_null_lang_rows(spark):
     # scoring the full corpus (incl. the unlabelled doc) must not raise
     out = langid_score(docs, model).collect()
     assert len(out) == len(docs.collect())
-
-
-def test_langid_score_join_empty_profiles_degrades(spark):
-    """ADVICE r11: an empty/degenerate training corpus must degrade to
-    all-NULL predictions, not raise min()-of-empty-sequence."""
-    docs = _corpus(spark).limit(3)
-    empty = train_langid(docs.filter(F.lit(False)))
-    out = langid_score_join(docs, empty).collect()
-    assert len(out) == 3
-    assert all(r.pred_lang is None and r.pred_score is None for r in out)
 
 
 def test_langid_oracle_matches_spark_on_null_lang_corpus(spark):

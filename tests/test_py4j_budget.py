@@ -31,7 +31,7 @@ BATCH_MIX = {
 # 1,447 and 1,560 while the 16-bit vote was folded one Column call per bit
 QUERY_CEILINGS = {**BATCH_MIX, "simhash_buckets": 145, "simhash_hamming_near_dup": 280}
 # the build reads its file source too
-STREAMING = {"streaming_decide": 75, "streaming_decide_bounded": 130}
+STREAMING = {"streaming_decide": 75, "streaming_decide_bounded": 123}
 CEILINGS = {**QUERY_CEILINGS, **STREAMING}
 
 

@@ -64,7 +64,6 @@ TEST_ONLY_ALLOWED = {
         "COVERAGE S2+: test_kafka_txn.py, test_kafka_loopback.py"
     ),
     "kafka.write_decisions_kafka": "COVERAGE S2 (Kafka sink; needs spark-sql-kafka)",
-    "langid.langid_score_join": "public API: test_langid_literal_and_join_shapes_agree",
     "linkage.fuzzy_link_values": (
         "public API: test_fuzzy_link_values_includes_exact_and_both_orientations"
     ),
