@@ -6,8 +6,8 @@ nothing shares a subexpression between those calls. A lambda body that
 reads a row expression without the lambda variable, e.g. ``transform(seq,
 i -> slice(split(text), i, k))``, re-computes ``split(text)`` once per
 element: quadratic in the array length. The fix is to evaluate the row
-expression once outside the lambda (project it, or
-``operators.text.bind_expr``).
+expression once outside the lambda (project it, or pass it to
+``operators.common.sql_expr``, which binds a Column input once per row).
 
 :func:`lambda_invariants` walks a DataFrame's ANALYZED plan (the optimized
 plan hides persisted subplans behind ``InMemoryRelation``) and returns each

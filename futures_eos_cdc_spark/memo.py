@@ -1,5 +1,5 @@
 """Session-scoped memo for driver-side artifacts: table handles, trained
-models, prepared indexes and constructed expressions.
+models and prepared indexes.
 
 Each artifact is a pure function of its key within one SparkContext, but
 holds JVM plans or py4j references that die with that context. ``memo``

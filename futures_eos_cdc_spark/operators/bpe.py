@@ -56,10 +56,8 @@ Two apply shapes (r8 VERDICT next #1):
   doc-keyed agg); the tokenizer runs once per distinct word. This is the
   production shape: an 8-32 k-merge vocabulary is a few hundred KB of
   closure data and vocabulary-sized Python work. The segmenter is the
-  string-level sequential apply (:func:`_make_str_word_apply`) for small
-  tables and the pair-indexed apply (:func:`_make_ranked_word_apply`)
-  above :data:`BPE_APPLY_AUTO_THRESHOLD` ranks; both are pytest-pinned
-  twins of :func:`apply_bpe_py`.
+  pair-indexed apply (:func:`_make_ranked_word_apply`) at every table
+  size, a pytest-pinned twin of :func:`apply_bpe_py`.
 
 Reference parity: the reference pipeline has no subword tokenizer (its
 token accounting is whitespace-based); this operator is part of the
@@ -146,58 +144,22 @@ def apply_bpe_py(word: str, merges: list[tuple[str, str, int]] | list[tuple[str,
     return syms
 
 
-def _merge_pats(merges) -> list[tuple[str, str]]:
-    """Rank-ordered (pattern, replacement) pairs over the separator
-    encoding — ``str.replace`` on these IS leftmost-first non-overlapping
-    merging (module docstring), identically in Python, Spark ``replace``
-    and DuckDB ``replace``."""
-    return [
-        (SEP + m[0] + SEP + SEP + m[1] + SEP, SEP + m[0] + m[1] + SEP)
-        for m in merges
-    ]
-
-
-def _make_str_word_apply(merges):
-    """Build the string-level per-word tokenizer for one merge table and
-    return a closure ``word -> list[token]``: sequential-by-rank apply on
-    the separator-encoded SYMBOL STRING — the exact string-level twin of
-    :func:`apply_bpe_py` (pytest-pinned), but each rank is one C-level
-    substring scan instead of a Python list walk, so every rank costs one
-    short ``in`` check per word; most ranks are absent from any given
-    word and cost only the failed scan. Rank-count-LINEAR, so it serves
-    only small tables (:func:`bpe_segmenter`).
-
-    Like :func:`_make_ranked_word_apply`, the closure is dynamically
-    created: cloudpickle ships it BY VALUE (its cells: the pattern list,
-    ``sep`` and ``eow``)."""
-    pats = _merge_pats(merges)
-    sep, eow = SEP, EOW
-
-    def apply_word(w: str) -> list:
-        s = "".join(sep + c + sep for c in w) + sep + eow + sep
-        for pat, repl in pats:
-            if pat in s:
-                s = s.replace(pat, repl)
-        return [t for t in s.split(sep) if t]
-
-    return apply_word
-
-
 def _make_ranked_word_apply(merges, eow: str = EOW):
     """Build the pair-indexed per-word tokenizer for one merge table and
-    return a closure ``word -> list[token]`` — THE single implementation
-    of the ranked apply (r9 VERDICT next #1, the subword-nmt/GPT-2
-    production shape): :func:`apply_bpe_ranked` and :func:`bpe_segmenter`
-    call the closure this factory returns, so the semantics live in
-    exactly one place (code-review r10 — four textual copies would let a
-    future fix silently diverge from the pytest-pinned twins).
+    return a closure ``word -> list[token]`` — THE single per-word apply
+    (the subword-nmt/GPT-2 production shape):
+    :func:`bpe_segmenter` and the parity tests call the closure this
+    factory returns, so the semantics live in exactly one place.
 
     Instead of giving every rank a turn (one failed substring scan per
-    ABSENT rank — :func:`_make_str_word_apply` is rank-count-LINEAR, 32 k
-    scans per word at 32 k ranks), look up only the pairs PRESENT in this word
-    in a pair→rank index and process their ranks in ascending order off
-    a heap. Cost is O(word_len · merges_performed) — INDEPENDENT of the
-    table size.
+    ABSENT rank is rank-count-LINEAR, 32 k scans per word at 32 k ranks),
+    look up only the pairs PRESENT in this word in a pair→rank index and
+    process their ranks in ascending order off a heap. Cost is
+    O(word_len · merges_performed) — INDEPENDENT of the table size. The
+    rank-linear string apply it replaced was within ~2 µs/word of it at
+    40-64 ranks (faster on the fixture's short words, slower on 14-char
+    words) and 20x slower at 16 k ranks (BENCH_NOTES), so one apply
+    serves every table size.
 
     Semantics are EXACTLY :func:`apply_bpe_py`'s sequential-by-rank,
     leftmost-first non-overlapping (pytest-pinned on trained and
@@ -260,39 +222,14 @@ def _make_ranked_word_apply(merges, eow: str = EOW):
     return apply_word
 
 
-def apply_bpe_ranked(word: str, merges, _apply=None) -> list[str]:
-    """One-word convenience wrapper over :func:`_make_ranked_word_apply`
-    (semantics and cost model documented there). ``_apply`` is the
-    prebuilt factory closure — pass it when applying one table to many
-    words, as the parity tests do (building the rank index is O(table)
-    and must not repeat per word)."""
-    return (_make_ranked_word_apply(merges) if _apply is None else _apply)(word)
-
-
-# Measured crossover between the two per-word applies (BENCH_NOTES r10,
-# 14-char words): str/ranked µs-per-word 9.7/8.0 at 64 ranks, 66/43 at
-# 1k, 295/40 at 4k, 800/41 at 16k — ranked is FLAT in table size (the
-# complexity-class pytest pins <4x from 1k→16k; measured ~1.0x), str is
-# rank-linear by construction. The crossover is shallow and sits below
-# 64; str keeps a small edge only for toy tables where both are
-# microseconds.
-BPE_APPLY_AUTO_THRESHOLD = 64
-
-
 def bpe_segmenter(merges, byte_level: bool = False):
     """The per-word BPE tokenizer ``word -> list[token]`` for the shared
     distinct-word apply (operators.text ``doc_token_counts`` /
-    ``word_tokens``): the str apply up to :data:`BPE_APPLY_AUTO_THRESHOLD`
-    ranks, the ranked apply above it. ``byte_level`` maps each RAW word
+    ``word_tokens``): the ranked apply. ``byte_level`` maps each RAW word
     through the bytes→unicode table first (the byte-level family —
     ``merges`` are then over byte-char symbols), inside the closure, so
     joining back on the raw word keeps the corpus side byte-free."""
-    make = (
-        _make_ranked_word_apply
-        if len(merges) > BPE_APPLY_AUTO_THRESHOLD
-        else _make_str_word_apply
-    )
-    apply_w = make(merges)
+    apply_w = _make_ranked_word_apply(merges)
     if not byte_level:
         return apply_w
     bc = BYTE_CHARS

@@ -32,7 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import bind_expr, ngrams_expr, tokens_expr
+from .common import sql_expr
+from .text import tokens_expr, word_grams_sql
 
 DSIR_BUCKETS = 256
 DSIR_SALT = "dsir"
@@ -43,7 +44,7 @@ def grams_expr(toks: Column) -> Column:
     """Unigrams + word bigrams (the paper's feature set) from a token
     array — one array expression, no Python in the loop; ``toks`` is
     evaluated once per row."""
-    return bind_expr(toks, lambda t: F.concat(t, ngrams_expr(t, 2)))
+    return sql_expr(word_grams_sql, toks)
 
 
 def bucket_expr(gram: Column, n_buckets: int = DSIR_BUCKETS) -> Column:

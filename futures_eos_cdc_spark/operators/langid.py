@@ -30,9 +30,10 @@ ENGINE-EXACT by construction (the quality-classifier / bloom discipline):
 * Scoring is a PURE projection: the per-language weight vectors ride as
   array literals (default sizing: n_langs x 1024 ints — the same order
   as the 8 KiB Bloom bitmap), each document folds its gram buckets
-  through ``F.aggregate`` per language, and argmax breaks ties toward
-  the lexicographically smallest language. Corpus rows never shuffle and
-  never join: the plan a 100 TB language-ID pass must have.
+  through one ``aggregate`` per language, and argmax breaks ties toward
+  the lexicographically smallest language. Every scorer renders one SQL
+  text (:func:`_scorer_expr`), parsed once per build. Corpus rows never
+  shuffle and never join: the plan a 100 TB language-ID pass must have.
 
 Scale shape: :func:`langid_score` (literal arrays) serves models up to
 ~10^4 buckets.
@@ -52,9 +53,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..memo import memo
-from .common import const_array, sql_expr
-from .text import bind_expr
+from .common import const_array_sql, sql_expr, sql_literal
 
 LANGID_N = 3  # character trigrams
 LANGID_BUCKETS = 1024  # hashed feature space (config constant, not data)
@@ -104,10 +103,13 @@ def gram_buckets_expr(
     one bucket per character n-gram, as one parsed SQL expression
     (``text``: a column name, or a Column evaluated once per row —
     common.sql_expr)."""
-    return sql_expr(
-        lambda t: f"transform({_char_grams_sql(t, n, max_chars)}, "
-        f"_g -> {_gram_bucket_sql('_g', buckets, n)})",
-        text,
+    return sql_expr(lambda t: _gram_buckets_sql(t, n, buckets, max_chars), text)
+
+
+def _gram_buckets_sql(t: str, n: int, buckets: int, max_chars: int) -> str:
+    return (
+        f"transform({_char_grams_sql(t, n, max_chars)}, "
+        f"_g -> {_gram_bucket_sql('_g', buckets, n)})"
     )
 
 
@@ -188,6 +190,33 @@ def langid_model(
     return model
 
 
+def _scorer_expr(
+    pick: str, text: Column | str, model: dict[str, list[int]], n: int,
+    buckets: int, max_chars: int,
+) -> Column:
+    """``pick`` (``array_min`` or ``array_sort``) of the array of
+    ``named_struct(neg, lang)``, one per language in sorted order, as one
+    parsed SQL expression over ``text`` (common.sql_expr: a column name,
+    or a Column evaluated once per row); NULL text gives NULL. Every
+    scorer renders through here, so the tie rule and the arithmetic
+    cannot fork: ordering the structs ranks by max score first, smallest
+    language on ties. The gram buckets are bound once per row (the
+    ``_bk`` lambda) and each language folds them through its weight
+    vector, one BIGINT array literal (common.const_array_sql)."""
+    folds = ", ".join(
+        "named_struct('neg', -aggregate(_bk, 0L, (_acc, _x) -> _acc + "
+        f"element_at({const_array_sql(model[lang])}, CAST(_x AS INT) + 1)), "
+        f"'lang', {sql_literal(lang)})"
+        for lang in sorted(model)
+    )
+    return sql_expr(
+        lambda t: f"CASE WHEN {t} IS NOT NULL THEN {pick}(element_at(transform("
+        f"array({_gram_buckets_sql(t, n, buckets, max_chars)}), "
+        f"_bk -> array({folds})), 1)) END",
+        text,
+    )
+
+
 def langid_score(
     docs: DataFrame,
     model: dict[str, list[int]],
@@ -208,130 +237,22 @@ def langid_score(
     A document with no grams (empty text) scores 0 for every language
     and predicts the lexicographically smallest — callers gate on text
     length upstream if that matters. NULL text predicts NULL."""
-    bcol = gram_buckets_expr(text_col, n, buckets, max_chars)
-    docs = docs.withColumn("_lid_buckets", bcol)
     # bind the argmax struct to ONE temp column (r13 opt): embedding the
-    # per-language fold tree in both output expressions doubled its
+    # per-language folds in both output expressions doubled their
     # analyzer and evaluation footprint; deriving pred/score from the
     # bound column keeps one copy (CollapseProject leaves non-cheap
     # expressions un-inlined)
-    # cache key is fully structural: the candidates expression here is a
-    # pure function of the fixed temp-column name (the text_col-specific
-    # part lives in the _lid_buckets withColumn above, outside the memo)
-    best = _best_from_buckets(
-        F.col("_lid_buckets"), model, cache_key=("col", "_lid_buckets")
-    )
+    best = _scorer_expr("array_min", text_col, model, n, buckets, max_chars)
     return (
         docs.withColumn("_lid_best", best)
-        .withColumn(
-            pred_col,
-            F.when(F.col(text_col).isNotNull(), F.col("_lid_best")["lang"]),
+        .withColumns(
+            {
+                pred_col: F.expr("_lid_best.lang"),
+                score_col: F.expr("CAST(-_lid_best.neg AS BIGINT)"),
+            }
         )
-        .withColumn(
-            score_col,
-            F.when(
-                F.col(text_col).isNotNull(), -F.col("_lid_best")["neg"]
-            ).cast("long"),
-        )
-        .drop("_lid_buckets", "_lid_best")
+        .drop("_lid_best")
     )
-
-
-# Constructed-expression memo (r13 opt): assembling the candidates array
-# costs ~0.95 s of pure DRIVER time per call at 16 langs x 1024 buckets
-# (~0.35 s parsing the weight-array literals, ~0.6 s building the fold
-# lambdas through py4j) and is a deterministic function of (input-column
-# expression, model object). The scorer queries rebuild the identical
-# expression every invocation over the SAME session-cached model dict —
-# memoize the finished Column. Column expression trees are immutable and
-# freely reusable across plans. r14 hardening (ADVICE r13): the key is
-# an explicit STRUCTURAL description supplied by the caller (how bcol
-# was built: unbound input column name, n, buckets, max_chars) — never a
-# normalized str(bcol), whose regex collapsed real column names like
-# text_1/text_2 into one key; and the cached value pins the model dict
-# (strong reference), so id(model) cannot be recycled by GC and serve a
-# stale weight table to a new model at the same address.
-
-
-def _candidates_array(
-    bcol: Column,
-    model: dict[str, list[int]],
-    *,
-    cache_key: tuple | None = None,
-) -> Column:
-    """Array of struct(-score, lang) per language over the SAME
-    bucket-array column — the one construction every scorer shares so
-    the tie rule / cast discipline cannot fork (code-review r11):
-    ordering the structs ranks by max score first, smallest language on
-    ties. ``bcol`` is evaluated once per row, not once per language
-    (bind_expr). Memoized per (session, caller-declared structural key,
-    model identity) when ``cache_key`` is given — the caller asserts
-    that the key fully determines bcol's expression tree; passing None
-    builds fresh (no caching)."""
-
-    def candidates(b: Column) -> Column:
-        def _fold(weights: Column) -> Column:
-            # closure helper: PySpark derives higher-order-function arity
-            # from the Python signature, so the merge lambda must take
-            # exactly two
-            return F.aggregate(
-                b,
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + F.element_at(weights, x.cast("int") + 1),
-            )
-
-        structs = []
-        for lang in sorted(model):
-            # ONE parsed expression per weight vector (const_array), not
-            # F.lit(list): building a 1024-element array literal through
-            # py4j cost ~1 s PER LANGUAGE of plan-construction time per
-            # invocation (profiled r12: langid_confidence construct=2.9 s
-            # vs execute=1.5 s at sf0.1) — the same literal-array lesson
-            # the r5 bench notes record for the ANN centroid planes.
-            arr = const_array(model[lang])
-            structs.append(
-                F.struct((-_fold(arr)).alias("neg"), F.lit(lang).alias("lang"))
-            )
-        return F.array(*structs)
-
-    if cache_key is None:
-        return bind_expr(bcol, candidates)
-    out, pinned = memo(
-        ("langid.candidates", cache_key, id(model)),
-        lambda: (bind_expr(bcol, candidates), model),
-    )
-    # `is model` re-check is belt-and-braces: the strong ref in the value
-    # already prevents id reuse while the entry lives
-    return out if pinned is model else bind_expr(bcol, candidates)
-
-
-def _best_from_buckets(
-    bcol: Column,
-    model: dict[str, list[int]],
-    *,
-    cache_key: tuple | None = None,
-) -> Column:
-    """The argmax struct — min of :func:`_candidates_array`."""
-    return F.array_min(_candidates_array(bcol, model, cache_key=cache_key))
-
-
-def _grams_cache_key(text: Column, n: int, buckets: int, max_chars: int) -> tuple | None:
-    """The structural cache key of the gram-bucket candidates over ``text``,
-    or None (build fresh) unless ``text`` is an unbound column name — a
-    bare ``F.col(name)``. A DataFrame-bound ``df["text"]`` prints exactly
-    like ``F.col("text")`` but names one DataFrame's attribute, so a key
-    built from ``str(text)`` would serve df1's binding to df2; any
-    expression other than a bare name is not cached either."""
-    node = getattr(text, "_jc", None)  # a Spark Connect Column has no JVM twin
-    node = node.node() if node is not None else None
-    if (
-        node is None
-        or node.getClass().getName() != "org.apache.spark.sql.internal.UnresolvedAttribute"
-        or node.planId().isDefined()
-        or node.isMetadataColumn()
-    ):
-        return None
-    return ("grams", node.sql(), n, buckets, max_chars)
 
 
 def langid_ranked_expr(
@@ -347,17 +268,8 @@ def langid_ranked_expr(
     classifier confidence, not just the argmax). NULL text gives NULL;
     element 1 is the argmax, element 2 the runner-up (NULL past the
     language count — single-language models rank one entry). ``text`` is
-    a column name or a Column; only a name is cached (_grams_cache_key)."""
-    if isinstance(text, str):
-        text = F.col(text)
-    ranked = F.array_sort(
-        _candidates_array(
-            gram_buckets_expr(text, n, buckets, max_chars),
-            model,
-            cache_key=_grams_cache_key(text, n, buckets, max_chars),
-        )
-    )
-    return F.when(text.isNotNull(), ranked)
+    a column name or a Column."""
+    return _scorer_expr("array_sort", text, model, n, buckets, max_chars)
 
 
 def langid_best_expr(
@@ -370,21 +282,12 @@ def langid_best_expr(
 ) -> Column:
     """The argmax struct as ONE standalone column expression — for
     composition into filters (the streaming selection gate) where adding
-    a temp bucket column isn't possible. Returns struct(neg, lang):
+    a temp column isn't possible. Returns struct(neg, lang):
     pred = .lang, score = -(.neg); NULL text gives a NULL struct
     (code-review r11: the guard lives HERE, so direct composers cannot
-    classify NULL rows as the smallest language at score 0). The gram
-    buckets are computed once per row and shared by the per-language
-    folds (_candidates_array). ``text`` is a column name or a Column;
-    only a name is cached (_grams_cache_key)."""
-    if isinstance(text, str):
-        text = F.col(text)
-    best = _best_from_buckets(
-        gram_buckets_expr(text, n, buckets, max_chars),
-        model,
-        cache_key=_grams_cache_key(text, n, buckets, max_chars),
-    )
-    return F.when(text.isNotNull(), best)
+    classify NULL rows as the smallest language at score 0). ``text`` is
+    a column name or a Column."""
+    return _scorer_expr("array_min", text, model, n, buckets, max_chars)
 
 
 def langid_pred_expr(

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .common import const_array, sql_expr, sql_literal
+from .common import const_array_sql, sql_expr, sql_literal
 
 # Tiny per-language function-word lexicons for the n-gram/stopword heuristic.
 LANG_LEXICONS: dict[str, tuple[str, ...]] = {
@@ -101,20 +101,6 @@ def doc_token_counts(
     )
 
 
-def bind_expr(e: Column, f) -> Column:
-    """``f(e)`` with ``e`` evaluated ONCE per row.
-
-    Spark evaluates higher-order-function (HOF) lambdas interpreted, and
-    neither whole-stage codegen nor the interpreter shares a row
-    expression that a lambda body reads: ``transform(seq, i ->
-    slice(split(text), i, k))`` re-splits the text once per element,
-    quadratic in document length. Passing ``e`` through a one-element
-    array binds it to a lambda variable instead: ``f`` must take one
-    argument and should read ``e`` only through it. ``f(NULL)`` is what
-    a NULL ``e`` gives, exactly as ``f(e)`` would."""
-    return F.element_at(F.transform(F.array(e), f), 1)
-
-
 def ngrams_expr(arr: Column | str, k: int, sep: str = " ") -> Column:
     """Every run of ``k`` consecutive elements of ``arr``, joined by
     ``sep``, in position order (duplicates kept); an empty array when
@@ -144,6 +130,13 @@ def _ngrams_sql(arr: str, k: int, sep: str = " ") -> str:
     # arrays_zip names the fields of unnamed inputs "0".."k-1"
     fields = ", ".join(f"_z['{j}']" for j in range(k))
     return f"transform(arrays_zip({', '.join(slices)}), _z -> concat_ws({sep}, {fields}))"
+
+
+def word_grams_sql(t: str) -> str:
+    """The unigrams then the adjacent bigrams of the token array ``t``
+    (SQL text; a column name or a lambda parameter) — the wordNgrams=2
+    feature set of the hashed classifier and of DSIR."""
+    return f"concat({t}, {_ngrams_sql(t, 2)})"
 
 
 def token_count_expr(text: Column) -> Column:
@@ -203,10 +196,9 @@ def gopher_metrics(text: Column) -> dict[str, Column]:
         / n
     )
     swr = F.length(F.regexp_replace(text, PUNCT_CLASS, "")).cast("double") / n
-    stop_arr = const_array(STOPWORDS_EN)
-    n_stop = bind_expr(
-        toks,
-        lambda t: F.size(F.filter(stop_arr, lambda s: F.array_contains(t, s))),
+    stop_arr = const_array_sql(STOPWORDS_EN)
+    n_stop = sql_expr(
+        lambda t: f"size(filter({stop_arr}, _s -> array_contains({t}, _s)))", toks
     )
     awr = F.size(F.filter(toks, lambda x: x.rlike(r"\p{L}"))).cast("double") / n
     keep = (
@@ -336,18 +328,10 @@ def hashed_classifier_logit_expr(text: Column, salt: str = "qw|") -> Column:
     scan partition: score-then-filter pipelines (quality gates) stay
     scan-shaped at 100 TB.
     """
-    feats = bind_expr(tokens_expr(text), lambda t: F.concat(t, ngrams_expr(t, 2)))
-
-    def logit(fs: Column) -> Column:
-        wsum = F.aggregate(
-            fs,
-            F.lit(0).cast("long"),
-            lambda acc, t: acc
-            + F.conv(F.substring(F.md5(F.concat(F.lit(salt), t)), 1, 4), 16, 10).cast(
-                "long"
-            )
-            - 32768,
-        )
-        return wsum / (F.lit(32768.0) * F.size(fs))
-
-    return bind_expr(feats, logit)
+    return sql_expr(
+        lambda t: f"element_at(transform(array({word_grams_sql(t)}), _fs -> "
+        f"aggregate(_fs, 0L, (_acc, _w) -> _acc + CAST(conv(substring(md5(concat("
+        f"{sql_literal(salt)}, _w)), 1, 4), 16, 10) AS BIGINT) - 32768) "
+        f"/ ({sql_literal(32768.0)} * size(_fs))), 1)",
+        tokens_expr(text),
+    )

@@ -678,11 +678,7 @@ def _trained_centroids(spark: SparkSession, sf_dir: str, e: DataFrame) -> list[l
     from ..operators.similarity import ivf_train
 
     return memo(
-        (
-            "ivf_centroids",
-            sf_dir,
-            _dir_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
-        ),
+        ("ivf_centroids", *_corpus_key(sf_dir, "embeddings")),
         lambda: ivf_train(
             e, n_cells=embeddings_auto_n_cells(sf_dir), iters=2, seed=42
         ),
@@ -1573,40 +1569,6 @@ FROM gen_h g JOIN tgt_h t USING (doc_id)
 )
 
 
-def _ml_lm_frame(bg: DataFrame, toks: DataFrame, train_cond, h_col: str) -> DataFrame:
-    """(doc_id, h): per-doc cross-entropy under the add-k bigram LM
-    trained on the ``train_cond`` subset — LEFT joins, so bigrams the
-    training subset never saw take the count-0 add-k probability. Model
-    tables are vocab-bounded (broadcast under AQE); the corpus explodes
-    once (callers share ``bg``/``toks`` between both LMs)."""
-    bc = bg.filter(train_cond).groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).alias("c2")
-    )
-    uc = bg.filter(train_cond).groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
-    vocab = toks.filter(train_cond).select(F.explode("t").alias("term")).agg(
-        F.countDistinct("term").alias("v")
-    )
-    scored = (
-        bg.join(bc, ["w1", "w2"], "left")
-        .join(uc, ["w1"], "left")
-        .crossJoin(F.broadcast(vocab))
-        .withColumn(
-            "lp",
-            F.expr(
-                f"round(ln((coalesce(c2, 0) + {PPLX_K!r}d)"
-                f" / (coalesce(c1, 0) + {PPLX_K!r}d * v)), 6)"
-            ),
-        )
-    )
-    return scored.groupBy("doc_id").agg(
-        F.round(
-            -F.sum(F.col("lp").cast("decimal(38,10)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias(h_col)
-    )
-
-
 def q_moore_lewis_selection(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     """Moore-Lewis data selection over the corpus: per document, the
     cross-entropy under the TARGET LM (trained on the '{_ML_TARGET_LANG}'
@@ -1661,10 +1623,10 @@ def q_moore_lewis_selection(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
             F.count(F.when(F.col("any_tgt"), 1)).alias("v_t"),
         )
     )
-    # identical per-term expressions to _ml_lm_frame's lp (6dp round before
-    # the DECIMAL(38,10) sum), evaluated for BOTH LMs in one projection
-    # over ONE scoring explode; one doc-keyed aggregate yields both
-    # entropies, removing the former h_general ⋈ h_target join outright
+    # each LM's per-term log-probability (6dp round before the
+    # DECIMAL(38,10) sum, as the oracle), evaluated for BOTH LMs in one
+    # projection over ONE scoring explode; one doc-keyed aggregate yields
+    # both entropies, removing the former h_general ⋈ h_target join outright
     lp_t = (
         f"round(ln((coalesce(c2_t, 0) + {PPLX_K!r}d)"
         f" / (coalesce(c1_t, 0) + {PPLX_K!r}d * v_t)), 6)"
@@ -1905,13 +1867,7 @@ def _retrieval_core(
     fingerprints.
     """
     core = memo(
-        (
-            "retrieval_core",
-            sf_dir,
-            _dir_fingerprint(os.path.join(sf_dir, "documents.parquet")),
-            _dir_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
-        ),
-        dict,
+        ("retrieval_core", *_corpus_key(sf_dir, "documents", "embeddings")), dict
     )
 
     if "bm25" not in core:
@@ -2785,14 +2741,7 @@ def _trained_pq(spark: SparkSession, sf_dir: str, e: DataFrame):
         )
         return codebooks, pq_encode(e, codebooks).localCheckpoint()
 
-    return memo(
-        (
-            "pq_model",
-            sf_dir,
-            _dir_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
-        ),
-        build,
-    )
+    return memo(("pq_model", *_corpus_key(sf_dir, "embeddings")), build)
 
 
 def q_ann_ivf_pq(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
@@ -4393,7 +4342,7 @@ def q_bpe_token_counts_bytes(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     Spark shape: training is the same bounded word-freq collect (the
     byte mapping runs driver-side on the capped vocabulary); apply is
     the shared distinct-word path — the segmenter byte-maps each
-    DISTINCT word and runs the pinned ranked/str apply, the corpus side
+    DISTINCT word and runs the pinned ranked apply, the corpus side
     stays byte-free (one explode + broadcast join + doc agg). The oracle
     replays the ENTIRE pipeline — bijection (_BYTE_MAP_SQL), 40-step
     training unroll, replace-chain apply — in SQL."""
@@ -5137,11 +5086,7 @@ def q_bloom_gate(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     # not just its path — a regenerated fixture dir within one session
     # must rebuild the reference artifacts, not serve stale ones.
     prepared = memo(
-        (
-            "bloom_prepared",
-            sf_dir,
-            _dir_fingerprint(os.path.join(sf_dir, "documents.parquet")),
-        ),
+        ("bloom_prepared", *_corpus_key(sf_dir, "documents")),
         lambda: bloom_prepare(docs.filter(F.col("doc_id") % 2 == 0)),
     )
     return bloom_gate(
@@ -5149,6 +5094,17 @@ def q_bloom_gate(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
         docs.filter(F.col("doc_id") % 3 == 0),
         prepared=prepared,
     ).select(F.col("doc_id").cast("long").alias("doc_id"), "bloom_positive", "true_dup")
+
+
+def _corpus_key(sf_dir: str, *tables: str) -> tuple:
+    """The memo key part of a model trained on ``tables`` of ``sf_dir``:
+    the dir plus each table's content fingerprint, so a table rewritten
+    in place (then ``refresh_tables()``) retrains instead of serving the
+    model of the old rows."""
+    return (
+        sf_dir,
+        *(_dir_fingerprint(os.path.join(sf_dir, f"{t}.parquet")) for t in tables),
+    )
 
 
 def _dir_fingerprint(path: str) -> tuple:
@@ -5585,23 +5541,24 @@ _PERSISTED_MODELS = {
         train_wordpiece_py,
     ),
 }
-# {persisted path: the sf_dir its table was last written for} — query
+# {persisted path: the _corpus_key its table was last written for} — query
 # construction rewrites a table only when it describes another corpus
-_PERSISTED_SF: dict[str, str] = {}
+_PERSISTED_SF: dict[str, tuple] = {}
 
 
 def _persisted_model(spark: SparkSession, sf_dir: str, _t, kind: str):
     """Train-once + persist-for-the-oracle, shared by EVERY entry point of
     the ``kind`` family (code-review r9: a guard in one query only let a
     session alternating fixtures leave the persisted table describing the
-    OTHER corpus). Training is memoized per (session, sf_dir) — the
+    OTHER corpus). Training is memoized per (session, corpus content) — the
     oracle never re-trains either (it reads the persisted table), and
     deployment trains once per corpus. Returns (docs, model); after this
     call the persisted table always matches ``sf_dir``."""
     rec = _PERSISTED_MODELS[kind]
     docs = spread(_t(spark, sf_dir, "documents"))
-    model = memo((kind, sf_dir), lambda: rec.train(docs))
-    if _PERSISTED_SF.get(rec.path) != sf_dir:
+    corpus = _corpus_key(sf_dir, "documents")
+    model = memo((kind, *corpus), lambda: rec.train(docs))
+    if _PERSISTED_SF.get(rec.path) != corpus:
         # Written via the SAME flocked pyarrow path as the lazy ensure
         # (ADVICE r10 — one locking discipline per directory), failing
         # READABLY here rather than as an opaque oracle error later.
@@ -5615,7 +5572,7 @@ def _persisted_model(spark: SparkSession, sf_dir: str, _t, kind: str):
                 "is baked into the oracle SQL at import, so set it before "
                 "importing the package)"
             ) from exc
-        _PERSISTED_SF[rec.path] = sf_dir
+        _PERSISTED_SF[rec.path] = corpus
     return docs, model
 
 
@@ -6019,7 +5976,9 @@ def _langid_model_cached(spark: SparkSession, sf_dir: str, docs) -> dict:
     non-NULL/non-empty text filter."""
     from ..operators.langid import langid_model
 
-    return memo(("langid_model", sf_dir), lambda: langid_model(docs))
+    return memo(
+        ("langid_model", *_corpus_key(sf_dir, "documents")), lambda: langid_model(docs)
+    )
 
 
 _LANGID_ORACLE_PREFIX = rf"""
@@ -6157,14 +6116,10 @@ def q_langid_confidence(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     )
     model = _langid_model_cached(spark, sf_dir, docs)
     # bind the ranked array to ONE temp column instead of embedding the
-    # 16-language fold tree in every output expression (r13 opt: the
-    # former select carried six copies of the ~16k-node candidates tree
-    # through analysis — ~1 s of pure driver time per construction;
-    # CollapseProject keeps non-cheap expressions un-inlined, so the tree
-    # is analyzed and evaluated once)
-    ranked_docs = docs.withColumn(
-        "_ranked", langid_ranked_expr(F.col("text"), model)
-    )
+    # per-language folds in every output expression (CollapseProject
+    # keeps non-cheap expressions un-inlined, so the folds are analyzed
+    # and evaluated once)
+    ranked_docs = docs.withColumn("_ranked", langid_ranked_expr("text", model))
     best, second = F.col("_ranked").getItem(0), F.col("_ranked").getItem(1)
     pred_score = (-best["neg"]).cast("long")
     margin = (pred_score - F.coalesce(-second["neg"], F.lit(0))).cast("long")

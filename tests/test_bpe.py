@@ -230,12 +230,12 @@ def test_fast_trainer_matches_naive():
 
 
 def test_apply_str_matches_apply_py():
-    """The string-level sequential apply (the Arrow batch body) is the
+    """The segmenter the Arrow batch body runs (bpe_segmenter) is the
     exact twin of the list-level reference on every trained word."""
     import random
 
     from futures_eos_cdc_spark.operators.bpe import (
-        _make_str_word_apply,
+        bpe_segmenter,
         train_bpe_py_fast,
     )
 
@@ -248,10 +248,9 @@ def test_apply_str_matches_apply_py():
     )
     wf = [(w, rng.randint(1, 9)) for w in vocab]
     merges = train_bpe_py_fast(wf, n_merges=300)
-    apply_str = _make_str_word_apply(merges)
+    segment = bpe_segmenter(merges)
     for w in vocab:
-        toks = apply_str(w)
-        assert toks == apply_bpe_py(w, merges), w
+        assert segment(w) == apply_bpe_py(w, merges), w
 
 
 def test_join_apply_matches_replace_chain_on_fixture(spark, sf_dir):
@@ -476,7 +475,7 @@ def _synthetic_merge_table(n_ranks: int, seed: int = 20260815):
 
 
 def test_ranked_apply_matches_py_on_trained_tables():
-    """apply_bpe_ranked == apply_bpe_py on TRAINED random-vocabulary
+    """The ranked apply == apply_bpe_py on TRAINED random-vocabulary
     tables, for both training words and unseen words (including words
     that share only prefixes with the vocabulary)."""
     import random
@@ -484,7 +483,6 @@ def test_ranked_apply_matches_py_on_trained_tables():
     from futures_eos_cdc_spark.operators.bpe import (
         _make_ranked_word_apply,
         apply_bpe_py,
-        apply_bpe_ranked,
         train_bpe_py_fast,
     )
 
@@ -504,7 +502,7 @@ def test_ranked_apply_matches_py_on_trained_tables():
             for _ in range(120)
         ] + [w[: max(1, len(w) // 2)] + "z" for w in vocab[:50]] + [""]
         for w in vocab + unseen:
-            assert apply_bpe_ranked(w, merges, ap) == apply_bpe_py(w, merges), (
+            assert ap(w) == apply_bpe_py(w, merges), (
                 trial,
                 w,
             )
@@ -515,37 +513,34 @@ def test_ranked_apply_single_turn_per_rank():
     absent at its turn never merges later (hand-constructed table where
     a LATER merge re-creates an EARLIER rank's pair)."""
     from futures_eos_cdc_spark.operators.bpe import (
+        _make_ranked_word_apply,
         apply_bpe_py,
-        apply_bpe_ranked,
     )
 
     # rank 1: (ab, c) — absent initially (no 'ab' token yet)
     # rank 2: (a, b) — creates 'ab', re-creating rank 1's pair TOO LATE
     merges = [("ab", "c", 1), ("a", "b", 1)]
     want = apply_bpe_py("abc", merges)  # ['ab', 'c', EOW] — rank 1 missed
-    assert apply_bpe_ranked("abc", merges) == want
+    assert _make_ranked_word_apply(merges)("abc") == want
     assert want[0] == "ab" and want[1] == "c"
 
     # and the productive order merges fully
     merges2 = [("a", "b", 1), ("ab", "c", 1)]
-    assert apply_bpe_ranked("abc", merges2) == apply_bpe_py("abc", merges2)
-    assert apply_bpe_ranked("abc", merges2)[0] == "abc"
+    ap2 = _make_ranked_word_apply(merges2)
+    assert ap2("abc") == apply_bpe_py("abc", merges2)
+    assert ap2("abc")[0] == "abc"
 
 
 def test_ranked_apply_at_16k_ranks_parity_and_flat_cost():
     """The production-depth pin (r9 VERDICT next #1): at 16 384 ranks the
-    pair-indexed apply (a) still equals the string-sequential twin
-    word-for-word (which is itself pytest-pinned to apply_bpe_py), with
-    apply_bpe_py spot-checked directly, and (b) costs the SAME per word
-    as at 1 024 ranks (flat in table size), while the str apply's cost
-    is rank-linear by construction."""
+    pair-indexed apply (a) still equals apply_bpe_py, spot-checked, and
+    (b) costs the SAME per word as at 1 024 ranks (flat in table
+    size)."""
     import time
 
     from futures_eos_cdc_spark.operators.bpe import (
         _make_ranked_word_apply,
-        _make_str_word_apply,
         apply_bpe_py,
-        apply_bpe_ranked,
     )
 
     merges16k, words = _synthetic_merge_table(16384)
@@ -553,21 +548,15 @@ def test_ranked_apply_at_16k_ranks_parity_and_flat_cost():
     merges1k = merges16k[:1024]
 
     sample = words[:: max(1, len(words) // 300)][:300]
-    # (a) parity at full depth: ranked == str on every sampled word...
-    str16k = _make_str_word_apply(merges16k)
-    ap16k = _make_ranked_word_apply(merges16k)
-    for w in sample:
-        toks = str16k(w)
-        assert apply_bpe_ranked(w, merges16k, ap16k) == toks, w
-    # ...with the list-level reference spot-checked directly (it walks
+    # (a) parity at full depth against the list-level reference (it walks
     # all 16k ranks per word, so keep the direct check small)
+    ap16k = _make_ranked_word_apply(merges16k)
     for w in sample[:12]:
-        assert apply_bpe_ranked(w, merges16k, ap16k) == apply_bpe_py(w, merges16k), w
+        assert ap16k(w) == apply_bpe_py(w, merges16k), w
 
     # (b) per-word cost flat in table size: time the SAME words through
     # ranked at 1k and at 16k ranks. Generous 4x bound — the honest
-    # numbers go to BENCH_NOTES; this guards the complexity class only
-    # (str at 16x the ranks costs ~16x by construction, no assert).
+    # numbers go to BENCH_NOTES; this guards the complexity class only.
     ap1k = _make_ranked_word_apply(merges1k)
     timing_words = sample * 3
 
@@ -584,42 +573,31 @@ def test_ranked_apply_at_16k_ranks_parity_and_flat_cost():
 
 
 def test_join_apply_ranked_shape_matches_str_on_spark(spark):
-    """Both per-word closures (str / ranked) produce identical token lists
-    and counts on a synthetic table deep enough to cross the auto
-    threshold, bpe_segmenter picks the ranked rung there (and str at the
-    threshold), and one Spark word_tokens run equals both closures."""
+    """bpe_segmenter builds the ranked closure at every table size, and
+    one Spark word_tokens run equals that closure on a synthetic
+    2,048-rank table (token lists and counts)."""
     from futures_eos_cdc_spark.operators.bpe import (
-        BPE_APPLY_AUTO_THRESHOLD,
         _make_ranked_word_apply,
-        _make_str_word_apply,
         bpe_segmenter,
     )
     from futures_eos_cdc_spark.operators.text import word_tokens
 
     merges, words = _synthetic_merge_table(2048)
     words = words[:400]
-    str_apply = _make_str_word_apply(merges)
     ranked_apply = _make_ranked_word_apply(merges)
-    # the rung is the factory that built the closure
+    # the closure's code names the factory that built it
     assert bpe_segmenter(merges).__code__ is ranked_apply.__code__
-    at_threshold = merges[:BPE_APPLY_AUTO_THRESHOLD]
-    assert bpe_segmenter(at_threshold).__code__ is str_apply.__code__
+    assert bpe_segmenter(merges[:40]).__code__ is ranked_apply.__code__
 
-    a = {w: len(str_apply(w)) for w in words}
-    b = {w: len(ranked_apply(w)) for w in words}
-    assert a == b and len(a) == 400
-
-    ta = {w: str_apply(w) for w in words}
     tb = {w: ranked_apply(w) for w in words}
-    assert ta == tb
-    assert all(len(ta[w]) == a[w] for w in ta)
+    assert len(tb) == 400
 
     wdf = spark.createDataFrame([(w,) for w in words], "word string")
     spark_toks = {
         r["word"]: list(r["toks"])
         for r in word_tokens(wdf, bpe_segmenter(merges)).collect()
     }
-    assert spark_toks == ta == tb
+    assert spark_toks == tb
 
 
 def test_v1k_poisoned_dir_fails_readably_at_construction(spark, sf_dir, monkeypatch):
@@ -742,7 +720,7 @@ def test_byte_kernel_matches_python_reference(spark):
     reference (byte map + pinned ranked apply) on a vocabulary spanning
     1/2/3/4-byte codepoints and the empty word."""
     from futures_eos_cdc_spark.operators.bpe import (
-        apply_bpe_ranked,
+        _make_ranked_word_apply,
         bpe_segmenter,
         byte_encode_py,
         train_bpe_py_fast,
@@ -758,8 +736,9 @@ def test_byte_kernel_matches_python_reference(spark):
         r.word: len(r.toks)
         for r in word_tokens(wdf, bpe_segmenter(merges, byte_level=True)).collect()
     }
+    ap = _make_ranked_word_apply(merges)
     for w in words:
-        assert got[w] == len(apply_bpe_ranked(byte_encode_py(w), merges)), w
+        assert got[w] == len(ap(byte_encode_py(w))), w
 
 
 def test_word_tokens_kernel_pickles_self_contained_for_every_segmenter():
@@ -777,7 +756,6 @@ def test_word_tokens_kernel_pickles_self_contained_for_every_segmenter():
     import cloudpickle
 
     from futures_eos_cdc_spark.operators.bpe import (
-        BPE_APPLY_AUTO_THRESHOLD,
         bpe_segmenter,
         byte_encode_py,
         train_bpe_py_fast,
@@ -793,13 +771,13 @@ def test_word_tokens_kernel_pickles_self_contained_for_every_segmenter():
     words = ["hello", "held", "world", "word", "lowword", "héllo", "日本", ""]
     words += synthetic[:4]
     wf = [(w, 3 + i) for i, w in enumerate(words) if w]
-    small = train_bpe_py_fast(wf, n_merges=BPE_APPLY_AUTO_THRESHOLD, min_pair_freq=1)
+    small = train_bpe_py_fast(wf, n_merges=40, min_pair_freq=1)
     byte_merges = train_bpe_py_fast(
         [(byte_encode_py(w), f) for w, f in wf], n_merges=30, min_pair_freq=1
     )
     segmenters = {
-        "bpe_str": bpe_segmenter(small),
-        "bpe_ranked": bpe_segmenter(big),
+        "bpe_small": bpe_segmenter(small),
+        "bpe_big": bpe_segmenter(big),
         "bpe_bytes": bpe_segmenter(byte_merges, byte_level=True),
         "unigram": _make_viterbi(dict(train_unigram_py(wf, vocab_size=40))),
         "wordpiece": _make_wordpiece(

@@ -1572,13 +1572,7 @@ def test_moore_lewis_separates_domains(spark):
     general LM) and out-of-domain documents score NEGATIVE — including
     HELD-OUT docs whose bigrams the target LM never saw (the add-k
     left-join smoothing path)."""
-    import pyspark.sql.functions as F
-
-    from futures_eos_cdc_spark.plans.dataprep import (
-        _bigrams_frame,
-        _ml_lm_frame,
-        _ML_TARGET_LANG,
-    )
+    from futures_eos_cdc_spark.plans.dataprep import q_moore_lewis_selection
 
     tgt_words = "alpha beta gamma delta epsilon zeta"
     gen_words = "zork quux blarg wibble fnord grunt"
@@ -1595,11 +1589,10 @@ def test_moore_lewis_separates_domains(spark):
     rows.append((98, "xx", "zork quux blarg wibble fnord grunt zork"))
     docs = spark.createDataFrame(rows, "doc_id long, lang string, text string")
 
-    toks, bg = _bigrams_frame(docs, keep_cols=("lang",))
-    tgt = _ml_lm_frame(bg, toks, F.col("lang") == _ML_TARGET_LANG, "h_target")
-    gen = _ml_lm_frame(bg, toks, F.lit(True), "h_general")
-    out = {r.doc_id: r.s for r in gen.join(tgt, "doc_id").select(
-        "doc_id", (F.col("h_general") - F.col("h_target")).alias("s")).collect()}
+    out = {
+        r.doc_id: r.ml_score
+        for r in q_moore_lewis_selection(spark, "", lambda *_: docs).collect()
+    }
     assert all(out[i] > 0 for i in range(10)), "in-domain must score positive"
     assert all(out[i] < 0 for i in range(10, 30)), "out-of-domain negative"
     assert out[99] > 0, "held-out target-style doc must still score positive"

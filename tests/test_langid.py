@@ -256,25 +256,11 @@ def test_langid_oracle_matches_spark_on_null_lang_corpus(spark):
     assert srows == drows
 
 
-def _candidates() -> list:
-    """The session memo's langid candidate entries, (column, model) each."""
-    from futures_eos_cdc_spark import memo
-
-    return [v for (_app, k), v in memo._ENTRIES.items() if k[0] == "langid.candidates"]
-
-
-def _clear_candidates() -> None:
-    from futures_eos_cdc_spark import memo
-
-    memo.forget("langid.candidates")
-
-
 def test_candidates_cache_distinguishes_input_columns(spark):
-    """ADVICE r13: the r13 memo key normalized `_\\d+` suffixes out of ALL
-    identifiers in str(bcol), so scoring `text_1` then `text_2` silently
-    reused the first column's expression. The r14 structural key must
-    keep them apart: per-column predictions must match a fresh
-    (uncached) scorer run on each column."""
+    """A constructed-expression cache keyed on a normalized
+    str(bcol) once served `text_1`'s expression to `text_2`. Each
+    column's predictions must match its own build, however often the
+    scorer is built in one session."""
     from futures_eos_cdc_spark.operators.langid import langid_best_expr
 
     docs = _corpus(spark)
@@ -284,15 +270,11 @@ def test_candidates_cache_distinguishes_input_columns(spark):
         F.col("text").alias("text_1"),
         F.reverse(F.col("text")).alias("text_2"),
     )
-    _clear_candidates()
     got = two.select(
         "doc_id",
         langid_best_expr(F.col("text_1"), model)["lang"].alias("p1"),
         langid_best_expr(F.col("text_2"), model)["lang"].alias("p2"),
     ).collect()
-    # both columns created distinct cache entries
-    assert len(_candidates()) == 2
-    _clear_candidates()
     fresh = two.select(
         "doc_id",
         langid_best_expr(F.col("text_1"), model)["lang"].alias("p1"),
@@ -303,8 +285,8 @@ def test_candidates_cache_distinguishes_input_columns(spark):
 
 def test_candidates_cache_skips_dataframe_bound_columns(spark):
     """df1["text"] and df2["text"] print alike but bind different
-    DataFrames' attributes: neither may be cached, and each scores its own
-    rows. A column name is cached and builds F.col(name) itself."""
+    DataFrames' attributes: each scores its own rows, exactly as the
+    column-name form does."""
     from futures_eos_cdc_spark.operators.langid import (
         langid_best_expr,
         langid_ranked_expr,
@@ -316,56 +298,14 @@ def test_candidates_cache_skips_dataframe_bound_columns(spark):
     df2 = docs.filter(F.col("lang") != "en").select(
         "doc_id", "lang", F.reverse("text").alias("text")
     )
-    _clear_candidates()
     got = [
         df.select("doc_id", langid_best_expr(df["text"], model)["lang"].alias("p")).collect()
         for df in (df1, df2)
     ]
     ranked = langid_ranked_expr(df2["text"], model)
     got.append(df2.select("doc_id", ranked[0]["lang"].alias("p")).collect())
-    assert not _candidates()
     want = [
         df.select("doc_id", langid_best_expr("text", model)["lang"].alias("p")).collect()
         for df in (df1, df2, df2)
     ]
-    assert len(_candidates()) == 1
     assert [sorted(map(tuple, g)) for g in got] == [sorted(map(tuple, w)) for w in want]
-
-
-def test_candidates_cache_pins_model_and_misses_on_new_model(spark):
-    """The cached value must hold a STRONG reference to the model dict
-    (id() recycling hazard) and a retrained model (new dict) must never
-    hit the old entry."""
-    from futures_eos_cdc_spark.operators.langid import langid_best_expr
-
-    docs = _corpus(spark)
-    model_a = langid_model(docs)
-    _clear_candidates()
-    langid_best_expr(F.col("text"), model_a)
-    assert len(_candidates()) == 1
-    (col, pinned), = _candidates()
-    assert pinned is model_a  # strong ref lives in the value
-    # a structurally identical but DIFFERENT model object must miss
-    model_b = {k: list(v) for k, v in model_a.items()}
-    langid_best_expr(F.col("text"), model_b)
-    assert len(_candidates()) == 2
-
-
-def test_candidates_cache_is_bounded_within_one_app(spark):
-    """Retraining in one long session must not grow the memo without
-    bound: it keeps the most recently used MAX_PER_NAMESPACE entries,
-    and a hit refreshes an entry's place."""
-    from futures_eos_cdc_spark.memo import MAX_PER_NAMESPACE
-    from futures_eos_cdc_spark.operators.langid import langid_best_expr
-
-    _clear_candidates()
-    models = [{"de": [i, 1], "en": [1, i]} for i in range(MAX_PER_NAMESPACE + 4)]
-    langid_best_expr("text", models[0], buckets=2)
-    for m in models[1:]:
-        langid_best_expr("text", m, buckets=2)
-        langid_best_expr("text", models[0], buckets=2)  # keeps models[0] recent
-    assert len(_candidates()) == MAX_PER_NAMESPACE
-    pinned = [m for _col, m in _candidates()]
-    assert any(m is models[0] for m in pinned)
-    assert all(m is not models[1] for m in pinned)
-    _clear_candidates()

@@ -106,7 +106,7 @@ def test_floor_queries_warm_pass_records_no_misses(spark, sf_dir):
     misses = {k: v - first.get(k, 0) for k, v in second.items() if k.endswith(".misses")}
     hits = {k: v - first.get(k, 0) for k, v in second.items() if k.endswith(".hits")}
     assert not any(misses.values()), misses
-    for ns in ("table", "ivf_centroids", "langid_model", "langid.candidates"):
+    for ns in ("table", "ivf_centroids", "langid_model"):
         assert hits.get(f"memo.{ns}.hits", 0) > 0, hits
 
 
@@ -120,6 +120,46 @@ def test_refresh_tables_drops_table_handles(spark, sf_dir):
     assert load_table(spark, sf_dir, "region") is first
     refresh_tables()
     assert load_table(spark, sf_dir, "region") is not first
+
+
+def test_rewritten_corpus_retrains_the_langid_model(spark, sf_dir, tmp_path):
+    """A trained-model memo keys on the corpus content, not only its dir: a
+    documents.parquet rewritten in place (labels permuted), then
+    refresh_tables(), retrains, so langid_scores scores the new rows with
+    the model of the new rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from futures_eos_cdc_spark.operators.langid import langid_model, langid_score
+    from futures_eos_cdc_spark.plans import QUERIES
+    from futures_eos_cdc_spark.sources.tables import refresh_tables
+
+    path = str(tmp_path / "documents.parquet")
+    table = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    pq.write_table(table, path)
+    cols = ["doc_id", "pred_lang", "pred_score"]
+
+    def scores() -> list:
+        out = QUERIES["langid_scores"](spark, str(tmp_path)).select(*cols)
+        return sorted(map(tuple, out.collect()))
+
+    before = scores()
+    i = table.schema.get_field_index("lang")
+    langs = table.column(i).to_pylist()
+    rotated = pa.array(langs[1:] + langs[:1], table.schema.field(i).type)
+    pq.write_table(table.set_column(i, table.schema.field(i), rotated), path)
+    refresh_tables()
+    after = scores()
+
+    docs_b = spark.read.parquet(path).filter(
+        F.col("text").isNotNull() & (F.length("text") > 0)
+    )
+    want = langid_score(docs_b, langid_model(docs_b)).select(
+        F.col("doc_id").cast("long"), "pred_lang", "pred_score"
+    )
+    assert after == sorted(map(tuple, want.collect()))
+    assert after != before
 
 
 def test_application_id_is_read_only_by_the_memo():

@@ -25,7 +25,6 @@ from futures_eos_cdc_spark.operators.langid import (
 )
 from futures_eos_cdc_spark.operators.text import (
     STOPWORDS_EN,
-    bind_expr,
     fingerprint_expr,
     gopher_metrics,
     hashed_classifier_logit_expr,
@@ -166,8 +165,8 @@ def test_bigram_constructions_match_k2(texts):
     t = F.col("text")
     toks = tokens_expr(t)
     raw = F.split(F.trim(t), r"\s+")  # repetition_stats' un-lowered split
-    _same(texts, bind_expr(toks, lambda a: ngrams_expr(a, 2)), _old_bigrams(toks))
-    _same(texts, bind_expr(raw, lambda a: ngrams_expr(a, 2)), _old_bigrams(raw))
+    _same(texts, ngrams_expr(toks, 2), _old_bigrams(toks))
+    _same(texts, ngrams_expr(raw, 2), _old_bigrams(raw))
     _same(texts, grams_expr(toks), F.concat(toks, _old_bigrams(toks)))
     _same(texts, hashed_classifier_logit_expr(t), _old_logit(t))
 

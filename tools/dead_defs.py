@@ -46,7 +46,6 @@ TEST_PATHS = ("tests",)
 # against. Each value names the COVERAGE.md row or the test that keeps it.
 TEST_ONLY_ALLOWED = {
     "bpe.apply_bpe_py": "reference implementation: test_spark_apply_matches_python_on_fixture",
-    "bpe.apply_bpe_ranked": "COVERAGE pair-indexed BPE apply row",
     "bpe.load_bpe_merges": "public API: test_merge_table_save_load_roundtrip",
     "bpe.save_bpe_merges": "public API: test_merge_table_save_load_roundtrip",
     "bpe.train_bpe_py": "reference implementation: test_train_hand_example",
@@ -55,7 +54,6 @@ TEST_ONLY_ALLOWED = {
     "bucketing.write_bucketed": "public API: test_bucketed_join_has_no_exchange_or_sort",
     "bucketing.write_partitioned": "COVERAGE Hive-partitioned layout row",
     "clustering.dedup_keep_representatives": "public API: test_dedup_keep_representatives",
-    "dataprep._ml_lm_frame": "COVERAGE Moore-Lewis row: test_moore_lewis_separates_domains",
     "dsir.dsir_ratio_literal": "COVERAGE composed streaming selection gate row",
     "generator.generate_signals": "COVERAGE S3/P17 (synthetic signal generator)",
     "jdbc.recent_orders": "COVERAGE S6 (recent orders)",
